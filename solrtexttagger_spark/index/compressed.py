@@ -12,14 +12,11 @@ from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.index.compression import (
-    encode_positions_block,
-    encode_postings_block,
-)
+from solrtexttagger_spark.index.compression import encode_blocks
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -65,6 +62,88 @@ class CompressedIndex:
         return self._avgdl
 
 
+# postings per encode_blocks call: at most ~20 MB of postings-block bytes
+_SLICE_POSTINGS = 1 << 20
+
+
+def _binary(offsets: np.ndarray, data: np.ndarray) -> pa.Array:
+    """A BinaryArray over a kernel's block bytes, no per-block copy."""
+    offs = pa.array(offsets, pa.int32())  # raises past 2 GiB, never wraps
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1, [None, offs.buffers()[1], pa.py_buffer(data)]
+    )
+
+
+def _list_offsets(lists: pa.ListArray) -> np.ndarray:
+    """int64 list offsets. Spark's Arrow writer leaves the offsets buffer
+    of a zero-length list array empty, so never read it then."""
+    if len(lists) == 0:
+        return np.zeros(1, dtype=np.int64)
+    return lists.offsets.to_numpy().astype(np.int64)
+
+
+def _encode_batch(
+    batch: pa.RecordBatch, max_block_postings: int | None, with_positions: bool
+) -> pa.RecordBatch:
+    """Encode one Arrow batch of (term, seg, postings) shards: the list
+    offsets and the doc_id/tf/dl child columns go to the kernel as numpy
+    (positions only when asked for); term/seg are gathered per block."""
+    lists = batch.column("postings")
+    offs = _list_offsets(lists)
+    items = lists.values.slice(offs[0], offs[-1] - offs[0])
+    positions = None
+    if with_positions:
+        plists = items.field("positions")
+        poffs = _list_offsets(plists)
+        flat = plists.values.slice(poffs[0], poffs[-1] - poffs[0])
+        positions = (poffs - poffs[0], flat.to_numpy())
+    enc = encode_blocks(
+        offs - offs[0],
+        items.field("doc_id").to_numpy(),
+        items.field("tf").to_numpy(),
+        items.field("dl").to_numpy(),
+        max_block_postings=max_block_postings,
+        positions=positions,
+    )
+    shard = pa.array(enc.shard)
+    cols = {
+        "term": batch.column("term").take(shard),
+        "seg": batch.column("seg").take(shard),
+        "blk": pa.array(enc.blk, pa.int32()),
+        "df_seg": pa.array(enc.df_seg, pa.int64()),
+        "cf_seg": pa.array(enc.cf_seg, pa.int64()),
+        "max_tf": pa.array(enc.max_tf, pa.int32()),
+        "min_dl": pa.array(enc.min_dl, pa.int32()),
+        "block": _binary(enc.offsets, enc.data),
+    }
+    if with_positions:
+        cols["pos_block"] = _binary(enc.pos_offsets, enc.pos_data)
+    return pa.RecordBatch.from_pydict(cols)
+
+
+def encode_batches(
+    batches: Iterator[pa.RecordBatch],
+    max_block_postings: int | None = None,
+    with_positions: bool = False,
+    slice_postings: int = _SLICE_POSTINGS,
+) -> Iterator[pa.RecordBatch]:
+    """compress_index's mapInArrow function: (term, seg, postings) batches
+    in, BLOCK_SCHEMA / POS_BLOCK_SCHEMA batches out. Each batch is encoded
+    by one kernel call per slice of at most ``slice_postings`` postings
+    (bounds worker memory and the int32 binary offsets; a shard is never
+    split across slices)."""
+    for batch in batches:
+        offs = _list_offsets(batch.column("postings"))
+        lo = 0
+        while lo < batch.num_rows:
+            hi = int(np.searchsorted(offs, offs[lo] + slice_postings, "right")) - 1
+            hi = max(hi, lo + 1)
+            yield _encode_batch(
+                batch.slice(lo, hi - lo), max_block_postings, with_positions
+            )
+            lo = hi
+
+
 def compress_index(
     index: InvertedIndex,
     *,
@@ -83,49 +162,23 @@ def compress_index(
     (LocalSearcher(positions=True)); BM25/WAND never read it, and the
     scoring block stays position-free either way."""
     schema = POS_BLOCK_SCHEMA if with_positions else BLOCK_SCHEMA
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for term, seg, postings in zip(pdf["term"], pdf["seg"], pdf["postings"]):
-                n = len(postings)
-                doc_ids = np.fromiter(
-                    (p["doc_id"] for p in postings), dtype=np.int64, count=n
-                )
-                tfs = np.fromiter((p["tf"] for p in postings), dtype=np.int64, count=n)
-                dls = np.fromiter((p["dl"] for p in postings), dtype=np.int64, count=n)
-                plists = (
-                    [np.asarray(p["positions"], dtype=np.int64) for p in postings]
-                    if with_positions
-                    else None
-                )
-                step = max_block_postings or n or 1
-                for blk, lo in enumerate(range(0, n, step)):
-                    hi = min(lo + step, n)
-                    d, t, l = doc_ids[lo:hi], tfs[lo:hi], dls[lo:hi]
-                    out["term"].append(term)
-                    out["seg"].append(seg)
-                    out["blk"].append(blk)
-                    out["df_seg"].append(hi - lo)
-                    out["cf_seg"].append(int(t.sum()))
-                    out["max_tf"].append(int(t.max()))
-                    out["min_dl"].append(int(l.min()))
-                    out["block"].append(encode_postings_block(d, t, l))
-                    if with_positions:
-                        out["pos_block"].append(
-                            encode_positions_block(plists[lo:hi])
-                        )
-            yield pd.DataFrame(out)
-
     narrowed = index.postings.select("term", "seg", "postings")
-    # Cluster the persisted blocks artifact by seg: mapInPandas loses the
+    # Encode in ONE columnar pass: mapInArrow hands each Arrow batch to
+    # encode_batches, which feeds the postings list offsets and child
+    # columns to the numpy block kernel (compression.encode_blocks) — a
+    # fixed number of numpy calls per batch, no Python object per
+    # posting or per block.
+    # Cluster the persisted blocks artifact by seg: mapInArrow loses the
     # build's seg partitioning (its output attributes are new), and this
     # one cheap exchange of COMPRESSED bytes at compress time lets every
     # WAND run_segments call (groupBy("seg").applyInPandas over the
     # cached blocks) skip its per-query exchange — the same
     # persist-the-partitioning trade save_compressed already makes with
     # partitionBy("seg") on disk (guide §2.4).
-    blocks = narrowed.mapInPandas(encode, schema=schema).repartition("seg")
+    blocks = narrowed.mapInArrow(
+        lambda batches: encode_batches(batches, max_block_postings, with_positions),
+        schema=schema,
+    ).repartition("seg")
     return CompressedIndex(
         blocks=blocks,
         term_stats=index.term_stats,

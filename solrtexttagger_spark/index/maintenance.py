@@ -201,8 +201,9 @@ def upsert_docs(
        shards + the delta rows re-aggregate (flatten + array_sort —
        the doc-sorted postings invariant every reader relies on).
     4. term_stats merge by summing the two tiny stats relations;
-       doc_count/avgdl combine arithmetically (the expunge already
-       recomputed the survivors' stats).
+       doc_count adds up (the expunge already recomputed the survivors'
+       count) and avgdl derives lazily from the merged term_stats, as in
+       ``build_index``.
 
     A batch with duplicate ids raises — Lucene applies updates in
     sequence, but a set-oriented batch has no defined order, so
@@ -220,9 +221,11 @@ def upsert_docs(
             f"upsert batch has duplicate doc ids ({n_rows} rows, "
             f"{n_ids} distinct) — split into ordered batches instead"
         )
-    cleaned = expunge_docs(
-        index, ids, method=method, literal_threshold=literal_threshold
-    )
+    # the duplicate check already counted the ids: resolve 'auto' here so
+    # expunge_docs does not count them again
+    if method == "auto":
+        method = "literal" if n_ids <= literal_threshold else "merge"
+    cleaned = expunge_docs(index, ids, method=method)
     delta = build_index(
         new_docs,
         text_col=text_col,
@@ -255,17 +258,12 @@ def upsert_docs(
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
     )
-    doc_count = cleaned.doc_count + delta.doc_count
-    avgdl = (
-        (cleaned.avgdl * cleaned.doc_count + delta.avgdl * delta.doc_count)
-        / doc_count
-        if doc_count
-        else 0.0
-    )
+    # avgdl stays lazy: derived from the merged term_stats on first use,
+    # exactly as build_index derives it (reading delta.avgdl here would
+    # re-run the delta's tokenize just for a scalar nobody asked for)
     return InvertedIndex(
         postings=new_postings,
         term_stats=term_stats,
-        doc_count=doc_count,
+        doc_count=cleaned.doc_count + delta.doc_count,
         num_segments=index.num_segments,
-        _avgdl=avgdl,
     )

@@ -40,7 +40,7 @@ def plan_summary(df: DataFrame) -> dict:
         "broadcast_joins": nodes("BroadcastHashJoin", "BroadcastNestedLoopJoin"),
         "sort_merge_joins": nodes("SortMergeJoin"),
         "python_stages": nodes(
-            "MapInPandas", "ArrowEvalPython", "FlatMapGroupsInPandas"
+            "MapInPandas", "MapInArrow", "ArrowEvalPython", "FlatMapGroupsInPandas"
         ),
         "window_group_limits": nodes("WindowGroupLimit"),
         "scans": nodes("Scan"),

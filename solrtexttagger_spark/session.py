@@ -37,11 +37,14 @@ def get_spark(
     )
     # Shuffle spill directory: prefer the RAM-backed tmpfs when present
     # (cluster equivalent: NVMe-local scratch). Keeps shuffle I/O from
-    # serializing CPU-bound jobs on slow container overlay disks.
-    shm = "/dev/shm/spark-local"
-    try:
-        os.makedirs(shm, exist_ok=True)
-        builder = builder.config("spark.local.dir", shm)
-    except OSError:
-        pass
+    # serializing CPU-bound jobs on slow container overlay disks. Spark
+    # ignores spark.local.dir when SPARK_LOCAL_DIRS is set, so leave the
+    # default (and its directory) out then.
+    if "SPARK_LOCAL_DIRS" not in os.environ:
+        shm = "/dev/shm/spark-local"
+        try:
+            os.makedirs(shm, exist_ok=True)
+            builder = builder.config("spark.local.dir", shm)
+        except OSError:
+            pass
     return builder.getOrCreate()

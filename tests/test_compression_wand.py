@@ -13,6 +13,8 @@ from solrtexttagger_spark.index.build import build_index
 from solrtexttagger_spark.index.compressed import compress_index
 from solrtexttagger_spark.index.compression import (
     decode_postings_block,
+    encode_blocks,
+    encode_positions_block,
     encode_postings_block,
     varint_decode,
     varint_encode,
@@ -65,6 +67,176 @@ def test_compression_ratio():
     raw = n * (8 + 4 + 4)  # int64 doc + int32 tf + int32 dl
     assert len(blk) < raw * 0.45, f"block {len(blk)}B vs raw {raw}B"
 
+
+
+# ---- golden bytes: the block format must never drift ----
+
+# (term, seg, [(doc_id, tf, dl, positions)]); "none" is an empty row
+GOLDEN_SHARDS = [
+    ("big", 0, [(3, 1, 7, [0]), (5, 2, 7, [1, 4]), (2**60 + 5, 300, 128, [0, 127])]),
+    ("none", 1, []),
+    ("split", 1, [(1, 1, 10, [2]), (4, 3, 9, [0, 5, 8]), (9, 1, 200, [199]),
+                  (200, 2, 3, [0, 2]), (70000, 1, 5, [4])]),
+    ("one", 2, [(2**62, 1, 1, [0])]),
+]
+
+# Blocks of GOLDEN_SHARDS as the per-shard encoder wrote them before the
+# batch kernel existed, keyed by max_block_postings: (term, seg, blk,
+# df_seg, cf_seg, max_tf, min_dl, block hex, pos_block hex). "big" has a
+# doc-id delta of 2**60 (a 9-byte varint) and tf 300 (2 bytes); "none"
+# emits no block.
+GOLDEN_BLOCKS = {
+    None: [
+        ("big", 0, 0, 3, 303, 300, 7, "0303028080808080808080100102ac0207078001",
+         "03010202000103007f"),
+        ("split", 1, 0, 5, 8, 3, 3, "05010305bf01a8a10401030102010a09c8010305",
+         "05010301020102000503c701000204"),
+        ("one", 2, 0, 1, 1, 1, 1, "018080808080808080400101", "010100"),
+    ],
+    2: [
+        ("big", 0, 0, 2, 3, 2, 7, "02030201020707", "020102000103"),
+        ("big", 0, 1, 1, 300, 300, 128, "01858080808080808010ac028001", "0102007f"),
+        ("split", 1, 0, 2, 4, 3, 9, "02010301030a09", "02010302000503"),
+        ("split", 1, 1, 2, 3, 2, 3, "0209bf010102c80103", "020102c7010002"),
+        ("split", 1, 2, 1, 1, 1, 5, "01f0a2040105", "010104"),
+        ("one", 2, 0, 1, 1, 1, 1, "018080808080808080400101", "010100"),
+    ],
+}
+
+
+def _flat_shards(shards):
+    """-> (offsets, doc_ids, tfs, dls, (pos_offsets, positions)) as the
+    compress_index Arrow glue hands them to encode_blocks."""
+    posts = [p for _, _, ps in shards for p in ps]
+    offsets = np.r_[0, np.cumsum([len(ps) for _, _, ps in shards])]
+    pos_offsets = np.r_[0, np.cumsum([len(p[3]) for p in posts])]
+    col = lambda i, dt: np.array([p[i] for p in posts], dtype=dt)
+    flat = np.array([x for p in posts for x in p[3]], dtype=np.int32)
+    return (offsets, col(0, np.int64), col(1, np.int32), col(2, np.int32),
+            (pos_offsets, flat))
+
+
+def _block_rows(shards, enc):
+    """Kernel output as GOLDEN_BLOCKS-shaped tuples."""
+    def hexes(offsets, data, i):
+        return data[offsets[i]:offsets[i + 1]].tobytes().hex()
+
+    return [
+        (shards[s][0], shards[s][1], int(enc.blk[i]), int(enc.df_seg[i]),
+         int(enc.cf_seg[i]), int(enc.max_tf[i]), int(enc.min_dl[i]),
+         hexes(enc.offsets, enc.data, i), hexes(enc.pos_offsets, enc.pos_data, i))
+        for i, s in enumerate(enc.shard)
+    ]
+
+
+@pytest.mark.parametrize("mbp", [None, 2])
+def test_encode_blocks_golden_bytes(mbp):
+    offsets, d, t, l, pos = _flat_shards(GOLDEN_SHARDS)
+    enc = encode_blocks(offsets, d, t, l, max_block_postings=mbp, positions=pos)
+    assert _block_rows(GOLDEN_SHARDS, enc) == GOLDEN_BLOCKS[mbp]
+
+
+def test_one_shard_encoders_golden_bytes():
+    for (term, *_, blk_hex, pos_hex), (_, _, ps) in zip(
+        GOLDEN_BLOCKS[None], [s for s in GOLDEN_SHARDS if s[2]]
+    ):
+        cols = [np.array([p[i] for p in ps]) for i in range(3)]
+        assert encode_postings_block(*cols).hex() == blk_hex, term
+        assert encode_positions_block([p[3] for p in ps]).hex() == pos_hex, term
+    assert encode_postings_block([], [], []) == encode_positions_block([]) == b"\x00"
+
+
+@pytest.mark.parametrize("mbp", [None, 2])
+@pytest.mark.parametrize("with_positions", [False, True])
+@pytest.mark.parametrize("slice_postings", [1, 4, 1 << 20])
+def test_encode_batches_golden_bytes(mbp, with_positions, slice_postings):
+    """The mapInArrow glue (list offsets + child columns -> kernel ->
+    BinaryArray), including a batch cut into several kernel slices."""
+    import pyarrow as pa
+
+    from solrtexttagger_spark.index.compressed import (
+        BLOCK_SCHEMA, POS_BLOCK_SCHEMA, encode_batches,
+    )
+
+    elem = pa.struct([("doc_id", pa.int64()), ("tf", pa.int32()), ("dl", pa.int32()),
+                      ("positions", pa.list_(pa.int32()))])
+    # a sliced input batch (its list offsets do not start at 0), the
+    # way Arrow hands over a batch cut from a larger buffer
+    shards = GOLDEN_SHARDS * 2
+    batch = pa.RecordBatch.from_pydict({
+        "term": pa.array([t for t, _, _ in shards]),
+        "seg": pa.array([s for _, s, _ in shards], pa.int32()),
+        "postings": pa.array(
+            [[dict(zip(("doc_id", "tf", "dl", "positions"), p)) for p in ps]
+             for _, _, ps in shards],
+            pa.list_(elem),
+        ),
+    }).slice(len(GOLDEN_SHARDS))
+    out = pa.Table.from_batches(
+        list(encode_batches([batch], mbp, with_positions, slice_postings))
+    )
+    schema = POS_BLOCK_SCHEMA if with_positions else BLOCK_SCHEMA
+    assert out.column_names == schema.fieldNames()
+    got = [tuple(r.values()) for r in out.to_pylist()]
+    want = [
+        row[:7] + (bytes.fromhex(row[7]),)
+        + ((bytes.fromhex(row[8]),) if with_positions else ())
+        for row in GOLDEN_BLOCKS[mbp]
+    ]
+    assert got == want
+
+
+
+def test_compress_index_golden_bytes(spark):
+    """End to end through Spark's mapInArrow and the seg exchange."""
+    from solrtexttagger_spark.index.build import InvertedIndex
+
+    postings = spark.createDataFrame(
+        [(t, s, ps) for t, s, ps in GOLDEN_SHARDS],
+        "term string, seg int, "
+        "postings array<struct<doc_id:bigint,tf:int,dl:int,positions:array<int>>>",
+    )
+    idx = InvertedIndex(postings=postings, term_stats=None, doc_count=9,
+                        num_segments=3)
+    blocks = compress_index(idx, max_block_postings=2, with_positions=True).blocks
+    got = sorted(
+        tuple(r[:7]) + (bytes(r["block"]).hex(), bytes(r["pos_block"]).hex())
+        for r in blocks.collect()
+    )
+    assert got == sorted(GOLDEN_BLOCKS[2])
+
+@given(st.data())
+@settings(max_examples=100, deadline=None)
+def test_encode_blocks_equals_per_shard(data):
+    """One batch-kernel call == encoding every shard (and every
+    max_block_postings chunk of it) on its own."""
+    shards = []
+    for _ in range(data.draw(st.integers(min_value=0, max_value=6))):
+        ids = sorted(data.draw(st.sets(
+            st.integers(min_value=0, max_value=2**62), max_size=12)))
+        shards.append(("t", 0, [
+            (d,
+             data.draw(st.integers(min_value=1, max_value=2**20)),
+             data.draw(st.integers(min_value=1, max_value=2**20)),
+             sorted(data.draw(st.sets(st.integers(min_value=0, max_value=5000),
+                                      min_size=1, max_size=5))))
+            for d in ids
+        ]))
+    mbp = data.draw(st.sampled_from([None, 1, 2, 5]))
+    offsets, d, t, l, pos = _flat_shards(shards)
+    enc = encode_blocks(offsets, d, t, l, max_block_postings=mbp, positions=pos)
+    want = []
+    for _, _, ps in shards:
+        step = mbp or len(ps) or 1
+        for blk, lo in enumerate(range(0, len(ps), step)):
+            chunk = ps[lo:lo + step]
+            tfs = [p[1] for p in chunk]
+            want.append((
+                "t", 0, blk, len(chunk), sum(tfs), max(tfs), min(p[2] for p in chunk),
+                encode_postings_block(*[np.array([p[i] for p in chunk]) for i in range(3)]).hex(),
+                encode_positions_block([p[3] for p in chunk]).hex(),
+            ))
+    assert _block_rows(shards, enc) == want
 
 # ---- Spark-level: compressed index + WAND ----
 

@@ -134,6 +134,24 @@ def test_facades_and_plan_summary(spark, docs_df):
         assert_plan(ops.exact_dedup(docs_df), exchanges=0)
 
 
+
+def test_compress_plan_one_arrow_pass(spark, index):
+    """compress_index adds exactly ONE python stage (a MapInArrow batch
+    encode) and one exchange (the seg repartition) on top of the
+    persisted postings' plan."""
+    import re
+
+    from solrtexttagger_spark.index.compressed import compress_index
+    from solrtexttagger_spark.plans import plan_summary
+
+    base = plan_summary(index.postings)
+    for kw in ({}, {"with_positions": True, "max_block_postings": 3}):
+        blocks = compress_index(index, **kw).blocks
+        assert len(re.findall(r"^\(\d+\) MapInArrow", plan_str(blocks), re.M)) == 1
+        s = plan_summary(blocks)
+        assert s["python_stages"] == base["python_stages"] + 1, (s, base)
+        assert s["exchanges"] == base["exchanges"] + 1, (s, base)
+
 def test_mlt_probe_filter_pushed_to_scan(spark, tmp_path):
     """More-Like-This keyword extraction must NOT run a corpus-wide
     TF-IDF pass: the probe-id filter reaches the documents parquet scan
