@@ -212,9 +212,13 @@ def _plane_bits(vecs: pd.Series, P: np.ndarray) -> np.ndarray:
     """Sign bits of every vector against every hyperplane row of ``P`` —
     ONE numpy matmul per Arrow batch (guide §4.2) instead of
     planes x dim interpreted per-element expressions (whose F.lit storm
-    alone cost seconds of py4j plan-build per call). Semantics mirror the
-    former zip_with/aggregate fold: a null vector, a dimension mismatch,
-    or a NaN dot all yield bit 0."""
+    alone cost seconds of py4j plan-build per call). A null vector, a
+    dimension mismatch, or a NaN dot yield bit 0, as in the former
+    zip_with/aggregate fold, but the bits are NOT bit-identical to it:
+    the matmul sums each dot product in its own order, so a dot product
+    within rounding of zero can take the other sign and move the vector
+    to another bucket. Bucketing only picks candidates; the exact cosine
+    of every candidate pair is still the sequential fold (_dot)."""
     n = len(vecs)
     dim = P.shape[1]
     ok = np.fromiter(

@@ -31,15 +31,16 @@ from solrtexttagger_spark.index.build import InvertedIndex
 K1 = 1.2
 B = 0.75
 
-# Per-index memo of global df per term. A COLD batch never pays a
-# driver job wave for df (round-5 verdict #5): the segmented scorer
-# broadcast-joins per-term df into the scoring job itself, so the whole
-# batch is ONE action end-to-end. The memo is for serving cadence —
-# warm it explicitly with ``warm_df_cache`` (or any wand/LocalSearcher
-# path that already collected stats) and fully-cached vocabularies skip
-# the df-join stage entirely. Same policy as the WAND metadata cache
-# (search/wand.py): bounded, whole-reset at the cap with the in-flight
-# terms re-fetched, assumes the InvertedIndex is immutable once queried
+# Global df per query term has ONE lookup, global_df (Lucene reads it
+# from its term dictionary, SURVEY §1.1), and it never runs a Spark
+# action: when the per-index ``_bm25_df`` memo holds every term, df
+# ships inside what the scorer already broadcasts; otherwise an in-DAG
+# aggregate over the terms' rows is broadcast-joined into the scoring
+# job itself, so a cold batch stays ONE action. Only warm_df_cache fills
+# the memo, called by top-level entries with the terms they just
+# analyzed. Same policy as the WAND metadata cache (search/wand.py):
+# bounded, whole-reset at the cap with the in-flight terms re-fetched,
+# assumes the index is immutable once queried
 # (search/wand.reset_query_caches clears it).
 BM25_DF_CACHE_MAX_TERMS = 500_000
 
@@ -140,11 +141,9 @@ def synonym_phrase_bonus(
     spark = index.postings.sparkSession
     phrase_list = sorted({toks for d in qphrases.values() for toks in d})
     pid_of = {toks: i for i, toks in enumerate(phrase_list)}
-    # NO implicit cache warm here: the synonym-graph batch is pinned
-    # action-free (test_plans.test_bm25_synonym_graph_plan_action_free…
-    # — the bonus relation must build lazily); the scored phrase pass
-    # takes the windowless literal-df path only when the cache already
-    # covers the constituents, else its in-DAG df window
+    # NO cache warm here: the synonym-graph batch is pinned action-free
+    # (test_plans.test_bm25_synonym_graph_plan_action_free…); the scored
+    # phrase pass reads df through global_df, which runs no action
     pm = multi_phrase_match_scored(
         index, [" ".join(t) for t in phrase_list], k1=k1, b=b
     )
@@ -189,38 +188,81 @@ def queries_to_df(
                 )
         for term, qtf in sorted(bag.items()):
             rows.append((int(qid), term, int(qtf)))
-    qdf = spark.createDataFrame(rows, "query_id long, term string, qtf int")
-    # the analyzed vocabulary is driver-known here; carry it on the
-    # DataFrame object so exploded_scores can use the index's df cache
-    # instead of a per-call df window (callers passing their OWN qdf
-    # relation keep the in-DAG df recovery)
-    qdf._stt_terms = sorted({t for _q, t, _f in rows})
-    return qdf
+    return spark.createDataFrame(rows, "query_id long, term string, qtf int")
 
 
-def warm_df_cache(index: InvertedIndex, terms) -> dict[str, int | None]:
-    """Explicitly memoize global df for ``terms`` on the index (one
-    collect; negative entries recorded so absent terms are never
-    re-fetched). Serving paths call this once per vocabulary burst; the
-    segmented scorer then skips its in-job df stage for fully-cached
-    batches. Cold batches NEVER call this implicitly — their df joins
-    inside the scoring job itself (round-5 verdict #5)."""
+def query_bags(queries) -> dict[int, dict[str, int]]:
+    """{query_id: {term: qtf}} from a list[(query_id, text)] (analyzed
+    here) or a DataFrame(query_id, term, qtf) — collected, since the
+    query table is tiny by contract."""
+    if not isinstance(queries, DataFrame):
+        return {int(qid): analyze_query_terms(q) for qid, q in queries}
+    bags: dict[int, dict[str, int]] = {}
+    for r in queries.collect():
+        bags.setdefault(int(r["query_id"]), {})[r["term"]] = int(r["qtf"])
+    return bags
+
+
+def bag_terms(qbags: dict[int, dict[str, int]]) -> list[str]:
+    return sorted({t for bag in qbags.values() for t in bag})
+
+
+def global_df(index, terms) -> "dict[str, float] | DataFrame":
+    """The one global-df lookup for query terms the driver knows; runs
+    no Spark action. On a hit (the ``_bm25_df`` memo holds every term)
+    returns {term: df}, terms cached as absent left out, for the caller
+    to fold into the relation or weights it already ships. On a miss
+    returns the lazy (term, df double) aggregate over the terms' rows —
+    ``postings`` of an InvertedIndex, ``blocks`` of a CompressedIndex —
+    for the caller to broadcast-join."""
+    terms = sorted(set(terms))
+    cache = getattr(index, "_bm25_df", None) or {}
+    if all(t in cache for t in terms):
+        return {t: float(cache[t]) for t in terms if cache[t] is not None}
+    rows = index.blocks if hasattr(index, "blocks") else index.postings
+    return (
+        rows.where(F.col("term").isin(terms))
+        .groupBy("term")
+        .agg(F.sum("df_seg").cast("double").alias("df"))
+    )
+
+
+def join_query_terms(
+    index, rows: DataFrame, qrows: list[tuple], schema: str
+) -> DataFrame:
+    """``rows`` (the index's postings or blocks) inner-joined on term
+    with the broadcast query-term relation built from ``qrows`` (tuples
+    whose FIRST field is the term; ``schema`` names the fields), plus a
+    global ``df double`` column from global_df: a literal column of that
+    same relation on a hit, a second broadcast join on a miss."""
+    spark = rows.sparkSession
+    dfs = global_df(index, [r[0] for r in qrows])
+    if isinstance(dfs, dict):
+        qdf = spark.createDataFrame(
+            [(*r, dfs[r[0]]) for r in qrows if r[0] in dfs], schema + ", df double"
+        )
+        return rows.join(F.broadcast(qdf), "term")
+    qdf = spark.createDataFrame(qrows, schema)
+    return rows.join(F.broadcast(qdf), "term").join(F.broadcast(dfs), "term")
+
+
+def warm_df_cache(index, terms) -> dict[str, float | None]:
+    """Memoize global df for ``terms`` on the index by collecting
+    global_df's miss relation for the unseen ones (one collect; absent
+    terms memoized as None so they are never re-fetched). The only way
+    the memo fills: top-level entries call it with the terms they just
+    analyzed, so the scorers they build take global_df's hit path."""
+    terms = sorted(set(terms))
     cache = getattr(index, "_bm25_df", None)
     if cache is None:
         cache = {}
         index._bm25_df = cache
-    missing = sorted({t for t in terms if t not in cache})
+    missing = [t for t in terms if t not in cache]
     if missing:
         if len(cache) + len(missing) > BM25_DF_CACHE_MAX_TERMS:
             cache.clear()
-            missing = sorted(set(terms))  # reset dropped this batch's terms
-        got = {
-            r["term"]: r["df"]
-            for r in index.postings.where(F.col("term").isin(missing))
-            .groupBy("term")
-            .agg(F.sum("df_seg").alias("df"))
-            .collect()
-        }
+            missing = terms  # reset dropped this batch's terms
+        got = {r["term"]: r["df"] for r in global_df(index, missing).collect()}
         for t in missing:
             cache[t] = got.get(t)
     return {t: cache[t] for t in terms}
@@ -283,22 +325,13 @@ def bm25_topk(
             strategy=strategy, allowed_docs=allowed_docs, synonyms=synonyms,
         )
         return out.where(F.col("rank") > start)
+    qbags = query_bags(queries)
     qphrases: dict[int, dict[tuple[str, ...], int]] = {}
-    qbags: dict[int, dict[str, int]] | None = None
-    if synonyms or strategy == "segmented":
-        if isinstance(queries, DataFrame):
-            # the query table is tiny by contract (it broadcasts in the
-            # exploded plan) — collect it into pre-analyzed term bags
-            qbags = {}
-            for r in queries.collect():
-                qbags.setdefault(int(r["query_id"]), {})[r["term"]] = int(r["qtf"])
-        else:
-            qbags = {int(qid): analyze_query_terms(q) for qid, q in queries}
-        if synonyms:
-            for qid in list(qbags):
-                qbags[qid], ph = expand_synonyms_graph(qbags[qid], synonyms)
-                if ph:
-                    qphrases[qid] = ph
+    if synonyms:
+        for qid in list(qbags):
+            qbags[qid], ph = expand_synonyms_graph(qbags[qid], synonyms)
+            if ph:
+                qphrases[qid] = ph
     bonus = (
         synonym_phrase_bonus(index, qphrases, k1=k1, b=b) if qphrases else None
     )
@@ -307,34 +340,16 @@ def bm25_topk(
             index, qbags, k=k, k1=k1, b=b, spark=spark,
             allowed_docs=allowed_docs, phrase_bonus=bonus,
         )
-    if qbags is not None:
-        sp = spark or index.postings.sparkSession
-        rows = [
-            (qid, term, int(qtf))
-            for qid, bag in sorted(qbags.items())
-            for term, qtf in sorted(bag.items())
-        ]
-        qdf = sp.createDataFrame(rows, "query_id long, term string, qtf int")
-        qdf._stt_terms = sorted({t for _q, t, _f in rows})
-        # top-level batch scorer: warm the df cache here (one tiny
-        # collect for unseen terms only) so exploded_scores skips its
-        # df window; NOT done inside exploded_scores itself, which must
-        # stay action-free for the /select one-job writer contract
-        warm_df_cache(index, qdf._stt_terms)
-    else:
-        qdf = (
-            queries
-            if isinstance(queries, DataFrame)
-            else queries_to_df(spark or index.postings.sparkSession, queries)
-        )
-        if getattr(qdf, "_stt_terms", None):
-            warm_df_cache(index, qdf._stt_terms)  # see comment above
+    # top-level batch scorer: one tiny collect for unseen terms puts
+    # exploded_scores on global_df's hit path; never done inside
+    # exploded_scores, which /select's one-job writer embeds
+    warm_df_cache(index, bag_terms(qbags))
     if bonus is None:
-        scores = exploded_scores(index, qdf, k1=k1, b=b, allowed_docs=allowed_docs)
+        scores = exploded_scores(index, qbags, k1=k1, b=b, allowed_docs=allowed_docs)
     else:
         # merge the phrase-gated bonus BEFORE ranking; full outer because
         # a doc can match only through the contiguous expansion
-        base = exploded_scores(index, qdf, k1=k1, b=b)
+        base = exploded_scores(index, qbags, k1=k1, b=b)
         scores = base.join(bonus, ["query_id", "doc_id"], "full_outer").select(
             "query_id",
             "doc_id",
@@ -362,7 +377,7 @@ def bm25_topk(
 
 def exploded_scores(
     index: InvertedIndex,
-    qdf: DataFrame,
+    qbags: dict[int, dict[str, int]],
     *,
     k1: float = K1,
     b: float = B,
@@ -374,50 +389,18 @@ def exploded_scores(
     row count IS Solr's numFound (docs matching >= 1 term, under fq), so
     /select writers derive numFound + maxScore from this relation in the
     SAME job as the page (search/select.py) instead of a second corpus
-    pass. qdf: (query_id, term, qtf)."""
+    pass. qbags: {query_id: {term: qtf}} (pre-analyzed); df comes from
+    global_df, so building the relation runs no action."""
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0
-
-    # One pass over postings: broadcast-join the query terms, then recover
-    # the GLOBAL df per term. When the analyzed vocabulary is
-    # driver-known (queries_to_df tags it on the relation), df comes
-    # from the index's bounded driver-side cache (warm_df_cache — one
-    # tiny collect for unseen terms only) and ships as a literal column,
-    # removing the per-call distinct-qterms broadcast + window exchange.
-    # Otherwise the df window runs in-DAG as before: a window over that
-    # term's segment rows (tiny group count = |query terms|). Using
-    # index.term_stats here instead would re-derive the whole index when
-    # it isn't persisted — a second full scan+shuffle for a handful of
-    # numbers. (The window joins DISTINCT terms first: it must see each
-    # (term, seg) row exactly once, or terms shared by several queries
-    # inflate df.)
-    known_terms = getattr(qdf, "_stt_terms", None)
-    cache = getattr(index, "_bm25_df", None)
-    if (
-        known_terms is not None
-        and cache is not None
-        and all(t in cache for t in known_terms)
-    ):
-        # cache-warm ONLY: exploded_scores itself never adds a job, so
-        # the one-action /select writer contract
-        # (test_response_format.test_select_single_job_and_max_score)
-        # holds on cold vocabularies; batch scorers warm the cache
-        # explicitly before calling (bm25_topk exploded strategy).
-        dfrel = index.postings.sparkSession.createDataFrame(
-            [
-                (t, float(cache[t]))
-                for t in known_terms
-                if cache[t] is not None
-            ],
-            "term string, df double",
-        )
-        qpost = index.postings.join(F.broadcast(dfrel), "term")
-    else:
-        qterms = qdf.select("term").distinct()
-        qpost = index.postings.join(F.broadcast(qterms), "term").withColumn(
-            "df", F.sum("df_seg").over(Window.partitionBy("term"))
-        )
-    joined = qpost.join(F.broadcast(qdf), "term")
+    qrows = [
+        (t, int(qid), int(qtf))
+        for qid, bag in sorted(qbags.items())
+        for t, qtf in sorted(bag.items())
+    ]
+    joined = join_query_terms(
+        index, index.postings, qrows, "term string, query_id long, qtf int"
+    )
     ex = joined.select(
         "query_id",
         "qtf",
@@ -444,6 +427,24 @@ def exploded_scores(
             allowed_docs.select("doc_id").distinct(), "doc_id", "left_semi"
         )
     return scores
+
+
+def entry_scores(
+    index: InvertedIndex,
+    queries,
+    *,
+    k1: float = K1,
+    b: float = B,
+    allowed_docs: DataFrame | None = None,
+) -> DataFrame:
+    """exploded_scores for a top-level entry (grouping, collapse,
+    elevation, function boosts): ``queries`` (list or DataFrame) become
+    bags, and the df cache is warmed with their terms first — one tiny
+    collect for unseen terms — so the relation takes global_df's hit
+    path."""
+    qbags = query_bags(queries)
+    warm_df_cache(index, bag_terms(qbags))
+    return exploded_scores(index, qbags, k1=k1, b=b, allowed_docs=allowed_docs)
 
 
 def _local_topk_with_ties(uniq: np.ndarray, scores: np.ndarray, k: int):
@@ -492,77 +493,55 @@ def _bm25_topk_segmented(
     it into the top-k is never dropped), the whole batch staying ONE
     action."""
     spark = spark or index.postings.sparkSession
-    terms = sorted({t for bag in qbags.values() for t in bag})
+    terms = bag_terms(qbags)
     if not terms and phrase_bonus is None:
         return spark.createDataFrame(
             [], "query_id long, rank long, doc_id long, score double"
         )
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0
-    cache = getattr(index, "_bm25_df", None)
-    if cache is None:
-        cache = {}
-        index._bm25_df = cache
-    missing = [t for t in terms if t not in cache]
-    if missing:
-        # COLD vocabulary: df rides the scoring job as a broadcast-joined
-        # column (round-5 verdict #5) — the whole batch is ONE action, no
-        # serial df-collect wave ahead of it (the Amdahl floor that
-        # capped 1->4 batch scaling at 0.41). The kernel computes idf
-        # from the per-row df; qterm weights ship as plain qtf.
-        qterm_list = {
-            qid: [(t, float(qtf)) for t, qtf in sorted(bag.items())]
-            for qid, bag in qbags.items()
-        }
-        df_in_dag = True
-    else:
-        # WARM (explicitly via warm_df_cache, or a prior wand path):
-        # precompute idf*qtf driver-side, skip the df-join stage
-        df_map = {t: cache[t] for t in terms if cache[t] is not None}
-        qterm_list = {}
-        for qid, bag in qbags.items():
-            lst = []
-            for t in sorted(bag):
-                df = df_map.get(t)
-                if df is not None:
-                    idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-                    lst.append((t, idf * bag[t]))
-            if lst:
-                qterm_list[qid] = lst
-        df_in_dag = False
+    # global_df: on a hit the kernel reads df from the broadcast below;
+    # on a miss every (term, seg) row carries it, broadcast-joined from
+    # the lookup's in-DAG aggregate. Either way the batch is ONE action,
+    # with no serial df-collect wave ahead of it.
+    dfs = global_df(index, terms)
+    qterm_list = {
+        qid: [(t, float(qtf)) for t, qtf in sorted(bag.items())]
+        for qid, bag in qbags.items()
+    }
     has_fq = allowed_docs is not None
-    bc = spark.sparkContext.broadcast(
-        (qterm_list, k, k1, b, avgdl, df_in_dag, n, has_fq)
-    )
+    bc = spark.sparkContext.broadcast((
+        qterm_list, dfs if isinstance(dfs, dict) else None,
+        k, k1, b, avgdl, n, has_fq,
+    ))
 
     def _score_pdf(
         pdf: pd.DataFrame,
         allowed: "np.ndarray | None",
         bonus_by_q: "dict | None" = None,
     ) -> pd.DataFrame:
-        qterms_, k_, k1_, b_, avgdl_, df_in_dag_, n_, _hf = bc.value
+        qterms_, df_of, k_, k1_, b_, avgdl_, n_, _hf = bc.value
         bonus_by_q = bonus_by_q or {}
+        if df_of is None:
+            df_of = dict(zip(pdf["term"], pdf["df"]))
         term_arrays: dict[str, tuple] = {}
-        if df_in_dag_ and "df" in pdf.columns:
-            dfs = dict(zip(pdf["term"], pdf["df"]))
         for term, postings in zip(pdf["term"], pdf["postings"]):
+            df_t = df_of[term]
             m = len(postings)
             docs = np.fromiter((p["doc_id"] for p in postings), np.int64, m)
             tf = np.fromiter((p["tf"] for p in postings), np.float64, m)
             dl = np.fromiter((p["dl"] for p in postings), np.float64, m)
-            term_arrays[term] = (docs, tf, dl)
+            idf = math.log(1.0 + (n_ - df_t + 0.5) / (df_t + 0.5))
+            term_arrays[term] = (docs, tf, dl, idf)
         out_q, out_d, out_s = [], [], []
         for qid in sorted(set(qterms_) | set(bonus_by_q)):
             all_docs, all_contrib = [], []
-            for t, w in qterms_.get(qid, ()):
+            for t, qtf in qterms_.get(qid, ()):
                 e = term_arrays.get(t)
                 if e is None:
                     continue
-                if df_in_dag_:
-                    # w is the raw qtf; df is GLOBAL (joined pre-shuffle)
-                    df_t = float(dfs[t])
-                    w = w * math.log(1.0 + (n_ - df_t + 0.5) / (df_t + 0.5))
-                docs, tf, dl = e
+                docs, tf, dl, idf = e
+                w = qtf * idf
                 contrib = (
                     w * tf * (k1_ + 1.0) / (tf + k1_ * (1.0 - b_ + b_ * dl / avgdl_))
                 )
@@ -636,17 +615,8 @@ def _bm25_topk_segmented(
             ),
         ).alias("postings"),
     )
-    if df_in_dag and terms:
-        # GLOBAL df per query term from a narrow projected re-scan
-        # (term + df_seg only — no postings payload), broadcast-joined
-        # onto every (term, seg) row: an extra parallel stage inside the
-        # same job, replacing the serial driver collect
-        df_rel = (
-            index.postings.where(term_filter)
-            .groupBy("term")
-            .agg(F.sum("df_seg").cast("double").alias("df"))
-        )
-        narrowed = narrowed.join(F.broadcast(df_rel), "term")
+    if not isinstance(dfs, dict):
+        narrowed = narrowed.join(F.broadcast(dfs), "term")
     if allowed_docs is None and phrase_bonus is None:
         scored = narrowed.groupBy("seg").applyInPandas(fn, schema=_SCORE_SCHEMA)
     else:

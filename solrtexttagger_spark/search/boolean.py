@@ -92,7 +92,12 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.search.bm25 import B, K1
+from solrtexttagger_spark.search.bm25 import (
+    B,
+    K1,
+    join_query_terms,
+    warm_df_cache,
+)
 from solrtexttagger_spark.search.phrase import (
     MAX_SLOP as _MAX_SLOP,
     multi_phrase_match,
@@ -662,58 +667,24 @@ def boolean_matched_scores(
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0
 
-    # Global df per term from the index's bounded driver-side df cache
-    # (bm25.warm_df_cache — the in-memory term-dictionary pattern WAND's
-    # metadata cache already uses). With ``warm_df=True`` (the top-level
-    # batch scorer entry, boolean_bm25_topk) unseen terms are fetched in
-    # one tiny collect; otherwise the cache is used ONLY when it already
-    # covers the vocabulary, so embedded callers (the /select writers'
-    # facet.query block, the router, /stream) stay action-free and keep
-    # their pinned job budgets. Either way df then ships as a literal
-    # column of the broadcast query relation, removing the per-call df
-    # recovery stages (a distinct-qterms broadcast + a window exchange
-    # on term); the idf expression is unchanged (same F.log over the
-    # same df value). Phrase constituents warm in the same call so the
-    # scored phrase pass below finds the cache hot. Cold embedded calls
-    # keep the original in-DAG df window.
-    from solrtexttagger_spark.search.bm25 import warm_df_cache
-
-    vocab = sorted(
-        {t for (_q, t, _w, _g) in score_rows}
-        | ({
-            t
-            for (toks, _s), _pid in phrase_ids.items()
-            for t in toks
-        } if pscore_rows else set())
-    )
-    cache = getattr(index, "_bm25_df", None) or {}
+    # Global df from bm25.global_df, the one lookup (no action). Only
+    # the top-level entry (``warm_df=True``, boolean_bm25_topk and
+    # solr_select's scored routes) fills its cache first, with one tiny
+    # collect for unseen terms, phrase constituents included: a
+    # boolean query's vocabulary is known only after the parse above.
+    # Embedded callers (the /select writers' facet.query block, the
+    # router, /stream) stay action-free and keep their job budgets.
     if warm_df:
-        dfs = warm_df_cache(index, vocab)
-    elif all(t in cache for t in vocab):
-        dfs = {t: cache[t] for t in vocab}
-    else:
-        dfs = None
-    if dfs is not None:
-        qdf = spark.createDataFrame(
-            [
-                (qid, t, w, g, float(dfs[t]))
-                for (qid, t, w, g) in score_rows
-                if dfs.get(t) is not None
-            ],
-            "query_id long, term string, qtf double, mgroups array<int>,"
-            " df double",
+        warm_df_cache(
+            index,
+            {t for (_q, t, _w, _g) in score_rows}
+            | ({t for (toks, _s) in phrase_ids for t in toks}
+               if pscore_rows else set()),
         )
-        joined = postings.join(F.broadcast(qdf), "term")
-    else:
-        qdf = spark.createDataFrame(
-            score_rows,
-            "query_id long, term string, qtf double, mgroups array<int>",
-        )
-        qterms = qdf.select("term").distinct()
-        qpost = postings.join(F.broadcast(qterms), "term").withColumn(
-            "df", F.sum("df_seg").over(Window.partitionBy("term"))
-        )
-        joined = qpost.join(F.broadcast(qdf), "term")
+    joined = join_query_terms(
+        index, postings, [(t, qid, w, g) for (qid, t, w, g) in score_rows],
+        "term string, query_id long, qtf double, mgroups array<int>",
+    )
     idf = F.log(
         F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )

@@ -25,8 +25,7 @@ from solrtexttagger_spark.search.bm25 import (
     B,
     K1,
     analyze_query_terms,
-    exploded_scores,
-    queries_to_df,
+    entry_scores,
 )
 
 
@@ -94,18 +93,7 @@ def elevated_topk(
     that also matches keeps its true BM25 score at its pinned rank.
     Returns (query_id, rank, doc_id, score, elevated)."""
     spark = spark or index.postings.sparkSession
-    qdf = (
-        queries
-        if isinstance(queries, DataFrame)
-        else queries_to_df(spark, queries)
-    )
-    if getattr(qdf, "_stt_terms", None):
-        # top-level handler: warm unseen terms (one tiny collect) so
-        # exploded_scores takes its windowless literal-df path
-        from solrtexttagger_spark.search.bm25 import warm_df_cache
-
-        warm_df_cache(index, qdf._stt_terms)
-    scores = exploded_scores(index, qdf, k1=k1, b=b, allowed_docs=allowed_docs)
+    scores = entry_scores(index, queries, k1=k1, b=b, allowed_docs=allowed_docs)
     rows = [
         (int(qid), int(d), pos)
         for qid, ids in elevations.items()

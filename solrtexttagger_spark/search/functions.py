@@ -20,7 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.search.bm25 import B, K1, exploded_scores, queries_to_df
+from solrtexttagger_spark.search.bm25 import (
+    B,
+    K1,
+    analyze_query_terms,
+    entry_scores,
+    join_query_terms,
+)
 
 
 def boosted_topk(
@@ -57,18 +63,7 @@ def boosted_topk(
     if bf is None and boost is None:
         raise ValueError("boosted_topk needs bf= and/or boost= (else use "
                          "bm25_topk)")
-    spark = spark or docs_df.sparkSession
-    qdf = queries_to_df(spark, queries)
-    if getattr(qdf, "_stt_terms", None):
-        # top-level handler: warm unseen terms (one tiny collect) so
-        # exploded_scores takes its windowless literal-df path
-        from solrtexttagger_spark.search.bm25 import warm_df_cache
-
-        warm_df_cache(index, qdf._stt_terms)
-    scores = exploded_scores(
-        index, qdf, k1=k1, b=b,
-        allowed_docs=allowed_docs,
-    )
+    scores = entry_scores(index, queries, k1=k1, b=b, allowed_docs=allowed_docs)
     cols = [F.col(id_col).alias("doc_id")]
     if bf is not None:
         cols.append(F.expr(bf).cast("double").alias("__bf"))
@@ -116,13 +111,12 @@ def explain_scores(
     Scale shape mirrors /tvrh (search/termvectors.py): the requested
     docs' segments are computed with the build's own hash and semi-join
     postings BEFORE the explode, so explaining k docs touches <= k
-    segments of the index regardless of corpus size. df stays GLOBAL
-    (summed over all of a term's segment rows pre-pruning is wrong —
-    it comes from broadcast term_stats, the corpus truth)."""
+    segments of the index regardless of corpus size. df stays GLOBAL:
+    bm25.global_df reads it over all of a term's segment rows, not the
+    pruned ones."""
     spark = spark or index.postings.sparkSession
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0
-    qdf = queries_to_df(spark, queries)
     ids_df = spark.createDataFrame(
         [(int(i),) for i in sorted(set(doc_ids))], "doc_id long"
     ).withColumn(
@@ -132,14 +126,15 @@ def explain_scores(
     pruned = index.postings.join(
         F.broadcast(ids_df.select("seg").distinct()), "seg", "left_semi"
     )
-    qterms = qdf.select("term").distinct()
+    qrows = [
+        (t, int(qid), int(qtf))
+        for qid, q in queries
+        for t, qtf in sorted(analyze_query_terms(q).items())
+    ]
     ex = (
-        pruned.join(F.broadcast(qterms), "term")
-        # global df from term_stats: the seg-pruned relation no longer
-        # carries every segment row, so a window-sum over it would
-        # undercount df
-        .join(F.broadcast(index.term_stats.select("term", "df")), "term")
-        .join(F.broadcast(qdf), "term")
+        join_query_terms(
+            index, pruned, qrows, "term string, query_id long, qtf int"
+        )
         # array-literal prefilter BEFORE the Generate (same shape as
         # termvectors.term_vectors): explaining k docs generates O(k)
         # rows per shard, never O(segment)

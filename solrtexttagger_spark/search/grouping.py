@@ -3,7 +3,7 @@ three more features of the reference's delegated Solr SearchHandler
 (SURVEY.md §2.4 D1/D4), re-expressed Spark-first.
 
 All three ride the SAME exploded scoring relation as /select
-(search/bm25.exploded_scores: one broadcast join + one groupBy shuffle),
+(search/bm25.entry_scores: one broadcast join + one groupBy shuffle),
 then differ only in the window/rollup applied on top:
 
 - grouped_topk  — group=true&group.field=f: groups ranked by their best
@@ -29,30 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.search.bm25 import (
-    B,
-    K1,
-    exploded_scores,
-    queries_to_df,
-)
-
-
-def _scores(index, queries, k1, b, allowed_docs, spark):
-    qdf = (
-        queries
-        if isinstance(queries, DataFrame)
-        else queries_to_df(spark or index.postings.sparkSession, queries)
-    )
-    if getattr(qdf, "_stt_terms", None):
-        # top-level batch scorers (grouping/collapse/sorted entries):
-        # one tiny collect for unseen terms buys exploded_scores'
-        # windowless literal-df path for the whole batch (same pattern
-        # as bm25_topk's exploded strategy; the action-free contracts
-        # only bind the segmented cold path and embedded /select calls)
-        from solrtexttagger_spark.search.bm25 import warm_df_cache
-
-        warm_df_cache(index, qdf._stt_terms)
-    return exploded_scores(index, qdf, k1=k1, b=b, allowed_docs=allowed_docs)
+from solrtexttagger_spark.search.bm25 import B, K1, entry_scores
 
 
 def grouped_topk(
@@ -79,7 +56,9 @@ def grouped_topk(
     score). ``allowed_docs`` = fq, restricting groups and members alike;
     ``round_to`` rounds scores BEFORE ranking (cross-engine-stable
     windows for the oracle)."""
-    scores = _scores(index, queries, k1, b, allowed_docs, spark)
+    scores = entry_scores(
+        index, queries, k1=k1, b=b, allowed_docs=allowed_docs
+    )
     if round_to is not None:
         scores = scores.withColumn("score", F.round("score", round_to))
     joined = scores.join(
@@ -141,7 +120,9 @@ def select_sorted(
     case); it stays JVM-side exactly like bf/boost
     (search/functions.py). NULLs follow Spark's default ordering (first
     asc / last desc)."""
-    scores = _scores(index, queries, k1, b, allowed_docs, spark)
+    scores = entry_scores(
+        index, queries, k1=k1, b=b, allowed_docs=allowed_docs
+    )
     if round_to is not None:
         scores = scores.withColumn("score", F.round("score", round_to))
     joined = scores.join(
@@ -239,7 +220,9 @@ def collapse_topk(
     docs form one group). ``allowed_docs`` = fq."""
     if null_policy not in ("ignore", "expand", "collapse"):
         raise ValueError("null_policy must be ignore|expand|collapse")
-    scores = _scores(index, queries, k1, b, allowed_docs, spark)
+    scores = entry_scores(
+        index, queries, k1=k1, b=b, allowed_docs=allowed_docs
+    )
     if round_to is not None:
         scores = scores.withColumn("score", F.round("score", round_to))
     joined = scores.join(
@@ -313,7 +296,9 @@ def expand_collapsed(
     collapse_topk's output (its (query_id, group_value) pairs define
     which groups expand — only groups on the page, like Solr).
     Returns (query_id, group_value, member_rank, doc_id, score)."""
-    scores = _scores(index, queries, k1, b, allowed_docs, spark)
+    scores = entry_scores(
+        index, queries, k1=k1, b=b, allowed_docs=allowed_docs
+    )
     if round_to is not None:
         scores = scores.withColumn("score", F.round("score", round_to))
     joined = scores.join(

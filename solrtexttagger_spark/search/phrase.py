@@ -19,10 +19,11 @@ non-empty; n_occurrences = its size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.search.bm25 import join_query_terms
 
 
 def phrase_terms(phrase: str, lowercase: bool = True) -> list[str]:
@@ -156,45 +157,17 @@ def multi_phrase_match_scored(
     scores ONLY where the words are contiguous — this repo's documented
     "quotes filter, constituents score" model). One scan, one shuffle,
     regardless of phrase count."""
-    spark = index.postings.sparkSession
     rows, plens = _phrase_rows(phrases, lowercase)
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0
-
-    # global df per constituent term from the index's bounded df cache
-    # WHEN it already covers the vocabulary (top-level scorers warm it —
-    # boolean_bm25_topk warm_df=True, synonym_phrase_bonus), shipped as
-    # a literal column; this call itself never adds a job, so embedded
-    # callers keep their pinned job budgets. Cold vocabularies keep the
-    # original in-DAG df window. The idf expression is identical either
-    # way (same F.log over the same df value); constituents absent from
-    # the corpus drop on the literal path exactly as the inner postings
-    # join drops them on the window path.
-    cache = getattr(index, "_bm25_df", None) or {}
-    vocab = sorted({t for _p, _i, t in rows})
-    if all(t in cache for t in vocab):
-        qdf = spark.createDataFrame(
-            [
-                (pid, idx, t, float(cache[t]))
-                for pid, idx, t in rows
-                if cache.get(t) is not None
-            ],
-            "phrase_id int, term_idx int, term string, df double",
-        )
-        qpost = index.postings
-    else:
-        qdf = spark.createDataFrame(
-            rows, "phrase_id int, term_idx int, term string"
-        )
-        qterms = qdf.select("term").distinct()
-        qpost = index.postings.join(F.broadcast(qterms), "term").withColumn(
-            "df", F.sum("df_seg").over(Window.partitionBy("term"))
-        )
     idf = F.log(
         F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
     ex = (
-        qpost.join(F.broadcast(qdf), "term")
+        join_query_terms(
+            index, index.postings, [(t, pid, idx) for pid, idx, t in rows],
+            "term string, phrase_id int, term_idx int",
+        )
         .select(
             "phrase_id", "term_idx", idf.alias("idf"),
             F.explode("postings").alias("p"),
@@ -428,25 +401,14 @@ def multi_phrase_match_scored_compressed(
             "compressed phrase match needs pos_block rows — build with "
             "compress_index(with_positions=True)"
         )
-    spark = cindex.blocks.sparkSession
     rows, plens = _phrase_rows(phrases, lowercase)
-    qdf = spark.createDataFrame(rows, "phrase_id int, term_idx int, term string")
     n = float(cindex.doc_count)
     avgdl = float(cindex.avgdl) if cindex.avgdl else 1.0
     k1_, b_ = float(k1), float(b)
-    # global df per phrase term: narrow JVM aggregation over the same
-    # filtered blocks, broadcast back on (tiny: one row per term)
-    qterms = qdf.select("term").distinct()
-    df_rel = (
-        cindex.blocks.join(F.broadcast(qterms), "term")
-        .groupBy("term")
-        .agg(F.sum("df_seg").cast("double").alias("df"))
-    )
-    joined = (
-        cindex.blocks.join(F.broadcast(qdf), "term")
-        .join(F.broadcast(df_rel), "term")
-        .select("phrase_id", "term_idx", "block", "pos_block", "df")
-    )
+    joined = join_query_terms(
+        cindex, cindex.blocks, [(t, pid, idx) for pid, idx, t in rows],
+        "term string, phrase_id int, term_idx int",
+    ).select("phrase_id", "term_idx", "block", "pos_block", "df")
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import math

@@ -32,9 +32,9 @@ from solrtexttagger_spark.index.build import InvertedIndex
 from solrtexttagger_spark.search.bm25 import (
     B,
     K1,
+    analyze_query_terms,
     bm25_topk,
     exploded_scores,
-    queries_to_df,
 )
 
 
@@ -99,10 +99,9 @@ def select_page(
     score = (bm25 + bf) * boost, folded in BEFORE the rank window so
     numFound/maxScore/pagination all see the boosted ranking, still in
     the same one job (the function columns ride the fl corpus join)."""
-    spark = spark or docs_df.sparkSession
     fl = [c for c in fl if c != id_col]
     scores = exploded_scores(
-        index, queries_to_df(spark, [(0, query)]), k1=k1, b=b,
+        index, {0: analyze_query_terms(query)}, k1=k1, b=b,
         allowed_docs=allowed_docs,
     )
     if bf is not None or boost is not None:
@@ -228,8 +227,6 @@ def _facet_sections(
     (section, field, value) relation. Range buckets zero-fill driver-side
     against the literal bucket spine (the spine is request constants — no
     join needed)."""
-    from solrtexttagger_spark.search.bm25 import analyze_query_terms
-
     facet_cols = list(facet_cols or [])
     franges = []
     seen_keys: set[str] = set()

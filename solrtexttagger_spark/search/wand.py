@@ -33,7 +33,12 @@ from solrtexttagger_spark.index.compression import (
     decode_positions_block,
     decode_postings_block,
 )
-from solrtexttagger_spark.search.bm25 import K1, B, analyze_query_terms
+from solrtexttagger_spark.search.bm25 import (
+    K1,
+    B,
+    analyze_query_terms,
+    join_query_terms,
+)
 
 _SCORE_SCHEMA = T.StructType(
     [
@@ -727,7 +732,6 @@ def wand_topk(
     spark: SparkSession | None = None,
     prune_stats: dict | None = None,
     local_threshold_postings: int = 100_000,
-    theta_rounds: int = 2,
     allowed_docs: DataFrame | None = None,
     start: int = 0,
     synonyms: dict[str, list[str]] | None = None,
@@ -766,16 +770,15 @@ def wand_topk(
       rest. Flat workloads thus pay zero pruning overhead.
     * θ-tightening: see below.
 
-    theta_rounds=2 (default) arms an ADAPTIVE θ-tightening round: phase 2
-    first scores only the few highest-bound candidate segments per query,
-    re-derives θ from the union of results so far, and prunes the remaining
-    candidates against the tighter θ. The extra driver round-trip is paid
-    only for queries where it can plausibly win — enough remaining
-    candidates AND candidate bounds spreading into the lower half of the
+    θ-tightening is ADAPTIVE: phase 2 first scores only the few
+    highest-bound candidate segments per query, re-derives θ from the
+    union of results so far, and prunes the remaining candidates against
+    the tighter θ. The extra driver round-trip is paid only for queries
+    where it can plausibly win — enough remaining candidates AND
+    candidate bounds spreading into the lower half of the
     [θ_phase1, max_bound] range (on flat workloads, where every segment's
     bound clusters near the ceiling, a tighter θ provably cannot prune, so
-    the round is skipped and theta_rounds=2 costs nothing — round-2
-    verdict). theta_rounds=1 disables tightening outright.
+    the round is skipped and costs nothing — round-2 verdict).
     Rank-identity is unaffected in all cases — pruning stays sound at
     every θ.
 
@@ -806,7 +809,7 @@ def wand_topk(
     common = dict(
         k1=k1, b=b, spark=spark, prune_stats=prune_stats,
         local_threshold_postings=local_threshold_postings,
-        theta_rounds=theta_rounds, allowed_docs=allowed_docs,
+        allowed_docs=allowed_docs,
     )
     if not qphrases:
         return _wand_topk_bags(cindex, qbags, k=k, start=start, **common)
@@ -857,8 +860,8 @@ def _compressed_contribs(
 ) -> DataFrame:
     """Per-(query, doc) BM25 contributions decoded from the compressed
     blocks of the involved terms: wdf_rows = [(query_id, term, qtf)] ->
-    (query_id, doc_id, c). One blocks scan (broadcast term filter +
-    global df joined on), one Arrow decode pass, no shuffle."""
+    (query_id, doc_id, c). One blocks scan (broadcast term filter with
+    global df from bm25.global_df), one Arrow decode pass, no shuffle."""
     from typing import Iterator
 
     from solrtexttagger_spark.index.compression import decode_postings_block
@@ -867,17 +870,10 @@ def _compressed_contribs(
     avgdl = float(cindex.avgdl) if cindex.avgdl else 1.0
     k1_, b_ = float(k1), float(b)
     wdf = spark.createDataFrame(wdf_rows, "query_id long, term string, qtf int")
-    qterms = wdf.select("term").distinct()
-    df_rel = (
-        cindex.blocks.join(F.broadcast(qterms), "term")
-        .groupBy("term")
-        .agg(F.sum("df_seg").cast("double").alias("df"))
-    )
-    joined = (
-        cindex.blocks.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(df_rel), "term")
-        .select("term", "block", "df")
-    )
+    joined = join_query_terms(
+        cindex, cindex.blocks,
+        [(t,) for t in sorted({t for _q, t, _f in wdf_rows})], "term string",
+    ).select("term", "block", "df")
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -975,7 +971,6 @@ def _wand_topk_bags(
     spark: SparkSession,
     prune_stats: dict | None,
     local_threshold_postings: int,
-    theta_rounds: int,
     allowed_docs: DataFrame | None,
     start: int,
 ) -> DataFrame:
@@ -1279,7 +1274,7 @@ def _wand_topk_bags(
 
     phase2a_local = None
     tightened_queries = 0
-    if theta_rounds >= 2 and rest:
+    if rest:
         # θ-tightening: score the top few candidate segments (by bound)
         # first, fold their scores into θ, then re-prune the remainder.
         # ADAPTIVE: tighten only queries where the round can pay —

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -19,3 +20,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@contextmanager
+def _count_collects():
+    # patch the CONCRETE class (pyspark.sql.DataFrame is an ABC in Spark 4)
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = []
+    orig = DataFrame.collect
+
+    def counting(self):
+        calls.append(1)
+        return orig(self)
+
+    DataFrame.collect = counting
+    try:
+        yield calls
+    finally:
+        DataFrame.collect = orig
+
+
+@pytest.fixture
+def count_collects():
+    """``with count_collects() as calls: ...`` records one entry in
+    ``calls`` per DataFrame.collect made inside the block."""
+    return _count_collects

@@ -137,33 +137,21 @@ def test_stays_jvm_side(spark, corpus):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_select_writer_bf_boost(spark, corpus):
+def test_select_writer_bf_boost(spark, corpus, count_collects):
     """bf/boost on the full /select request: the boosted ranking reaches
     the page, maxScore and pagination — still one job per request."""
     import json
-
-    from pyspark.sql.classic.dataframe import DataFrame
 
     from solrtexttagger_spark.search.select import render_select_json
 
     df, idx = corpus
     render_select_json(idx, df, "hash", fl=[], k=1, spark=spark)  # warm
 
-    calls = []
-    orig = DataFrame.collect
-
-    def counting(self):
-        calls.append(1)
-        return orig(self)
-
-    try:
-        DataFrame.collect = counting
+    with count_collects() as calls:
         js = json.loads(render_select_json(
             idx, df, "hash join", fl=["views"], k=2,
             bf="log(1 + views)", spark=spark,
         ))
-    finally:
-        DataFrame.collect = orig
     assert len(calls) == 1  # boost rides the one page job
     docs = js["response"]["docs"]
     # popularity dominates: doc 2 (1000 views) first despite weakest text

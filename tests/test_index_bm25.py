@@ -265,6 +265,9 @@ def test_bm25_df_cache_and_reset(spark, docs_df, index, monkeypatch):
     assert index._bm25_df["zzz"] is None
     warm = sorted(map(key, bm25_topk(index, q, k=5, spark=spark).collect()))
     assert warm == cold and cold  # non-empty: real vocabulary
+    # the cache hit drops "zzz" (cached as absent) on the exploded path too
+    assert warm == sorted(map(key, bm25_topk(
+        index, q, k=5, spark=spark, strategy="exploded").collect()))
     # cap overflow inside warm_df_cache keeps the in-flight terms correct
     monkeypatch.setattr(bmod, "BM25_DF_CACHE_MAX_TERMS", 3)
     warm_df_cache(index, ["fast", "row", "merge", "sort"])
@@ -278,3 +281,142 @@ def test_bm25_df_cache_and_reset(spark, docs_df, index, monkeypatch):
     assert index._bm25_df == {}
     again = sorted(map(key, bm25_topk(index, q, k=5, spark=spark).collect()))
     assert again == cold
+
+
+def _build_jobs(spark, build):
+    """(relation, Spark jobs run while ``build()`` constructs it). A job
+    group sees every job, localCheckpoint ones included."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "relation build")
+    try:
+        rel = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rel, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# "fast" is shared by two queries of one batch: a df lookup that sees a
+# (term, seg) row once per query would inflate its df
+LOOKUP_QUERIES = [(0, "fast filter"), (1, "fast key order"), (2, "vector hash")]
+LOOKUP_PHRASES = ["fast column", "row filter", "key order"]
+ABSENT = "zzz"
+
+
+def _lookup_consumers(spark, index):
+    """consumer -> build(absent) of the relation it scores with; with
+    ``absent`` one query (or an extra phrase) also carries ABSENT, which
+    must change no row."""
+    from solrtexttagger_spark.search.bm25 import exploded_scores, query_bags
+    from solrtexttagger_spark.search.boolean import boolean_matched_scores
+    from solrtexttagger_spark.search.functions import explain_scores
+    from solrtexttagger_spark.search.phrase import multi_phrase_match_scored
+
+    def qs(absent):
+        if not absent:
+            return LOOKUP_QUERIES
+        (qid, text), *rest = LOOKUP_QUERIES
+        return [(qid, f"{text} {ABSENT}"), *rest]
+
+    return {
+        "bm25_segmented": lambda a: bm25_topk(index, qs(a), k=5, spark=spark),
+        "exploded_scores": lambda a: exploded_scores(index, query_bags(qs(a))),
+        "boolean": lambda a: boolean_matched_scores(
+            index,
+            [(0, '+fast filter "key order"'), (1, "+row -fast"),
+             (2, "hash vector" + (f" {ABSENT}" if a else ""))],
+            spark=spark,
+        ),
+        "phrase_scored": lambda a: multi_phrase_match_scored(
+            index, LOOKUP_PHRASES + ([f"fast {ABSENT}"] if a else [])
+        ),
+        "explain": lambda a: explain_scores(index, qs(a), [0, 2, 3, 5], spark=spark),
+    }
+
+
+def _set_cache(index, state):
+    from solrtexttagger_spark.search.bm25 import warm_df_cache
+    from solrtexttagger_spark.search.wand import reset_query_caches
+
+    reset_query_caches(index)
+    if state != "empty":
+        vocab = {t for _d, text in DOCS for t in py_tokenize(text)}
+        warm_df_cache(index, vocab | ({ABSENT} if state == "absent" else set()))
+
+
+def test_global_df_lookup_consumers(spark, docs_df):
+    """Every scorer reads global df through bm25.global_df: building its
+    relation runs NO Spark job on an empty cache, and its rows are
+    identical (ids exact, scores to 1e-9) whether the cache is empty,
+    fully warm, or also holds a term absent from the corpus — and equal
+    the pure-Python oracle where one applies (a term shared by two
+    queries keeps its true df)."""
+    index = build_index(docs_df)
+    _ = (index.doc_count, index.avgdl)  # one-time per-index stats
+    consumers = _lookup_consumers(spark, index)
+    states = [("empty", False), ("empty", True), ("warm", False), ("absent", True)]
+    got = {}
+    for state, absent in states:
+        _set_cache(index, state)
+        for name, build in consumers.items():
+            rel, jobs = _build_jobs(spark, lambda: build(absent))
+            if state == "empty":
+                assert jobs == 0, (name, absent, jobs)
+            got[(name, state, absent)] = sorted(tuple(r) for r in rel.collect())
+    for name in consumers:
+        ref = got[(name, "empty", False)]
+        assert ref, name
+        for key in [(name, s, a) for s, a in states]:
+            rows = got[key]
+            assert len(rows) == len(ref), key
+            for g, e in zip(rows, ref):
+                assert len(g) == len(e), key
+                for x, y in zip(g, e):
+                    if isinstance(x, float):
+                        assert x == pytest.approx(y, abs=1e-9), key
+                    else:
+                        assert x == y, key
+    # oracles: the batch scorers rank like py_bm25 (shared "fast"
+    # included), and explain reports each term's true corpus df
+    expected = py_bm25(DOCS, LOOKUP_QUERIES, k=5)
+    seg = got[("bm25_segmented", "empty", False)]
+    assert [(q, rk, d) for q, rk, d, _s in seg] == [
+        (q, rk, d) for q, rows in sorted(expected.items()) for rk, d, _s in rows
+    ]
+    postings, *_ = py_index(DOCS)
+    explain = consumers["explain"](False).collect()
+    assert explain and all(r["df"] == len(postings[r["term"]]) for r in explain)
+
+
+def test_global_df_exploded_entry_warms_then_hits(spark, docs_df):
+    """bm25_topk(strategy="exploded") is a cache-filling entry: on an
+    empty cache building it runs only the warm collect; once the cache
+    holds its terms it runs no job. List and DataFrame queries rank
+    identically to the pure-Python oracle."""
+    from solrtexttagger_spark.search.bm25 import queries_to_df
+
+    index = build_index(docs_df)
+    _ = (index.doc_count, index.avgdl)
+    _set_cache(index, "empty")
+    cold, cold_jobs = _build_jobs(spark, lambda: bm25_topk(
+        index, LOOKUP_QUERIES, k=5, spark=spark, strategy="exploded"))
+    warm, warm_jobs = _build_jobs(spark, lambda: bm25_topk(
+        index, LOOKUP_QUERIES, k=5, spark=spark, strategy="exploded"))
+    assert cold_jobs >= 1 and warm_jobs == 0, (cold_jobs, warm_jobs)
+    _set_cache(index, "empty")
+    via_df = bm25_topk(
+        index, queries_to_df(spark, LOOKUP_QUERIES), k=5, spark=spark,
+        strategy="exploded",
+    )
+    expected = sorted(
+        (q, rk, d, s) for q, rows in py_bm25(DOCS, LOOKUP_QUERIES, k=5).items()
+        for rk, d, s in rows
+    )
+    for rel in (cold, warm, via_df):
+        rows = sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                      for r in rel.collect())
+        assert [r[:3] for r in rows] == [e[:3] for e in expected]
+        assert all(abs(r[3] - e[3]) <= 1e-9 for r, e in zip(rows, expected))

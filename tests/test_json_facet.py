@@ -266,23 +266,13 @@ class TestTree:
         assert out["h_src"] == 2  # Solr hll stat: HLL++ approx distinct
         assert out["langs"]["buckets"][0]["u"] == 2  # en: web+book
 
-    def test_single_action_for_tree(self, spark, corpus):
+    def test_single_action_for_tree(self, spark, corpus, count_collects):
         """The whole terms/range tree (3 nodes, stats, missing) is ONE
         collect; query facets add exactly one more."""
-        from pyspark.sql.classic.dataframe import DataFrame
-
         df, idx = corpus
         _facet(spark, corpus, {"langs": {"type": "terms", "field": "lang"}})
 
-        calls = []
-        orig = DataFrame.collect
-
-        def counting(self):
-            calls.append(1)
-            return orig(self)
-
-        try:
-            DataFrame.collect = counting
+        with count_collects() as calls:
             _facet(spark, corpus, {
                 "langs": {"type": "terms", "field": "lang", "missing": True,
                           "facet": {"m": "avg(n)",
@@ -299,8 +289,6 @@ class TestTree:
                 "q2": {"type": "query", "q": "+gamma"},
             })
             n_with_q = len(calls) - n_tree
-        finally:
-            DataFrame.collect = orig
         assert n_tree == 1
         assert n_with_q == 2
 

@@ -118,20 +118,16 @@ def test_cosine_plan_broadcasts_probes(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_facades_and_plan_summary(spark, docs_df):
-    """operators/functions facades import cleanly; plans.plan_summary and
-    assert_plan report the pinned shapes."""
-    import solrtexttagger_spark.functions as fns
-    import solrtexttagger_spark.operators as ops
+def test_plan_summary(spark, docs_df):
+    """plans.plan_summary and assert_plan report the pinned shapes."""
+    from solrtexttagger_spark.ops.dedup import exact_dedup
     from solrtexttagger_spark.plans import assert_plan, plan_summary
 
-    assert callable(ops.tag) and callable(fns.tokenize)
-
-    s = plan_summary(ops.exact_dedup(docs_df))
+    s = plan_summary(exact_dedup(docs_df))
     assert s["exchanges"] == 1 and s["python_stages"] == 0
-    assert_plan(ops.exact_dedup(docs_df), exchanges=1)
+    assert_plan(exact_dedup(docs_df), exchanges=1)
     with pytest.raises(AssertionError):
-        assert_plan(ops.exact_dedup(docs_df), exchanges=0)
+        assert_plan(exact_dedup(docs_df), exchanges=0)
 
 
 
@@ -270,30 +266,18 @@ def test_grouping_plans(spark, docs_df, index):
     ).count("Exchange") + 2  # + corpus-fields join side
 
 
-def test_cold_bm25_builder_runs_no_driver_action(spark, index):
+def test_cold_bm25_builder_runs_no_driver_action(spark, index, count_collects):
     """Round-6 (r5 verdict #5): BUILDING a cold-vocabulary segmented
     bm25 plan performs ZERO driver actions — the per-term df arrives as
     a broadcast-joined column inside the scoring job, not via a
     collect wave ahead of it. The plan carries the df join; results
     stay rank-identical to the exploded strategy."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
     from solrtexttagger_spark.search.wand import reset_query_caches
 
     reset_query_caches(index)
     _ = index.avgdl  # one-time per-INDEX stat, not a per-batch wave
-    calls = []
-    orig = DataFrame.collect
-
-    def counting(self):
-        calls.append(1)
-        return orig(self)
-
-    try:
-        DataFrame.collect = counting
+    with count_collects() as calls:
         out = bm25_topk(index, [(0, "common w1")], k=5, spark=spark)
-    finally:
-        DataFrame.collect = orig
     assert calls == []  # plan construction is action-free when cold
     plan = plan_str(out)
     assert "FlatMapGroupsInPandas" in plan
@@ -307,40 +291,30 @@ def test_cold_bm25_builder_runs_no_driver_action(spark, index):
     assert cold == exp and cold
 
 
-def test_facet_sections_single_aggregation(spark, docs_df, index):
+def test_facet_sections_single_aggregation(spark, docs_df, index, count_collects):
     """Round-6 (r5 verdict #2): the writer-side facet assembly computes
     field facets and EVERY facet.range column in one aggregation over
     one match set — a single groupBy(sec, field, value), no per-range
     re-scan."""
     from solrtexttagger_spark.search.select import _facet_sections
 
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    calls = []
-    orig = DataFrame.collect
-
-    def counting(self):
-        calls.append(1)
-        return orig(self)
-
     docs = docs_df.withColumn("n", (docs_df.doc_id * 7) % 40)
-    try:
-        DataFrame.collect = counting
+    with count_collects() as calls:
         fields, ranges, _iv = _facet_sections(
             index, docs, "common w1", ["lang"] if "lang" in docs.columns else [],
             # same column twice: independent buckets, distinct output
             # keys (Solr's {!key=} local param)
             [("n", 0, 40, 20), ("n", 0, 40, 10, "n_fine")], None, spark,
         )
-    finally:
-        DataFrame.collect = orig
     assert len(calls) == 1  # one job for every facet section
     assert set(ranges) == {"n", "n_fine"}  # both same-col requests appear
     for _col, (lo, hi, gap, buckets) in ranges.items():
         assert [b for b, _n in buckets] == list(range(lo, hi, gap))
 
 
-def test_bm25_synonym_graph_plan_action_free_and_cogrouped(spark, index):
+def test_bm25_synonym_graph_plan_action_free_and_cogrouped(
+    spark, index, count_collects
+):
     """Round-7 (r6 verdict #5): a multi-word synonym mapping on the
     segmented bag scorer adds NO driver action — the phrase-gated bonus
     relation (multi_phrase_match_scored -> synonym_phrase_bonus) is
@@ -348,25 +322,13 @@ def test_bm25_synonym_graph_plan_action_free_and_cogrouped(spark, index):
     as the fq ids, co-partitioned on the index's seg hash, merged
     BEFORE per-segment truncation. The whole cold batch stays one
     action."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
     from solrtexttagger_spark.search.wand import reset_query_caches
 
     reset_query_caches(index)
     _ = index.avgdl
     syn = {"w1": ["common w2"]}  # multi-word expansion into the fixture corpus
-    calls = []
-    orig = DataFrame.collect
-
-    def counting(self):
-        calls.append(1)
-        return orig(self)
-
-    try:
-        DataFrame.collect = counting
+    with count_collects() as calls:
         out = bm25_topk(index, [(0, "w1 common")], k=5, spark=spark, synonyms=syn)
-    finally:
-        DataFrame.collect = orig
     assert calls == []  # bonus relation never collected driver-side
     plan = plan_str(out)
     # the bonus meets the scoring kernel through the cogroup variant

@@ -188,14 +188,11 @@ def test_select_response_golden(spark):
     assert 'numFound="2"' in xml3 and "de" not in xml3
 
 
-def test_select_single_job_and_max_score(spark):
+def test_select_single_job_and_max_score(spark, count_collects):
     """Round-4 verdict #6 + round-5 advice: one action per /select request
     (numFound/maxScore ride the scoring pass — no second corpus job), and
     maxScore is the rank-1 score even when start pages past it; an empty
     page beyond the matches still reports numFound."""
-    # patch the CONCRETE class (pyspark.sql.DataFrame is an ABC in Spark 4)
-    from pyspark.sql.classic.dataframe import DataFrame
-
     from solrtexttagger_spark.index.build import build_index
     from solrtexttagger_spark.search.select import render_select_json, render_select_xml
 
@@ -212,20 +209,10 @@ def test_select_single_job_and_max_score(spark):
     # per-request) so the counter below sees only the request's own action
     render_select_xml(idx, df, "alpha", fl=["lang"], k=1, spark=spark)
 
-    calls = []
-    orig = DataFrame.collect
-
-    def counting(self):
-        calls.append(1)
-        return orig(self)
-
-    try:
-        DataFrame.collect = counting
+    with count_collects() as calls:
         xml2 = render_select_xml(
             idx, df, "alpha beta", fl=["lang"], k=2, start=2, spark=spark
         )
-    finally:
-        DataFrame.collect = orig
     assert len(calls) == 1  # page + numFound + maxScore in ONE action
     # maxScore = the rank-1 score (1.2814), NOT the page-2 head score
     assert 'numFound="3" start="2" maxScore="1.2814"' in xml2
@@ -350,15 +337,13 @@ def test_select_highlight_section_golden(spark):
     assert "<str>beta &lt;b&gt; delta</str>" in xml2
 
 
-def test_select_fully_dressed_job_budget(spark):
+def test_select_fully_dressed_job_budget(spark, count_collects):
     """Round-6 (r5 verdict #2): a page + field-facet + MULTIPLE
     facet.range + hl request runs exactly 3 actions — the page, ONE
     combined facet job covering every section, and one tiny snippet job
     that reuses the already-ranked page (no bm25 re-run) — matching
     Solr's one-DocSet-per-request component model. Output stays
     byte-identical to the per-section jobs (golden tests above)."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
     from solrtexttagger_spark.index.build import build_index
     from solrtexttagger_spark.search.select import render_select_xml
 
@@ -375,24 +360,14 @@ def test_select_fully_dressed_job_budget(spark):
     idx.postings.persist().count()
     render_select_xml(idx, df, "alpha", fl=["lang"], k=1, spark=spark)  # warm stats
 
-    calls = []
-    orig = DataFrame.collect
-
-    def counting(self):
-        calls.append(1)
-        return orig(self)
-
-    try:
-        DataFrame.collect = counting
+    with count_collects() as calls:
         xml = render_select_xml(
             idx, df, "alpha beta", fl=["lang"], k=2,
             facet_cols=["lang"],
             facet_ranges=[("n", 0, 40, 20), ("m", 0, 4, 2)],
             hl=True, spark=spark,
         )
-    finally:
-        DataFrame.collect = orig
-        idx.postings.unpersist()
+    idx.postings.unpersist()
     assert len(calls) == 3  # page + one facet job (all sections) + hl
     # both range columns rendered, zero-filled, from the one job
     assert '<lst name="n"><lst name="counts">' in xml
@@ -490,14 +465,12 @@ def test_facet_query_counts(spark):
     assert facet_query_counts(idx, "alpha", [], spark=spark) == {}
 
 
-def test_select_facet_queries_golden(spark):
+def test_select_facet_queries_golden(spark, count_collects):
     """facet.query block in the golden writers: first inside facet_counts
     (Solr's section order), one <int name="<query>"> per sub-query with
     the query string attr-escaped; JSON mirrors {"facet_queries": {q: n}}.
     The block costs exactly ONE extra action on a dressed request."""
     import json
-
-    from pyspark.sql.classic.dataframe import DataFrame
 
     from solrtexttagger_spark.index.build import build_index
     from solrtexttagger_spark.search.select import (
@@ -516,23 +489,13 @@ def test_select_facet_queries_golden(spark):
     idx.postings.persist().count()
     render_select_xml(idx, df, "alpha", fl=[], k=1, spark=spark)  # warm stats
 
-    calls = []
-    orig = DataFrame.collect
-
-    def counting(self):
-        calls.append(1)
-        return orig(self)
-
-    try:
-        DataFrame.collect = counting
+    with count_collects() as calls:
         xml = render_select_xml(
             idx, df, "alpha beta", fl=["lang"], k=2,
             facet_cols=["lang"], facet_ranges=[("n", 0, 40, 20)],
             facet_queries=["delta", '+alpha "beta gamma"'],
             hl=True, spark=spark,
         )
-    finally:
-        DataFrame.collect = orig
     # 3-action dressed budget + exactly 1 for ALL facet.query sub-queries
     assert len(calls) == 4
     assert (
@@ -548,14 +511,13 @@ def test_select_facet_queries_golden(spark):
     assert js["facet_counts"]["facet_queries"] == {"delta": 2, "epsilon": 0}
 
 
-def test_facet_intervals(spark):
+def test_facet_intervals(spark, count_collects):
     """Solr facet.interval: arbitrary, possibly OVERLAPPING interval sets
     with [inclusive]/(exclusive) brackets, * open endpoints and {!key=}
     aliases — zero extra actions (rides the one combined facet job)."""
     import json
 
     import pytest as _pytest
-    from pyspark.sql.classic.dataframe import DataFrame
 
     from solrtexttagger_spark.index.build import build_index
     from solrtexttagger_spark.search.facets import parse_interval
@@ -581,15 +543,7 @@ def test_facet_intervals(spark):
     idx.postings.persist().count()
     render_select_xml(idx, df, "alpha", fl=[], k=1, spark=spark)  # warm
 
-    calls = []
-    orig = DataFrame.collect
-
-    def counting(self):
-        calls.append(1)
-        return orig(self)
-
-    try:
-        DataFrame.collect = counting
+    with count_collects() as calls:
         js = json.loads(render_select_json(
             idx, df, "alpha", fl=[], k=2,
             facet_cols=["lang"],
@@ -598,8 +552,6 @@ def test_facet_intervals(spark):
             ],
             spark=spark,
         ))
-    finally:
-        DataFrame.collect = orig
     assert len(calls) == 2  # page + ONE combined facet job, intervals free
     # overlapping sets: doc 1 (n=10) counts in [5,25] but not [0,10);
     # doc 0 (n=5) counts in BOTH [0,10) and [5,25]
