@@ -1,7 +1,7 @@
 """Large-scale training-data pipeline operators built on the same engine
 primitives: deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard),
-embedding similarity search, text analysis (language-ID, quality scoring,
-token stats, fingerprinting), and multimodal column plumbing."""
+embedding similarity search and text analysis (language-ID, quality
+scoring, token stats, fingerprinting)."""
 
 from solrtexttagger_spark.ops.dedup import (
     exact_dedup,

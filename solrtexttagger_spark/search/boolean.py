@@ -13,8 +13,8 @@ Clause syntax:
                  else accepted) and stripped; `q=name:Boston` then means
                  `q=boston`, matching the reference's single-tag-field use
   +"exact phrase"  MUST phrase: the doc must contain the tokens
-                 CONTIGUOUSLY (positional intersection,
-                 search/phrase.multi_phrase_match); its constituent terms
+                 CONTIGUOUSLY (shifted-position intersection,
+                 phrase_docs); its constituent terms
                  also join the MUST scoring terms (qtf 1 each), so the
                  score equals the unquoted parse of the same text and the
                  quotes only ADD the contiguity filter
@@ -73,35 +73,47 @@ Clause syntax:
 Score = BM25 sum over the MUST + SHOULD terms present in the doc (same
 k1/b/idf as bm25_topk — a pure-OR query is score-identical to it).
 
-Physical shape (all JVM, one shuffle + one per-phrase-batch shuffle):
-postings broadcast-joined to the scoring terms, exploded,
-groupBy(query_id, doc_id) aggregating the score AND the
-distinct-MUST-present count in one pass; the MUST filter is a
-`HAVING`-style post-aggregation predicate against a broadcast per-query
-MUST count; MUST_NOT is a broadcast left_anti join of (query, doc)
-prohibited pairs. ALL phrase clauses across ALL queries resolve in ONE
-extra postings pass (multi_phrase_match), then filter as broadcast
-semi/anti join pairs. No extra pass over the postings for the filters.
+Evaluation: ONE implementation of these semantics, evaluate_boolean —
+a pure numpy function of one query's BooleanPlan (the parsed, rewritten
+and synonym-expanded clauses), the terms' (doc ids, BM25 operands) arrays,
+their positions and the global df. It scores the candidates (docs with
+any scored term, plus docs reached only through a phrase-gated synonym),
+then keeps those that satisfy every MUST group, hold no MUST_NOT term,
+hold every MUST phrase and no MUST_NOT phrase. Both engines call it:
+
+- LocalSearcher.search_boolean (search/wand.py) over its warmed arrays;
+- boolean_matched_scores, once per index SEGMENT: the postings of the
+  query vocabulary (scored, prohibited and phrase terms; positions only
+  for phrase terms) are scanned once, grouped by ``seg`` and handed to a
+  groupBy("seg").applyInPandas kernel with the plans and df in a
+  broadcast. A document's postings all live in its segment
+  (seg = pmod(xxhash64(doc_id), S), index/build.py), so each segment's
+  call sees whole documents and emits its exact part of the match set
+  — the shape of bm25._bm25_topk_segmented, with no per-clause joins.
 """
 
 from __future__ import annotations
 
+import math
 import re
+from collections import Counter
+from typing import NamedTuple
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.build import InvertedIndex
 from solrtexttagger_spark.search.bm25 import (
+    _SCORE_SCHEMA,
     B,
     K1,
-    join_query_terms,
+    global_df,
     warm_df_cache,
 )
 from solrtexttagger_spark.search.phrase import (
     MAX_SLOP as _MAX_SLOP,
-    multi_phrase_match,
-    multi_phrase_match_scored,
     phrase_terms,
 )
 
@@ -490,8 +502,8 @@ def expand_boolean_clauses(
     round-6 verdict #5, Solr's SynonymGraphFilter: "ny" -> "new york"
     becomes +(ny OR "new york")): the expansion joins its MUST group as
     a CONTIGUITY-CHECKED phrase (satisfying the group only when the
-    words appear adjacent, resolved through the same multi_phrase_match
-    pass as explicit phrase clauses), and — on EVERY clause kind, MUST
+    words appear adjacent, resolved by the same phrase_docs as
+    explicit phrase clauses), and — on EVERY clause kind, MUST
     and SHOULD alike — its constituent terms score at the clause weight
     ONLY in documents containing the contiguous phrase (the gated
     "quotes filter, constituents score" model; such documents match
@@ -537,7 +549,7 @@ def expand_boolean_clauses(
             else:
                 phrase_groups.setdefault(toks, set()).add(gid)
                 # constituents score at the clause weight, GATED on the
-                # contiguous phrase (multi_phrase_match_scored)
+                # contiguous phrase (evaluate_boolean)
                 syn_phrase_bags[toks] = (
                     syn_phrase_bags.get(toks, 0) + must[t] * _w(t, s)
                 )
@@ -581,6 +593,258 @@ def expand_boolean_clauses(
     )
 
 
+class BooleanPlan(NamedTuple):
+    """One query's clauses after the parse, the marker rewrite and the
+    synonym expansion — everything evaluate_boolean reads (never
+    mutated). Phrases are token tuples; synonym phrases are exact
+    (slop 0). A plain bag of words is ``BooleanPlan(bag)``."""
+
+    score_bag: dict  # term -> clause weight (qtf x boost)
+    must_groups: dict = {}  # term -> MUST group ids it satisfies
+    n_groups: int = 0
+    must_not: frozenset = frozenset()
+    phrase_groups: dict = {}  # multi-word synonym tokens -> MUST group ids
+    must_phrases: tuple = ()  # ((tokens, slop), ...)
+    not_phrases: tuple = ()  # ((tokens, slop), ...)
+    gated: dict = {}  # multi-word synonym tokens -> score weight
+
+    def phrases(self) -> set:
+        return (
+            {toks for toks, _s in self.must_phrases + self.not_phrases}
+            | set(self.phrase_groups)
+            | set(self.gated)
+        )
+
+    def terms(self) -> set:
+        """Every index term the plan reads (marker keys left out: they
+        match only through their expansions)."""
+        words = set(self.score_bag) | self.must_not
+        words |= {t for toks in self.phrases() for t in toks}
+        return {t for t in words if not parse_marker(t)}
+
+
+def boolean_plan(parsed, synonyms=None, member_weights=None) -> BooleanPlan:
+    """BooleanPlan of one parse_boolean_query result, expanded by
+    expand_boolean_clauses (markers already rewritten into ``synonyms``)."""
+    must, should, must_not, mphr, nphr = parsed
+    (score_bag, must_groups, n_groups, not_exp, phrase_groups,
+     syn_not_phrases, gated) = expand_boolean_clauses(
+        must, should, must_not, synonyms, member_weights
+    )
+    return BooleanPlan(
+        score_bag, must_groups, n_groups, frozenset(not_exp), phrase_groups,
+        tuple(mphr), tuple(nphr) + tuple((t, 0) for t in syn_not_phrases),
+        gated,
+    )
+
+
+_NO_DOCS = np.zeros(0, dtype=np.int64)
+
+
+def _ranges(lo: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(lo[i], lo[i] + counts[i])`` over i."""
+    total = int(counts.sum())
+    if not total:
+        return _NO_DOCS
+    shift = np.repeat(lo - (np.cumsum(counts) - counts), counts)
+    return np.arange(total, dtype=np.int64) + shift
+
+
+def positions_csr(doc_ids, counts, flat):
+    """One term's positions as (doc ids sorted, starts, flat positions):
+    doc ``doc_ids[i]`` holds ``flat[starts[i]:starts[i + 1]]``. Inputs
+    are aligned per doc in any order (``counts[i]`` positions of
+    ``doc_ids[i]``, concatenated in ``flat``)."""
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    counts = np.asarray(counts, dtype=np.int64)
+    flat = np.asarray(flat, dtype=np.int64)
+    if len(doc_ids) > 1 and np.any(doc_ids[1:] < doc_ids[:-1]):
+        order = np.argsort(doc_ids, kind="stable")
+        lo = (np.cumsum(counts) - counts)[order]
+        doc_ids, counts = doc_ids[order], counts[order]
+        flat = flat[_ranges(lo, counts)]
+    starts = np.zeros(len(doc_ids) + 1, dtype=np.int64)
+    np.cumsum(counts, out=starts[1:])
+    return doc_ids, starts, flat
+
+
+def phrase_docs(positions: dict, toks: tuple, slop: int = 0) -> np.ndarray:
+    """Sorted doc ids holding the token sequence within ``slop``.
+    ``positions``: {term: positions_csr(...)}. Each term's positions
+    shift by its offset in the phrase and, under slop, expand to the
+    window anchors {p - slop .. p}; a doc matches iff one anchor is
+    common to every term, i.e. a window of width <= slop covers one
+    position of each (Lucene SloppyPhraseMatcher's end - start
+    criterion: exact for two-term phrases, a superset of its greedy
+    matcher for longer ones). A term repeated m times in a sloppy phrase
+    needs >= m distinct positions in the doc (Lucene's repeats-handling
+    necessary condition; the exact intersection already implies it).
+    Slop outside [0, MAX_SLOP] raises: each position expands to slop + 1
+    anchors."""
+    if slop < 0 or slop > _MAX_SLOP:
+        raise ValueError(
+            f"slop {slop} outside [0, {_MAX_SLOP}]: each position "
+            "expands to slop+1 window anchors"
+        )
+    cand = None
+    for t in toks:
+        entry = positions.get(t)
+        if entry is None or not len(entry[0]):
+            return _NO_DOCS
+        cand = entry[0] if cand is None else np.intersect1d(
+            cand, entry[0], assume_unique=True
+        )
+        if not len(cand):
+            return _NO_DOCS
+    if slop:
+        for t, m in Counter(toks).items():
+            if m > 1:
+                docs, starts, _flat = positions[t]
+                at = np.searchsorted(docs, cand)
+                cand = cand[starts[at + 1] - starts[at] >= m]
+    # key = (candidate index, anchor): anchors stay >= 1 after the offset
+    off = slop + len(toks)
+    keys = None
+    for i, t in enumerate(toks):
+        docs, starts, flat = positions[t]
+        at = np.searchsorted(docs, cand)
+        counts = starts[at + 1] - starts[at]
+        owner = np.repeat(np.arange(len(cand), dtype=np.int64), counts)
+        anchor = flat[_ranges(starts[at], counts)] - i + off
+        if slop:
+            anchor = (anchor[:, None] - np.arange(slop + 1)).ravel()
+            owner = np.repeat(owner, slop + 1)
+        k = np.unique((owner << 32) | anchor)
+        keys = k if keys is None else np.intersect1d(keys, k, assume_unique=True)
+        if not len(keys):
+            return _NO_DOCS
+    return cand[np.unique(keys >> 32)]
+
+
+def bm25_parts(tf, dl, k1: float, b: float, avgdl: float):
+    """The query-independent operands of a BM25 contribution, per
+    posting: (tf * (k1 + 1), tf + k1 * (1 - b + b * dl / avgdl)). The
+    contribution is ``idf * num / den * qtf`` in that order — the
+    operation order of the JVM scorers and the SQL oracles, so scores
+    agree to the last bit where they sum the same terms."""
+    tf = np.asarray(tf, dtype=np.float64)
+    dl = np.asarray(dl, dtype=np.float64)
+    return tf * (k1 + 1.0), tf + k1 * (1.0 - b + b * dl / avgdl)
+
+
+def _present(docs: np.ndarray, sorted_ids: np.ndarray) -> np.ndarray:
+    """Mask over ``docs``: which are in the sorted array ``sorted_ids``."""
+    if not len(sorted_ids):
+        return np.zeros(len(docs), dtype=bool)
+    at = np.searchsorted(sorted_ids, docs)
+    return np.take(sorted_ids, at, mode="clip") == docs
+
+
+def evaluate_boolean(
+    plan: BooleanPlan,
+    postings: dict,
+    positions: dict,
+    df: dict,
+    n: float,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The full match set of one query: (doc ids sorted, BM25 scores).
+    ``postings``: {term: (doc ids sorted, *bm25_parts per posting)};
+    ``positions``: {term: positions_csr(...)} for the phrase terms;
+    ``df``: global df per scored term; ``n``: corpus doc count. Terms
+    absent from ``postings`` match nothing. The one implementation of
+    the boolean semantics in the module docstring: LocalSearcher calls
+    it on its warmed arrays, boolean_matched_scores on each segment."""
+    all_docs, all_contrib = [], []
+    for term in sorted(plan.score_bag):
+        entry = postings.get(term)
+        if entry is None:
+            continue
+        dft = df[term]
+        idf = math.log(1.0 + (n - dft + 0.5) / (dft + 0.5))
+        all_docs.append(entry[0])
+        all_contrib.append(idf * entry[1] / entry[2] * plan.score_bag[term])
+    # phrase-gated constituent scoring (multi-word synonyms, MUST and
+    # SHOULD alike): constituents score only where the words are
+    # contiguous, which also seeds phrase-only docs into the candidates
+    for toks, w in sorted(plan.gated.items()):
+        hits = phrase_docs(positions, toks)
+        if not len(hits):
+            continue
+        for term, cnt in sorted(Counter(toks).items()):
+            entry = postings.get(term)
+            if entry is None:
+                continue
+            dft = df[term]
+            idf = math.log(1.0 + (n - dft + 0.5) / (dft + 0.5))
+            mask = _present(entry[0], hits)
+            if mask.any():
+                all_docs.append(entry[0][mask])
+                all_contrib.append(
+                    idf * entry[1][mask] / entry[2][mask] * (w * cnt)
+                )
+    if not all_docs:
+        return _NO_DOCS, np.zeros(0)
+    docs = np.concatenate(all_docs)
+    uniq, inv = np.unique(docs, return_inverse=True)
+    scores = np.bincount(
+        inv, weights=np.concatenate(all_contrib), minlength=len(uniq)
+    )
+    keep = np.ones(len(uniq), dtype=bool)
+    if plan.n_groups:
+        # every MUST group needs >= 1 member present (without synonyms
+        # one term per group: the distinct-MUST-term count); a group
+        # with no member in the index satisfies nothing
+        sat = np.zeros((plan.n_groups, len(uniq)), dtype=bool)
+        members = [
+            (postings[t][0], gids)
+            for t, gids in plan.must_groups.items() if t in postings
+        ] + [
+            (phrase_docs(positions, toks), gids)
+            for toks, gids in plan.phrase_groups.items()
+        ]
+        for docs, gids in members:
+            hit = _present(uniq, docs)
+            for g in gids:
+                sat[g] |= hit
+        keep &= sat.all(axis=0)
+    for term in plan.must_not:
+        if term in postings:
+            keep &= ~_present(uniq, postings[term][0])
+    for toks, slop in plan.must_phrases:
+        keep &= _present(uniq, phrase_docs(positions, toks, slop))
+    for toks, slop in plan.not_phrases:
+        keep &= ~_present(uniq, phrase_docs(positions, toks, slop))
+    return uniq[keep], scores[keep]
+
+
+def _segment_arrays(pdf: pd.DataFrame, k1: float, b: float, avgdl: float):
+    """One segment's kernel input -> ({term: (doc ids, *bm25_parts)},
+    {term: positions_csr}) in evaluate_boolean's shape."""
+    parts: dict[str, list] = {}
+    has_pos = "pos" in pdf.columns
+    cols = [pdf["term"], pdf["doc_id"], pdf["tf"], pdf["dl"]]
+    if has_pos:
+        cols += [pdf["npos"], pdf["pos"]]
+    for row in zip(*cols):
+        parts.setdefault(row[0], []).append(row[1:])
+    postings, positions = {}, {}
+    for term, rows in parts.items():
+        docs = np.concatenate([np.asarray(r[0], dtype=np.int64) for r in rows])
+        tf = np.concatenate([np.asarray(r[1], dtype=np.float64) for r in rows])
+        dl = np.concatenate([np.asarray(r[2], dtype=np.float64) for r in rows])
+        order = np.argsort(docs, kind="stable")
+        postings[term] = (
+            docs[order], *bm25_parts(tf[order], dl[order], k1, b, avgdl)
+        )
+        if has_pos and rows[0][3] is not None:
+            positions[term] = positions_csr(
+                docs,
+                np.concatenate([np.asarray(r[3], dtype=np.int64) for r in rows]),
+                np.concatenate([np.asarray(r[4], dtype=np.int64) for r in rows]),
+            )
+    return postings, positions
+
+
 def boolean_matched_scores(
     index: InvertedIndex,
     queries: list[tuple[int, str]],
@@ -597,19 +861,21 @@ def boolean_matched_scores(
     """The FULL boolean match set with BM25 scores, BEFORE any rank
     window: (query_id, doc_id, score) for every doc satisfying the
     query's clauses — the shared core of boolean_bm25_topk (which adds
-    the per-query top-k) and facets.facet_query_counts (Solr
-    facet.query needs cardinalities over the whole match set, never a
-    page). Same clause semantics, marker rewrites, synonym groups,
-    phrase/slop filters, prohibition anti-joins and fq semi-join as
-    boolean_bm25_topk; one postings pass + one phrase pass for ALL
-    queries."""
+    the per-query top-k), solr_select, facet.query / json.facet query
+    facets and /stream (which need the whole match set, never a page).
+
+    Driver side: the parse, the marker rewrite (expand_vocab_markers,
+    one job when the batch has markers), expand_boolean_clauses into one
+    BooleanPlan per query and, with ``warm_df`` (top-level entries), the
+    df cache warm — one tiny collect for unseen terms. Building the
+    relation otherwise runs no Spark action. Executor side: ONE scan of
+    the postings of every query's vocabulary (positions projected only
+    for phrase terms), grouped by ``seg`` into evaluate_boolean per
+    segment for ALL queries; global df rides the broadcast on a
+    global_df hit, a broadcast join on a miss. ``allowed_docs`` (Solr
+    fq) meets the kernel co-partitioned by seg through a cogroup,
+    applied to the match set (scores stay corpus-true)."""
     spark = spark or index.postings.sparkSession
-    score_rows, not_rows, must_counts = [], [], {}
-    phrase_ids: dict[tuple[tuple[str, ...], int], int] = {}  # (toks, slop)
-    req_rows: list[tuple[int, int]] = []
-    proh_phrase_rows: list[tuple[int, int]] = []
-    pgroup_rows: list[tuple[int, int, int]] = []  # (qid, phrase_id, gid)
-    req_counts: dict[int, int] = {}
     parsed = [
         (int(qid), parse_boolean_query(q, field=field)) for qid, q in queries
     ]
@@ -627,224 +893,93 @@ def boolean_matched_scores(
         synonyms = {**(synonyms or {}), **expanded}
         if fuzzy_decay:
             member_weights = fuzzy_member_weights(expanded)
-    pscore_rows: list[tuple[int, int, float]] = []  # (qid, phrase_id, w)
-    for qid, (must, should, must_not, mphr, nphr) in parsed:
-        (score_bag, must_groups, n_groups, must_not, phrase_groups,
-         syn_not_phrases, syn_phrase_bags) = expand_boolean_clauses(
-            must, should, must_not, synonyms, member_weights
-        )
-        must_counts[int(qid)] = n_groups
-        for t, qtf in sorted(score_bag.items()):
-            score_rows.append(
-                (int(qid), t, float(qtf), list(must_groups.get(t, ())))
-            )
-        for t in sorted(must_not):
-            not_rows.append((int(qid), t))
-        req = set()
-        for toks, slop in mphr:
-            pid = phrase_ids.setdefault((toks, slop), len(phrase_ids))
-            req.add(pid)
-        req_counts[int(qid)] = len(req)
-        req_rows.extend((int(qid), pid) for pid in sorted(req))
-        # synonym phrases are always exact-contiguity (slop 0)
-        for entry in nphr + [(t, 0) for t in syn_not_phrases]:
-            pid = phrase_ids.setdefault(entry, len(phrase_ids))
-            proh_phrase_rows.append((int(qid), pid))
-        # multi-word synonym members: contiguity-checked group membership
-        for toks, gids in sorted(phrase_groups.items()):
-            pid = phrase_ids.setdefault((toks, 0), len(phrase_ids))
-            pgroup_rows.extend((int(qid), pid, gid) for gid in gids)
-        # ... and phrase-GATED constituent scoring (MUST and SHOULD
-        # alike — round-6 verdict #5 graph semantics on every path)
-        for toks, w in sorted(syn_phrase_bags.items()):
-            pid = phrase_ids.setdefault((toks, 0), len(phrase_ids))
-            pscore_rows.append((int(qid), pid, float(w)))
-    if not score_rows and not pscore_rows:
-        return spark.createDataFrame(
-            [], "query_id long, doc_id long, score double"
-        )
-    postings = index.postings
+    plans = {}
+    for qid, p in parsed:
+        plan = boolean_plan(p, synonyms, member_weights)
+        if plan.score_bag or plan.gated:  # else no doc can be a candidate
+            plans[qid] = plan
+    vocab = sorted(set().union(*(p.terms() for p in plans.values())))
+    if not vocab:
+        return spark.createDataFrame([], _SCORE_SCHEMA)
+    pos_terms = sorted({t for p in plans.values() for ph in p.phrases() for t in ph})
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0
-
-    # Global df from bm25.global_df, the one lookup (no action). Only
-    # the top-level entry (``warm_df=True``, boolean_bm25_topk and
-    # solr_select's scored routes) fills its cache first, with one tiny
-    # collect for unseen terms, phrase constituents included: a
-    # boolean query's vocabulary is known only after the parse above.
-    # Embedded callers (the /select writers' facet.query block, the
-    # router, /stream) stay action-free and keep their job budgets.
+    # global df from bm25.global_df, the one lookup (no action). Only
+    # top-level entries (``warm_df=True``: boolean_bm25_topk and
+    # solr_select's scored routes) fill its cache first, since a boolean
+    # query's vocabulary is known only after the parse above. Embedded
+    # callers (the /select writers' facet.query block, the router,
+    # /stream) stay action-free and keep their job budgets.
     if warm_df:
-        warm_df_cache(
-            index,
-            {t for (_q, t, _w, _g) in score_rows}
-            | ({t for (toks, _s) in phrase_ids for t in toks}
-               if pscore_rows else set()),
-        )
-    joined = join_query_terms(
-        index, postings, [(t, qid, w, g) for (qid, t, w, g) in score_rows],
-        "term string, query_id long, qtf double, mgroups array<int>",
-    )
-    idf = F.log(
-        F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    ex = joined.select(
-        "query_id",
-        "term",
-        "mgroups",
-        idf.alias("idf"),
-        F.col("qtf"),
-        F.explode("postings").alias("p"),
-    )
-    tf = F.col("p.tf").cast("double")
-    dl = F.col("p.dl").cast("double")
-    contrib = (
-        F.col("idf")
-        * (tf * (k1 + 1.0))
-        / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        * F.col("qtf").cast("double")
-    )
-    # groups_present = the DISTINCT MUST groups any of whose TERM members
-    # is in the doc (without synonyms every group is one term, so the
-    # count reduces to the old distinct-MUST-term count). Group ids
-    # travel as a tiny array per scoring row; one flatten+distinct per
-    # (query, doc) group. Multi-word synonym members add their groups
-    # through the phrase-match relation below (contiguity-checked).
-    scores = (
-        ex.select(
-            "query_id",
-            F.col("p.doc_id").alias("doc_id"),
-            contrib.alias("c"),
-            F.col("mgroups"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum("c").alias("score"),
-            F.array_distinct(F.flatten(F.collect_list("mgroups"))).alias(
-                "tgroups"
-            ),
-        )
-    )
-    pm = None
-    if phrase_ids:
-        # ONE extra postings pass resolves every phrase across every
-        # query — explicit clauses AND multi-word synonym members alike;
-        # when any synonym phrase SCORES (graph semantics), the same
-        # pass also folds the constituents' unit BM25 contributions
-        by_pid = sorted(phrase_ids.items(), key=lambda kv: kv[1])
-        ordered = [" ".join(toks) for (toks, _slop), _ in by_pid]
-        slops = [slop for (_toks, slop), _ in by_pid]
-        if pscore_rows:
-            pm = multi_phrase_match_scored(
-                index, ordered, k1=k1, b=b, slops=slops
-            )
-        else:
-            pm = multi_phrase_match(index, ordered, slops=slops)
-        # the phrase-match relation feeds up to four consumers below
-        # (constituent bonus, synonym-group hits, required-phrase hits,
-        # prohibited pairs); materialize it ONCE instead of re-running
-        # the postings pass + contiguity fold per consumer subtree
-        n_consumers = sum(
-            1
-            for flag in (pscore_rows, pgroup_rows, req_rows, proh_phrase_rows)
-            if flag
-        )
-        if n_consumers >= 2:
-            pm = pm.localCheckpoint(eager=True)
-    if pscore_rows:
-        # phrase-gated constituent scoring: merged BEFORE the group
-        # filter, full outer because a doc can match ONLY through the
-        # contiguous expansion (its group membership then comes from
-        # the phrase-hit relation below)
-        psdf = spark.createDataFrame(
-            pscore_rows, "query_id long, phrase_id int, w double"
-        )
-        bonus = (
-            pm.join(F.broadcast(psdf), "phrase_id")
-            .select(
-                "query_id",
-                "doc_id",
-                (F.col("w") * F.col("unit_score")).alias("extra"),
-            )
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum("extra").alias("extra"))
-        )
-        scores = scores.join(bonus, ["query_id", "doc_id"], "full_outer").select(
-            "query_id",
-            "doc_id",
-            (
-                F.coalesce(F.col("score"), F.lit(0.0))
-                + F.coalesce(F.col("extra"), F.lit(0.0))
-            ).alias("score"),
-            F.coalesce(F.col("tgroups"), F.array().cast("array<int>")).alias(
-                "tgroups"
-            ),
-        )
-    if pgroup_rows:
-        pgdf = spark.createDataFrame(
-            pgroup_rows, "query_id long, phrase_id int, gid int"
-        )
-        phits = (
-            pm.join(F.broadcast(pgdf), "phrase_id")
-            .groupBy("query_id", "doc_id")
-            .agg(F.array_distinct(F.collect_list("gid")).alias("pgroups"))
-        )
-        scores = scores.join(phits, ["query_id", "doc_id"], "left")
-        musts_present = F.size(
-            F.array_distinct(
-                F.concat(
-                    F.col("tgroups"),
-                    F.coalesce(F.col("pgroups"), F.array().cast("array<int>")),
+        warm_df_cache(index, vocab)
+    dfs = global_df(index, vocab)
+    bc = spark.sparkContext.broadcast((
+        plans, dfs if isinstance(dfs, dict) else None, k1, b, avgdl, n,
+    ))
+
+    def kernel(pdf: pd.DataFrame, allowed: np.ndarray | None) -> pd.DataFrame:
+        plans_, df_of, k1_, b_, avgdl_, n_ = bc.value
+        out_q, out_d, out_s = [], [], []
+        if len(pdf):
+            if df_of is None:
+                df_of = dict(zip(pdf["term"], pdf["df"]))
+            postings, positions = _segment_arrays(pdf, k1_, b_, avgdl_)
+            for qid, plan in sorted(plans_.items()):
+                docs, scores = evaluate_boolean(
+                    plan, postings, positions, df_of, n_
                 )
-            )
+                if allowed is not None:
+                    keep = _present(docs, allowed)
+                    docs, scores = docs[keep], scores[keep]
+                out_q.extend([qid] * len(docs))
+                out_d.append(docs)
+                out_s.append(scores)
+        return pd.DataFrame({
+            "query_id": pd.Series(out_q, dtype="int64"),
+            "doc_id": pd.Series(
+                np.concatenate(out_d) if out_d else _NO_DOCS, dtype="int64"
+            ),
+            "score": pd.Series(
+                np.concatenate(out_s) if out_s else np.zeros(0), dtype="float64"
+            ),
+        })
+
+    post = F.col("postings")
+    cols = [
+        "seg", "term",
+        post["doc_id"].alias("doc_id"), post["tf"].alias("tf"),
+        post["dl"].alias("dl"),
+    ]
+    if pos_terms:
+        is_pos = F.col("term").isin(pos_terms)
+        cols += [
+            F.when(is_pos, F.transform(post, lambda x: F.size(x["positions"])))
+            .alias("npos"),
+            F.when(is_pos, F.flatten(post["positions"])).alias("pos"),
+        ]
+    narrowed = index.postings.where(F.col("term").isin(vocab)).select(*cols)
+    if not isinstance(dfs, dict):
+        narrowed = narrowed.join(F.broadcast(dfs), "term")
+    if allowed_docs is None:
+        return narrowed.groupBy("seg").applyInPandas(
+            lambda _key, pdf: kernel(pdf, None), schema=_SCORE_SCHEMA
         )
-    else:
-        musts_present = F.size("tgroups")
-    # per-query required-MUST count as a broadcast map literal (tiny)
-    mc = F.create_map(*[F.lit(x) for kv in must_counts.items() for x in kv])
-    matched = scores.where(
-        musts_present == mc[F.col("query_id")].cast("long")
-    ).drop("tgroups", "pgroups")
-    if not_rows:
-        ndf = spark.createDataFrame(not_rows, "query_id long, term string")
-        prohibited = (
-            postings.join(F.broadcast(ndf.select("term").distinct()), "term")
-            .select("term", F.explode("postings.doc_id").alias("doc_id"))
-            .join(F.broadcast(ndf), "term")
-            .select("query_id", "doc_id")
-            .distinct()
+    # fq ids co-partitioned with the postings on the index's own seg hash
+    # (no distinct: a repeated id only repeats in the sorted allowed array)
+    seg_of = F.pmod(F.xxhash64("doc_id"), F.lit(index.num_segments)).cast("int")
+    fq = allowed_docs.select(F.col("doc_id").cast("long").alias("doc_id")).select(
+        seg_of.alias("seg"), "doc_id"
+    )
+    return (
+        narrowed.groupBy("seg")
+        .cogroup(fq.groupBy("seg"))
+        .applyInPandas(
+            lambda _key, pdf, apdf: kernel(
+                pdf, np.sort(apdf["doc_id"].to_numpy(dtype=np.int64))
+            ),
+            schema=_SCORE_SCHEMA,
         )
-        matched = matched.join(prohibited, ["query_id", "doc_id"], "left_anti")
-    if phrase_ids:
-        if req_rows:
-            reqdf = spark.createDataFrame(req_rows, "query_id long, phrase_id int")
-            hits = (
-                pm.join(F.broadcast(reqdf), "phrase_id")
-                .groupBy("query_id", "doc_id")
-                .agg(F.count_distinct("phrase_id").alias("np"))
-            )
-            rc = F.create_map(*[F.lit(x) for kv in req_counts.items() for x in kv])
-            matched = (
-                matched.join(hits, ["query_id", "doc_id"], "left")
-                .where(
-                    F.coalesce(F.col("np"), F.lit(0))
-                    == rc[F.col("query_id")].cast("long")
-                )
-                .drop("np")
-            )
-        if proh_phrase_rows:
-            pphr = spark.createDataFrame(
-                sorted(set(proh_phrase_rows)), "query_id long, phrase_id int"
-            )
-            proh_pairs = pm.join(F.broadcast(pphr), "phrase_id").select(
-                "query_id", "doc_id"
-            )
-            matched = matched.join(proh_pairs, ["query_id", "doc_id"], "left_anti")
-    if allowed_docs is not None:
-        matched = matched.join(
-            allowed_docs.select("doc_id").distinct(), "doc_id", "left_semi"
-        )
-    return matched
+    )
 
 
 def boolean_bm25_topk(
@@ -864,11 +999,10 @@ def boolean_bm25_topk(
     Returns (query_id, rank, doc_id, score) — rank long, deterministic
     (score desc, doc_id asc) tie-break, rank-identical to bm25_topk for
     pure-SHOULD queries. ``allowed_docs`` is Solr's `fq` (see
-    search/bm25.bm25_topk): restricts results via a semi-join on the
-    matched set before the rank window, never the scoring stats.
-    ``synonyms`` expands clauses per expand_boolean_clauses — a MUST
-    group is satisfied by ANY member, so the HAVING-style filter counts
-    distinct satisfied GROUPS, not distinct terms. ``fuzzy_decay=True``
+    search/bm25.bm25_topk): restricts the matched set before the rank
+    window, never the scoring stats. ``synonyms`` expands clauses per
+    expand_boolean_clauses — a MUST group is satisfied by ANY member.
+    ``fuzzy_decay=True``
     opts into Lucene FuzzyQuery's similarity-decayed member boosts
     (``1 - d/min(len)`` via fuzzy_member_weights) instead of the flat
     clause-weight default; matching is unaffected either way.

@@ -29,9 +29,11 @@ dedup module's connected components (ops/dedup.py):
 - visited-set semantics run per hop (`left_anti` against the
   accumulated result) so a cyclic graph terminates: the frontier
   strictly shrinks to empty, exactly Solr's bitset fixpoint;
-- hops are driver-side iterations over LAZY plans with a localCheckpoint
-  every hop — the lineage stays O(1) per hop instead of O(depth), the
-  same pattern the CC operator uses for pointer jumping.
+- hops are driver-side iterations over LAZY plans: each hop's fresh
+  frame is localCheckpointed, and the visited set is their lazy union,
+  flattened by a localCheckpoint every CHECKPOINT_HOPS hops — the
+  lineage stays O(1) per hop and the plan depth bounded, the same
+  pattern the CC operator uses for pointer jumping.
 
 ``maxDepth=-1`` (Solr's default) walks to the fixpoint; each hop adds
 its depth so callers can cap or page by distance.
@@ -40,6 +42,9 @@ its depth so callers can cap or page by distance.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+#: hops between localCheckpoints of the visited union
+CHECKPOINT_HOPS = 32
 
 
 def hop_reached(
@@ -163,6 +168,11 @@ def graph_traverse(
         if not fresh.take(1):
             break
         visited = visited.unionByName(fresh)
+        if depth % CHECKPOINT_HOPS == 0:
+            # the lazy union gains one leaf per hop: flatten it so a
+            # deep traversal's plan (and its per-hop analysis) stays
+            # bounded
+            visited = visited.localCheckpoint(eager=True)
         frontier = fresh
     out = visited if return_root else visited.where(F.col("depth") > 0)
     if return_only_leaf:

@@ -12,7 +12,9 @@ existing operators:
 
 - ``q`` dispatches on local params (search/localparams.py): no local
   params / ``{!lucene}`` -> the scored boolean path
-  (boolean.boolean_matched_scores — full Lucene clause family);
+  (boolean.boolean_matched_scores — full Lucene clause family, every
+  clause evaluated per document in one seg-aligned kernel over one
+  postings scan, fq cogrouped into it);
   the filter-parser family (``{!term} {!terms} {!prefix} {!frange}
   {!bool}``) -> a constant-score match set (Solr's non-scoring parsers
   yield score 1.0); ``{!join}`` -> join_qp (inner query scored, score

@@ -39,6 +39,16 @@ from solrtexttagger_spark.search.bm25 import (
     analyze_query_terms,
     join_query_terms,
 )
+from solrtexttagger_spark.search.boolean import (
+    BooleanPlan,
+    bm25_parts,
+    boolean_plan,
+    evaluate_boolean,
+    fuzzy_member_weights,
+    parse_boolean_query,
+    parse_marker,
+    positions_csr,
+)
 
 _SCORE_SCHEMA = T.StructType(
     [
@@ -250,48 +260,58 @@ class LocalSearcher:
         self.df = df_acc
         self.n = float(cindex.doc_count)
         self.avgdl = float(cindex.avgdl) if cindex.avgdl else 1.0
-        # warm-up: decode once, store (doc_ids, score_factor) per term —
-        # the per-doc BM25 factor is query-independent, only idf*qtf varies.
-        # k1/b are baked into the factor here, so search() pins them.
+        # warm-up: decode once, store (doc_ids, *bm25_parts) per term —
+        # the per-doc BM25 operands are query-independent, only idf*qtf
+        # varies. k1/b are baked in here, so search() pins them.
         self.k1, self.b = float(k1), float(b)
         self.term_postings: dict[str, tuple] = {}
-        self.term_pos: dict[str, dict[int, np.ndarray]] | None = (
-            {} if positions else None
-        )
+        # positions in evaluate_boolean's shape: {term: positions_csr}
+        self.term_pos: dict[str, tuple] | None = {} if positions else None
         for term, blks in raw.items():
-            docs_parts, factor_parts = [], []
+            docs_parts, tf_parts, dl_parts, count_parts, flat_parts = (
+                [], [], [], [], []
+            )
             for blk, pos_blk in blks:
                 doc_ids, tfs, dls = decode_postings_block(blk)
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
-                factor_parts.append(
-                    tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / self.avgdl))
-                )
                 docs_parts.append(doc_ids)
+                tf_parts.append(tfs)
+                dl_parts.append(dls)
                 if pos_blk is not None:
                     counts, flat = decode_positions_block(pos_blk)
-                    tp = self.term_pos.setdefault(term, {})
-                    for d, parr in zip(
-                        doc_ids, np.split(flat, np.cumsum(counts))[:-1]
-                    ):
-                        tp[int(d)] = parr
-            self.term_postings[term] = (
-                np.concatenate(docs_parts),
-                np.concatenate(factor_parts),
-            )
+                    count_parts.append(counts)
+                    flat_parts.append(flat)
+            docs = np.concatenate(docs_parts).astype(np.int64)
+            order = np.argsort(docs, kind="stable")
+            self.term_postings[term] = (docs[order], *bm25_parts(
+                np.concatenate(tf_parts)[order],
+                np.concatenate(dl_parts)[order],
+                k1, b, self.avgdl,
+            ))
+            if positions:
+                self.term_pos[term] = positions_csr(
+                    docs, np.concatenate(count_parts), np.concatenate(flat_parts)
+                )
         if positional_index is not None:
             pos_rows = positional_index.postings
             warm_terms = list(raw) if terms is None else list(terms)
             pos_rows = pos_rows.where(F.col("term").isin(warm_terms))
-            self.term_pos = {}
+            by_term: dict[str, list] = {}
             for r in (
                 pos_rows.select("term", F.explode("postings").alias("p"))
                 .select("term", "p.doc_id", "p.positions")
                 .collect()
             ):
-                self.term_pos.setdefault(r["term"], {})[r["doc_id"]] = np.asarray(
-                    r["positions"], dtype=np.int64
+                by_term.setdefault(r["term"], []).append(
+                    (r["doc_id"], r["positions"])
                 )
+            self.term_pos = {
+                t: positions_csr(
+                    [d for d, _p in rows],
+                    [len(p) for _d, p in rows],
+                    [x for _d, p in rows for x in p],
+                )
+                for t, rows in by_term.items()
+            }
 
     def _require_warmed(self, term: str) -> None:
         if self.warmed_terms is not None and term not in self.warmed_terms:
@@ -303,94 +323,30 @@ class LocalSearcher:
                 "boolean_bm25_topk)"
             )
 
-    def _phrase_docs(self, toks: tuple, slop: int = 0) -> set:
-        """Docs containing the token sequence contiguously (same shifted
-        position-set intersection as search/phrase.multi_phrase_match,
-        folded driver-side over the warmed position arrays). ``slop``
-        uses the identical window-anchor expansion as _fold_phrases:
-        each shifted position p expands to {p - slop .. p} so the
-        intersection is non-empty iff a window of width <= slop covers
-        one position of every term (Lucene SloppyPhraseMatcher's
-        end - start criterion) — parity with the distributed path,
-        including the repeated-term distinct-position check and the
-        MAX_SLOP guard of phrase._fold_phrases/_slop_map."""
-        from solrtexttagger_spark.search.phrase import MAX_SLOP
-
-        if slop < 0 or slop > MAX_SLOP:
-            raise ValueError(
-                f"slop {slop} outside [0, {MAX_SLOP}]: each position "
-                "expands to slop+1 window anchors on the serving driver"
+    def _evaluate(self, plan: BooleanPlan, allowed_docs, what: str):
+        """evaluate_boolean over the warmed arrays, fq applied. Every
+        term the plan reads must be inside the warm-up subset: an
+        unwarmed MUST would wrong-empty, an unwarmed MUST_NOT would
+        wrongly keep."""
+        if plan.phrases() and self.term_pos is None:
+            raise NotImplementedError(
+                f"{what} need positional postings; warm this "
+                "LocalSearcher with positional_index= or positions=True "
+                "(requires compress_index(with_positions=True)), or use "
+                "the distributed scorers (bm25_topk / wand_topk / "
+                "boolean_bm25_topk)"
             )
-        for t in toks:
-            self._require_warmed(t)
-        cand: set | None = None
-        for t in toks:
-            pos = self.term_pos.get(t) if self.term_pos else None
-            if not pos:
-                return set()
-            cand = set(pos) if cand is None else cand & set(pos)
-            if not cand:
-                return set()
-        # repeated-term necessary condition (Lucene repeats-handling):
-        # a doc needs >= multiplicity distinct positions of a repeated
-        # term under slop > 0 — only the exact intersection implies it
-        mult = {t: toks.count(t) for t in set(toks)} if slop else {}
-        dup = {t: m for t, m in mult.items() if m > 1}
-        out = set()
-        for d in cand:
-            if dup and any(len(self.term_pos[t][d]) < m for t, m in dup.items()):
-                continue
-            inter: set | None = None
-            for i, t in enumerate(toks):
-                s = {int(p) - i for p in self.term_pos[t][d]}
-                if slop:
-                    s = {v for p in s for v in range(p - slop, p + 1)}
-                inter = s if inter is None else inter & s
-                if not inter:
-                    break
-            if inter:
-                out.add(d)
-        return out
-
-    def _accumulate_gated(
-        self,
-        phrase_bags: dict,
-        all_docs: list,
-        all_contrib: list,
-    ) -> None:
-        """Phrase-gated constituent contributions for multi-word synonym
-        graph semantics (round-6 verdict #5): for each expansion whose
-        words appear CONTIGUOUSLY in a doc, the constituents' full BM25
-        contributions at the clause weight are appended to the
-        accumulation arrays — restricted to the phrase-matching docs, so
-        a doc with the words apart gets nothing and a doc no bag term
-        reaches still enters the candidate set. Mirrors
-        bm25.synonym_phrase_bonus / phrase.multi_phrase_match_scored."""
-        from collections import Counter
-
-        for toks, w in sorted(phrase_bags.items()):
-            for t in toks:
-                if t not in self.term_postings:
-                    self._require_warmed(t)
-            pd_ = self._phrase_docs(toks)
-            if not pd_:
-                continue
-            parr = np.fromiter(pd_, np.int64, len(pd_))
-            parr.sort()
-            for term, cnt in sorted(Counter(toks).items()):
-                entry = self.term_postings.get(term)
-                if entry is None:
-                    continue
-                df = self.df[term]
-                idf = math.log(1.0 + (self.n - df + 0.5) / (df + 0.5))
-                doc_ids, factor = entry
-                idxp = np.searchsorted(parr, doc_ids)
-                mask = (idxp < len(parr)) & (
-                    parr[np.minimum(idxp, len(parr) - 1)] == doc_ids
-                )
-                if mask.any():
-                    all_docs.append(doc_ids[mask])
-                    all_contrib.append(idf * (w * cnt) * factor[mask])
+        for term in plan.terms():
+            if term not in self.term_postings:
+                self._require_warmed(term)
+        uniq, scores = evaluate_boolean(
+            plan, self.term_postings, self.term_pos or {}, self.df, self.n
+        )
+        if allowed_docs is not None:
+            uniq, scores = self._apply_allowed(
+                uniq, scores, self._allowed_arr(allowed_docs)
+            )
+        return uniq, scores
 
     @staticmethod
     def prepare_filter(allowed_docs) -> np.ndarray:
@@ -528,36 +484,10 @@ class LocalSearcher:
             from solrtexttagger_spark.search.bm25 import expand_synonyms_graph
 
             bag, phrase_bags = expand_synonyms_graph(bag, synonyms)
-        if phrase_bags and self.term_pos is None:
-            raise NotImplementedError(
-                "multi-word synonym expansions need positional postings "
-                "for graph semantics; warm this LocalSearcher with "
-                "positional_index= or positions=True, or use "
-                "bm25_topk/wand_topk on the distributed index"
-            )
-        all_docs, all_contrib = [], []
-        for term in sorted(bag):
-            entry = self.term_postings.get(term)
-            if entry is None:
-                self._require_warmed(term)
-                continue
-            df = self.df[term]
-            idf = math.log(1.0 + (self.n - df + 0.5) / (df + 0.5))
-            weight = idf * bag[term]
-            doc_ids, factor = entry
-            all_docs.append(doc_ids)
-            all_contrib.append(weight * factor)
-        self._accumulate_gated(phrase_bags, all_docs, all_contrib)
-        if not all_docs:
-            return []
-        docs = np.concatenate(all_docs)
-        contrib = np.concatenate(all_contrib)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        scores = np.bincount(inv, weights=contrib, minlength=len(uniq))
-        if allowed_docs is not None:
-            uniq, scores = self._apply_allowed(
-                uniq, scores, self._allowed_arr(allowed_docs)
-            )
+        uniq, scores = self._evaluate(
+            BooleanPlan(bag, gated=phrase_bags), allowed_docs,
+            "multi-word synonym expansions",
+        )
         if boost_values is not None:
             scores = self._apply_boost(uniq, scores, boost_values)
         order = np.lexsort((uniq, -scores))[start : start + k]
@@ -582,7 +512,7 @@ class LocalSearcher:
         should field:term`, plus `+"quoted phrase"` / `-"quoted phrase"`
         when the searcher was warmed with ``positional_index=`` —
         rank/score-identical to boolean_bm25_topk on the same index (same
-        parse, same BM25 accumulation, same shifted-position contiguity).
+        parse and plan, same evaluator: boolean.evaluate_boolean).
         Without positional warm-up, phrase clauses raise (the distributed
         path serves those). ``allowed_docs``/``start`` as in search():
         precomputed fq doc-id set + absolute-rank paging. ``synonyms``
@@ -596,19 +526,14 @@ class LocalSearcher:
         opts into Lucene's similarity-decayed fuzzy boosts exactly like
         boolean_bm25_topk(fuzzy_decay=True).
         -> [(rank, doc_id, score)]."""
-        from solrtexttagger_spark.search.boolean import (
-            expand_boolean_clauses,
-            fuzzy_member_weights,
-            parse_boolean_query,
-            parse_marker,
-        )
-
-        must, should, must_not, mphr, nphr = parse_boolean_query(query, field=field)
+        parsed = parse_boolean_query(query, field=field)
+        must, should, must_not, _mphr, _nphr = parsed
         # fuzzy (word~d) / prefix (word*) clauses expand from a
         # LocalSpeller's in-memory vocabulary (same ranking/cap as the
         # distributed expand_vocab_markers), then ride the synonym-group
         # machinery exactly like boolean_bm25_topk
         markers = {t for t in (*must, *should, *must_not) if parse_marker(t)}
+        member_weights = None
         if markers:
             if speller is None:
                 raise NotImplementedError(
@@ -621,100 +546,10 @@ class LocalSearcher:
                 mk: speller.expand_marker(mk) for mk in sorted(markers)
             }
             synonyms = {**(synonyms or {}), **expanded}
-        member_weights = (
-            fuzzy_member_weights(expanded)
-            if (fuzzy_decay and markers)
-            else None
-        )
-        (score_bag, must_groups, n_groups, must_not, phrase_groups,
-         syn_not_phrases, syn_phrase_bags) = expand_boolean_clauses(
-            must, should, must_not, synonyms, member_weights
-        )
-        # multi-word synonym members are contiguity clauses too (slop 0)
-        nphr = nphr + [(t, 0) for t in syn_not_phrases]
-        if (
-            mphr or nphr or phrase_groups or syn_phrase_bags
-        ) and self.term_pos is None:
-            raise NotImplementedError(
-                "phrase clauses need positional postings; warm this "
-                "LocalSearcher with positional_index= or positions=True "
-                "(requires compress_index(with_positions=True)), or use "
-                "boolean_bm25_topk on the distributed index"
-            )
-        # every clause term must be inside the warm-up subset — an unwarmed
-        # MUST would wrong-empty, an unwarmed MUST_NOT would wrongly KEEP.
-        # Marker pseudo-terms (word~d / word*) are exempt: they match only
-        # through their expansions, which ARE checked here.
-        for term in set(score_bag) | set(must_not) | {
-            w for toks in syn_phrase_bags for w in toks
-        }:
-            if parse_marker(term):
-                continue
-            if term not in self.term_postings:
-                self._require_warmed(term)
-        all_docs, all_contrib = [], []
-        for term in sorted(score_bag):
-            qtf = score_bag[term]
-            entry = self.term_postings.get(term)
-            if entry is None:
-                continue
-            df = self.df[term]
-            idf = math.log(1.0 + (self.n - df + 0.5) / (df + 0.5))
-            doc_ids, factor = entry
-            all_docs.append(doc_ids)
-            all_contrib.append(idf * qtf * factor)
-        # phrase-gated constituent scoring (graph semantics, MUST and
-        # SHOULD alike) — also seeds phrase-only docs into the candidates
-        self._accumulate_gated(syn_phrase_bags, all_docs, all_contrib)
-        if not all_docs:
-            return []
-        docs = np.concatenate(all_docs)
-        contrib = np.concatenate(all_contrib)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        scores = np.bincount(inv, weights=contrib, minlength=len(uniq))
-        keep = np.ones(len(uniq), dtype=bool)
-        if n_groups:
-            # per-doc: every MUST group must have >= 1 member present
-            # (without synonyms, one term per group == the classic
-            # distinct-MUST-term count). A group with no member in the
-            # index satisfies nothing -> empty result, as it must.
-            sat = np.zeros((n_groups, len(uniq)), dtype=bool)
-            for term, gids in must_groups.items():
-                entry = self.term_postings.get(term)
-                if entry is None:
-                    continue
-                idx = np.searchsorted(uniq, entry[0])
-                pos = idx[np.take(uniq, idx, mode="clip") == entry[0]]
-                for g in gids:
-                    sat[g, pos] = True
-            for toks, gids in phrase_groups.items():
-                # multi-word synonym member: satisfies its group only
-                # where the words appear CONTIGUOUSLY (graph semantics)
-                pd_ = self._phrase_docs(toks)
-                if pd_:
-                    pos = np.nonzero(
-                        np.isin(uniq, np.fromiter(pd_, np.int64, len(pd_)))
-                    )[0]
-                    for g in gids:
-                        sat[g, pos] = True
-            keep &= sat.all(axis=0)
-        for term in must_not:
-            entry = self.term_postings.get(term)
-            if entry is not None:
-                idx = np.searchsorted(uniq, entry[0])
-                keep[idx[np.take(uniq, idx, mode="clip") == entry[0]]] = False
-        for toks, slop in mphr:  # MUST phrases: sequence within slop
-            pd_ = self._phrase_docs(toks, slop)
-            keep &= np.isin(uniq, np.fromiter(pd_, np.int64, len(pd_)))
-        for toks, slop in nphr:  # MUST_NOT phrases
-            pd_ = self._phrase_docs(toks, slop)
-            if pd_:
-                keep &= ~np.isin(uniq, np.fromiter(pd_, np.int64, len(pd_)))
-        uniq, scores = uniq[keep], scores[keep]
-        if allowed_docs is not None:
-            uniq, scores = self._apply_allowed(
-                uniq, scores, self._allowed_arr(allowed_docs)
-            )
+            if fuzzy_decay:
+                member_weights = fuzzy_member_weights(expanded)
+        plan = boolean_plan(parsed, synonyms, member_weights)
+        uniq, scores = self._evaluate(plan, allowed_docs, "phrase clauses")
         order = np.lexsort((uniq, -scores))[start : start + k]
         return [
             (rank, int(uniq[i]), float(scores[i]))

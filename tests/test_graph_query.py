@@ -234,3 +234,29 @@ def test_broadcast_frontier_opt_out_releases_hint(spark, nodes):
         ).collect()
     }
     assert a == b == {(0, 0), (1, 1), (2, 2), (7, 2), (3, 3), (8, 3)}
+
+
+def test_deep_chain_plan_stays_bounded(spark):
+    """A 70-hop chain walks to its end with every doc at its hop count,
+    and the visited union is flattened every CHECKPOINT_HOPS hops: the
+    result's logical plan holds at most CHECKPOINT_HOPS + 1 checkpointed
+    leaves, not one per hop."""
+    from solrtexttagger_spark.search.graph_qp import (
+        CHECKPOINT_HOPS,
+        graph_traverse,
+    )
+
+    hops = 70
+    chain = spark.createDataFrame(
+        [(i, f"v{i}", f"v{i + 1}" if i < hops else None)
+         for i in range(hops + 1)],
+        "doc_id long, provides string, requires string",
+    )
+    out = graph_traverse(
+        _roots(spark, 0), chain, from_col="requires", to_col="provides"
+    )
+    assert {(r["doc_id"], r["depth"]) for r in out.collect()} == {
+        (i, i) for i in range(hops + 1)
+    }
+    plan = out._jdf.queryExecution().logical().toString()
+    assert plan.count("LogicalRDD") <= CHECKPOINT_HOPS + 1, plan

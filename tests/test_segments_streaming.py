@@ -1,5 +1,5 @@
-"""Segment persistence, resumable builds, streaming incremental indexing,
-and multimodal plumbing."""
+"""Segment persistence, resumable builds and streaming incremental
+indexing."""
 
 import json
 import os
@@ -105,29 +105,6 @@ def test_streaming_incremental_index(spark, docs_df, tmp_path):
         }
 
     assert norm(merged) == norm(batch.postings)
-
-
-def test_multimodal_meta(spark):
-    from solrtexttagger_spark.ops.multimodal import extract_media_meta, fake_decode_meta
-
-    rows = [(i, bytes([i] * (10 + i))) for i in range(5)]
-    df = spark.createDataFrame(rows, "media_id long, data binary")
-    out = {r["media_id"]: r for r in extract_media_meta(df).collect()}
-    assert len(out) == 5
-    for i, data in rows:
-        fmt, w, h = fake_decode_meta(data)
-        r = out[i]
-        assert (r["format"], r["width"], r["height"]) == (fmt, w, h)
-        assert r["n_bytes"] == len(data)
-        assert len(r["sha256"]) == 64
-
-
-def test_decode_image_stubbed():
-    from solrtexttagger_spark.ops import multimodal
-
-    if not multimodal._HAS_PIL:
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_image(b"xx")
 
 
 def test_sessionize_stream_plan(spark, tmp_path):
