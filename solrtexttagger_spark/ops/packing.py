@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from solrtexttagger_spark.plans import local_frame
+
 
 def pack_sequences(
     docs_df: DataFrame,
@@ -58,8 +60,8 @@ def pack_sequences(
         offsets[p] = acc
         acc += int(s)
     if not offsets:
-        return spark.createDataFrame(
-            [], "doc_id long, n_tokens long, bin_id long, bin_offset long"
+        return local_frame(
+            spark, [], "doc_id long, n_tokens long, bin_id long, bin_offset long"
         )
     offset_map = F.create_map(*[F.lit(v) for kv in offsets.items() for v in kv])
     w = Window.partitionBy("__pid").orderBy("doc_id")

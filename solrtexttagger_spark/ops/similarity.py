@@ -21,6 +21,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from solrtexttagger_spark.plans import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -459,14 +461,15 @@ def ivf_cosine_topk(
         for cid in order:
             pc.append((int(r["vec_id"]), int(cid)))
     spark = emb_df.sparkSession
-    probe_cells = spark.createDataFrame(pc, "probe_id long, cid int")
+    probe_cells = local_frame(spark, pc, "probe_id long, cid int")
     # the probe vectors were already collected above — build the (tiny)
     # broadcast relation from those rows instead of re-scanning the
     # corpus a second time for the same 50-odd vectors. pnorm matches
     # the scan expression bit-for-bit: F.sqrt over a LITERAL dot value
     # equals the former sqrt-over-fold because the fold itself is the
     # same left-to-right sum, re-executed here in Python.
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [
             (int(r["vec_id"]), list(r["v"]), _seq_dot(r["v"], r["v"]))
             for r in probe_rows
@@ -733,7 +736,8 @@ def pq_cosine_topk(
         for cid in probe_cells:
             lut_rows.append((int(r["vec_id"]), int(cid), float(offs[cid]), lut, pnorm))
         pv_rows.append((int(r["vec_id"]), [float(x) for x in pv], pnorm))
-    ludf = spark.createDataFrame(
+    ludf = local_frame(
+        spark,
         lut_rows,
         "probe_id long, cid int, off double, lut array<array<double>>, pnorm double",
     )
@@ -759,7 +763,7 @@ def pq_cosine_topk(
         .where(F.col("arank") <= k * rerank_factor)
         .select("probe_id", "vec_id")
     )
-    pvdf = spark.createDataFrame(pv_rows, "probe_id long, pv array<double>, pnorm double")
+    pvdf = local_frame(spark, pv_rows, "probe_id long, pv array<double>, pnorm double")
     rescored = (
         base.withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
         .join(F.broadcast(cand), "vec_id")

@@ -1,4 +1,17 @@
-"""Plan diagnostics: capture and sanity-check the physical plans of the
+"""Plan construction boundary and plan diagnostics.
+
+Boundary rule: rows the driver holds (query terms, phrase tables,
+driver-scored results, empty results) enter a plan only through
+``local_frame``. It ships them as an Arrow table, which Spark keeps as a
+JVM-side ``LocalRelation``: collecting one runs no Spark job and
+broadcasting one runs no Python worker. ``spark.createDataFrame(rows,
+schema)`` on a Python list instead parallelizes pickled rows into a
+PythonRDD, so every action over even a 10-row relation forks Python
+workers, one task per core — on the read path that cost more than the
+driver-local scoring itself. tests/test_local_frame.py fails on any other
+``createDataFrame`` call in the package.
+
+Diagnostics: capture and sanity-check the physical plans of the
 engine's operators (the shapes tests/test_plans.py pins).
 
 No custom Catalyst rules exist or are needed (SURVEY.md §4): every operator
@@ -11,10 +24,58 @@ This module makes those properties inspectable at runtime.
 from __future__ import annotations
 
 import contextlib
+import functools
 import io
 import re
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+
+@functools.lru_cache(maxsize=256)  # parsing a DDL string is a JVM round trip
+def _ddl_schema(ddl: str) -> T.StructType:
+    schema = T.DataType.fromDDL(ddl)
+    if not isinstance(schema, T.StructType):
+        raise ValueError(f"local_frame needs a struct schema, got {ddl!r}")
+    return schema
+
+
+def _float_in_integral(values, dtype: T.DataType) -> bool:
+    """pyarrow truncates a Python float into an integer column (1.5 -> 1)
+    where createDataFrame's verifier raises; look for one."""
+    if isinstance(dtype, T.ArrayType):
+        return any(
+            v is not None and _float_in_integral(v, dtype.elementType) for v in values
+        )
+    return isinstance(dtype, T.IntegralType) and any(isinstance(v, float) for v in values)
+
+
+def local_frame(spark: SparkSession, rows, schema: "str | T.StructType") -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for driver-held rows, built
+    as an Arrow table: a ``LocalRelation`` with the same schema (DDL gives
+    nullable fields) and rows. ``rows`` are tuples in schema order. A cell
+    of the wrong type, a row of the wrong width or a null in a
+    non-nullable field raises."""
+    if isinstance(schema, str):
+        schema = _ddl_schema(schema)
+    rows = list(rows)
+    width = len(schema.fields)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"local_frame rows must have {width} fields ({schema.simpleString()})")
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for i, (field, afield) in enumerate(zip(schema.fields, arrow_schema)):
+        values = [r[i] for r in rows]
+        if _float_in_integral(values, field.dataType):
+            raise TypeError(
+                f"local_frame field {field.name}: float in {field.dataType.simpleString()}"
+            )
+        col = pa.array(values, type=afield.type)
+        if not field.nullable and col.null_count:
+            raise ValueError(f"local_frame field {field.name} is not nullable, got None")
+        columns.append(col)
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:

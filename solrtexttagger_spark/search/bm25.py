@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types a
 
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 
 K1 = 1.2
 B = 0.75
@@ -152,7 +153,7 @@ def synonym_phrase_bonus(
         for qid, d in sorted(qphrases.items())
         for toks, w in sorted(d.items())
     ]
-    qpdf = spark.createDataFrame(qp_rows, "query_id long, phrase_id int, w double")
+    qpdf = local_frame(spark, qp_rows, "query_id long, phrase_id int, w double")
     return (
         pm.join(F.broadcast(qpdf), "phrase_id")
         .select(
@@ -188,7 +189,7 @@ def queries_to_df(
                 )
         for term, qtf in sorted(bag.items()):
             rows.append((int(qid), term, int(qtf)))
-    return spark.createDataFrame(rows, "query_id long, term string, qtf int")
+    return local_frame(spark, rows, "query_id long, term string, qtf int")
 
 
 def query_bags(queries) -> dict[int, dict[str, int]]:
@@ -238,11 +239,11 @@ def join_query_terms(
     spark = rows.sparkSession
     dfs = global_df(index, [r[0] for r in qrows])
     if isinstance(dfs, dict):
-        qdf = spark.createDataFrame(
-            [(*r, dfs[r[0]]) for r in qrows if r[0] in dfs], schema + ", df double"
+        qdf = local_frame(
+            spark, [(*r, dfs[r[0]]) for r in qrows if r[0] in dfs], schema + ", df double"
         )
         return rows.join(F.broadcast(qdf), "term")
-    qdf = spark.createDataFrame(qrows, schema)
+    qdf = local_frame(spark, qrows, schema)
     return rows.join(F.broadcast(qdf), "term").join(F.broadcast(dfs), "term")
 
 
@@ -495,8 +496,8 @@ def _bm25_topk_segmented(
     spark = spark or index.postings.sparkSession
     terms = bag_terms(qbags)
     if not terms and phrase_bonus is None:
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
+        return local_frame(
+            spark, [], "query_id long, rank long, doc_id long, score double"
         )
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0
@@ -625,11 +626,12 @@ def _bm25_topk_segmented(
         seg_of = F.pmod(F.xxhash64("doc_id"), F.lit(index.num_segments)).cast(
             "int"
         )
+        # no distinct on the fq ids: the kernel's sorted-array membership
+        # is unaffected by repeats, and the cogroup shuffles them anyway
         parts = []
         if allowed_docs is not None:
             parts.append(
                 allowed_docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-                .distinct()
                 .select(
                     seg_of.alias("seg"),
                     "doc_id",

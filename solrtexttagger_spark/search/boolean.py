@@ -105,6 +105,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import (
     _SCORE_SCHEMA,
     B,
@@ -900,7 +901,7 @@ def boolean_matched_scores(
             plans[qid] = plan
     vocab = sorted(set().union(*(p.terms() for p in plans.values())))
     if not vocab:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return local_frame(spark, [], _SCORE_SCHEMA)
     pos_terms = sorted({t for p in plans.values() for ph in p.phrases() for t in ph})
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0

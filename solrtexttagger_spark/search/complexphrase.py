@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.boolean import (
     MAX_PREFIX_EXPANSIONS,
     expand_vocab_markers,
@@ -181,11 +182,11 @@ def complex_phrase_match(
                 rows.append((pid, idx_, m))
     rows = [r for r in rows if r[0] not in dead]
     if not rows:
-        return spark.createDataFrame(
-            [], "phrase_id int, doc_id long, n_occurrences int"
+        return local_frame(
+            spark, [], "phrase_id int, doc_id long, n_occurrences int"
         )
-    qdf = spark.createDataFrame(
-        sorted(set(rows)), "phrase_id int, term_idx int, term string"
+    qdf = local_frame(
+        spark, sorted(set(rows)), "phrase_id int, term_idx int, term string"
     )
 
     # one postings scan; then SpanOr: members of a slot merge per doc

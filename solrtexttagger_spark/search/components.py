@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import (
     B,
     K1,
@@ -51,8 +52,8 @@ def stats_field(
         " mean_v double, stddev_v double"
     )
     if not terms:
-        return spark.createDataFrame([], schema)
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+        return local_frame(spark, [], schema)
+    tdf = local_frame(spark, [(t,) for t in terms], "term string")
     matched = (
         index.postings.join(F.broadcast(tdf), "term")
         .select(F.explode("postings.doc_id").alias(id_col))
@@ -99,7 +100,7 @@ def elevated_topk(
         for qid, ids in elevations.items()
         for pos, d in enumerate(ids)
     ]
-    elev = spark.createDataFrame(rows, "query_id long, doc_id long, pos int")
+    elev = local_frame(spark, rows, "query_id long, doc_id long, pos int")
     joined = scores.join(elev, ["query_id", "doc_id"], "full_outer").select(
         "query_id",
         "doc_id",

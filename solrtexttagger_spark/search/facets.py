@@ -22,6 +22,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import analyze_query_terms
 
 
@@ -79,8 +80,8 @@ def facet_counts(
     spark = spark or docs_df.sparkSession
     terms = sorted(analyze_query_terms(query))
     if not terms or not facet_cols:
-        return spark.createDataFrame([], "field string, value string, n long")
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+        return local_frame(spark, [], "field string, value string, n long")
+    tdf = local_frame(spark, [(t,) for t in terms], "term string")
     matched = (
         index.postings.join(F.broadcast(tdf), "term")
         .select(F.explode("postings.doc_id").alias(id_col))
@@ -195,8 +196,8 @@ def facet_ranges(
     spark = spark or docs_df.sparkSession
     terms = sorted(analyze_query_terms(query))
     if not terms:
-        return spark.createDataFrame([], "range_start long, n long")
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+        return local_frame(spark, [], "range_start long, n long")
+    tdf = local_frame(spark, [(t,) for t in terms], "term string")
     matched = (
         index.postings.join(F.broadcast(tdf), "term")
         .select(F.explode("postings.doc_id").alias(id_col))
@@ -259,8 +260,8 @@ def facet_query_matches(
     from solrtexttagger_spark.search.boolean import boolean_matched_scores
 
     spark = spark or index.postings.sparkSession
-    spine = spark.createDataFrame(
-        list(enumerate(facet_queries)), "query_id long, facet_query string"
+    spine = local_frame(
+        spark, list(enumerate(facet_queries)), "query_id long, facet_query string"
     )
     fq_matches = boolean_matched_scores(
         index,
@@ -274,7 +275,7 @@ def facet_query_matches(
     # bag-model match set select/_facet_sections uses), fq-restricted
     terms = sorted(analyze_query_terms(base_query))
     if terms:
-        tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+        tdf = local_frame(spark, [(t,) for t in terms], "term string")
         base = (
             index.postings.join(F.broadcast(tdf), "term")
             .select(F.explode("postings.doc_id").alias("doc_id"))

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import (
     B,
     K1,
@@ -117,8 +118,8 @@ def explain_scores(
     spark = spark or index.postings.sparkSession
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0
-    ids_df = spark.createDataFrame(
-        [(int(i),) for i in sorted(set(doc_ids))], "doc_id long"
+    ids_df = local_frame(
+        spark, [(int(i),) for i in sorted(set(doc_ids))], "doc_id long"
     ).withColumn(
         "seg",
         F.pmod(F.xxhash64("doc_id"), F.lit(index.num_segments)).cast("int"),

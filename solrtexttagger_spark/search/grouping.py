@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import B, K1, entry_scores
 
 
@@ -166,10 +167,10 @@ def facet_pivot(
     terms = sorted(analyze_query_terms(query))
     if not terms or not pivot_cols:
         schema = ", ".join(f"{c} string" for c in pivot_cols) or "n long"
-        return spark.createDataFrame(
-            [], f"{schema}, n long, level long" if pivot_cols else schema
+        return local_frame(
+            spark, [], f"{schema}, n long, level long" if pivot_cols else schema
         )
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+    tdf = local_frame(spark, [(t,) for t in terms], "term string")
     matched = (
         index.postings.join(F.broadcast(tdf), "term")
         .select(F.explode("postings.doc_id").alias(id_col))

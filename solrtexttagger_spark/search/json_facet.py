@@ -103,6 +103,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import analyze_query_terms
 
 _STAT_RE = re.compile(r"^(sum|avg|min|max|unique|hll)\((\w+)\)$")
@@ -358,7 +359,7 @@ def json_facet(
         terms = sorted(analyze_query_terms(query))
         if not terms:
             raise ValueError("json_facet needs a non-empty base query")
-        tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+        tdf = local_frame(spark, [(t,) for t in terms], "term string")
         matched = (
             index.postings.join(F.broadcast(tdf), "term")
             .select(F.explode("postings.doc_id").alias(id_col))

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex, doc_term_rows
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import B, K1, bm25_topk
 
 
@@ -114,8 +115,8 @@ def more_like_this(
     spark = spark or docs_df.sparkSession
     probes = [int(p) for p in probe_doc_ids]
     if not probes:
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
+        return local_frame(
+            spark, [], "query_id long, rank long, doc_id long, score double"
         )
     keywords = mlt_probe_terms(
         index,
@@ -129,10 +130,10 @@ def more_like_this(
     ).collect()
     qdf_rows = [(int(r["doc_id"]), r["term"], 1) for r in keywords]
     if not qdf_rows:
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
+        return local_frame(
+            spark, [], "query_id long, rank long, doc_id long, score double"
         )
-    qdf = spark.createDataFrame(qdf_rows, "query_id long, term string, qtf int")
+    qdf = local_frame(spark, qdf_rows, "query_id long, term string, qtf int")
     # rank one deeper, then drop self-matches and re-rank: the probe doc
     # almost always tops its own term query
     topk = bm25_topk(index, qdf, k=k + 1, k1=k1, b=b, spark=spark, strategy="exploded")

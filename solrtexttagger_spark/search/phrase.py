@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import join_query_terms
 
 
@@ -116,7 +117,7 @@ def multi_phrase_match(
     (>= 1 iff matched), not Lucene's weighted sloppy freq."""
     spark = index.postings.sparkSession
     rows, plens = _phrase_rows(phrases, lowercase)
-    qdf = spark.createDataFrame(rows, "phrase_id int, term_idx int, term string")
+    qdf = local_frame(spark, rows, "phrase_id int, term_idx int, term string")
 
     # one postings scan: phrase terms broadcast in; a doc lives in exactly
     # one segment, so each (phrase_id, term_idx, doc_id) arrives once
@@ -331,7 +332,7 @@ def multi_phrase_match_compressed(
         )
     spark = cindex.blocks.sparkSession
     rows, plens = _phrase_rows(phrases, lowercase)
-    qdf = spark.createDataFrame(rows, "phrase_id int, term_idx int, term string")
+    qdf = local_frame(spark, rows, "phrase_id int, term_idx int, term string")
     joined = cindex.blocks.join(F.broadcast(qdf), "term").select(
         "phrase_id", "term_idx", "block", "pos_block"
     )

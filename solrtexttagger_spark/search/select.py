@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import (
     B,
     K1,
@@ -272,7 +273,7 @@ def _facet_sections(
             {key: (lo, hi, gap, []) for _col, lo, hi, gap, key in franges},
             {col: [(k, 0) for k, *_ in sets] for col, sets in fintervals},
         )
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+    tdf = local_frame(spark, [(t,) for t in terms], "term string")
     matched = (
         index.postings.join(F.broadcast(tdf), "term")
         .select(F.explode("postings.doc_id").alias("doc_id"))
@@ -374,7 +375,8 @@ def _hl_section(index, docs_df, query, page_rows, hl_window, text_col, spark):
     if not page_rows:
         return []
     spark = spark or docs_df.sparkSession
-    ranked = spark.createDataFrame(
+    ranked = local_frame(
+        spark,
         [
             (0, int(r["rank"]), int(r["doc_id"]), float(r["score"]))
             for r in page_rows

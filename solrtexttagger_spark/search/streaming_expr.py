@@ -72,6 +72,8 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from solrtexttagger_spark.plans import local_frame
+
 # ---------- parser ----------
 
 _TOKEN = re.compile(
@@ -672,12 +674,11 @@ def compile_stream(
             .where(F.col("__s").isNotNull() & F.col("__d").isNotNull())
             .distinct()
         )
-        empty = spark.createDataFrame([], "path array<string>")
+        empty = local_frame(spark, [], "path array<string>")
         if start == goal:
-            return spark.createDataFrame([([start],)],
-                                         "path array<string>")
-        frontier = spark.createDataFrame(
-            [(start, [start])], "node string, path array<string>"
+            return local_frame(spark, [([start],)], "path array<string>")
+        frontier = local_frame(
+            spark, [(start, [start])], "node string, path array<string>"
         )
         visited = frontier.select("node")
         for _depth in range(max_depth):
@@ -730,8 +731,8 @@ def compile_stream(
                 old.join(batch.select("doc_id"), "doc_id", "left_anti")
                 .unionByName(batch, allowMissingColumns=True)
             )
-        return spark.createDataFrame(
-            [(int(n), int(indexes[tbl].doc_count))],
+        return local_frame(
+            spark, [(int(n), int(indexes[tbl].doc_count))],
             "batchIndexed long, totalIndexed long",
         )
     if name == "scoreNodes":
@@ -819,8 +820,8 @@ def compile_stream(
             )
         mx = full.agg(F.max(F.col(vfld).cast("long")).alias("m")).collect()
         new_ckpt = int(mx[0]["m"]) if mx and mx[0]["m"] is not None else prev
-        ck_row = spark.createDataFrame(
-            [(topic_id, new_ckpt)], "topic_id string, checkpoint long"
+        ck_row = local_frame(
+            spark, [(topic_id, new_ckpt)], "topic_id string, checkpoint long"
         )
         if ckpt_tbl in tables:
             tables[ckpt_tbl] = (
@@ -851,8 +852,8 @@ def compile_stream(
         d = Daemon(inner_arg, tables, indexes, did, interval_ms)
         DAEMONS[did] = d
         spark = next(iter(tables.values())).sparkSession
-        return spark.createDataFrame(
-            [(did, "STOPPED", interval_ms, 0)],
+        return local_frame(
+            spark, [(did, "STOPPED", interval_ms, 0)],
             "id string, state string, runInterval long, iterations long",
         )
     if name == "merge":
@@ -880,8 +881,8 @@ def compile_stream(
     if name == "echo":
         # echo("text"): Solr's diagnostic one-tuple source
         spark = next(iter(tables.values())).sparkSession
-        return spark.createDataFrame(
-            [(str(expr.args[0] if expr.args else ""),)], "echo string"
+        return local_frame(
+            spark, [(str(expr.args[0] if expr.args else ""),)], "echo string"
         )
     if name == "features":
         # features(col, outcome=<col>, numTerms=N): information-gain
@@ -944,7 +945,8 @@ def compile_stream(
             outcome_col=oc,
         )
         spark = tables[tbl].sparkSession
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (m["iteration"], m["error"], m["terms"],
                  m["weights"], m["bias"])

@@ -38,6 +38,7 @@ from itertools import combinations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 
 
 def terms_component(
@@ -242,7 +243,7 @@ def spellcheck_collate(
     missing = [t for t in qterms if t not in present]
     spark = index.postings.sparkSession
     if not missing:
-        return spark.createDataFrame([], "rank long, collation string, hits long")
+        return local_frame(spark, [], "rank long, collation string, hits long")
     if len(missing) > 1:
         raise ValueError(
             f"collate supports one misspelled term per query, got {missing}"
@@ -256,7 +257,7 @@ def spellcheck_collate(
         ).collect()
     ]
     if not sugg:
-        return spark.createDataFrame([], "rank long, collation string, hits long")
+        return local_frame(spark, [], "rank long, collation string, hits long")
     keep = sorted(present)
     cand_terms = sorted(set(keep) | set(sugg))
     # one postings pass: docs x matched-term pairs for every term any
@@ -269,8 +270,8 @@ def spellcheck_collate(
         .select("term", F.explode("postings.doc_id").alias("doc_id"))
         .distinct()
     )
-    sdf = spark.createDataFrame(
-        [(i, s, len(set(keep) | {s})) for i, s in enumerate(sugg)],
+    sdf = local_frame(
+        spark, [(i, s, len(set(keep) | {s})) for i, s in enumerate(sugg)],
         "sugg_id int, sugg string, need int",
     )
     on_sugg = F.col("term") == F.col("sugg")
@@ -293,7 +294,7 @@ def spellcheck_collate(
             # (analyzer-normalized form, like Solr's collation echo)
             coll = " ".join(s if t == bad else t for t in qterms)
             rows.append((len(rows) + 1, coll, h))
-    return spark.createDataFrame(rows, "rank long, collation string, hits long")
+    return local_frame(spark, rows, "rank long, collation string, hits long")
 
 
 def _check_neighborhood_compat(neighborhood, max_dist: int, min_df: int) -> None:
@@ -674,7 +675,7 @@ def significant_terms(
     n_fg = fg_docs.count()
     if n_fg == 0:
         schema = "term string, foreground long, background long, score double"
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     eligible = index.term_stats.where(
         (F.col("df") >= min_df) & (F.col("df") <= max_df)
     ).select("term", F.col("df").alias("background"))

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 
 
 def term_vectors(
@@ -61,9 +62,9 @@ def term_vectors(
             schema += ", positions array<int>"
         if with_stats:
             schema += ", df long, tfidf double"
-        return spark.createDataFrame([], schema)
-    ids_df = spark.createDataFrame(
-        [(int(i),) for i in sorted(set(doc_ids))], "doc_id long"
+        return local_frame(spark, [], schema)
+    ids_df = local_frame(
+        spark, [(int(i),) for i in sorted(set(doc_ids))], "doc_id long"
     ).withColumn(
         "seg",
         F.pmod(F.xxhash64("doc_id"), F.lit(index.num_segments)).cast("int"),

@@ -46,6 +46,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import local_frame
 
 
 def features_ig(
@@ -151,8 +152,10 @@ def train_logit(
         F.col(id_col).alias("doc_id"),
         F.col(outcome_col).cast("double").alias("__y"),
     )
-    tset = index.postings.sparkSession.createDataFrame(
-        [(t, i) for i, t in enumerate(terms)], "term string, __ti int"
+    tset = local_frame(
+        index.postings.sparkSession,
+        [(t, i) for i, t in enumerate(terms)],
+        "term string, __ti int",
     )
     hits = (
         index.postings.join(F.broadcast(tset), "term")

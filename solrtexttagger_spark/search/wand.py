@@ -33,6 +33,7 @@ from solrtexttagger_spark.index.compression import (
     decode_positions_block,
     decode_postings_block,
 )
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import (
     K1,
     B,
@@ -41,6 +42,7 @@ from solrtexttagger_spark.search.bm25 import (
 )
 from solrtexttagger_spark.search.boolean import (
     BooleanPlan,
+    _ranges,
     bm25_parts,
     boolean_plan,
     evaluate_boolean,
@@ -192,6 +194,32 @@ def _score_segment(
     return uniq[order], scores[order]
 
 
+def _arrow_term_positions(tbl) -> dict[str, tuple]:
+    """{term: positions_csr} from an Arrow table of (term, doc_ids
+    array<long>, positions array<array<int>>) rows, one row per (term,
+    seg): each row's docs, per-doc position counts and flat positions are
+    slices of the list columns' values, cut at their offsets."""
+    if not tbl.num_rows:  # no chunk to read
+        return {}
+    tbl = tbl.combine_chunks()
+    doc_col, pos_col = tbl.column("doc_ids").chunk(0), tbl.column("positions").chunk(0)
+    docs = doc_col.flatten().to_numpy()
+    per_doc = pos_col.flatten()  # one positions list per (term, doc)
+    counts = per_doc.value_lengths().to_numpy().astype(np.int64)
+    flat = per_doc.flatten().to_numpy()
+    n_docs = doc_col.value_lengths().to_numpy().astype(np.int64)
+    row_lo = np.cumsum(n_docs) - n_docs
+    doc_lo = np.cumsum(counts) - counts
+    by_term: dict[str, list[int]] = {}
+    for i, term in enumerate(tbl.column("term").to_pylist()):
+        by_term.setdefault(term, []).append(i)
+    out = {}
+    for term, rows in by_term.items():
+        d = _ranges(row_lo[rows], n_docs[rows])
+        out[term] = positions_csr(docs[d], counts[d], flat[_ranges(doc_lo[d], counts[d])])
+    return out
+
+
 class LocalSearcher:
     """Warm in-memory serving layer over the compressed index — the
     analogue of the reference's warmed searcher (FST in memory, QTime ~1 ms;
@@ -250,13 +278,16 @@ class LocalSearcher:
                 "with compress_index(with_positions=True)"
             )
         cols = ["term", "block", "df_seg"] + (["pos_block"] if positions else [])
+        tbl = blocks.select(*cols).toArrow()  # columns, not one Row per block
+        col = lambda name: tbl.column(name).to_pylist()  # noqa: E731
+        pos_blocks = col("pos_block") if positions else [None] * tbl.num_rows
         raw: dict[str, list] = {}
         df_acc: dict[str, int] = {}
-        for r in blocks.select(*cols).collect():
-            raw.setdefault(r["term"], []).append(
-                (bytes(r["block"]), bytes(r["pos_block"]) if positions else None)
-            )
-            df_acc[r["term"]] = df_acc.get(r["term"], 0) + r["df_seg"]
+        for term, blk, pos_blk, df_seg in zip(
+            col("term"), col("block"), pos_blocks, col("df_seg")
+        ):
+            raw.setdefault(term, []).append((blk, pos_blk))
+            df_acc[term] = df_acc.get(term, 0) + df_seg
         self.df = df_acc
         self.n = float(cindex.doc_count)
         self.avgdl = float(cindex.avgdl) if cindex.avgdl else 1.0
@@ -292,26 +323,16 @@ class LocalSearcher:
                     docs, np.concatenate(count_parts), np.concatenate(flat_parts)
                 )
         if positional_index is not None:
-            pos_rows = positional_index.postings
             warm_terms = list(raw) if terms is None else list(terms)
-            pos_rows = pos_rows.where(F.col("term").isin(warm_terms))
-            by_term: dict[str, list] = {}
-            for r in (
-                pos_rows.select("term", F.explode("postings").alias("p"))
-                .select("term", "p.doc_id", "p.positions")
-                .collect()
-            ):
-                by_term.setdefault(r["term"], []).append(
-                    (r["doc_id"], r["positions"])
+            self.term_pos = _arrow_term_positions(
+                positional_index.postings.where(F.col("term").isin(warm_terms))
+                .select(
+                    "term",
+                    F.col("postings.doc_id").alias("doc_ids"),
+                    F.col("postings.positions").alias("positions"),
                 )
-            self.term_pos = {
-                t: positions_csr(
-                    [d for d, _p in rows],
-                    [len(p) for _d, p in rows],
-                    [x for _d, p in rows for x in p],
-                )
-                for t, rows in by_term.items()
-            }
+                .toArrow()
+            )
 
     def _require_warmed(self, term: str) -> None:
         if self.warmed_terms is not None and term not in self.warmed_terms:
@@ -704,7 +725,7 @@ def _compressed_contribs(
     n = float(cindex.doc_count)
     avgdl = float(cindex.avgdl) if cindex.avgdl else 1.0
     k1_, b_ = float(k1), float(b)
-    wdf = spark.createDataFrame(wdf_rows, "query_id long, term string, qtf int")
+    wdf = local_frame(spark, wdf_rows, "query_id long, term string, qtf int")
     joined = join_query_terms(
         cindex, cindex.blocks,
         [(t,) for t in sorted({t for _q, t, _f in wdf_rows})], "term string",
@@ -768,7 +789,7 @@ def _phrase_doc_full_scores(
         for qid, d in sorted(qphrases.items())
         for toks, w in sorted(d.items())
     ]
-    qpdf = spark.createDataFrame(qp_rows, "query_id long, phrase_id int, w double")
+    qpdf = local_frame(spark, qp_rows, "query_id long, phrase_id int, w double")
     bonus = pm.join(F.broadcast(qpdf), "phrase_id").select(
         "query_id", "doc_id", (F.col("w") * F.col("unit_score")).alias("c")
     )
@@ -816,9 +837,10 @@ def _wand_topk_bags(
     k_eff = start + k  # pruning must preserve the top start+k, not just k
     allowed_by_seg = None
     if allowed_docs is not None:
+        # repeated fq ids are harmless in the kernel's sorted membership
+        # array, so no distinct (one exchange fewer ahead of the cogroup)
         allowed_by_seg = (
             allowed_docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-            .distinct()
             .withColumn(
                 "seg",
                 F.pmod(F.xxhash64("doc_id"), F.lit(cindex.num_segments)).cast(
@@ -829,7 +851,7 @@ def _wand_topk_bags(
 
     terms = sorted({t for bag in qbags.values() for t in bag})
     if not terms:
-        return spark.createDataFrame([], "query_id long, rank long, doc_id long, score double")
+        return local_frame(spark, [], "query_id long, rank long, doc_id long, score double")
 
     # ONE metadata job for everything phase 0 needs: per-(term, seg) shard
     # upper bound (max over that shard's blocks — JVM-side) AND the per-term
@@ -931,8 +953,8 @@ def _wand_topk_bags(
             prune_stats.update(
                 {"segments_total": n_segs, "segments_scored": n_segs, "local": True}
             )
-        return spark.createDataFrame(
-            out, "query_id long, rank long, doc_id long, score double"
+        return local_frame(
+            spark, out, "query_id long, rank long, doc_id long, score double"
         )
 
     # phase 0: metadata-only upper bounds per (query, seg). A doc lives in
@@ -1085,8 +1107,8 @@ def _wand_topk_bags(
         scores.sort(reverse=True)
         theta[qid] = scores[k_eff - 1] if len(scores) >= k_eff else -math.inf
     phase1_local = (
-        spark.createDataFrame(
-            [(r["query_id"], r["doc_id"], r["score"]) for r in phase1_rows],
+        local_frame(
+            spark, [(r["query_id"], r["doc_id"], r["score"]) for r in phase1_rows],
             _SCORE_SCHEMA,
         )
         if phase1_rows
@@ -1149,8 +1171,8 @@ def _wand_topk_bags(
                 if len(scores) >= k_eff:
                     theta[qid] = scores[k_eff - 1]
             phase2a_local = (
-                spark.createDataFrame(
-                    [(r["query_id"], r["doc_id"], r["score"]) for r in rows2a],
+                local_frame(
+                    spark, [(r["query_id"], r["doc_id"], r["score"]) for r in rows2a],
                     _SCORE_SCHEMA,
                 )
                 if rows2a
@@ -1183,7 +1205,7 @@ def _wand_topk_bags(
 
     parts = [p for p in (flat_df, phase1_local, phase2a_local, phase2) if p is not None]
     if not parts:
-        return spark.createDataFrame([], "query_id long, rank long, doc_id long, score double")
+        return local_frame(spark, [], "query_id long, rank long, doc_id long, score double")
     allscores = parts[0]
     for p in parts[1:]:
         allscores = allscores.unionAll(p)

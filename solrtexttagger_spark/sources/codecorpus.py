@@ -18,7 +18,10 @@ from __future__ import annotations
 import hashlib
 import random
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+COLUMNS = ("repo", "path", "commit", "lang", "content")
 
 LANGS = ["python", "java", "scala", "c", "go", "js"]
 EXT = {"python": "py", "java": "java", "scala": "scala", "c": "c", "go": "go", "js": "js"}
@@ -82,13 +85,22 @@ def synth_code_corpus(
 ) -> DataFrame:
     """Distributed deterministic generation: the i-th row is a pure function
     of (i, seed, burstiness), so any partitioning yields the identical table.
-    burstiness > 0 adds local identifier reuse (tf skew) — see _row."""
+    burstiness > 0 adds local identifier reuse (tf skew) — see _row. The
+    rows are generated on the executors from a range and leave the Python
+    workers as Arrow batches."""
     if partitions is None:
         partitions = max(2, spark.sparkContext.defaultParallelism)
-    rdd = spark.sparkContext.parallelize(range(n_files), partitions)
-    rows = rdd.map(lambda i: _row(i, seed, burstiness))
-    return spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string"
+
+    def generate(batches):
+        for batch in batches:
+            rows = [_row(i, seed, burstiness) for i in batch.column("id").to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([r[c] for r in rows], pa.string()) for c in range(len(COLUMNS))],
+                names=COLUMNS,
+            )
+
+    return spark.range(0, n_files, 1, partitions).mapInArrow(
+        generate, ", ".join(f"{c} string" for c in COLUMNS)
     )
 
 

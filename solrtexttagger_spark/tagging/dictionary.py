@@ -26,6 +26,7 @@ from solrtexttagger_spark.analysis.core import (
     index_analyze_shingles,
     index_analyze_whole,
 )
+from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.tagging.core import TermDict
 
 
@@ -202,12 +203,13 @@ def save_tag_dictionary(d: TagDictionary, path: str) -> None:
     """
     spark = d.docs_df.sparkSession
     d.docs_df.write.mode("overwrite").parquet(f"{path}/docs")
-    pairs = spark.createDataFrame(
-        [(t, list(ids)) for t, ids in d.term_dict.postings.items()],
+    pairs = local_frame(
+        spark, [(t, list(ids)) for t, ids in d.term_dict.postings.items()],
         "term string, doc_ids array<long>",
     )
     pairs.write.mode("overwrite").parquet(f"{path}/terms")
-    cfg = spark.createDataFrame(
+    cfg = local_frame(
+        spark,
         [
             (
                 d.mode,

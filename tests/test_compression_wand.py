@@ -3,6 +3,7 @@ block-max WAND rank-identity vs the exhaustive scorer, with proof that
 pruning actually skips segments."""
 
 import random
+import re
 
 import numpy as np
 import pytest
@@ -641,6 +642,42 @@ def test_local_searcher_phrases_from_compressed(spark, corpus_index):
         LocalSearcher(c0, positions=True)
 
 
+def test_local_searcher_arrow_warmup_equals_row_loop(spark, corpus_index):
+    """The warm-up reads Arrow columns; its arrays equal the ones a loop
+    over one Row per (term, doc) builds: the same terms, values and
+    dtypes from either positions source and from a warm subset, and the
+    same df."""
+    from solrtexttagger_spark.search.boolean import positions_csr
+    from solrtexttagger_spark.search.wand import LocalSearcher
+
+    by_term = {}
+    for r in (
+        corpus_index.postings.select("term", F.explode("postings").alias("p"))
+        .select("term", "p.doc_id", "p.positions")
+        .collect()
+    ):
+        by_term.setdefault(r["term"], []).append((r["doc_id"], r["positions"]))
+    want = {
+        t: positions_csr(
+            [d for d, _p in rows], [len(p) for _d, p in rows], [x for _d, p in rows for x in p]
+        )
+        for t, rows in by_term.items()
+    }
+    df_want = {r["term"]: r["df"] for r in corpus_index.term_stats.collect()}
+    subset = sorted(want)[::7]
+    c = compress_index(corpus_index, with_positions=True)
+    for searcher, terms in (
+        (LocalSearcher(c, positional_index=corpus_index), sorted(want)),
+        (LocalSearcher(c, positions=True), sorted(want)),
+        (LocalSearcher(c, terms=subset, positional_index=corpus_index), subset),
+    ):
+        assert sorted(searcher.term_pos) == terms
+        assert searcher.df == {t: df_want[t] for t in terms}
+        for t in terms:
+            for got, exp in zip(searcher.term_pos[t], want[t]):
+                assert got.dtype == exp.dtype and np.array_equal(got, exp), t
+
+
 def test_wand_cache_reset_keeps_inflight_query(spark, corpus_index, monkeypatch):
     """Round-5 advice (medium): a query whose terms are PARTIALLY cached
     must survive a cap-triggered reset — the reset drops its pre-cached
@@ -818,3 +855,73 @@ def test_local_searcher_prepared_filter(spark, corpus_index):
     assert s.search_boolean("+w0 w1", k=5, allowed_docs=prep) == s.search_boolean(
         "+w0 w1", k=5, allowed_docs=raw
     )
+
+
+def test_wand_local_path_job_pins(spark, corpus_index):
+    """The driver-local WAND path returns a local relation: a cold query
+    runs only its metadata and blocks collects, a warm repeat no job."""
+    from tests.test_index_bm25 import _build_jobs
+
+    c = compress_index(corpus_index)
+    c.blocks.persist().count()
+    _ = (c.doc_count, c.avgdl)
+    q = [(0, "w5 w40 w80")]
+
+    def run():
+        return wand_topk(c, q, k=5, local_threshold_postings=100_000).collect()
+
+    cold, cold_jobs = _build_jobs(spark, run)
+    warm, warm_jobs = _build_jobs(spark, run)
+    assert cold_jobs <= 2 and warm_jobs == 0, (cold_jobs, warm_jobs)
+    key = lambda r: (r["query_id"], r["rank"], r["doc_id"])
+    exp = bm25_topk(corpus_index, q, k=5, spark=spark).collect()
+    for rows in (cold, warm):
+        assert sorted(map(key, rows)) == sorted(map(key, exp))
+        for g, e in zip(sorted(rows, key=key), sorted(exp, key=key)):
+            assert g["score"] == pytest.approx(e["score"], abs=1e-9)
+
+
+def test_bm25_exploded_job_pin(spark, corpus_index):
+    """Exploded BM25 keeps its job count on a cold and a warm df cache."""
+    from solrtexttagger_spark.search.wand import reset_query_caches
+    from tests.test_index_bm25 import _build_jobs
+
+    queries = [(0, "w5 w40"), (1, "w7 w13")]
+    _ = (corpus_index.doc_count, corpus_index.avgdl)
+    reset_query_caches(corpus_index)
+
+    def run():
+        return bm25_topk(corpus_index, queries, k=5, strategy="exploded").collect()
+
+    _, cold_jobs = _build_jobs(spark, run)
+    _, warm_jobs = _build_jobs(spark, run)
+    assert cold_jobs <= 6 and warm_jobs <= 4, (cold_jobs, warm_jobs)
+
+
+@pytest.mark.parametrize("scorer", ["bm25", "wand"])
+def test_fq_repeats_need_no_distinct(spark, corpus_index, scorer):
+    """Both seg-cogroup scorers test fq membership on a sorted array, so
+    repeated fq ids change nothing: an fq relation with every id twice
+    returns the rows of the de-duplicated one, and the scorer adds no
+    aggregate of its own (de-duplicating the fq first costs one exchange
+    more per fq cogroup)."""
+    from solrtexttagger_spark.plans import plan_string, plan_summary
+
+    c = compress_index(corpus_index)
+    c.blocks.persist().count()
+    queries = [(0, "w0 w1"), (1, "w5 w40 w80")]
+    fq = spark.range(0, 100).select((F.col("id") * 3).alias("doc_id"))
+    dup = fq.unionAll(fq)
+
+    def run(allowed):
+        if scorer == "bm25":
+            return bm25_topk(corpus_index, queries, k=7, spark=spark, allowed_docs=allowed)
+        return wand_topk(c, queries, k=7, spark=spark, allowed_docs=allowed)
+
+    key = lambda r: (r["query_id"], r["rank"], r["doc_id"], r["score"])
+    assert sorted(map(key, run(dup).collect())) == sorted(map(key, run(fq).collect()))
+    rel = run(dup)
+    cogroups = len(re.findall(r"^\(\d+\) FlatMapCoGroupsInPandas\b", plan_string(rel), re.M))
+    assert cogroups >= 1
+    distinct_exchanges = plan_summary(run(dup.distinct()))["exchanges"]
+    assert plan_summary(rel)["exchanges"] == distinct_exchanges - cogroups

@@ -1,0 +1,116 @@
+"""``plans.local_frame``: driver rows enter a plan as an Arrow local
+relation. It must equal ``spark.createDataFrame(rows, schema)`` (schema
+with nullability, rows with doubles bit for bit), run no Spark job when
+collected, reject bad input, and be the package's only way in."""
+
+import ast
+import math
+import struct
+from pathlib import Path
+
+import pytest
+from pyspark.sql import types as T
+
+from solrtexttagger_spark.plans import local_frame
+from solrtexttagger_spark.search.bm25 import _SCORE_SCHEMA
+from tests.test_index_bm25 import _build_jobs
+
+PACKAGE = Path(__file__).resolve().parent.parent / "solrtexttagger_spark"
+
+DOUBLES = [0.1 + 0.2, -0.0, 1e308, 5e-324, math.inf, -math.inf, math.nan]
+
+CASES = {
+    "atomic": (
+        "a long, b int, c double, d string, e boolean",
+        [(2**62, -(2**31), x, "tërm", i % 2 == 0) for i, x in enumerate(DOUBLES)],
+    ),
+    "arrays": (
+        "l array<long>, s array<string>, d array<double>, dd array<array<double>>",
+        [
+            ([1, 2**60], ["a", "", "b"], DOUBLES, [[0.1, -0.0], [], [math.nan]]),
+            ([], [], [], []),
+            ([None, 3], [None], [None, 1.5], [None, [None, 2.5]]),
+        ],
+    ),
+    "nulls": (
+        "a long, b int, c double, d string, e boolean, f array<long>",
+        [(None, None, None, None, None, None), (1, 2, 3.0, "x", False, [4])],
+    ),
+    "zero_rows": ("query_id long, rank long, doc_id long, score double", []),
+    "struct_schema": (_SCORE_SCHEMA, [(0, 7, 0.5), (1, 2, -1.25)]),
+}
+
+
+def _bits(v):
+    """A cell with every double replaced by its IEEE-754 bytes."""
+    if isinstance(v, float):
+        return struct.pack("<d", v)
+    if isinstance(v, (list, tuple)):
+        return tuple(_bits(x) for x in v)
+    return v
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_local_frame_equals_create_dataframe(spark, case):
+    schema, rows = CASES[case]
+    got = local_frame(spark, rows, schema)
+    ref = spark.createDataFrame(rows, schema)
+    assert got.schema == ref.schema  # StructField equality covers nullability
+    assert [_bits(tuple(r)) for r in got.collect()] == [
+        _bits(tuple(r)) for r in ref.collect()
+    ]
+
+
+def test_local_frame_collect_runs_no_job(spark):
+    schema, rows = CASES["atomic"]
+    _, jobs = _build_jobs(spark, lambda: local_frame(spark, rows, schema).collect())
+    assert jobs == 0
+    # the list relation it replaces runs one (the Python-worker job)
+    _, ref_jobs = _build_jobs(spark, lambda: spark.createDataFrame(rows, schema).collect())
+    assert ref_jobs >= 1
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([("x",)], "a long"),  # string in a long
+        ([(1.5,)], "a int"),  # pyarrow alone would truncate to 1
+        ([([1, 2.0],)], "a array<long>"),
+        ([(1,)], "a string"),
+        ([(1,)], "a boolean"),
+        ([(1.0,)], "a array<double>"),
+        ([(1, 2)], "a long"),  # row wider than the schema
+        ([(1,)], "a long, b long"),  # narrower
+        ([(None,)], T.StructType([T.StructField("a", T.LongType(), False)])),
+    ],
+    ids=["str_long", "float_int", "float_array_long", "int_string", "int_bool",
+         "scalar_array", "wide_row", "narrow_row", "null_in_not_nullable"],
+)
+def test_local_frame_rejects_bad_input(spark, rows, schema):
+    with pytest.raises((TypeError, ValueError)):
+        local_frame(spark, rows, schema)
+
+
+def test_no_create_dataframe_outside_local_frame():
+    """Driver rows enter a plan only through ``local_frame``: any other
+    ``createDataFrame`` in the package builds a PythonRDD (one
+    Python-worker job per action over it)."""
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()  # the helper's own body, in plans/__init__.py only
+        for node in ast.walk(tree):
+            if (
+                path == PACKAGE / "plans" / "__init__.py"
+                and isinstance(node, ast.FunctionDef)
+                and node.name == "local_frame"
+            ):
+                allowed |= {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{path.relative_to(PACKAGE.parent)}:{node.lineno}")
+    assert not offenders, offenders
