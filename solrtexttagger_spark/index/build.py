@@ -31,13 +31,14 @@ the positions column thanks to Parquet column pruning).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from solrtexttagger_spark.analysis.core import tokenize
+from solrtexttagger_spark.index.termdict import TermDictionary
 
 _TOKEN_ROW_SCHEMA = T.StructType(
     [
@@ -59,12 +60,14 @@ POSTING_ELEM = T.StructType(
 )
 
 
-@dataclass
+@dataclass(slots=True)
 class InvertedIndex:
     """postings: (term, seg, df_seg, cf_seg,
                   postings array<struct<doc_id,tf,dl,positions>>)
     term_stats: (term, df, cf) — global per-term stats (tiny; broadcastable)
     doc_count / avgdl: corpus stats needed by BM25.
+    termdict: the driver-side term dictionary the scorers read
+    (index/termdict.py); slots leave no room for any other attribute.
 
     avgdl is lazy (total term count is derived from term_stats on first
     use) so the build itself stays a single tokenize->shuffle->agg job with
@@ -75,6 +78,7 @@ class InvertedIndex:
     doc_count: int
     num_segments: int = 1
     _avgdl: float | None = None
+    termdict: TermDictionary = field(default_factory=TermDictionary)
 
     @property
     def avgdl(self) -> float:

@@ -8,7 +8,7 @@ uncompressed array form exists only as the build intermediate.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Iterator
 
 import numpy as np
@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from solrtexttagger_spark.index.build import InvertedIndex
 from solrtexttagger_spark.index.compression import encode_blocks
+from solrtexttagger_spark.index.termdict import TermDictionary
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -38,21 +39,25 @@ POS_BLOCK_SCHEMA = T.StructType(
 )
 
 
-@dataclass
+@dataclass(slots=True)
 class CompressedIndex:
     """Delta+varint block-compressed postings with block-max metadata.
 
-    IMMUTABILITY CONTRACT: once queried, a CompressedIndex must not be
-    rebuilt in place (the WAND serving path attaches driver-side
-    term-metadata/block caches to the instance, keyed by object identity —
-    mutating ``blocks`` would leave them stale). Re-compress into a NEW
-    CompressedIndex instead; the caches die with the old object."""
+    ``termdict`` is the driver-side term dictionary the scorers read
+    (index/termdict.py). compress_index shares the source index's
+    dictionary when each shard is one block: its df and its shard bounds
+    (the shard's max tf and min dl) describe the same postings. A
+    multi-block layout has its own bounds, so it starts a fresh one, as
+    load_compressed does. The dictionary trusts that ``blocks`` never change
+    once queried: to change them, build a NEW CompressedIndex (a fresh
+    dictionary comes with it), or call search/wand.reset_query_caches."""
 
     blocks: DataFrame
     term_stats: DataFrame
     doc_count: int
     num_segments: int
     _avgdl: float | None = None
+    termdict: TermDictionary = field(default_factory=TermDictionary)
 
     @property
     def avgdl(self) -> float:
@@ -185,6 +190,7 @@ def compress_index(
         doc_count=index.doc_count,
         num_segments=index.num_segments,
         _avgdl=index._avgdl,
+        termdict=index.termdict if max_block_postings is None else TermDictionary(),
     )
 
 
@@ -250,8 +256,8 @@ def save_compressed(cindex: CompressedIndex, path: str) -> dict:
 
 
 def load_compressed(spark, path: str) -> CompressedIndex:
-    """Inverse of save_compressed: a fresh CompressedIndex (fresh query
-    caches — see the immutability contract) over the persisted blocks."""
+    """Inverse of save_compressed: a fresh CompressedIndex, with a fresh
+    term dictionary, over the persisted blocks."""
     import json
     import os
 

@@ -11,6 +11,11 @@ workers, one task per core — on the read path that cost more than the
 driver-local scoring itself. tests/test_local_frame.py fails on any other
 ``createDataFrame`` call in the package.
 
+A driver-held term list enters a predicate through ``term_in``:
+``Column.isin(list)`` costs about four py4j round trips per element.
+tests/test_local_frame.py fails on any ``.isin`` over a term list in
+``search/``.
+
 Diagnostics: capture and sanity-check the physical plans of the
 engine's operators (the shapes tests/test_plans.py pins).
 
@@ -29,8 +34,10 @@ import io
 import re
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, types as T
+from pyspark.sql.classic.column import Column as JvmColumn
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.utils import get_active_spark_context
 
 
 @functools.lru_cache(maxsize=256)  # parsing a DDL string is a JVM round trip
@@ -76,6 +83,20 @@ def local_frame(spark: SparkSession, rows, schema: "str | T.StructType") -> Data
             raise ValueError(f"local_frame field {field.name} is not nullable, got None")
         columns.append(col)
     return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)
+
+
+def term_in(col: Column, terms) -> Column:
+    """``col.isin(terms)`` (same optimized plan) for driver-held strings,
+    in a constant number of py4j calls: one NUL-joined string, split once
+    in the JVM. Raises ValueError on a term containing NUL."""
+    terms = list(terms)
+    if any("\x00" in t for t in terms):
+        raise ValueError("term_in: a term contains the NUL separator")
+    if len(terms) < 2:  # at most one literal: nothing to save
+        return col.isin(terms)
+    jvm = get_active_spark_context()._jvm
+    arr = jvm.org.apache.commons.lang3.StringUtils.splitPreserveAllTokens("\x00".join(terms), "\x00")
+    return JvmColumn(col._jc.isin(jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)))
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:

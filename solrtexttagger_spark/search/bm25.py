@@ -27,23 +27,19 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types a
 
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.plans import local_frame
+from solrtexttagger_spark.plans import local_frame, term_in
 
 K1 = 1.2
 B = 0.75
 
 # Global df per query term has ONE lookup, global_df (Lucene reads it
 # from its term dictionary, SURVEY §1.1), and it never runs a Spark
-# action: when the per-index ``_bm25_df`` memo holds every term, df
-# ships inside what the scorer already broadcasts; otherwise an in-DAG
-# aggregate over the terms' rows is broadcast-joined into the scoring
-# job itself, so a cold batch stays ONE action. Only warm_df_cache fills
-# the memo, called by top-level entries with the terms they just
-# analyzed. Same policy as the WAND metadata cache (search/wand.py):
-# bounded, whole-reset at the cap with the in-flight terms re-fetched,
-# assumes the index is immutable once queried
-# (search/wand.reset_query_caches clears it).
-BM25_DF_CACHE_MAX_TERMS = 500_000
+# action: when the index's term dictionary (index/termdict.py) holds
+# every term, df ships inside what the scorer already broadcasts;
+# otherwise an in-DAG aggregate over the terms' rows is broadcast-joined
+# into the scoring job itself, so a cold batch stays ONE action. Only
+# warm_df_cache fills the dictionary here, called by top-level entries
+# with the terms they just analyzed.
 
 _SCORE_SCHEMA = T.StructType(
     [
@@ -208,21 +204,25 @@ def bag_terms(qbags: dict[int, dict[str, int]]) -> list[str]:
     return sorted({t for bag in qbags.values() for t in bag})
 
 
+def _term_rows(index) -> DataFrame:
+    """The rows a term filter reads: ``blocks`` of a CompressedIndex,
+    ``postings`` of an InvertedIndex."""
+    return index.blocks if hasattr(index, "blocks") else index.postings
+
+
 def global_df(index, terms) -> "dict[str, float] | DataFrame":
     """The one global-df lookup for query terms the driver knows; runs
-    no Spark action. On a hit (the ``_bm25_df`` memo holds every term)
-    returns {term: df}, terms cached as absent left out, for the caller
-    to fold into the relation or weights it already ships. On a miss
-    returns the lazy (term, df double) aggregate over the terms' rows —
-    ``postings`` of an InvertedIndex, ``blocks`` of a CompressedIndex —
+    no Spark action. On a hit (the index's term dictionary holds every
+    term) returns {term: df}, absent terms left out, for the caller to
+    fold into the relation or weights it already ships. On a miss
+    returns the lazy (term, df double) aggregate over the terms' rows
     for the caller to broadcast-join."""
     terms = sorted(set(terms))
-    cache = getattr(index, "_bm25_df", None) or {}
-    if all(t in cache for t in terms):
-        return {t: float(cache[t]) for t in terms if cache[t] is not None}
-    rows = index.blocks if hasattr(index, "blocks") else index.postings
+    info = index.termdict.cached(terms)
+    if info is not None:
+        return {t: float(e.df) for t, e in info.items() if e.df is not None}
     return (
-        rows.where(F.col("term").isin(terms))
+        _term_rows(index).where(term_in(F.col("term"), terms))
         .groupBy("term")
         .agg(F.sum("df_seg").cast("double").alias("df"))
     )
@@ -247,26 +247,13 @@ def join_query_terms(
     return rows.join(F.broadcast(qdf), "term").join(F.broadcast(dfs), "term")
 
 
-def warm_df_cache(index, terms) -> dict[str, float | None]:
-    """Memoize global df for ``terms`` on the index by collecting
-    global_df's miss relation for the unseen ones (one collect; absent
-    terms memoized as None so they are never re-fetched). The only way
-    the memo fills: top-level entries call it with the terms they just
-    analyzed, so the scorers they build take global_df's hit path."""
-    terms = sorted(set(terms))
-    cache = getattr(index, "_bm25_df", None)
-    if cache is None:
-        cache = {}
-        index._bm25_df = cache
-    missing = [t for t in terms if t not in cache]
-    if missing:
-        if len(cache) + len(missing) > BM25_DF_CACHE_MAX_TERMS:
-            cache.clear()
-            missing = terms  # reset dropped this batch's terms
-        got = {r["term"]: r["df"] for r in global_df(index, missing).collect()}
-        for t in missing:
-            cache[t] = got.get(t)
-    return {t: cache[t] for t in terms}
+def warm_df_cache(index, terms) -> dict[str, int | None]:
+    """Fill the index's term dictionary for ``terms`` (one collect for
+    the unseen ones; absent terms held as None) and return {term: df}.
+    Top-level entries call it with the terms they just analyzed, so the
+    scorers they build take global_df's hit path."""
+    info = index.termdict.lookup(_term_rows(index), terms)
+    return {t: e.df for t, e in info.items()}
 
 
 def bm25_topk(
@@ -605,7 +592,7 @@ def _bm25_topk_segmented(
 
     # positions are projected AWAY before the shuffle — BM25 never reads
     # them, and they dominate the postings payload
-    term_filter = F.col("term").isin(terms) if terms else F.lit(False)
+    term_filter = term_in(F.col("term"), terms) if terms else F.lit(False)
     narrowed = index.postings.where(term_filter).select(
         "seg",
         "term",

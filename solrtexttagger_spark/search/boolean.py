@@ -105,7 +105,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.plans import local_frame
+from solrtexttagger_spark.plans import local_frame, term_in
 from solrtexttagger_spark.search.bm25 import (
     _SCORE_SCHEMA,
     B,
@@ -952,13 +952,13 @@ def boolean_matched_scores(
         post["dl"].alias("dl"),
     ]
     if pos_terms:
-        is_pos = F.col("term").isin(pos_terms)
+        is_pos = term_in(F.col("term"), pos_terms)
         cols += [
             F.when(is_pos, F.transform(post, lambda x: F.size(x["positions"])))
             .alias("npos"),
             F.when(is_pos, F.flatten(post["positions"])).alias("pos"),
         ]
-    narrowed = index.postings.where(F.col("term").isin(vocab)).select(*cols)
+    narrowed = index.postings.where(term_in(F.col("term"), vocab)).select(*cols)
     if not isinstance(dfs, dict):
         narrowed = narrowed.join(F.broadcast(dfs), "term")
     if allowed_docs is None:

@@ -38,7 +38,7 @@ from itertools import combinations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.plans import local_frame
+from solrtexttagger_spark.plans import local_frame, term_in
 
 
 def terms_component(
@@ -181,7 +181,7 @@ def spellcheck_terms(
         _check_neighborhood_compat(neighborhood, max_dist, min_df)
         keys = _deletion_set(word, max_dist)
         cand = (
-            neighborhood.where(F.col("delkey").isin(keys))
+            neighborhood.where(term_in(F.col("delkey"), keys))
             .select("term", "df")
             .distinct()
             .where((F.col("term") != word) & (F.col("df") >= min_df))
@@ -236,7 +236,7 @@ def spellcheck_collate(
         raise ValueError("empty query after analysis")
     present = {
         r["term"]
-        for r in index.term_stats.where(F.col("term").isin(qterms))
+        for r in index.term_stats.where(term_in(F.col("term"), qterms))
         .select("term")
         .collect()
     }
@@ -266,7 +266,7 @@ def spellcheck_collate(
     # a suggestion may COINCIDE with an in-vocabulary query term
     # ("join jion" suggests "join"), collapsing the conjunction
     pairs = (
-        index.postings.where(F.col("term").isin(cand_terms))
+        index.postings.where(term_in(F.col("term"), cand_terms))
         .select("term", F.explode("postings.doc_id").alias("doc_id"))
         .distinct()
     )
@@ -275,7 +275,7 @@ def spellcheck_collate(
         "sugg_id int, sugg string, need int",
     )
     on_sugg = F.col("term") == F.col("sugg")
-    cond = (F.col("term").isin(keep) | on_sugg) if keep else on_sugg
+    cond = (term_in(F.col("term"), keep) | on_sugg) if keep else on_sugg
     hits = (
         pairs.join(F.broadcast(sdf), cond)
         .groupBy("sugg_id", "sugg", "need", "doc_id")
@@ -377,7 +377,7 @@ class LocalSpeller:
         self.full_vocab = terms is None
         base = index.term_stats.where(F.col("df") >= min_df)
         if terms is not None:
-            base = base.where(F.col("term").isin(sorted(set(terms))))
+            base = base.where(term_in(F.col("term"), sorted(set(terms))))
         rows = base.select("term", "df").collect()
         self.df = {r["term"]: int(r["df"]) for r in rows}
         self.neighborhood: dict[str, list[str]] = {}

@@ -3,11 +3,11 @@
 Key structural fact making distributed pruning EXACT here: documents are
 hash-assigned to exactly one segment (index/build.py), so a document's whole
 BM25 score accumulates inside one segment, and the segment-level upper bound
-  ub(q, seg) = Σ_t idf_t · qtf_t · f(max_tf[t,seg], min_dl[t,seg])
+  ub(q, seg) = Σ_t idf_t · qtf_t · max over blocks of f(max_tf, min_dl)
 bounds every document score in that segment. Pruning:
 
-  phase 0 (JVM, metadata only — no block decode): compute ub(q, seg) by
-          joining block metadata with the query terms
+  phase 0 (driver, metadata only — no block decode): compute ub(q, seg)
+          from the index's term dictionary (index/termdict.py)
   phase 1 (Python, tiny): score ONLY the highest-ub segment per query ->
           threshold θ_q = k-th best score found
   phase 2: decode + score only segments with ub(q, seg) > θ_q; all other
@@ -33,15 +33,17 @@ from solrtexttagger_spark.index.compression import (
     decode_positions_block,
     decode_postings_block,
 )
-from solrtexttagger_spark.plans import local_frame
+from solrtexttagger_spark.plans import local_frame, term_in
 from solrtexttagger_spark.search.bm25 import (
     K1,
     B,
+    _local_topk_with_ties,
     analyze_query_terms,
     join_query_terms,
 )
 from solrtexttagger_spark.search.boolean import (
     BooleanPlan,
+    _present,
     _ranges,
     bm25_parts,
     boolean_plan,
@@ -61,41 +63,16 @@ _SCORE_SCHEMA = T.StructType(
 )
 
 
-_THETA_EPS = 1e-9  # ulp slack: bounds may be computed JVM-side, scores in numpy
-
-# Driver-side warm-searcher caches attached to a CompressedIndex grow with
-# the workload vocabulary; in a long-lived serving driver over a broad
-# vocabulary that is unbounded. Caps trigger a whole-cache reset (the
-# simplest policy that keeps the common warm path allocation-free; an LRU
-# would charge every hit). The caches assume the CompressedIndex is
-# IMMUTABLE once queried — rebuilding blocks in place would leave them
-# stale; build a NEW CompressedIndex instead (documented on the class).
-WAND_META_CACHE_MAX_TERMS = 200_000  # per (k1, b): ~segments x 16B per entry
-WAND_BLOCK_CACHE_MAX_TERMS = 20_000  # raw block bytes — much heavier rows
-
-
-def _bounded_insert(cache: dict, missing: list, cap: int) -> bool:
-    """Reset ``cache`` wholesale if adding ``missing`` would exceed ``cap``.
-    Returns True when it cleared: pre-clear entries for the in-flight
-    query's OTHER terms are gone too, so the caller must re-fetch ALL its
-    terms, not just the pre-clear ``missing`` list (round-5 advice: the
-    first overflow query otherwise KeyErrors on its formerly-cached terms)."""
-    if len(cache) + len(missing) > cap:
-        cache.clear()
-        return True
-    return False
+_THETA_EPS = 1e-9  # ulp slack between the bound and the score arithmetic
 
 
 def reset_query_caches(cindex) -> None:
-    """Drop the driver-side query caches on a CompressedIndex OR an
-    InvertedIndex (term metadata / raw blocks / BM25 df stats). Two uses:
-    the bench's cold-path protocol (a cold query pays the one-time
-    metadata job; a warm one reads the cache), and the escape hatch if an
-    index's blocks were rebuilt in place."""
-    for attr in ("_wand_meta", "_wand_blocks", "_bm25_df"):
-        cache = getattr(cindex, attr, None)
-        if cache is not None:
-            cache.clear()
+    """Empty the term dictionary of a CompressedIndex OR an InvertedIndex
+    (index/termdict.py; shared by an index and its compress_index
+    result). Two uses: the bench's cold-path protocol (a cold query pays
+    the one-time lookup collect; a warm one reads the dictionary), and the
+    escape hatch if an index's rows were rebuilt in place."""
+    cindex.termdict.clear()
 
 
 def _score_segment(
@@ -170,28 +147,9 @@ def _score_segment(
     uniq, inv = np.unique(docs, return_inverse=True)
     scores = np.bincount(inv, weights=contrib, minlength=len(uniq))
     if allowed is not None:
-        if len(allowed):
-            idx = np.searchsorted(allowed, uniq)
-            mask = (idx < len(allowed)) & (
-                np.take(allowed, np.minimum(idx, len(allowed) - 1)) == uniq
-            )
-        else:
-            mask = np.zeros(len(uniq), dtype=bool)
-        uniq, scores = uniq[mask], scores[mask]
-        if not len(uniq):
-            return np.zeros(0, dtype=np.int64), np.zeros(0)
-    if len(uniq) > k:
-        # keep k PLUS everything tied with the k-th score: argpartition alone
-        # selects arbitrarily among k-th ties, which could drop the
-        # doc_id-preferred candidate before the final (score desc, doc_id asc)
-        # window. Identical (tf, dl) pairs score bit-identically, so float
-        # equality is the right tie test here.
-        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-        keep = np.nonzero(scores >= kth)[0]
-        order = keep[np.lexsort((uniq[keep], -scores[keep]))]
-    else:
-        order = np.lexsort((uniq, -scores))
-    return uniq[order], scores[order]
+        keep = _present(uniq, allowed)
+        uniq, scores = uniq[keep], scores[keep]
+    return _local_topk_with_ties(uniq, scores, k)
 
 
 def _arrow_term_positions(tbl) -> dict[str, tuple]:
@@ -260,7 +218,7 @@ class LocalSearcher:
         self.warmed_terms: set[str] | None = None
         if terms is not None:
             self.warmed_terms = set(terms)
-            blocks = blocks.where(F.col("term").isin(list(terms)))
+            blocks = blocks.where(term_in(F.col("term"), terms))
         else:
             # fail fast BEFORE collecting a huge index to the driver: for
             # big indexes warming a term subset is load-bearing, not a tip
@@ -325,7 +283,7 @@ class LocalSearcher:
         if positional_index is not None:
             warm_terms = list(raw) if terms is None else list(terms)
             self.term_pos = _arrow_term_positions(
-                positional_index.postings.where(F.col("term").isin(warm_terms))
+                positional_index.postings.where(term_in(F.col("term"), warm_terms))
                 .select(
                     "term",
                     F.col("postings.doc_id").alias("doc_ids"),
@@ -450,13 +408,8 @@ class LocalSearcher:
 
     @staticmethod
     def _apply_allowed(uniq: np.ndarray, scores: np.ndarray, allow: np.ndarray):
-        if not len(allow):
-            return uniq[:0], scores[:0]
-        idx = np.searchsorted(allow, uniq)
-        mask = (idx < len(allow)) & (
-            np.take(allow, np.minimum(idx, len(allow) - 1)) == uniq
-        )
-        return uniq[mask], scores[mask]
+        keep = _present(uniq, allow)
+        return uniq[keep], scores[keep]
 
     def search(
         self,
@@ -718,10 +671,6 @@ def _compressed_contribs(
     blocks of the involved terms: wdf_rows = [(query_id, term, qtf)] ->
     (query_id, doc_id, c). One blocks scan (broadcast term filter with
     global df from bm25.global_df), one Arrow decode pass, no shuffle."""
-    from typing import Iterator
-
-    from solrtexttagger_spark.index.compression import decode_postings_block
-
     n = float(cindex.doc_count)
     avgdl = float(cindex.avgdl) if cindex.avgdl else 1.0
     k1_, b_ = float(k1), float(b)
@@ -817,6 +766,13 @@ def _phrase_doc_full_scores(
     return full
 
 
+def _local_scores(spark: SparkSession, rows) -> DataFrame | None:
+    """Collected (query_id, doc_id, score) rows as a local relation."""
+    if not rows:
+        return None
+    return local_frame(spark, [(r["query_id"], r["doc_id"], r["score"]) for r in rows], _SCORE_SCHEMA)
+
+
 def _wand_topk_bags(
     cindex: CompressedIndex,
     qbags: dict[int, dict[str, int]],
@@ -853,88 +809,37 @@ def _wand_topk_bags(
     if not terms:
         return local_frame(spark, [], "query_id long, rank long, doc_id long, score double")
 
-    # ONE metadata job for everything phase 0 needs: per-(term, seg) shard
-    # upper bound (max over that shard's blocks — JVM-side) AND the per-term
-    # global df (summed driver-side from the same rows). Two separate
-    # collects here were one extra job wave per query batch — the driver
-    # round-trips, not compute, are the latency floor of this path.
-    # The rows are memoized on the index object per (k1, b) — the warm
-    # serving pattern (many queries over one immutable CompressedIndex,
-    # heavy term overlap) then skips the job entirely for seen terms: the
-    # Spark analogue of the reference's in-memory FST term dictionary
-    # (README.md:86-91). Bounded by the workload vocabulary x segments.
-    meta_cache = getattr(cindex, "_wand_meta", None)
-    if meta_cache is None:
-        meta_cache = {}
-        cindex._wand_meta = meta_cache
-    per_kb = meta_cache.setdefault((float(k1), float(b)), {})
-    missing = [t for t in terms if t not in per_kb]
-    if missing:
-        if _bounded_insert(per_kb, missing, WAND_META_CACHE_MAX_TERMS):
-            missing = list(terms)  # reset dropped this query's cached terms
-        _tf = F.col("max_tf").cast("double")
-        _dl = F.col("min_dl").cast("double")
-        _f_ub_expr = _tf * (k1 + 1.0) / (_tf + k1 * (1.0 - b + b * _dl / avgdl))
-        got: dict[str, list] = {}
-        for r in (
-            cindex.blocks.where(F.col("term").isin(missing))
-            .groupBy("term", "seg")
-            .agg(F.max(_f_ub_expr).alias("f_ub"), F.sum("df_seg").alias("df_seg"))
-            .collect()
-        ):
-            got.setdefault(r["term"], []).append((r["seg"], r["f_ub"], r["df_seg"]))
-        for t in missing:  # negative entries too, else re-collected per call
-            per_kb[t] = got.get(t, [])
-    shard_ub: dict[tuple[str, int], float] = {
-        (t, seg): f_ub for t in terms for (seg, f_ub, _d) in per_kb[t]
-    }
-    df_map: dict[str, int] = {}
-    for t in terms:
-        if per_kb[t]:
-            df_map[t] = sum(d for _s, _f, d in per_kb[t])
+    # Phase 0 reads only the term dictionary (index/termdict.py): one
+    # lookup collect for the terms it has not seen, none for a warm query.
+    # A cold lookup fetches the shard bounds too. df entries left by a
+    # bm25 lookup (shared through compress_index) serve the driver-local
+    # path as they are; the distributed path below fetches their bounds.
+    info = cindex.termdict.cached(terms) or cindex.termdict.lookup(
+        cindex.blocks, terms, bounds=True
+    )
+    df_map = {t: e.df for t, e in info.items() if e.df is not None}
     weights = {}  # (qid, term) -> idf*qtf
     for qid, bag in qbags.items():
         for t, qtf in bag.items():
             if t in df_map:
                 idf = math.log(1.0 + (n - df_map[t] + 0.5) / (df_map[t] + 0.5))
                 weights[(qid, t)] = idf * qtf
+    qterm_list = {
+        qid: [(t, weights[(qid, t)], k1, b, avgdl) for t in sorted(bag) if (qid, t) in weights]
+        for qid, bag in qbags.items()
+    }
 
     # driver-local serving path for small posting volumes: one collect,
     # numpy scoring, no executor round-trips. Bypassed under fq — the
     # filter relation lives on the cluster (see docstring).
     total_df = sum(df_map.values())
     if total_df <= local_threshold_postings and allowed_by_seg is None:
-        # memoize the collected blocks per term (same warm-searcher rationale
-        # as the metadata cache above; only small-df terms ever land here,
-        # and the cache is bounded by the workload vocabulary)
-        bcache = getattr(cindex, "_wand_blocks", None)
-        if bcache is None:
-            bcache = {}
-            cindex._wand_blocks = bcache
-        bmissing = [t for t in terms if t not in bcache]
-        if bmissing:
-            if _bounded_insert(bcache, bmissing, WAND_BLOCK_CACHE_MAX_TERMS):
-                bmissing = list(terms)  # reset dropped this query's terms
-            gotb: dict[str, list] = {}
-            for r in (
-                cindex.blocks.where(F.col("term").isin(bmissing))
-                .select("seg", "term", "block")
-                .collect()
-            ):
-                gotb.setdefault(r["term"], []).append((r["seg"], r["block"]))
-            for t in bmissing:
-                bcache[t] = gotb.get(t, [])
         by_seg: dict[int, dict] = {}
-        for t in terms:
-            for seg, blk in bcache[t]:
+        for t, blks in cindex.termdict.blocks(cindex.blocks, terms).items():
+            for seg, blk in blks:
                 by_seg.setdefault(seg, {}).setdefault(t, []).append(blk)
         out = []
-        for qid, bag in qbags.items():
-            qterms = [
-                (t, weights[(qid, t)], k1, b, avgdl)
-                for t in sorted(bag)
-                if (qid, t) in weights
-            ]
+        for qid, qterms in qterm_list.items():
             if not qterms:
                 continue
             cand_docs, cand_scores = [], []
@@ -957,12 +862,15 @@ def _wand_topk_bags(
             spark, out, "query_id long, rank long, doc_id long, score double"
         )
 
-    # phase 0: metadata-only upper bounds per (query, seg). A doc lives in
-    # exactly ONE block of a (term, seg) shard, so the per-term bound is the
-    # MAX over that shard's blocks, then summed across the query's terms.
-    # The max-over-blocks ran JVM-side in the single metadata job above, so
-    # the driver holds one row per (term, seg) — not one per block, which
-    # becomes a driver hotspot at 1e5 segments x multi-block shards.
+    # phase 0: metadata-only upper bounds per (query, seg): each term's
+    # shard bound, the max of its blocks' bounds evaluated here per call
+    # from the entry's (k1, b)-free ShardBounds (one element per distinct
+    # (seg, max_tf), not one per block), summed across the query's terms.
+    shard_ub: dict[tuple[str, int], float] = {}
+    for t, e in cindex.termdict.lookup(cindex.blocks, terms, bounds=True).items():
+        for s, mtf, mdl in zip(*(a.tolist() for a in e.bounds)):
+            f_ub = bm25_upper_bound(mtf, mdl, avgdl, k1, b)
+            shard_ub[(t, s)] = max(f_ub, shard_ub.get((t, s), f_ub))
     ub: dict[tuple[int, int], float] = {}
     for (term, seg), f_ub in shard_ub.items():
         for qid in qbags:
@@ -974,18 +882,9 @@ def _wand_topk_bags(
     # NB: no persist here — cindex.blocks is expected to be persisted by the
     # caller; per-call persist of a per-query filtered plan would pile up
     # distinct cache entries across a query workload.
-    blocks = cindex.blocks.where(F.col("term").isin(terms)).select(
+    blocks = cindex.blocks.where(term_in(F.col("term"), terms)).select(
         "seg", "term", "block", "max_tf", "min_dl"
     )
-
-    qterm_list = {
-        qid: [
-            (t, weights[(qid, t)], k1, b, avgdl)
-            for t in sorted(bag)
-            if (qid, t) in weights
-        ]
-        for qid, bag in qbags.items()
-    }
 
     blocks_total_acc = spark.sparkContext.accumulator(0)
     blocks_skipped_acc = spark.sparkContext.accumulator(0)
@@ -1106,14 +1005,7 @@ def _wand_topk_bags(
     for qid, scores in by_q.items():
         scores.sort(reverse=True)
         theta[qid] = scores[k_eff - 1] if len(scores) >= k_eff else -math.inf
-    phase1_local = (
-        local_frame(
-            spark, [(r["query_id"], r["doc_id"], r["score"]) for r in phase1_rows],
-            _SCORE_SCHEMA,
-        )
-        if phase1_rows
-        else None
-    )
+    phase1_local = _local_scores(spark, phase1_rows)
 
     # phase 2: only segments whose upper bound can reach θ. >= (not >): a
     # segment whose bound EQUALS θ may hold a doc scoring exactly θ with a
@@ -1170,14 +1062,7 @@ def _wand_topk_bags(
                 scores.sort(reverse=True)
                 if len(scores) >= k_eff:
                     theta[qid] = scores[k_eff - 1]
-            phase2a_local = (
-                local_frame(
-                    spark, [(r["query_id"], r["doc_id"], r["score"]) for r in rows2a],
-                    _SCORE_SCHEMA,
-                )
-                if rows2a
-                else None
-            )
+            phase2a_local = _local_scores(spark, rows2a)
             rest = {qid: segs for qid, segs in rest.items() if qid not in head}
             for qid, segs in tail.items():
                 kept = {s for s in segs if ub[(qid, s)] >= theta.get(qid, -math.inf)}

@@ -311,23 +311,25 @@ def test_wand_rank_identical_to_exhaustive(spark, corpus_index, local_threshold)
 
 
 def test_wand_caches_bounded(spark, corpus_index, monkeypatch):
-    """The driver-side warm-searcher caches reset wholesale at the cap
-    instead of growing with the workload vocabulary, and results stay
-    identical across the reset."""
-    import solrtexttagger_spark.search.wand as wmod
+    """The term dictionary resets whole at its byte bound instead of
+    growing with the workload vocabulary, and results stay identical
+    across the reset."""
+    import solrtexttagger_spark.index.termdict as tdmod
 
     c = compress_index(corpus_index)
     c.blocks.persist().count()
-    monkeypatch.setattr(wmod, "WAND_META_CACHE_MAX_TERMS", 3)
-    monkeypatch.setattr(wmod, "WAND_BLOCK_CACHE_MAX_TERMS", 3)
+    c.termdict.clear()  # shared with corpus_index: start from empty
+    monkeypatch.setattr(tdmod, "MAX_BYTES", 3 * tdmod.ENTRY_BYTES)
     first = wand_topk(c, [(0, "w0 w1")], k=5, spark=spark,
                       local_threshold_postings=100_000).collect()
-    # new vocabulary exceeding the cap forces a whole-cache reset
+    # new vocabulary exceeding the bound forces a whole reset
     wand_topk(c, [(1, "w5 w40 w80")], k=5, spark=spark,
               local_threshold_postings=100_000).collect()
-    per_kb = next(iter(c._wand_meta.values()))
-    assert len(per_kb) <= 3
-    assert len(c._wand_blocks) <= 3
+    assert len(c.termdict._info) <= 3
+    assert len(c.termdict._blocks) <= 3
+    assert c.termdict.cached(["w0"]) is None
+    held = [*c.termdict._info.values(), *c.termdict._blocks.values()]
+    assert c.termdict.nbytes == sum(map(tdmod._nbytes, held))
     # re-running the first query after the reset is value-identical
     again = wand_topk(c, [(0, "w0 w1")], k=5, spark=spark,
                       local_threshold_postings=100_000).collect()
@@ -354,6 +356,34 @@ def test_wand_pruning_skips_segments(spark):
     # and identical to the exhaustive scorer
     exp = bm25_topk(idx, [(0, "common")], k=1, spark=spark).collect()
     assert [(r["rank"], r["doc_id"]) for r in exp] == [(1, 999)]
+
+
+def test_wand_multi_block_shard_bounds_prune(spark):
+    """A shard's bound is the max of its blocks' own bounds. A segment
+    holding a long doc with tf 20 and a short doc with tf 1 is skipped
+    under one block per doc (each block bound is below the top score) but
+    scored under one block per shard, whose (max tf, min dl) bound is
+    above it. The doc ids place the docs (seg = xxhash64(doc_id) mod 8):
+    long and short docs share segs 0, 2, 3 and 5, short ones alone fill
+    segs 4 and 7 (enough bound spread for the pruned phases), and the top
+    doc 999 is alone in seg 6."""
+    long_doc = " ".join(["common"] * 20 + ["pad"] * 80)
+    short_doc = " ".join(["common"] + ["pad"] * 14)
+    docs = [(d, long_doc) for d in (1, 2, 3, 7, 12)]
+    docs += [(d, short_doc) for d in (0, 4, 5, 6, 9, 11, 13, 16)]
+    docs.append((999, " ".join(["common"] * 20)))
+    idx = build_index(spark.createDataFrame(docs, "doc_id long, text string"), num_segments=8)
+    scored = {}
+    for mbp in (None, 1):
+        c = compress_index(idx, max_block_postings=mbp)
+        c.blocks.persist().count()
+        stats = {}
+        rows = wand_topk(c, [(0, "common")], k=1, spark=spark, prune_stats=stats,
+                         local_threshold_postings=0).collect()
+        assert [(r["rank"], r["doc_id"]) for r in rows] == [(1, 999)]
+        scored[mbp] = stats["segments_scored"]
+        c.blocks.unpersist()
+    assert scored == {None: 5, 1: 1}, scored
 
 
 def test_local_searcher_rank_identical(spark, corpus_index):
@@ -679,20 +709,20 @@ def test_local_searcher_arrow_warmup_equals_row_loop(spark, corpus_index):
 
 
 def test_wand_cache_reset_keeps_inflight_query(spark, corpus_index, monkeypatch):
-    """Round-5 advice (medium): a query whose terms are PARTIALLY cached
-    must survive a cap-triggered reset — the reset drops its pre-cached
-    terms, so the fetch list is recomputed to ALL its terms (previously a
-    KeyError on the first overflow query in a long-lived driver)."""
-    import solrtexttagger_spark.search.wand as wmod
+    """Round-5 advice (medium): a query whose terms are PARTIALLY held
+    must survive a bound-triggered reset — the reset keeps the entries of
+    the lookup in flight (dropping them was a KeyError on the first
+    overflow query in a long-lived driver)."""
+    import solrtexttagger_spark.index.termdict as tdmod
 
     c = compress_index(corpus_index)
     c.blocks.persist().count()
-    monkeypatch.setattr(wmod, "WAND_META_CACHE_MAX_TERMS", 3)
-    monkeypatch.setattr(wmod, "WAND_BLOCK_CACHE_MAX_TERMS", 3)
+    c.termdict.clear()  # shared with corpus_index: start from empty
+    monkeypatch.setattr(tdmod, "MAX_BYTES", 3 * tdmod.ENTRY_BYTES)
     # warm w0, w1
     wand_topk(c, [(0, "w0 w1")], k=5, spark=spark,
               local_threshold_postings=100_000).collect()
-    # w0 is cached, three new terms overflow the cap -> reset mid-query
+    # w0 is held, three new terms overflow the bound -> reset mid-query
     got = wand_topk(c, [(1, "w0 w5 w40 w80")], k=5, spark=spark,
                     local_threshold_postings=100_000).collect()
     exp = bm25_topk(corpus_index, [(1, "w0 w5 w40 w80")], k=5, spark=spark).collect()

@@ -245,12 +245,12 @@ def test_select_topk_stored_fields(spark, docs_df, index):
 
 def test_bm25_df_cache_and_reset(spark, docs_df, index, monkeypatch):
     """Round-6 df protocol (r5 verdict #5): a COLD batch runs as ONE
-    action — df broadcast-joins inside the scoring job and the driver
-    memo stays untouched; ``warm_df_cache`` populates it explicitly
-    (negative entries included) and fully-cached batches then skip the
-    df stage. Results identical cold, warm, after a cap-triggered
-    reset, and after reset_query_caches."""
-    import solrtexttagger_spark.search.bm25 as bmod
+    action — df broadcast-joins inside the scoring job and the index's
+    term dictionary stays empty; ``warm_df_cache`` fills it explicitly
+    (absent terms included) and fully-held batches then skip the df
+    stage. Results identical cold, warm, after a bound-triggered reset,
+    and after reset_query_caches."""
+    import solrtexttagger_spark.index.termdict as tdmod
     from solrtexttagger_spark.search.bm25 import warm_df_cache
     from solrtexttagger_spark.search.wand import reset_query_caches
 
@@ -259,18 +259,20 @@ def test_bm25_df_cache_and_reset(spark, docs_df, index, monkeypatch):
     key = lambda r: (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
     cold = sorted(map(key, bm25_topk(index, q, k=5, spark=spark).collect()))
     # cold batches never collect df driver-side
-    assert not getattr(index, "_bm25_df", None)
+    assert index.termdict.nbytes == 0
     got = warm_df_cache(index, ["fast", "join", "filter", "zzz"])
-    assert got["zzz"] is None and got["fast"]  # negative entry memoized
-    assert index._bm25_df["zzz"] is None
+    assert got["zzz"] is None and got["fast"]  # absent term held as None
+    assert index.termdict.cached(["zzz"])["zzz"].df is None
     warm = sorted(map(key, bm25_topk(index, q, k=5, spark=spark).collect()))
     assert warm == cold and cold  # non-empty: real vocabulary
-    # the cache hit drops "zzz" (cached as absent) on the exploded path too
+    # the dictionary hit drops "zzz" (held as absent) on the exploded path too
     assert warm == sorted(map(key, bm25_topk(
         index, q, k=5, spark=spark, strategy="exploded").collect()))
-    # cap overflow inside warm_df_cache keeps the in-flight terms correct
-    monkeypatch.setattr(bmod, "BM25_DF_CACHE_MAX_TERMS", 3)
+    # a reset at the bound inside warm_df_cache keeps the in-flight terms
+    monkeypatch.setattr(tdmod, "MAX_BYTES", 3 * tdmod.ENTRY_BYTES)
     warm_df_cache(index, ["fast", "row", "merge", "sort"])
+    assert index.termdict.cached(["join"]) is None  # the reset happened
+    assert index.termdict.cached(["fast", "row", "merge", "sort"])
     over = sorted(map(key, bm25_topk(
         index, [(2, "fast row merge sort")], k=5, spark=spark).collect()))
     exp = sorted(map(key, bm25_topk(
@@ -278,7 +280,7 @@ def test_bm25_df_cache_and_reset(spark, docs_df, index, monkeypatch):
     ).collect()))
     assert over and over == exp
     reset_query_caches(index)
-    assert index._bm25_df == {}
+    assert index.termdict.nbytes == 0 and index.termdict.cached(["fast"]) is None
     again = sorted(map(key, bm25_topk(index, q, k=5, spark=spark).collect()))
     assert again == cold
 

@@ -114,3 +114,50 @@ def test_no_create_dataframe_outside_local_frame():
             ):
                 offenders.append(f"{path.relative_to(PACKAGE.parent)}:{node.lineno}")
     assert not offenders, offenders
+
+
+def test_term_in_equals_isin(spark):
+    """``term_in`` selects the rows ``isin`` selects, with the same
+    optimized plan, quotes, backslashes, the empty string and non-ASCII
+    terms included; a NUL in a term raises."""
+    from pyspark.sql import functions as F
+
+    from solrtexttagger_spark.plans import plan_string, term_in
+
+    terms = [f"t{i}" for i in range(40)] + ["it's", "back\\slash", "", "tërm"]
+    df = spark.createDataFrame([(t,) for t in terms + ["zz", "t1x"]], "term string")
+
+    def optimized(rel):
+        text = plan_string(rel, "extended")
+        return text.split("== Optimized Logical Plan ==")[1].split("== Physical Plan ==")[0]
+
+    for subset in (terms, terms[:3], [""], []):
+        want = df.where(F.col("term").isin(subset))
+        got = df.where(term_in(F.col("term"), subset))
+        assert sorted(got.collect()) == sorted(want.collect()), subset
+        assert optimized(got) == optimized(want), subset
+    with pytest.raises(ValueError):
+        term_in(F.col("term"), ["a\x00b"])
+
+
+# integer lists keep ``isin``: term_in carries strings only
+INTEGER_ISIN = {"F.col('seg')", "F.col('query_id')", "F.col(id_col)"}
+
+
+def test_no_isin_over_term_lists():
+    """A driver-held list enters a search predicate through
+    ``plans.term_in`` (a constant number of py4j calls), never through
+    ``Column.isin(list)`` (one JVM literal per element)."""
+    offenders = []
+    for path in sorted((PACKAGE / "search").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "isin"
+                and len(node.args) == 1
+                and not isinstance(node.args[0], ast.Starred)
+                and ast.unparse(node.func.value) not in INTEGER_ISIN
+            ):
+                offenders.append(f"{path.relative_to(PACKAGE.parent)}:{node.lineno}")
+    assert not offenders, offenders
