@@ -268,6 +268,32 @@ def build_index(
     layout instead of re-merged, because bounded shards are also what the
     query side and the compression blocks want.
     """
+    # N = corpus row count (cheap: parquet metadata count or cached input);
+    # avgdl derives lazily from term_stats (sum cf / N), so no second
+    # tokenize pass and no corpus-wide cache.
+    return _build_index(
+        df,
+        df.count(),
+        text_col=text_col,
+        doc_id_col=doc_id_col,
+        lowercase=lowercase,
+        use_split=use_split,
+        num_segments=num_segments,
+    )
+
+
+def _build_index(
+    df: DataFrame,
+    doc_count: int,
+    *,
+    text_col: str,
+    doc_id_col: str,
+    num_segments: int | None,
+    lowercase: bool = True,
+    use_split: bool = False,
+) -> InvertedIndex:
+    """``build_index`` over a relation of ``doc_count`` rows the caller
+    has already counted (``upsert_docs``' batch); runs no Spark job."""
     spark = df.sparkSession
     if num_segments is None:
         num_segments = max(2, spark.sparkContext.defaultParallelism * 2)
@@ -308,14 +334,9 @@ def build_index(
     term_stats = postings.groupBy("term").agg(
         F.sum("df_seg").alias("df"), F.sum("cf_seg").alias("cf")
     )
-
-    # N = corpus row count (cheap: parquet metadata count or cached input);
-    # avgdl derives lazily from term_stats (sum cf / N), so no second
-    # tokenize pass and no corpus-wide cache.
-    n = df.count()
     return InvertedIndex(
         postings=postings,
         term_stats=term_stats,
-        doc_count=n,
+        doc_count=doc_count,
         num_segments=num_segments,
     )

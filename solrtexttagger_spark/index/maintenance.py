@@ -22,15 +22,29 @@ array and a JVM ``filter`` lambda rewrites each (term, seg) shard's
 array in place (no shuffle at all; df_seg/cf_seg recomputed from the
 filtered array). Past ``literal_threshold`` ids the honest cost is a
 real merge: explode -> anti-join on doc_id -> re-aggregate — the same
-shuffle a Lucene segment merge pays. Corpus stats (doc_count, avgdl)
-are recomputed from the surviving postings in one aggregation job.
+shuffle a Lucene segment merge pays.
+
+Corpus stats are metadata arithmetic, as in Lucene's updateDocument and
+Delta Lake's MERGE: doc_count is the old count minus the deleted ids
+that have postings (one map-side intersect on the literal path, one
+semi-join count on the merge path), never a recount of the surviving
+postings; avgdl derives lazily from term_stats, as ``build_index``
+derives it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import array_lit
+
+
+def _overlap(gone: Column) -> Column:
+    """The ids of the literal ``gone`` that occur in a shard's postings
+    (almost always empty): array_intersect hash-builds from the row's own
+    ids and probes the literal once, O(n + |ids|) per shard."""
+    return F.array_intersect(gone, F.transform("postings", lambda p: p["doc_id"]))
 
 
 def filter_postings_literal(postings: DataFrame, ids: list[int]) -> DataFrame:
@@ -46,25 +60,18 @@ def filter_postings_literal(postings: DataFrame, ids: list[int]) -> DataFrame:
     # ONE ArrayType literal, not CreateArray(|ids| child literals) —
     # a thousand-child expression tree blows up codegen/analysis time
     # (measured: 237 s vs 2.4 s for the whole rewrite at 1k ids)
-    gone = (
-        F.lit(sorted(ids)).cast("array<long>")
-        if ids
-        else F.array().cast("array<long>")
-    )
-    # Per-shard cost is O(n + |ids|), not O(n * |ids|) (round-5
-    # verdict #4): array_intersect(gone, doc_ids) hash-builds from the
-    # ROW's own ids and probes the literal once, yielding the (almost
-    # always empty) overlap. Only overlapping shards pay the
-    # per-element rewrite, and they scan the tiny overlap, never the
-    # full deleted-id literal. The overlap is LET-BOUND as a lambda
-    # variable (a 1-element transform) — as a plain withColumn,
-    # CollapseProject inlines the intersect into the filter lambda
-    # and re-evaluates it per posting element (measured: 117 s vs
-    # 0.9 s for the rewrite of a 100k-doc corpus at 1k deleted ids).
-    doc_ids = F.transform("postings", lambda p: p["doc_id"])
+    gone = array_lit(sorted(ids))
+    # Per-shard cost is O(n + |ids|), not O(n * |ids|): only shards
+    # with a non-empty overlap pay the per-element rewrite, and they
+    # scan the tiny overlap, never the full deleted-id literal. The
+    # overlap is LET-BOUND as a lambda variable (a 1-element transform)
+    # — as a plain withColumn, CollapseProject inlines the intersect
+    # into the filter lambda and re-evaluates it per posting element
+    # (measured: 117 s vs 0.9 s for the rewrite of a 100k-doc corpus at
+    # 1k deleted ids).
     kept = F.element_at(
         F.transform(
-            F.array(F.array_intersect(gone, doc_ids)),
+            F.array(_overlap(gone)),
             lambda ov: F.when(F.size(ov) == 0, F.col("postings")).otherwise(
                 F.filter(
                     "postings",
@@ -90,6 +97,66 @@ def filter_postings_literal(postings: DataFrame, ids: list[int]) -> DataFrame:
     )
 
 
+def _literal_ids(ids: DataFrame, method: str, literal_threshold: int) -> list[int] | None:
+    """The ids for the literal path, or None for the merge path.
+    'literal' collects every id; 'auto' collects at most
+    ``literal_threshold + 1`` and takes the merge path when that many
+    come back."""
+    if method not in ("auto", "literal", "merge"):
+        raise ValueError(f"method must be auto|literal|merge, got {method}")
+    if method == "merge":
+        return None
+    got = [
+        int(r[0])
+        for r in (ids if method == "literal" else ids.limit(literal_threshold + 1)).collect()
+    ]
+    return None if method == "auto" and len(got) > literal_threshold else got
+
+
+def _expunge(index: InvertedIndex, ids: list[int] | None, ids_df: DataFrame) -> InvertedIndex:
+    """``index`` without the docs of ``ids_df``: on the literal path when
+    the driver holds them as ``ids`` (distinct), else by the merge.
+
+    doc_count is arithmetic, never a rescan: the old count minus the
+    deleted ids that have postings. A deleted doc that had no terms (an
+    empty or null text) has no posting to find, so it stays counted.
+    avgdl derives lazily from term_stats, as in ``build_index``."""
+    if ids is not None:
+        new_postings = filter_postings_literal(index.postings, ids)
+        # the deleted ids that have postings: the same map-side
+        # intersect the rewrite uses, then a set of at most |ids| values
+        present = (
+            index.postings.select(F.explode(_overlap(array_lit(ids))).alias("d"))
+            .agg(F.size(F.collect_set("d")))
+            .collect()[0][0]
+            if ids
+            else 0
+        )
+    else:
+        ex = index.postings.select(
+            "term", "seg", F.explode("postings").alias("p")
+        ).select("term", "seg", F.col("p.doc_id").alias("doc_id"), "p")
+        kept = ex.join(ids_df, "doc_id", "left_anti")
+        new_postings = (
+            kept.groupBy("term", "seg")
+            .agg(
+                F.array_sort(F.collect_list("p")).alias("postings"),
+                F.count("*").alias("df_seg"),
+                F.sum(F.col("p.tf")).alias("cf_seg"),
+            )
+        )
+        present = ex.select("doc_id").join(ids_df, "doc_id", "left_semi").distinct().count()
+    term_stats = new_postings.groupBy("term").agg(
+        F.sum("df_seg").alias("df"), F.sum("cf_seg").alias("cf")
+    )
+    return InvertedIndex(
+        postings=new_postings,
+        term_stats=term_stats,
+        doc_count=index.doc_count - present,
+        num_segments=index.num_segments,
+    )
+
+
 def expunge_docs(
     index: InvertedIndex,
     deleted_docs: DataFrame,
@@ -111,7 +178,12 @@ def expunge_docs(
     rewritten array per emitted element.
     method='merge': explode -> anti-join -> re-aggregate (the real merge
     shuffle; use when the deleted set is too big to ship as a literal).
-    method='auto' picks by count against ``literal_threshold``.
+    method='auto' collects at most ``literal_threshold + 1`` distinct ids
+    and takes the literal path when no more come back.
+
+    doc_count = old doc_count minus the deleted ids that have postings;
+    a deleted doc that itself had no terms stays counted (no posting
+    records it). avgdl derives lazily from the new term_stats.
 
     Crossover (measured, 100k-doc corpus, local[8]): literal 2.0 s /
     merge 0.9 s at 1k ids; literal 8 s / merge 0.8 s at 10k — at bench
@@ -121,54 +193,7 @@ def expunge_docs(
     while merge shuffles the entire exploded postings relation — the
     right trade only when that shuffle is the bottleneck."""
     ids_df = deleted_docs.select(F.col("doc_id").cast("long").alias("doc_id")).distinct()
-    if method == "auto":
-        method = "literal" if ids_df.count() <= literal_threshold else "merge"
-    if method == "literal":
-        ids = sorted(int(r["doc_id"]) for r in ids_df.collect())
-        new_postings = filter_postings_literal(index.postings, ids)
-    elif method == "merge":
-        ex = index.postings.select(
-            "term", "seg", F.explode("postings").alias("p")
-        ).select("term", "seg", F.col("p.doc_id").alias("doc_id"), "p")
-        kept = ex.join(ids_df, "doc_id", "left_anti")
-        new_postings = (
-            kept.groupBy("term", "seg")
-            .agg(
-                F.array_sort(F.collect_list("p")).alias("postings"),
-                F.count("*").alias("df_seg"),
-                F.sum(F.col("p.tf")).alias("cf_seg"),
-            )
-        )
-    else:
-        raise ValueError(f"method must be auto|literal|merge, got {method}")
-    term_stats = new_postings.groupBy("term").agg(
-        F.sum("df_seg").alias("df"), F.sum("cf_seg").alias("cf")
-    )
-    # corpus stats over the SURVIVING docs: each doc carries its dl on
-    # every posting, so distinct (doc_id, dl) pairs = one row per doc.
-    # Computed from the ORIGINAL postings minus the deleted ids (an
-    # anti-join), NEVER by exploding the rewritten arrays — exploding a
-    # lazily-rewritten array column re-evaluates the rewrite expression
-    # per emitted element (measured 123 s vs 1.1 s on a 100k-doc corpus);
-    # a doc not in the deleted set keeps its dl unchanged, so the two
-    # formulations are identical.
-    stats = (
-        index.postings.select(F.explode("postings").alias("p"))
-        .select(F.col("p.doc_id").alias("doc_id"), F.col("p.dl").alias("dl"))
-        .distinct()
-        .join(ids_df, "doc_id", "left_anti")
-        .agg(F.count("*").alias("n"), F.sum("dl").alias("total"))
-        .collect()[0]
-    )
-    doc_count = int(stats["n"] or 0)
-    avgdl = float(stats["total"]) / doc_count if doc_count else 0.0
-    return InvertedIndex(
-        postings=new_postings,
-        term_stats=term_stats,
-        doc_count=doc_count,
-        num_segments=index.num_segments,
-        _avgdl=avgdl,
-    )
+    return _expunge(index, _literal_ids(ids_df, method, literal_threshold), ids_df)
 
 
 def upsert_docs(
@@ -189,45 +214,48 @@ def upsert_docs(
     Semantics are Lucene's exactly: delete-by-id then add — there is no
     in-place posting mutation in either engine. Shape, scale-aware:
 
-    1. ``expunge_docs`` removes the ids being replaced (no-op rows for
-       genuinely new ids), on the literal map-only path for small
-       batches.
+    1. One collect of at most ``literal_threshold + 1`` batch ids. When
+       no more come back, the duplicate check runs on the driver and the
+       replaced ids leave on the literal map-only path of
+       ``expunge_docs``; otherwise one aggregate checks duplicates and
+       the merge path removes them (no-op rows for genuinely new ids).
     2. The batch is indexed on its own (``build_index`` with the SAME
        num_segments, so the doc-hash segmentation lines up; pass the
-       original build's analyzer options through ``build_opts``).
+       original build's analyzer options through ``build_opts``). Its
+       row count comes from step 1, not from a second count.
     3. Shard merge is DELTA-DRIVEN, never a full re-aggregation: the
        delta's (term, seg) key set broadcasts; untouched shards of the
        big index pass through with NO shuffle, and only overlapping
        shards + the delta rows re-aggregate (flatten + array_sort —
        the doc-sorted postings invariant every reader relies on).
     4. term_stats merge by summing the two tiny stats relations;
-       doc_count adds up (the expunge already recomputed the survivors'
-       count) and avgdl derives lazily from the merged term_stats, as in
-       ``build_index``.
+       doc_count is arithmetic (old count, minus the replaced ids that
+       have postings, plus the batch rows) and avgdl derives lazily from
+       the merged term_stats, as in ``build_index``. A replaced doc that
+       had no terms stays counted as well as re-added.
 
     A batch with duplicate ids raises — Lucene applies updates in
     sequence, but a set-oriented batch has no defined order, so
     last-write-wins would be nondeterministic here."""
-    from solrtexttagger_spark.index.build import build_index
+    from solrtexttagger_spark.index.build import _build_index
 
-    ids = new_docs.select(F.col(doc_id_col).cast("long").alias("doc_id"))
-    n_rows, n_ids = (
-        ids.agg(
+    ids_df = new_docs.select(F.col(doc_id_col).cast("long").alias("doc_id"))
+    ids = _literal_ids(ids_df, method, literal_threshold)
+    if ids is not None:
+        n_rows, n_ids = len(ids), len(set(ids))
+    else:
+        n_rows, n_ids = ids_df.agg(
             F.count("*").alias("n"), F.countDistinct("doc_id").alias("d")
         ).collect()[0]
-    )
     if n_rows != n_ids:
         raise ValueError(
             f"upsert batch has duplicate doc ids ({n_rows} rows, "
             f"{n_ids} distinct) — split into ordered batches instead"
         )
-    # the duplicate check already counted the ids: resolve 'auto' here so
-    # expunge_docs does not count them again
-    if method == "auto":
-        method = "literal" if n_ids <= literal_threshold else "merge"
-    cleaned = expunge_docs(index, ids, method=method)
-    delta = build_index(
+    cleaned = _expunge(index, ids, ids_df)
+    delta = _build_index(
         new_docs,
+        n_rows,
         text_col=text_col,
         doc_id_col=doc_id_col,
         num_segments=index.num_segments,
@@ -264,6 +292,6 @@ def upsert_docs(
     return InvertedIndex(
         postings=new_postings,
         term_stats=term_stats,
-        doc_count=cleaned.doc_count + delta.doc_count,
+        doc_count=cleaned.doc_count + n_rows,
         num_segments=index.num_segments,
     )

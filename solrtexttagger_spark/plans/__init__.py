@@ -14,7 +14,9 @@ driver-local scoring itself. tests/test_local_frame.py fails on any other
 A driver-held term list enters a predicate through ``term_in``:
 ``Column.isin(list)`` costs about four py4j round trips per element.
 tests/test_local_frame.py fails on any ``.isin`` over a term list in
-``search/``.
+``search/``. A driver-held id or string list becomes one array literal
+through ``array_lit``, never ``F.lit(list)`` (one JVM literal per
+element); the same test file guards that too.
 
 Diagnostics: capture and sanity-check the physical plans of the
 engine's operators (the shapes tests/test_plans.py pins).
@@ -34,7 +36,7 @@ import io
 import re
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.classic.column import Column as JvmColumn
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.utils import get_active_spark_context
@@ -97,6 +99,25 @@ def term_in(col: Column, terms) -> Column:
     jvm = get_active_spark_context()._jvm
     arr = jvm.org.apache.commons.lang3.StringUtils.splitPreserveAllTokens("\x00".join(terms), "\x00")
     return JvmColumn(col._jc.isin(jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)))
+
+
+def array_lit(values, element_type: str = "long") -> Column:
+    """One ``array<element_type>`` literal for driver-held longs or
+    strings, in a constant number of py4j calls: ``F.lit(list)`` makes one
+    JVM literal per element. The values travel as one joined string that
+    ``split`` cuts and ``cast`` types; constant folding leaves one array
+    literal in the optimized plan. Raises ValueError on a string
+    containing NUL."""
+    values = list(values)
+    if not values:
+        return F.array().cast(f"array<{element_type}>")
+    if element_type == "string":
+        if any("\x00" in v for v in values):
+            raise ValueError("array_lit: a value contains the NUL separator")
+        joined, sep = "\x00".join(values), "\x00"
+    else:
+        joined, sep = ",".join(str(int(v)) for v in values), ","
+    return F.split(F.lit(joined), sep).cast(f"array<{element_type}>")
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.plans import local_frame
+from solrtexttagger_spark.plans import array_lit, local_frame
 from solrtexttagger_spark.search.bm25 import (
     B,
     K1,
@@ -144,10 +144,7 @@ def explain_scores(
             F.filter(
                 "postings",
                 lambda p: F.array_contains(
-                    F.lit(sorted({int(i) for i in doc_ids})).cast(
-                        "array<long>"
-                    ),
-                    p["doc_id"],
+                    array_lit(sorted({int(i) for i in doc_ids})), p["doc_id"]
                 ),
             ),
         )

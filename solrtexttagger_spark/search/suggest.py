@@ -36,6 +36,8 @@ import bisect
 
 from pyspark.sql import DataFrame, functions as F
 
+from solrtexttagger_spark.plans import array_lit
+
 _TOKEN_SPLIT = "[^a-z0-9]+"
 
 
@@ -124,9 +126,7 @@ def suggest(
             raise ValueError(
                 "contexts filtering needs build_suggestions(context_col=...)"
             )
-        cond = cond & F.arrays_overlap(
-            "contexts", F.lit(list(contexts)).cast("array<string>")
-        )
+        cond = cond & F.arrays_overlap("contexts", array_lit(contexts, "string"))
     for t in toks[:-1]:
         cond = cond & F.array_contains("tokens", t)
     last = toks[-1]

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.plans import local_frame
+from solrtexttagger_spark.plans import array_lit, local_frame
 
 
 def term_vectors(
@@ -76,7 +76,7 @@ def term_vectors(
     # expunge trick): filter the postings ARRAY to the requested docs
     # BEFORE the Generate, drop empty shards — explode input is bounded
     # by the request's shard overlap, not segment size
-    wanted = F.lit(sorted({int(i) for i in doc_ids})).cast("array<long>")
+    wanted = array_lit(sorted({int(i) for i in doc_ids}))
     pruned = pruned.withColumn(
         "postings",
         F.filter("postings", lambda p: F.array_contains(wanted, p["doc_id"])),

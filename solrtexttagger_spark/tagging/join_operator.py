@@ -143,35 +143,39 @@ def tag_join(
     sized (bounded by |names|), far smaller than the term dictionary —
     broadcastable even when the dictionary itself is not.
     """
-    # the dictionary relation feeds up to three consumers (the max-len
-    # scalar, the first-words set, the n-gram join itself); materialize
-    # it ONCE instead of re-running the whole distributed build
+    # One collect serves both the first-word set and max_phrase_len: a
+    # (first word, longest term) row per distinct first word, the same
+    # bound as the first-word set itself. With the n-gram join that makes
+    # two consumers of the dictionary relation; an uncached one is
+    # materialized ONCE instead of re-running the whole distributed build
     # (dense-id assignment + analysis + groupBy) per consumer — the same
     # multi-consumer localCheckpoint discipline as connected_components,
     # and still never collected (this path exists for dictionaries too
     # big to broadcast)
-    n_consumers = 1 + (max_phrase_len is None) + bool(prefix_prune)
-    if n_consumers >= 2:
-        dict_terms = dict_terms.localCheckpoint(eager=True)
-    if max_phrase_len is None:
-        max_phrase_len = dict_terms.agg(F.max("n_words")).collect()[0][0] or 1
+    first_words = None
+    if max_phrase_len is None or prefix_prune:
+        if not dict_terms.is_cached:
+            dict_terms = dict_terms.localCheckpoint(eager=True)
+        rows = (
+            dict_terms.groupBy(F.split(F.col("term"), " ").getItem(0).alias("fw"))
+            .agg(F.max("n_words").alias("n"))
+            .collect()
+        )
+        if max_phrase_len is None:
+            max_phrase_len = max((r["n"] for r in rows), default=1)
+        if prefix_prune:
+            first_words = frozenset(r["fw"] for r in rows)
     stop = frozenset(stopwords) if stopwords else None
     mlen = min_taggable_len
     maxn = int(max_phrase_len)
     ig = ignore_stopwords
     emit_mt = match_text
 
-    first_words_bc = None
-    if prefix_prune:
-        fw = frozenset(
-            r["fw"]
-            for r in dict_terms.select(
-                F.split(F.col("term"), " ").getItem(0).alias("fw")
-            )
-            .distinct()
-            .collect()
-        )
-        first_words_bc = texts_df.sparkSession.sparkContext.broadcast(fw)
+    first_words_bc = (
+        None
+        if first_words is None
+        else texts_df.sparkSession.sparkContext.broadcast(first_words)
+    )
 
     def emit_ngrams(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         first_words = first_words_bc.value if first_words_bc is not None else None

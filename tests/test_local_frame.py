@@ -5,6 +5,7 @@ collected, reject bad input, and be the package's only way in."""
 
 import ast
 import math
+import re
 import struct
 from pathlib import Path
 
@@ -158,6 +159,63 @@ def test_no_isin_over_term_lists():
                 and len(node.args) == 1
                 and not isinstance(node.args[0], ast.Starred)
                 and ast.unparse(node.func.value) not in INTEGER_ISIN
+            ):
+                offenders.append(f"{path.relative_to(PACKAGE.parent)}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_array_lit_equals_list_literal(spark):
+    """``array_lit`` folds to the array literal ``F.lit(list)`` gives (same
+    optimized plan, same rows) for longs and strings, the empty list
+    included; a NUL in a string raises."""
+    from pyspark.sql import functions as F
+
+    from solrtexttagger_spark.plans import array_lit, plan_string
+
+    def optimized(rel):  # without the expression ids
+        text = plan_string(rel, "extended")
+        plan = text.split("== Optimized Logical Plan ==")[1].split("== Physical Plan ==")[0]
+        return re.sub(r"#\d+", "", plan)
+
+    one = spark.range(1)
+    cases = [
+        ([1, 5, 2**60, -3], "long"),
+        ([7], "long"),
+        ([], "long"),
+        (["a", "", "it's", "tërm", "x,y"], "string"),
+        ([""], "string"),
+        ([], "string"),
+    ]
+    for values, typ in cases:
+        want = one.select(F.lit(values).cast(f"array<{typ}>").alias("a"))
+        got = one.select(array_lit(values, typ).alias("a"))
+        assert got.collect() == want.collect(), values
+        assert got.schema == want.schema, values
+        assert optimized(got) == optimized(want), values
+    with pytest.raises(ValueError):
+        array_lit(["a\x00b"], "string")
+
+
+def test_no_lit_over_python_lists():
+    """A driver-held list becomes an array literal through
+    ``plans.array_lit`` (a constant number of py4j calls), never through
+    ``F.lit(list)`` (one JVM literal per element)."""
+    listy = (ast.List, ast.ListComp, ast.Tuple, ast.Set, ast.SetComp)
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "lit"
+                and node.args
+            ):
+                continue
+            arg = node.args[0]
+            if isinstance(arg, listy) or (
+                isinstance(arg, ast.Call)
+                and isinstance(arg.func, ast.Name)
+                and arg.func.id in ("list", "sorted", "tuple", "set")
             ):
                 offenders.append(f"{path.relative_to(PACKAGE.parent)}:{node.lineno}")
     assert not offenders, offenders

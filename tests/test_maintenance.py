@@ -112,23 +112,21 @@ def test_expunge_literal_larger_idset(spark, corpus):
     assert not gone & {p[0] for ps in pa.values() for p in ps}
 
 
+def _state(idx):
+    """Everything a scorer reads: postings with positions, term_stats,
+    doc_count and avgdl."""
+    post = sorted(
+        (r["term"], r["seg"], r["df_seg"], r["cf_seg"],
+         [(p["doc_id"], p["tf"], p["dl"], list(p["positions"])) for p in r["postings"]])
+        for r in idx.postings.collect()
+    )
+    stats = sorted(tuple(r) for r in idx.term_stats.select("term", "df", "cf").collect())
+    return post, stats, idx.doc_count, idx.avgdl
+
+
 class TestUpsert:
     """upsert_docs = Lucene updateDocument: delete-by-id + add, with a
     delta-driven shard merge (untouched shards pass through unshuffled)."""
-
-    def _full_state(self, idx):
-        post = sorted(
-            (r["term"], int(r["p"]["doc_id"]), int(r["p"]["tf"]),
-             list(r["p"]["positions"]))
-            for r in idx.postings.select(
-                "term", F.explode("postings").alias("p")
-            ).collect()
-        )
-        stats = sorted(
-            (r["term"], int(r["df"]), int(r["cf"]))
-            for r in idx.term_stats.collect()
-        )
-        return post, stats
 
     def test_upsert_equals_fresh_build(self, spark):
         from solrtexttagger_spark.index.build import build_index
@@ -151,9 +149,10 @@ class TestUpsert:
             "doc_id long, text string",
         )
         ref = build_index(updated_corpus, num_segments=4)
-        assert self._full_state(up) == self._full_state(ref)
+        # the literal path, the merge path and a fresh build agree
+        merged = upsert_docs(idx, batch, literal_threshold=1)
+        assert _state(up) == _state(merged) == _state(ref)
         assert up.doc_count == ref.doc_count == 4
-        assert up.avgdl == ref.avgdl
         # old content of doc 1 is really gone
         terms = {r["term"] for r in up.term_stats.collect()}
         assert "merge" not in terms and "sort" not in terms
@@ -171,6 +170,13 @@ class TestUpsert:
         )
         with pytest.raises(ValueError, match="duplicate doc ids"):
             upsert_docs(idx, dup)
+        # on every path; the pair (5, 5) at rows 0 and 5 lies beyond the
+        # literal_threshold + 1 = 3 rows the bounded collect reads
+        rows = [(5, "a"), (6, "b"), (7, "c"), (8, "d"), (9, "e"), (5, "f")]
+        far = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+        for opts in ({}, {"literal_threshold": 2}, {"method": "merge"}, {"method": "literal"}):
+            with pytest.raises(ValueError, match="duplicate doc ids"):
+                upsert_docs(idx, far, **opts)
 
     def test_upsert_merge_is_delta_driven(self, spark):
         """The big index's untouched shards must bypass the re-aggregation:
@@ -193,3 +199,61 @@ class TestUpsert:
         plan = up.postings._jdf.queryExecution().executedPlan().toString()
         assert "LeftAnti" in plan and "LeftSemi" in plan
         assert "Broadcast" in plan
+
+
+# 5 terms over 4 docs, two of them without any term
+TERMLESS = [(0, "hash join"), (1, "merge sort scan"), (2, ""), (3, None)]
+
+
+def test_doc_count_keeps_docs_without_terms(spark):
+    """build_index counts every row, as the oracles' ``count(*)`` does;
+    expunge and upsert keep those rows counted (doc_count is arithmetic,
+    not a recount of the docs that have postings)."""
+    from solrtexttagger_spark.index.maintenance import upsert_docs
+
+    schema = "doc_id long, text string"
+    idx = build_index(spark.createDataFrame(TERMLESS, schema), num_segments=2)
+    assert (idx.doc_count, idx.avgdl) == (4, 1.25)
+    none = expunge_docs(idx, spark.createDataFrame([], "doc_id long"))
+    assert (none.doc_count, none.avgdl) == (4, 1.25)
+    one = expunge_docs(idx, spark.createDataFrame([(1,)], "doc_id long"))
+    assert (one.doc_count, one.avgdl) == (3, 2 / 3)
+    batch = [(1, "stream window")]
+    up = upsert_docs(idx, spark.createDataFrame(batch, schema))
+    fresh = build_index(
+        spark.createDataFrame([TERMLESS[0], *batch, *TERMLESS[2:]], schema), num_segments=2
+    )
+    assert _state(up) == _state(fresh)
+    assert up.doc_count == 4
+    # the one case arithmetic cannot see: a deleted doc that had no
+    # terms leaves no posting to find, so it stays counted
+    assert expunge_docs(idx, spark.createDataFrame([(2,)], "doc_id long")).doc_count == 4
+
+
+def test_upsert_job_budget(spark, tmp_path):
+    """A literal-path upsert plus the caller's persist().count() runs at
+    most 9 Spark jobs: one bounded id collect, the replaced-id count and
+    the materialization; no duplicate-check aggregate, no recount of the
+    batch, no whole-index explode. The batch is one Parquet file, as a
+    small upsert batch is written (Spark's bounded take reads a
+    many-file batch in more than one job)."""
+    from solrtexttagger_spark.index.maintenance import upsert_docs
+    from tests.test_index_bm25 import _build_jobs
+
+    idx = build_index(spark.createDataFrame(DOCS, "doc_id long, text string"), num_segments=4)
+    idx.postings.persist().count()
+    rows = [(i, f"w{i % 7} fresh{i} w3") for i in (3, 17, 40, 100, 101)]
+    path = str(tmp_path / "batch.parquet")
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(path)
+    batch = spark.read.parquet(path)
+
+    def run():
+        new = upsert_docs(idx, batch)
+        new.postings.persist().count()
+        return new
+
+    new, jobs = _build_jobs(spark, run)
+    assert new.doc_count == len(DOCS) + 2
+    new.postings.unpersist()
+    idx.postings.unpersist()
+    assert jobs <= 9

@@ -236,3 +236,30 @@ def test_tag_join_match_text_parity_with_loop(spark, overlaps):
         texts, terms, overlaps=overlaps, match_text=True
     ).collect()))
     assert a == b and a, overlaps
+
+
+def test_tag_join_job_budget(spark):
+    """With a cached dictionary, tag_join runs at most 5 Spark jobs: one
+    collect serves both the first-word set and max_phrase_len, and no
+    eager localCheckpoint copies a relation that is already cached. The
+    uncached dictionary and a given max_phrase_len tag the same."""
+    from tests.test_index_bm25 import _build_jobs
+
+    ndf = names_df(spark, N)
+    texts = spark.createDataFrame(
+        [(0, "City of London Business School in Boston"), (1, "of the London"), (2, "")],
+        "qdoc_id long, text string",
+    ).persist()
+    texts.count()
+    terms = build_dict_terms(ndf).persist()
+    terms.count()
+    try:
+        rows, jobs = _build_jobs(spark, lambda: tag_join(texts, terms).collect())
+        assert jobs <= 5
+        got = {(r["qdoc_id"], r["start"], r["end"], frozenset(r["doc_ids"])) for r in rows}
+        assert got
+        assert collect_tags(tag_join(texts, build_dict_terms(ndf))) == got
+        assert collect_tags(tag_join(texts, terms, max_phrase_len=3)) == got
+    finally:
+        texts.unpersist()
+        terms.unpersist()
