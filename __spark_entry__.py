@@ -2041,7 +2041,7 @@ def _bool_phrase_oracle() -> str:
     range(len) = token ordinals) and the exact two-term Lucene criterion
     |p2 - p1 - 1| <= slop — the same span-over-shifted-positions rule
     the operator's window-anchor expansion implements
-    (search/phrase._fold_phrases)."""
+    (search/boolean.phrase_docs)."""
     from solrtexttagger_spark.search.boolean import parse_boolean_query
 
     score_vals, not_vals, must_vals, req_vals, proh_vals = [], [], [], [], []

@@ -226,16 +226,17 @@ def doc_term_rows(
 
     use_split=True is the pure-JVM fast path for pre-cleaned text (single
     spaces, no punctuation — e.g. the driver's documents table): whole-stage
-    codegen end to end, no Python at all.
+    codegen end to end, no Python at all. The empty strings a doubled,
+    leading or trailing space splits off are dropped before positions and
+    dl are counted, as the tokenizer path never sees them.
     """
     if use_split:
         toks = df.select(
             F.col(doc_id_col).alias("doc_id"),
-            F.split(F.col(text_col), " ").alias("toks"),
+            F.filter(F.split(F.col(text_col), " "), lambda t: t != "").alias("toks"),
         ).select("doc_id", "toks", F.size("toks").cast("int").alias("dl"))
         return (
             toks.select("doc_id", "dl", F.posexplode("toks").alias("pos", "term"))
-            .where(F.col("term") != "")
             .groupBy("doc_id", "term", "dl")
             .agg(
                 F.count("*").cast("int").alias("tf"),

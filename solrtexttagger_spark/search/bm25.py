@@ -97,10 +97,11 @@ def expand_synonyms_graph(
       MULTI-word expansion — "ny" -> "new york" becomes the graph clause
       (ny OR "new york"): the phrase member contributes its
       constituents' BM25 scores ONLY for documents containing the words
-      CONTIGUOUSLY (resolved through the same positional machinery as
-      explicit phrase clauses — search/phrase.multi_phrase_match_scored)
-      and matches such documents even when no bag term does. Weights sum
-      when several source occurrences expand to the same phrase."""
+      CONTIGUOUSLY and matches such documents even when no bag term
+      does. The scorers hand such a query to the boolean seg kernel as
+      ``BooleanPlan(bag, gated=phrase_bags)`` (boolean.bag_plan), whose
+      phrase_docs is the one phrase matcher. Weights sum when several
+      source occurrences expand to the same phrase."""
     out = dict(bag)
     phrases: dict[tuple[str, ...], int] = {}
     for t, qtf in bag.items():
@@ -116,50 +117,6 @@ def expand_synonyms_graph(
             else:
                 phrases[toks] = phrases.get(toks, 0) + qtf
     return out, phrases
-
-
-def synonym_phrase_bonus(
-    index: InvertedIndex,
-    qphrases: dict[int, dict[tuple[str, ...], int]],
-    *,
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
-    """The phrase-gated score relation for multi-word synonym graph
-    semantics: (query_id, doc_id, extra) where ``extra`` > 0 is the sum,
-    over the query's multi-word expansions whose words appear
-    CONTIGUOUSLY in the doc, of the constituents' full BM25
-    contributions at the expansion's clause weight. ONE postings pass
-    for all phrases across all queries (the scored contiguity fold),
-    then a broadcast join against the tiny (query, phrase, weight) map.
-    qphrases: {query_id: {constituent-token tuple: weight}}."""
-    from solrtexttagger_spark.search.phrase import multi_phrase_match_scored
-
-    spark = index.postings.sparkSession
-    phrase_list = sorted({toks for d in qphrases.values() for toks in d})
-    pid_of = {toks: i for i, toks in enumerate(phrase_list)}
-    # NO cache warm here: the synonym-graph batch is pinned action-free
-    # (test_plans.test_bm25_synonym_graph_plan_action_free…); the scored
-    # phrase pass reads df through global_df, which runs no action
-    pm = multi_phrase_match_scored(
-        index, [" ".join(t) for t in phrase_list], k1=k1, b=b
-    )
-    qp_rows = [
-        (int(qid), pid_of[toks], float(w))
-        for qid, d in sorted(qphrases.items())
-        for toks, w in sorted(d.items())
-    ]
-    qpdf = local_frame(spark, qp_rows, "query_id long, phrase_id int, w double")
-    return (
-        pm.join(F.broadcast(qpdf), "phrase_id")
-        .select(
-            "query_id",
-            "doc_id",
-            (F.col("w") * F.col("unit_score")).alias("extra"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("extra").alias("extra"))
-    )
 
 
 def queries_to_df(
@@ -305,7 +262,9 @@ def bm25_topk(
     with GRAPH semantics for multi-word expansions
     (expand_synonyms_graph): constituents of "ny" -> "new york" score
     only in documents containing the contiguous phrase, which also
-    matches documents no bag term reaches.
+    matches documents no bag term reaches. A batch with such an
+    expansion runs as phrase-gated BooleanPlans in the boolean seg
+    kernel (boolean.plan_scores), whatever the strategy.
     """
     if start:
         out = bm25_topk(
@@ -314,51 +273,45 @@ def bm25_topk(
         )
         return out.where(F.col("rank") > start)
     qbags = query_bags(queries)
-    qphrases: dict[int, dict[tuple[str, ...], int]] = {}
     if synonyms:
-        for qid in list(qbags):
-            qbags[qid], ph = expand_synonyms_graph(qbags[qid], synonyms)
-            if ph:
-                qphrases[qid] = ph
-    bonus = (
-        synonym_phrase_bonus(index, qphrases, k1=k1, b=b) if qphrases else None
-    )
+        from solrtexttagger_spark.search.boolean import bag_plan, plan_scores
+
+        plans = {qid: bag_plan(bag, synonyms) for qid, bag in qbags.items()}
+        if any(p.gated for p in plans.values()):
+            # a multi-word expansion gates its constituents on the
+            # contiguous phrase: the batch runs in the boolean seg kernel,
+            # whatever the strategy
+            return rank_window(plan_scores(
+                index, plans, k1=k1, b=b, allowed_docs=allowed_docs, spark=spark
+            ), k)
+        qbags = {qid: p.score_bag for qid, p in plans.items()}
     if strategy == "segmented":
         return _bm25_topk_segmented(
-            index, qbags, k=k, k1=k1, b=b, spark=spark,
-            allowed_docs=allowed_docs, phrase_bonus=bonus,
+            index, qbags, k=k, k1=k1, b=b, spark=spark, allowed_docs=allowed_docs,
         )
     # top-level batch scorer: one tiny collect for unseen terms puts
     # exploded_scores on global_df's hit path; never done inside
     # exploded_scores, which /select's one-job writer embeds
     warm_df_cache(index, bag_terms(qbags))
-    if bonus is None:
-        scores = exploded_scores(index, qbags, k1=k1, b=b, allowed_docs=allowed_docs)
-    else:
-        # merge the phrase-gated bonus BEFORE ranking; full outer because
-        # a doc can match only through the contiguous expansion
-        base = exploded_scores(index, qbags, k1=k1, b=b)
-        scores = base.join(bonus, ["query_id", "doc_id"], "full_outer").select(
-            "query_id",
-            "doc_id",
-            (
-                F.coalesce(F.col("score"), F.lit(0.0))
-                + F.coalesce(F.col("extra"), F.lit(0.0))
-            ).alias("score"),
-        )
-        if allowed_docs is not None:
-            scores = scores.join(
-                allowed_docs.select("doc_id").distinct(), "doc_id", "left_semi"
-            )
+    return rank_window(
+        exploded_scores(index, qbags, k1=k1, b=b, allowed_docs=allowed_docs), k
+    )
+
+
+def rank_window(scores: DataFrame, k: int, start: int = 0) -> DataFrame:
+    """(query_id, rank long, doc_id, score) of the rows ranked
+    start < rank <= start + k per query of a (query_id, doc_id, score)
+    relation: deterministic (score desc, doc_id asc), one schema for
+    every scorer."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
+    keep = F.col("rank") <= start + k
+    if start:
+        keep = keep & (F.col("rank") > start)
     return (
-        # rank cast to long so both strategies ('exploded' here, 'segmented'
-        # at _bm25_topk_segmented) share one output schema — toggling the
-        # default must not break schema-sensitive consumers (unions, appends)
         scores.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(keep)
         .select("query_id", "rank", "doc_id", "score")
     )
 
@@ -456,7 +409,6 @@ def _bm25_topk_segmented(
     b: float = B,
     spark: SparkSession | None = None,
     allowed_docs: DataFrame | None = None,
-    phrase_bonus: DataFrame | None = None,
 ) -> DataFrame:
     """Exhaustive BM25, segment-aligned (block-max WAND minus the pruning):
     one shuffle of the query-term-filtered postings on seg, vectorized numpy
@@ -471,18 +423,10 @@ def _bm25_topk_segmented(
     kernel through a cogroup — no driver collect, no broadcast of a
     potentially corpus-sized filter. Membership is applied between score
     accumulation and the per-segment top-k, so ranks are exact within the
-    allowed set while idf/avgdl stay corpus-wide (Solr semantics).
-
-    ``phrase_bonus`` ((query_id, doc_id, extra) — synonym_phrase_bonus)
-    rides the SAME cogroup as the fq ids, co-partitioned on the index's
-    own seg hash, and is added to each doc's accumulated score BEFORE the
-    fq mask and the per-segment top-k — so multi-word synonym graph
-    scoring keeps per-segment truncation exact (a doc whose bonus lifts
-    it into the top-k is never dropped), the whole batch staying ONE
-    action."""
+    allowed set while idf/avgdl stay corpus-wide (Solr semantics)."""
     spark = spark or index.postings.sparkSession
     terms = bag_terms(qbags)
-    if not terms and phrase_bonus is None:
+    if not terms:
         return local_frame(
             spark, [], "query_id long, rank long, doc_id long, score double"
         )
@@ -497,19 +441,14 @@ def _bm25_topk_segmented(
         qid: [(t, float(qtf)) for t, qtf in sorted(bag.items())]
         for qid, bag in qbags.items()
     }
-    has_fq = allowed_docs is not None
     bc = spark.sparkContext.broadcast((
-        qterm_list, dfs if isinstance(dfs, dict) else None,
-        k, k1, b, avgdl, n, has_fq,
+        qterm_list, dfs if isinstance(dfs, dict) else None, k, k1, b, avgdl, n,
     ))
 
     def _score_pdf(
-        pdf: pd.DataFrame,
-        allowed: "np.ndarray | None",
-        bonus_by_q: "dict | None" = None,
+        pdf: pd.DataFrame, allowed: "np.ndarray | None"
     ) -> pd.DataFrame:
-        qterms_, df_of, k_, k1_, b_, avgdl_, n_, _hf = bc.value
-        bonus_by_q = bonus_by_q or {}
+        qterms_, df_of, k_, k1_, b_, avgdl_, n_ = bc.value
         if df_of is None:
             df_of = dict(zip(pdf["term"], pdf["df"]))
         term_arrays: dict[str, tuple] = {}
@@ -522,9 +461,9 @@ def _bm25_topk_segmented(
             idf = math.log(1.0 + (n_ - df_t + 0.5) / (df_t + 0.5))
             term_arrays[term] = (docs, tf, dl, idf)
         out_q, out_d, out_s = [], [], []
-        for qid in sorted(set(qterms_) | set(bonus_by_q)):
+        for qid in sorted(qterms_):
             all_docs, all_contrib = [], []
-            for t, qtf in qterms_.get(qid, ()):
+            for t, qtf in qterms_[qid]:
                 e = term_arrays.get(t)
                 if e is None:
                     continue
@@ -535,13 +474,6 @@ def _bm25_topk_segmented(
                 )
                 all_docs.append(docs)
                 all_contrib.append(contrib)
-            # phrase-gated synonym bonus for this query's docs in this
-            # segment: merged into the accumulation BEFORE fq/top-k —
-            # includes docs no bag term matched (graph semantics)
-            bo = bonus_by_q.get(qid)
-            if bo is not None:
-                all_docs.append(bo[0])
-                all_contrib.append(bo[1])
             if not all_docs:
                 continue
             docs = np.concatenate(all_docs)
@@ -573,27 +505,12 @@ def _bm25_topk_segmented(
     def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
         return _score_pdf(pdf, None)
 
-    def fn_mixed(key, pdf: pd.DataFrame, apdf: pd.DataFrame) -> pd.DataFrame:
-        # right side carries fq rows (is_fq) and/or bonus rows, split here
-        *_rest, _hf = bc.value
-        fq_rows = apdf[apdf["is_fq"]]
-        allowed = (
-            np.sort(fq_rows["doc_id"].to_numpy(dtype=np.int64)) if _hf else None
-        )
-        brows = apdf[~apdf["is_fq"]]
-        bonus_by_q: dict = {}
-        if len(brows):
-            for qid, grp in brows.groupby("query_id"):
-                bonus_by_q[int(qid)] = (
-                    grp["doc_id"].to_numpy(dtype=np.int64),
-                    grp["extra"].to_numpy(dtype=np.float64),
-                )
-        return _score_pdf(pdf, allowed, bonus_by_q)
+    def fn_fq(key, pdf: pd.DataFrame, apdf: pd.DataFrame) -> pd.DataFrame:
+        return _score_pdf(pdf, np.sort(apdf["doc_id"].to_numpy(dtype=np.int64)))
 
     # positions are projected AWAY before the shuffle — BM25 never reads
     # them, and they dominate the postings payload
-    term_filter = term_in(F.col("term"), terms) if terms else F.lit(False)
-    narrowed = index.postings.where(term_filter).select(
+    narrowed = index.postings.where(term_in(F.col("term"), terms)).select(
         "seg",
         "term",
         F.transform(
@@ -605,51 +522,21 @@ def _bm25_topk_segmented(
     )
     if not isinstance(dfs, dict):
         narrowed = narrowed.join(F.broadcast(dfs), "term")
-    if allowed_docs is None and phrase_bonus is None:
+    if allowed_docs is None:
         scored = narrowed.groupBy("seg").applyInPandas(fn, schema=_SCORE_SCHEMA)
     else:
-        # the cogroup right side unions the fq ids and the phrase bonus,
-        # both co-partitioned on the index's own seg hash
+        # the fq ids, co-partitioned on the index's own seg hash; no
+        # distinct: the kernel's sorted-array membership is unaffected by
+        # repeats, and the cogroup shuffles them anyway
         seg_of = F.pmod(F.xxhash64("doc_id"), F.lit(index.num_segments)).cast(
             "int"
         )
-        # no distinct on the fq ids: the kernel's sorted-array membership
-        # is unaffected by repeats, and the cogroup shuffles them anyway
-        parts = []
-        if allowed_docs is not None:
-            parts.append(
-                allowed_docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-                .select(
-                    seg_of.alias("seg"),
-                    "doc_id",
-                    F.lit(-1).cast("long").alias("query_id"),
-                    F.lit(0.0).alias("extra"),
-                    F.lit(True).alias("is_fq"),
-                )
-            )
-        if phrase_bonus is not None:
-            parts.append(
-                phrase_bonus.select(
-                    seg_of.alias("seg"),
-                    "doc_id",
-                    F.col("query_id").cast("long").alias("query_id"),
-                    F.col("extra").cast("double").alias("extra"),
-                    F.lit(False).alias("is_fq"),
-                )
-            )
-        right = parts[0]
-        for p in parts[1:]:
-            right = right.unionAll(p)
+        fq = allowed_docs.select(F.col("doc_id").cast("long").alias("doc_id")).select(
+            seg_of.alias("seg"), "doc_id"
+        )
         scored = (
             narrowed.groupBy("seg")
-            .cogroup(right.groupBy("seg"))
-            .applyInPandas(fn_mixed, schema=_SCORE_SCHEMA)
+            .cogroup(fq.groupBy("seg"))
+            .applyInPandas(fn_fq, schema=_SCORE_SCHEMA)
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"), "doc_id", "score")
-    )
+    return rank_window(scored, k)

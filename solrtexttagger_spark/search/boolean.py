@@ -81,15 +81,23 @@ any scored term, plus docs reached only through a phrase-gated synonym),
 then keeps those that satisfy every MUST group, hold no MUST_NOT term,
 hold every MUST phrase and no MUST_NOT phrase. Both engines call it:
 
-- LocalSearcher.search_boolean (search/wand.py) over its warmed arrays;
-- boolean_matched_scores, once per index SEGMENT: the postings of the
-  query vocabulary (scored, prohibited and phrase terms; positions only
-  for phrase terms) are scanned once, grouped by ``seg`` and handed to a
-  groupBy("seg").applyInPandas kernel with the plans and df in a
-  broadcast. A document's postings all live in its segment
-  (seg = pmod(xxhash64(doc_id), S), index/build.py), so each segment's
-  call sees whole documents and emits its exact part of the match set
-  — the shape of bm25._bm25_topk_segmented, with no per-clause joins.
+- LocalSearcher.search / search_boolean (search/wand.py) over its
+  warmed arrays;
+- plan_scores, once per index SEGMENT: the postings (or compressed
+  blocks) of the plans' vocabulary (scored, prohibited and phrase
+  terms; positions only for phrase terms) are scanned once, grouped by
+  ``seg`` and handed to a groupBy("seg").applyInPandas kernel with the
+  plans and df in a broadcast. A document's postings all live in its
+  segment (seg = pmod(xxhash64(doc_id), S), index/build.py), so each
+  segment's call sees whole documents and emits its exact part of the
+  match set — the shape of bm25._bm25_topk_segmented, with no
+  per-clause joins. boolean_matched_scores feeds it parsed queries;
+  bm25_topk / wand_topk feed it bags whose multi-word synonyms gate
+  their constituents.
+
+phrase_docs is the one phrase matcher: evaluate_boolean calls it, and
+phrase_relation runs it per segment for phrase_match and
+{!complexphrase}.
 """
 
 from __future__ import annotations
@@ -101,20 +109,27 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.index.compression import (
+    decode_positions_block,
+    decode_postings_block,
+)
 from solrtexttagger_spark.plans import local_frame, term_in
 from solrtexttagger_spark.search.bm25 import (
     _SCORE_SCHEMA,
     B,
     K1,
+    expand_synonyms_graph,
     global_df,
+    rank_window,
     warm_df_cache,
 )
 from solrtexttagger_spark.search.phrase import (
     MAX_SLOP as _MAX_SLOP,
+    phrase_slops,
     phrase_terms,
 )
 
@@ -181,7 +196,7 @@ def parse_boolean_query(q: str, lowercase: bool = True, field: str | None = None
                 continue
             # parse-time slop guard (round-9): a serving front end wants
             # the 400-equivalent HERE, not after shipping a doomed plan
-            # to the executors. phrase._slop_map re-checks at execution
+            # to the executors. phrase_docs re-checks at execution
             # (callers can construct phrase lists without this parser).
             parsed_slop = int(slop or 0)
             if parsed_slop > _MAX_SLOP:
@@ -669,17 +684,24 @@ def positions_csr(doc_ids, counts, flat):
     return doc_ids, starts, flat
 
 
-def phrase_docs(positions: dict, toks: tuple, slop: int = 0) -> np.ndarray:
-    """Sorted doc ids holding the token sequence within ``slop``.
-    ``positions``: {term: positions_csr(...)}. Each term's positions
-    shift by its offset in the phrase and, under slop, expand to the
-    window anchors {p - slop .. p}; a doc matches iff one anchor is
-    common to every term, i.e. a window of width <= slop covers one
+def phrase_docs(
+    positions: dict, toks: tuple, slop: int = 0
+) -> tuple[np.ndarray, np.ndarray]:
+    """(sorted doc ids holding the token sequence within ``slop``, their
+    occurrence counts). ``positions``: {key: positions_csr(...)}, one
+    entry per distinct key of ``toks`` — a term, or a phrase slot whose
+    member terms' positions were merged (phrase_relation). Each key's
+    positions shift by its offset in the phrase and, under slop, expand
+    to the window anchors {p - slop .. p}; a doc matches iff one anchor
+    is common to every key, i.e. a window of width <= slop covers one
     position of each (Lucene SloppyPhraseMatcher's end - start
     criterion: exact for two-term phrases, a superset of its greedy
-    matcher for longer ones). A term repeated m times in a sloppy phrase
-    needs >= m distinct positions in the doc (Lucene's repeats-handling
-    necessary condition; the exact intersection already implies it).
+    matcher for longer ones). The occurrence count is the number of
+    such anchors (the exact phrase's occurrences at slop 0). A key
+    repeated m times in a sloppy phrase needs >= m distinct positions in
+    the doc (Lucene's repeats-handling necessary condition; the exact
+    intersection already implies it; the distinct positions are not
+    forced into one window, so '"a a"~2' still matches "a x x x a").
     Slop outside [0, MAX_SLOP] raises: each position expands to slop + 1
     anchors."""
     if slop < 0 or slop > _MAX_SLOP:
@@ -691,12 +713,12 @@ def phrase_docs(positions: dict, toks: tuple, slop: int = 0) -> np.ndarray:
     for t in toks:
         entry = positions.get(t)
         if entry is None or not len(entry[0]):
-            return _NO_DOCS
+            return _NO_DOCS, _NO_DOCS
         cand = entry[0] if cand is None else np.intersect1d(
             cand, entry[0], assume_unique=True
         )
         if not len(cand):
-            return _NO_DOCS
+            return _NO_DOCS, _NO_DOCS
     if slop:
         for t, m in Counter(toks).items():
             if m > 1:
@@ -718,8 +740,25 @@ def phrase_docs(positions: dict, toks: tuple, slop: int = 0) -> np.ndarray:
         k = np.unique((owner << 32) | anchor)
         keys = k if keys is None else np.intersect1d(keys, k, assume_unique=True)
         if not len(keys):
-            return _NO_DOCS
-    return cand[np.unique(keys >> 32)]
+            return _NO_DOCS, _NO_DOCS
+    owners, n_occ = np.unique(keys >> 32, return_counts=True)
+    return cand[owners], n_occ
+
+
+def _merge_csr(entries: list) -> tuple | None:
+    """One positions_csr of several terms' (a phrase slot's members):
+    a doc held by two members is one row with the union of their
+    positions. None when no member has postings."""
+    if len(entries) < 2:
+        return entries[0] if entries else None
+    docs = np.concatenate([np.repeat(d, np.diff(s)) for d, s, _f in entries])
+    pos = np.concatenate([f for _d, _s, f in entries])
+    order = np.lexsort((pos, docs))
+    docs, pos = docs[order], pos[order]
+    new = np.ones(len(docs), dtype=bool)
+    new[1:] = (docs[1:] != docs[:-1]) | (pos[1:] != pos[:-1])
+    uniq, counts = np.unique(docs[new], return_counts=True)
+    return positions_csr(uniq, counts, pos[new])
 
 
 def bm25_parts(tf, dl, k1: float, b: float, avgdl: float):
@@ -768,7 +807,7 @@ def evaluate_boolean(
     # SHOULD alike): constituents score only where the words are
     # contiguous, which also seeds phrase-only docs into the candidates
     for toks, w in sorted(plan.gated.items()):
-        hits = phrase_docs(positions, toks)
+        hits = phrase_docs(positions, toks)[0]
         if not len(hits):
             continue
         for term, cnt in sorted(Counter(toks).items()):
@@ -800,7 +839,7 @@ def evaluate_boolean(
             (postings[t][0], gids)
             for t, gids in plan.must_groups.items() if t in postings
         ] + [
-            (phrase_docs(positions, toks), gids)
+            (phrase_docs(positions, toks)[0], gids)
             for toks, gids in plan.phrase_groups.items()
         ]
         for docs, gids in members:
@@ -812,71 +851,114 @@ def evaluate_boolean(
         if term in postings:
             keep &= ~_present(uniq, postings[term][0])
     for toks, slop in plan.must_phrases:
-        keep &= _present(uniq, phrase_docs(positions, toks, slop))
+        keep &= _present(uniq, phrase_docs(positions, toks, slop)[0])
     for toks, slop in plan.not_phrases:
-        keep &= ~_present(uniq, phrase_docs(positions, toks, slop))
+        keep &= ~_present(uniq, phrase_docs(positions, toks, slop)[0])
     return uniq[keep], scores[keep]
 
 
+def _term_arrays(parts: dict, k1: float, b: float, avgdl: float):
+    """{term: [(doc ids, tf, dl, (counts, flat positions) | None), ...]}
+    — one entry per shard or block of the term, in any order ->
+    ({term: (doc ids sorted, *bm25_parts)}, {term: positions_csr}), the
+    latter for the terms whose positions were given."""
+    postings, positions = {}, {}
+    for term, rows in parts.items():
+        docs = np.concatenate([np.asarray(r[0], dtype=np.int64) for r in rows])
+        order = np.argsort(docs, kind="stable")
+        postings[term] = (docs[order], *bm25_parts(
+            np.concatenate([r[1] for r in rows])[order],
+            np.concatenate([r[2] for r in rows])[order],
+            k1, b, avgdl,
+        ))
+        if rows[0][3] is not None:
+            positions[term] = positions_csr(
+                docs,
+                np.concatenate([np.asarray(r[3][0], dtype=np.int64) for r in rows]),
+                np.concatenate([np.asarray(r[3][1], dtype=np.int64) for r in rows]),
+            )
+    return postings, positions
+
+
+def block_arrays(rows, k1: float, b: float, avgdl: float):
+    """Compressed blocks decoded into evaluate_boolean's shape: ``rows``
+    of (term, postings block, positions block | None), a term's blocks
+    in any order -> ({term: (doc ids sorted, *bm25_parts)},
+    {term: positions_csr} for the terms given positions blocks). The one
+    blocks decoder of the seg kernel and LocalSearcher's warm-up."""
+    parts: dict[str, list] = {}
+    for term, blk, pos_blk in rows:
+        doc_ids, tf, dl = decode_postings_block(bytes(blk))
+        pos = None if pos_blk is None else decode_positions_block(bytes(pos_blk))
+        parts.setdefault(term, []).append((doc_ids, tf, dl, pos))
+    return _term_arrays(parts, k1, b, avgdl)
+
+
 def _segment_arrays(pdf: pd.DataFrame, k1: float, b: float, avgdl: float):
-    """One segment's kernel input -> ({term: (doc ids, *bm25_parts)},
-    {term: positions_csr}) in evaluate_boolean's shape."""
+    """One segment's kernel input (_seg_rows over postings or blocks) ->
+    ({term: (doc ids, *bm25_parts)}, {term: positions_csr})."""
+    if "block" in pdf.columns:
+        pos = pdf.get("pos_block", [None] * len(pdf))
+        return block_arrays(zip(pdf["term"], pdf["block"], pos), k1, b, avgdl)
     parts: dict[str, list] = {}
     has_pos = "pos" in pdf.columns
     cols = [pdf["term"], pdf["doc_id"], pdf["tf"], pdf["dl"]]
     if has_pos:
         cols += [pdf["npos"], pdf["pos"]]
-    for row in zip(*cols):
-        parts.setdefault(row[0], []).append(row[1:])
-    postings, positions = {}, {}
-    for term, rows in parts.items():
-        docs = np.concatenate([np.asarray(r[0], dtype=np.int64) for r in rows])
-        tf = np.concatenate([np.asarray(r[1], dtype=np.float64) for r in rows])
-        dl = np.concatenate([np.asarray(r[2], dtype=np.float64) for r in rows])
-        order = np.argsort(docs, kind="stable")
-        postings[term] = (
-            docs[order], *bm25_parts(tf[order], dl[order], k1, b, avgdl)
-        )
-        if has_pos and rows[0][3] is not None:
-            positions[term] = positions_csr(
-                docs,
-                np.concatenate([np.asarray(r[3], dtype=np.int64) for r in rows]),
-                np.concatenate([np.asarray(r[4], dtype=np.int64) for r in rows]),
-            )
-    return postings, positions
+    for term, docs, tf, dl, *pos in zip(*cols):
+        parts.setdefault(term, []).append((
+            docs, np.asarray(tf, dtype=np.float64), np.asarray(dl, dtype=np.float64),
+            tuple(pos) if pos and pos[0] is not None else None,
+        ))
+    return _term_arrays(parts, k1, b, avgdl)
 
 
-def boolean_matched_scores(
-    index: InvertedIndex,
+def _seg_rows(index, vocab: list, pos_terms: list) -> DataFrame:
+    """The kernel's input: the rows of ``vocab`` (term pushed into the
+    scan), with their seg and, for ``pos_terms`` only, positions. Over
+    an InvertedIndex: (seg, term, doc_id, tf, dl[, npos, pos]) arrays
+    per shard; over a CompressedIndex: (seg, term, block[, pos_block])
+    per block, which needs compress_index(with_positions=True) once a
+    phrase is read."""
+    is_pos = term_in(F.col("term"), pos_terms) if pos_terms else None
+    if hasattr(index, "blocks"):
+        cols = ["seg", "term", "block"]
+        if pos_terms:
+            if "pos_block" not in index.blocks.columns:
+                raise NotImplementedError(
+                    "phrases (quoted clauses, multi-word synonym "
+                    "expansions) need positional blocks — build with "
+                    "compress_index(with_positions=True), or score the "
+                    "uncompressed index"
+                )
+            cols.append(F.when(is_pos, F.col("pos_block")).alias("pos_block"))
+        return index.blocks.where(term_in(F.col("term"), vocab)).select(*cols)
+    post = F.col("postings")
+    cols = [
+        "seg", "term",
+        post["doc_id"].alias("doc_id"), post["tf"].alias("tf"),
+        post["dl"].alias("dl"),
+    ]
+    if pos_terms:
+        cols += [
+            F.when(is_pos, F.transform(post, lambda x: F.size(x["positions"])))
+            .alias("npos"),
+            F.when(is_pos, F.flatten(post["positions"])).alias("pos"),
+        ]
+    return index.postings.where(term_in(F.col("term"), vocab)).select(*cols)
+
+
+def boolean_plans(
+    index,
     queries: list[tuple[int, str]],
     *,
-    k1: float = K1,
-    b: float = B,
     field: str | None = None,
-    allowed_docs: DataFrame | None = None,
     synonyms: dict[str, list[str]] | None = None,
     fuzzy_decay: bool = False,
-    spark: SparkSession | None = None,
-    warm_df: bool = False,
-) -> DataFrame:
-    """The FULL boolean match set with BM25 scores, BEFORE any rank
-    window: (query_id, doc_id, score) for every doc satisfying the
-    query's clauses — the shared core of boolean_bm25_topk (which adds
-    the per-query top-k), solr_select, facet.query / json.facet query
-    facets and /stream (which need the whole match set, never a page).
-
-    Driver side: the parse, the marker rewrite (expand_vocab_markers,
-    one job when the batch has markers), expand_boolean_clauses into one
-    BooleanPlan per query and, with ``warm_df`` (top-level entries), the
-    df cache warm — one tiny collect for unseen terms. Building the
-    relation otherwise runs no Spark action. Executor side: ONE scan of
-    the postings of every query's vocabulary (positions projected only
-    for phrase terms), grouped by ``seg`` into evaluate_boolean per
-    segment for ALL queries; global df rides the broadcast on a
-    global_df hit, a broadcast join on a miss. ``allowed_docs`` (Solr
-    fq) meets the kernel co-partitioned by seg through a cogroup,
-    applied to the match set (scores stay corpus-true)."""
-    spark = spark or index.postings.sparkSession
+) -> dict[int, BooleanPlan]:
+    """The driver half of boolean_matched_scores: {query_id: BooleanPlan}
+    from the parse, the marker rewrite (expand_vocab_markers, one job
+    when the batch has markers) and expand_boolean_clauses."""
     parsed = [
         (int(qid), parse_boolean_query(q, field=field)) for qid, q in queries
     ]
@@ -894,21 +976,54 @@ def boolean_matched_scores(
         synonyms = {**(synonyms or {}), **expanded}
         if fuzzy_decay:
             member_weights = fuzzy_member_weights(expanded)
-    plans = {}
-    for qid, p in parsed:
-        plan = boolean_plan(p, synonyms, member_weights)
-        if plan.score_bag or plan.gated:  # else no doc can be a candidate
-            plans[qid] = plan
+    return {qid: boolean_plan(p, synonyms, member_weights) for qid, p in parsed}
+
+
+def bag_plan(bag: dict, synonyms: dict[str, list[str]] | None) -> BooleanPlan:
+    """BooleanPlan of a bag-of-words query under query-time synonyms
+    (bm25.expand_synonyms_graph): single-word expansions join the bag,
+    multi-word ones become gated phrases."""
+    bag, phrases = expand_synonyms_graph(bag, synonyms or {})
+    return BooleanPlan(bag, gated=phrases)
+
+
+def plan_scores(
+    index,
+    plans: dict[int, BooleanPlan],
+    *,
+    k1: float = K1,
+    b: float = B,
+    allowed_docs: DataFrame | None = None,
+    spark: SparkSession | None = None,
+    warm_df: bool = False,
+) -> DataFrame:
+    """The executor half of boolean_matched_scores: (query_id, doc_id,
+    score) for the full match set of every plan, over an InvertedIndex's
+    postings or a CompressedIndex's blocks (positional blocks once a
+    plan reads a phrase). ONE scan of every plan's vocabulary (positions
+    only for phrase terms), grouped by ``seg`` into evaluate_boolean per
+    segment for ALL plans; global df rides the broadcast on a global_df
+    hit, a broadcast join on a miss. ``warm_df`` (top-level entries)
+    first fills the df cache — one tiny collect for unseen terms;
+    building the relation otherwise runs no Spark action.
+    ``allowed_docs`` (Solr fq) meets the kernel co-partitioned by seg
+    through a cogroup, applied to the match set (scores stay
+    corpus-true)."""
+    rows = index.blocks if hasattr(index, "blocks") else index.postings
+    spark = spark or rows.sparkSession
+    # a plan with neither scored terms nor gated phrases has no candidate
+    plans = {qid: p for qid, p in plans.items() if p.score_bag or p.gated}
     vocab = sorted(set().union(*(p.terms() for p in plans.values())))
     if not vocab:
         return local_frame(spark, [], _SCORE_SCHEMA)
     pos_terms = sorted({t for p in plans.values() for ph in p.phrases() for t in ph})
+    narrowed = _seg_rows(index, vocab, pos_terms)
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0
     # global df from bm25.global_df, the one lookup (no action). Only
     # top-level entries (``warm_df=True``: boolean_bm25_topk and
     # solr_select's scored routes) fill its cache first, since a boolean
-    # query's vocabulary is known only after the parse above. Embedded
+    # query's vocabulary is known only after the parse. Embedded
     # callers (the /select writers' facet.query block, the router,
     # /stream) stay action-free and keep their job budgets.
     if warm_df:
@@ -945,20 +1060,6 @@ def boolean_matched_scores(
             ),
         })
 
-    post = F.col("postings")
-    cols = [
-        "seg", "term",
-        post["doc_id"].alias("doc_id"), post["tf"].alias("tf"),
-        post["dl"].alias("dl"),
-    ]
-    if pos_terms:
-        is_pos = term_in(F.col("term"), pos_terms)
-        cols += [
-            F.when(is_pos, F.transform(post, lambda x: F.size(x["positions"])))
-            .alias("npos"),
-            F.when(is_pos, F.flatten(post["positions"])).alias("pos"),
-        ]
-    narrowed = index.postings.where(term_in(F.col("term"), vocab)).select(*cols)
     if not isinstance(dfs, dict):
         narrowed = narrowed.join(F.broadcast(dfs), "term")
     if allowed_docs is None:
@@ -980,6 +1081,92 @@ def boolean_matched_scores(
             ),
             schema=_SCORE_SCHEMA,
         )
+    )
+
+
+def boolean_matched_scores(
+    index: InvertedIndex,
+    queries: list[tuple[int, str]],
+    *,
+    k1: float = K1,
+    b: float = B,
+    field: str | None = None,
+    allowed_docs: DataFrame | None = None,
+    synonyms: dict[str, list[str]] | None = None,
+    fuzzy_decay: bool = False,
+    spark: SparkSession | None = None,
+    warm_df: bool = False,
+) -> DataFrame:
+    """The FULL boolean match set with BM25 scores, BEFORE any rank
+    window: (query_id, doc_id, score) for every doc satisfying the
+    query's clauses — the shared core of boolean_bm25_topk (which adds
+    the per-query top-k), solr_select, facet.query / json.facet query
+    facets and /stream (which need the whole match set, never a page).
+    boolean_plans on the driver, then plan_scores (see both)."""
+    plans = boolean_plans(
+        index, queries, field=field, synonyms=synonyms, fuzzy_decay=fuzzy_decay
+    )
+    return plan_scores(
+        index, plans, k1=k1, b=b, allowed_docs=allowed_docs, spark=spark,
+        warm_df=warm_df,
+    )
+
+
+_PHRASE_SCHEMA = "phrase_id int, doc_id long, n_occurrences int"
+
+
+def phrase_relation(
+    index, phrases: list[tuple], slops: list[int] | None = None
+) -> DataFrame:
+    """(phrase_id, doc_id, n_occurrences) for MANY phrases in one scan:
+    phrase_docs per segment, phrase_id = position in ``phrases``. A
+    phrase is a tuple of slots; a slot is a term, or a tuple of member
+    terms (a {!complexphrase} rewrite or alternative group) whose
+    positions merge per doc into one positions_csr — Lucene's SpanOr.
+    Term slots are keyed by term, so a term repeated in a sloppy phrase
+    takes the repeats check; member slots are keyed by their index, so
+    they do not. ``slops`` (default all 0) as in phrase.phrase_slops.
+    An empty member slot matches nothing. Building the relation runs no
+    Spark action."""
+    slops = phrase_slops(phrases, slops)
+    rows = index.blocks if hasattr(index, "blocks") else index.postings
+    vocab = sorted({
+        m for slots in phrases for slot in slots
+        for m in ((slot,) if isinstance(slot, str) else slot)
+    })
+    if not vocab:
+        return local_frame(rows.sparkSession, [], _PHRASE_SCHEMA)
+    bc = rows.sparkSession.sparkContext.broadcast((phrases, slops))
+
+    def kernel(_key, pdf):
+        phrases_, slops_ = bc.value
+        _post, term_pos = _segment_arrays(pdf, K1, B, 1.0)
+        out_p, out_d, out_n = [], [], []
+        for pid, (slots, slop) in enumerate(zip(phrases_, slops_)):
+            keys, positions = [], {}
+            for i, slot in enumerate(slots):
+                key = slot if isinstance(slot, str) else i
+                members = (slot,) if isinstance(slot, str) else slot
+                merged = _merge_csr([term_pos[m] for m in members if m in term_pos])
+                if merged is not None:
+                    positions[key] = merged
+                keys.append(key)
+            docs, n_occ = phrase_docs(positions, tuple(keys), slop)
+            out_p.extend([pid] * len(docs))
+            out_d.append(docs)
+            out_n.append(n_occ)
+        return pd.DataFrame({
+            "phrase_id": pd.Series(out_p, dtype="int32"),
+            "doc_id": pd.Series(
+                np.concatenate(out_d) if out_d else _NO_DOCS, dtype="int64"
+            ),
+            "n_occurrences": pd.Series(
+                np.concatenate(out_n) if out_n else _NO_DOCS, dtype="int32"
+            ),
+        })
+
+    return _seg_rows(index, vocab, vocab).groupBy("seg").applyInPandas(
+        kernel, schema=_PHRASE_SCHEMA
     )
 
 
@@ -1023,11 +1210,4 @@ def boolean_bm25_topk(
         warm_df=True,  # top-level batch scorer: one tiny collect for
         # unseen terms buys the windowless df path for the whole batch
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        matched.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return rank_window(matched, k)

@@ -8,31 +8,32 @@ the vocabulary, and the phrase matches where SOME member of every slot
 occurs at consecutive positions (Lucene builds a SpanNearQuery of
 SpanOr clauses; ``inOrder=true`` by default, slop via ``~n``).
 
-Spark-first shape — the slot-set generalization of
-phrase.multi_phrase_match, same one-scan one-shuffle discipline:
+Shape — a slot-set phrase on the one phrase matcher
+(boolean.phrase_relation, boolean.phrase_docs per segment):
 
 1. every marker slot rewrites against the vocabulary with the SAME
    JVM-side machinery the boolean clause family uses
    (boolean.marker_candidates / expand_vocab_markers: fuzzy keeps
    FuzzyQuery's maxExpansions=50 TopTerms cap, prefix/wildcard/range
    are all-matches with the maxBooleanClauses=1024 overflow RAISE);
-2. ONE postings scan: the (phrase, slot, member-term) relation
-   broadcasts into the postings join — a slot with k members costs k
-   term lookups, never a corpus pass;
-3. members of the same slot MERGE per doc (union of their shifted
-   position arrays — Lucene's SpanOr) BEFORE the shared contiguity
-   fold (phrase._fold_phrases), so the fold itself is unchanged:
-   an anchor survives iff every slot has some member at its offset.
+2. ONE scan of the postings of every slot's members (the term list is
+   pushed into the scan), grouped by segment — a slot with k members
+   costs k term lookups, never a corpus pass;
+3. in each segment the members of a slot MERGE per doc into one
+   positions list (Lucene's SpanOr) before phrase_docs: an anchor
+   survives iff every slot has some member at its offset.
 
-Output matches multi_phrase_match: (phrase_id, doc_id, n_occurrences)
-with n_occurrences = distinct anchors (distinct qualifying window
-anchors under slop — same counting model as the exact-phrase path).
+Output: (phrase_id, doc_id, n_occurrences) with n_occurrences = distinct
+anchors (distinct qualifying window anchors under slop), as
+phrase_match counts them. A literal slot is keyed by its term, so a
+literal repeated in a sloppy phrase takes the same repeats check as the
+boolean '+"a a"~1' clause.
 
-Documented deviations, both inherited from the sibling paths:
-- slop uses the window (end-start) criterion of multi_phrase_match,
-  not Lucene's greedy move-counting (superset for 3+ slots);
-- a REPEATED marker slot under slop > 0 skips the distinct-positions
-  repeats check (phrase._dup_min_occ applies to literal repeats only) —
+Documented deviations, both inherited from phrase_docs:
+- slop uses the window (end-start) criterion, not Lucene's greedy
+  move-counting (superset for 3+ slots);
+- a marker or group slot is keyed by its index, so a REPEATED marker
+  slot under slop > 0 skips the distinct-positions repeats check —
   ComplexPhraseQuery itself documents rough edges around repeats.
 
 Parity anchor: ComplexPhraseQParserPlugin is exercised in the
@@ -42,16 +43,16 @@ Lucene javadoc for ComplexPhraseQueryParser.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.boolean import (
     MAX_PREFIX_EXPANSIONS,
     expand_vocab_markers,
     parse_marker,
+    phrase_relation,
 )
-from solrtexttagger_spark.search.phrase import _fold_phrases, _slop_map
+from solrtexttagger_spark.search.phrase import phrase_slops
 
 
 _RANGE_TOK = __import__("re").compile(r"^([\[{])(\S+) TO (\S+)([\]}])$")
@@ -134,13 +135,11 @@ def complex_phrase_match(
     ``phrases``. See the module docstring for semantics; slots whose
     vocabulary rewrite is EMPTY make the phrase match nothing (an empty
     SpanOr — exactly Lucene's behavior)."""
-    spark = index.postings.sparkSession
-    slop_by_pid = _slop_map(phrases, slops)
-
-    # resolve every marker across all phrases in ONE vocabulary job
+    slops = phrase_slops(phrases, slops)
     parsed = [
         parse_complex_phrase(p, lowercase=lowercase) for p in phrases
     ]
+    # resolve every marker across all phrases in ONE vocabulary job;
     # markers hide in BOTH slot shapes: a bare marker token AND inside
     # (a b*) alternative groups (Lucene rewrites group members too)
     markers = sorted({
@@ -156,64 +155,20 @@ def complex_phrase_match(
         max_prefix_expansions=max_prefix_expansions,
     ) if markers else {}
 
-    rows, plens, dead = [], {}, set()
-    for pid, slots in enumerate(parsed):
-        plens[pid] = len(slots)
-        for idx_, slot in enumerate(slots):
-            if isinstance(slot, list):
-                # group members expand individually (SpanOr of
-                # rewrites); a marker alt with an empty rewrite just
-                # drops out — the group dies only when NOTHING is left
-                members = []
-                for alt in slot:
-                    if parse_marker(alt) is not None:
-                        members.extend(expansions.get(alt, []))
-                    else:
-                        members.append(alt)
-                if not members:
-                    dead.add(pid)
-            elif parse_marker(slot) is not None:
-                members = expansions.get(slot, [])
-                if not members:
-                    dead.add(pid)  # empty rewrite: phrase matches nothing
-            else:
-                members = [slot]
-            for m in members:
-                rows.append((pid, idx_, m))
-    rows = [r for r in rows if r[0] not in dead]
-    if not rows:
-        return local_frame(
-            spark, [], "phrase_id int, doc_id long, n_occurrences int"
-        )
-    qdf = local_frame(
-        spark, sorted(set(rows)), "phrase_id int, term_idx int, term string"
-    )
+    def members(alt: str) -> list[str]:
+        # a marker alt with an empty rewrite just drops out of its group
+        return expansions.get(alt, []) if parse_marker(alt) is not None else [alt]
 
-    # one postings scan; then SpanOr: members of a slot merge per doc
-    # (union of shifted arrays) so the downstream fold sees one row per
-    # (phrase, slot, doc) — the invariant _fold_phrases counts on
-    ex = (
-        index.postings.join(F.broadcast(qdf), "term")
-        .select("phrase_id", "term_idx", F.explode("postings").alias("p"))
-        .select(
-            "phrase_id",
-            "term_idx",
-            F.col("p.doc_id").alias("doc_id"),
-            F.transform(
-                "p.positions", lambda x: x - F.col("term_idx")
-            ).alias("shifted"),
+    # a literal slot stays its term; a marker or group slot becomes its
+    # member set (empty when nothing is left: the phrase matches nothing)
+    return phrase_relation(index, [
+        tuple(
+            slot if isinstance(slot, str) and parse_marker(slot) is None
+            else tuple(sorted({
+                m for alt in (slot if isinstance(slot, list) else [slot])
+                for m in members(alt)
+            }))
+            for slot in slots
         )
-        .groupBy("phrase_id", "term_idx", "doc_id")
-        .agg(
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("shifted")))
-            ).alias("shifted")
-        )
-    )
-    live_slops = {
-        pid: s for pid, s in slop_by_pid.items() if pid not in dead
-    }
-    return _fold_phrases(
-        ex, {p: n for p, n in plens.items() if p not in dead},
-        slops=live_slops or None,
-    )
+        for slots in parsed
+    ], slops)

@@ -21,16 +21,14 @@ the exhaustive DataFrame scorer (search/bm25.py) up to float-sum ordering.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from solrtexttagger_spark.index.compressed import CompressedIndex
 from solrtexttagger_spark.index.compression import (
     bm25_upper_bound,
-    decode_positions_block,
     decode_postings_block,
 )
 from solrtexttagger_spark.plans import local_frame, term_in
@@ -39,18 +37,20 @@ from solrtexttagger_spark.search.bm25 import (
     B,
     _local_topk_with_ties,
     analyze_query_terms,
-    join_query_terms,
+    rank_window,
 )
 from solrtexttagger_spark.search.boolean import (
     BooleanPlan,
     _present,
     _ranges,
-    bm25_parts,
+    bag_plan,
+    block_arrays,
     boolean_plan,
     evaluate_boolean,
     fuzzy_member_weights,
     parse_boolean_query,
     parse_marker,
+    plan_scores,
     positions_csr,
 )
 
@@ -238,50 +238,24 @@ class LocalSearcher:
         cols = ["term", "block", "df_seg"] + (["pos_block"] if positions else [])
         tbl = blocks.select(*cols).toArrow()  # columns, not one Row per block
         col = lambda name: tbl.column(name).to_pylist()  # noqa: E731
-        pos_blocks = col("pos_block") if positions else [None] * tbl.num_rows
-        raw: dict[str, list] = {}
-        df_acc: dict[str, int] = {}
-        for term, blk, pos_blk, df_seg in zip(
-            col("term"), col("block"), pos_blocks, col("df_seg")
-        ):
-            raw.setdefault(term, []).append((blk, pos_blk))
-            df_acc[term] = df_acc.get(term, 0) + df_seg
-        self.df = df_acc
+        block_terms = col("term")
+        self.df: dict[str, int] = {}
+        for term, df_seg in zip(block_terms, col("df_seg")):
+            self.df[term] = self.df.get(term, 0) + df_seg
         self.n = float(cindex.doc_count)
         self.avgdl = float(cindex.avgdl) if cindex.avgdl else 1.0
         # warm-up: decode once, store (doc_ids, *bm25_parts) per term —
         # the per-doc BM25 operands are query-independent, only idf*qtf
         # varies. k1/b are baked in here, so search() pins them.
         self.k1, self.b = float(k1), float(b)
-        self.term_postings: dict[str, tuple] = {}
+        pos_blocks = col("pos_block") if positions else [None] * tbl.num_rows
         # positions in evaluate_boolean's shape: {term: positions_csr}
-        self.term_pos: dict[str, tuple] | None = {} if positions else None
-        for term, blks in raw.items():
-            docs_parts, tf_parts, dl_parts, count_parts, flat_parts = (
-                [], [], [], [], []
-            )
-            for blk, pos_blk in blks:
-                doc_ids, tfs, dls = decode_postings_block(blk)
-                docs_parts.append(doc_ids)
-                tf_parts.append(tfs)
-                dl_parts.append(dls)
-                if pos_blk is not None:
-                    counts, flat = decode_positions_block(pos_blk)
-                    count_parts.append(counts)
-                    flat_parts.append(flat)
-            docs = np.concatenate(docs_parts).astype(np.int64)
-            order = np.argsort(docs, kind="stable")
-            self.term_postings[term] = (docs[order], *bm25_parts(
-                np.concatenate(tf_parts)[order],
-                np.concatenate(dl_parts)[order],
-                k1, b, self.avgdl,
-            ))
-            if positions:
-                self.term_pos[term] = positions_csr(
-                    docs, np.concatenate(count_parts), np.concatenate(flat_parts)
-                )
+        self.term_postings, term_pos = block_arrays(
+            zip(block_terms, col("block"), pos_blocks), k1, b, self.avgdl
+        )
+        self.term_pos: dict[str, tuple] | None = term_pos if positions else None
         if positional_index is not None:
-            warm_terms = list(raw) if terms is None else list(terms)
+            warm_terms = list(self.df) if terms is None else list(terms)
             self.term_pos = _arrow_term_positions(
                 positional_index.postings.where(term_in(F.col("term"), warm_terms))
                 .select(
@@ -452,14 +426,8 @@ class LocalSearcher:
                 f"b={b} differs from warm-up b={self.b}; rebuild the "
                 "LocalSearcher with the desired parameters"
             )
-        bag = analyze_query_terms(query)
-        phrase_bags: dict = {}
-        if synonyms:
-            from solrtexttagger_spark.search.bm25 import expand_synonyms_graph
-
-            bag, phrase_bags = expand_synonyms_graph(bag, synonyms)
         uniq, scores = self._evaluate(
-            BooleanPlan(bag, gated=phrase_bags), allowed_docs,
+            bag_plan(analyze_query_terms(query), synonyms), allowed_docs,
             "multi-word synonym expansions",
         )
         if boost_values is not None:
@@ -531,6 +499,13 @@ class LocalSearcher:
         ]
 
 
+def _local_scores(spark: SparkSession, rows) -> DataFrame | None:
+    """Collected (query_id, doc_id, score) rows as a local relation."""
+    if not rows:
+        return None
+    return local_frame(spark, [(r["query_id"], r["doc_id"], r["score"]) for r in rows], _SCORE_SCHEMA)
+
+
 def wand_topk(
     cindex: CompressedIndex,
     queries,
@@ -598,196 +573,27 @@ def wand_topk(
     everything larger; set 0 to force the distributed path.
 
     ``synonyms`` expands with GRAPH semantics
-    (bm25.expand_synonyms_graph): a multi-word mapping's constituents
-    score only in docs containing the contiguous phrase (resolved from
-    the compressed index's positional blocks — requires
-    compress_index(with_positions=True)); such docs are merged with the
-    pruned base top-k through an exact full-score rescore of the
-    phrase-matching docs, so ranks stay identical to the exhaustive
-    bm25_topk."""
+    (bm25.expand_synonyms_graph). A batch with a multi-word expansion
+    is not pruned: it runs as ``BooleanPlan(bag, gated=phrases)`` plans
+    through boolean.plan_scores over the positional blocks (requires
+    compress_index(with_positions=True)), so ranks stay identical to the
+    exhaustive bm25_topk, and ``prune_stats`` reports every segment as
+    scored."""
     spark = spark or cindex.blocks.sparkSession
     qbags = {int(qid): analyze_query_terms(q) for qid, q in queries}
-    qphrases: dict[int, dict] = {}
     if synonyms:
-        from solrtexttagger_spark.search.bm25 import expand_synonyms_graph
-
-        for qid in list(qbags):
-            qbags[qid], ph = expand_synonyms_graph(qbags[qid], synonyms)
-            if ph:
-                qphrases[qid] = ph
-    common = dict(
-        k1=k1, b=b, spark=spark, prune_stats=prune_stats,
-        local_threshold_postings=local_threshold_postings,
-        allowed_docs=allowed_docs,
-    )
-    if not qphrases:
-        return _wand_topk_bags(cindex, qbags, k=k, start=start, **common)
-    if "pos_block" not in cindex.blocks.columns:
-        raise NotImplementedError(
-            "multi-word synonym expansions need positional blocks for "
-            "graph semantics — build with "
-            "compress_index(with_positions=True), or score with "
-            "bm25_topk on the uncompressed index"
-        )
-    # base: pruned top-(start+k) over the bag WITHOUT the multi-word
-    # members (sound: every non-phrase doc's final score IS its base
-    # score, so none outside the base top-k can enter the final page);
-    # phrase docs: exact base+bonus rescore, which dominates base rows
-    # on merge. One extra blocks pass over the involved terms.
-    base = _wand_topk_bags(cindex, qbags, k=start + k, start=0, **common)
-    full = _phrase_doc_full_scores(
-        cindex, qbags, qphrases, k1=k1, b=b, allowed_docs=allowed_docs
-    )
-    merged = (
-        base.select("query_id", "doc_id", F.col("score").alias("base_score"))
-        .join(
-            full.withColumnRenamed("score", "full_score"),
-            ["query_id", "doc_id"],
-            "full_outer",
-        )
-        .select(
-            "query_id",
-            "doc_id",
-            F.coalesce("full_score", "base_score").alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w))
-        .where((F.col("rank") > start) & (F.col("rank") <= start + k))
-        .select(
-            "query_id", F.col("rank").cast("long").alias("rank"),
-            "doc_id", "score",
-        )
-    )
-
-
-def _compressed_contribs(
-    cindex, wdf_rows: list, *, k1: float, b: float, spark: SparkSession
-) -> DataFrame:
-    """Per-(query, doc) BM25 contributions decoded from the compressed
-    blocks of the involved terms: wdf_rows = [(query_id, term, qtf)] ->
-    (query_id, doc_id, c). One blocks scan (broadcast term filter with
-    global df from bm25.global_df), one Arrow decode pass, no shuffle."""
-    n = float(cindex.doc_count)
-    avgdl = float(cindex.avgdl) if cindex.avgdl else 1.0
-    k1_, b_ = float(k1), float(b)
-    wdf = local_frame(spark, wdf_rows, "query_id long, term string, qtf int")
-    joined = join_query_terms(
-        cindex, cindex.blocks,
-        [(t,) for t in sorted({t for _q, t, _f in wdf_rows})], "term string",
-    ).select("term", "block", "df")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_t, out_d, out_f = [], [], []
-            for term, blk, df_t in zip(pdf["term"], pdf["block"], pdf["df"]):
-                doc_ids, tf, dl = decode_postings_block(bytes(blk))
-                idf = math.log(1.0 + (n - float(df_t) + 0.5) / (float(df_t) + 0.5))
-                tff = tf.astype(np.float64)
-                dlf = dl.astype(np.float64)
-                fvals = idf * tff * (k1_ + 1.0) / (
-                    tff + k1_ * (1.0 - b_ + b_ * dlf / avgdl)
-                )
-                out_t.extend([term] * len(doc_ids))
-                out_d.extend(doc_ids.tolist())
-                out_f.extend(fvals.tolist())
-            yield pd.DataFrame(
-                {
-                    "term": pd.Series(out_t, dtype=object),
-                    "doc_id": pd.Series(out_d, dtype="int64"),
-                    "f": pd.Series(out_f, dtype="float64"),
-                }
+        plans = {qid: bag_plan(bag, synonyms) for qid, bag in qbags.items()}
+        if any(p.gated for p in plans.values()):
+            scores = plan_scores(
+                cindex, plans, k1=k1, b=b, allowed_docs=allowed_docs, spark=spark
             )
-
-    contribs = joined.mapInPandas(decode, schema="term string, doc_id long, f double")
-    return contribs.join(F.broadcast(wdf), "term").select(
-        "query_id",
-        "doc_id",
-        (F.col("f") * F.col("qtf").cast("double")).alias("c"),
-    )
-
-
-def _phrase_doc_full_scores(
-    cindex,
-    qbags: dict[int, dict[str, int]],
-    qphrases: dict[int, dict],
-    *,
-    k1: float,
-    b: float,
-    allowed_docs: DataFrame | None,
-) -> DataFrame:
-    """Exact final scores (base bag + phrase-gated constituent bonus)
-    for every doc matching a query's multi-word synonym expansion
-    contiguously — (query_id, doc_id, score). The merge partner for the
-    pruned base top-k in wand_topk's graph path."""
-    from solrtexttagger_spark.search.phrase import (
-        multi_phrase_match_scored_compressed,
-    )
-
-    spark = cindex.blocks.sparkSession
-    phrase_list = sorted({toks for d in qphrases.values() for toks in d})
-    pid_of = {toks: i for i, toks in enumerate(phrase_list)}
-    pm = multi_phrase_match_scored_compressed(
-        cindex, [" ".join(t) for t in phrase_list], k1=k1, b=b
-    )
-    qp_rows = [
-        (int(qid), pid_of[toks], float(w))
-        for qid, d in sorted(qphrases.items())
-        for toks, w in sorted(d.items())
-    ]
-    qpdf = local_frame(spark, qp_rows, "query_id long, phrase_id int, w double")
-    bonus = pm.join(F.broadcast(qpdf), "phrase_id").select(
-        "query_id", "doc_id", (F.col("w") * F.col("unit_score")).alias("c")
-    )
-    pdocs = bonus.select("query_id", "doc_id").distinct()
-    base_rows = [
-        (int(qid), t, int(qtf))
-        for qid, bag in sorted(qbags.items())
-        if qid in qphrases
-        for t, qtf in sorted(bag.items())
-    ]
-    parts = [bonus]
-    if base_rows:
-        base_c = _compressed_contribs(
-            cindex, base_rows, k1=k1, b=b, spark=spark
-        ).join(pdocs, ["query_id", "doc_id"], "left_semi")
-        parts.append(base_c)
-    full = parts[0]
-    for p in parts[1:]:
-        full = full.unionAll(p)
-    full = full.groupBy("query_id", "doc_id").agg(F.sum("c").alias("score"))
-    if allowed_docs is not None:
-        full = full.join(
-            allowed_docs.select("doc_id").distinct(), "doc_id", "left_semi"
-        )
-    return full
-
-
-def _local_scores(spark: SparkSession, rows) -> DataFrame | None:
-    """Collected (query_id, doc_id, score) rows as a local relation."""
-    if not rows:
-        return None
-    return local_frame(spark, [(r["query_id"], r["doc_id"], r["score"]) for r in rows], _SCORE_SCHEMA)
-
-
-def _wand_topk_bags(
-    cindex: CompressedIndex,
-    qbags: dict[int, dict[str, int]],
-    *,
-    k: int,
-    k1: float,
-    b: float,
-    spark: SparkSession,
-    prune_stats: dict | None,
-    local_threshold_postings: int,
-    allowed_docs: DataFrame | None,
-    start: int,
-) -> DataFrame:
-    """The pruned scorer proper, over pre-analyzed (and synonym-expanded)
-    term bags — see wand_topk for the semantics of every knob."""
+            if prune_stats is not None:
+                n_segs = len(plans) * cindex.num_segments
+                prune_stats.update(
+                    {"segments_total": n_segs, "segments_scored": n_segs}
+                )
+            return rank_window(scores, k, start)
+        qbags = {qid: p.score_bag for qid, p in plans.items()}
     n = float(cindex.doc_count)
     avgdl = float(cindex.avgdl) if cindex.avgdl else 1.0
     k_eff = start + k  # pruning must preserve the top start+k, not just k
@@ -1094,9 +900,4 @@ def _wand_topk_bags(
     allscores = parts[0]
     for p in parts[1:]:
         allscores = allscores.unionAll(p)
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        allscores.withColumn("rank", F.row_number().over(w))
-        .where((F.col("rank") > start) & (F.col("rank") <= start + k))
-        .select("query_id", F.col("rank").cast("long").alias("rank"), "doc_id", "score")
-    )
+    return rank_window(allscores, k, start)

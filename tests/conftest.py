@@ -46,3 +46,19 @@ def count_collects():
     """``with count_collects() as calls: ...`` records one entry in
     ``calls`` per DataFrame.collect made inside the block."""
     return _count_collects
+
+
+def _build_jobs(spark, build):
+    """(relation, Spark jobs run while ``build()`` constructs it). A job
+    group sees every job, localCheckpoint ones included."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "relation build")
+    try:
+        rel = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rel, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -21,10 +21,13 @@ from solrtexttagger_spark.index.compressed import compress_index
 from solrtexttagger_spark.search.boolean import (
     boolean_bm25_topk,
     boolean_matched_scores,
+    phrase_relation,
 )
+from solrtexttagger_spark.search.bm25 import bm25_topk
+from solrtexttagger_spark.search.phrase import phrase_match
 from solrtexttagger_spark.search.request import solr_select
-from solrtexttagger_spark.search.wand import LocalSearcher
-from tests.test_index_bm25 import _build_jobs
+from solrtexttagger_spark.search.wand import LocalSearcher, wand_topk
+from tests.conftest import _build_jobs
 
 K1, B = 1.2, 0.75
 K = 5
@@ -36,6 +39,7 @@ SYNONYM_POOL = {
     "w4": ["w5 w5"],
     "w7": ["w0 w1", "w3"],
 }
+MULTI_WORD = sorted(t for t, syns in SYNONYM_POOL.items() if any(" " in x for x in syns))
 
 
 def _corpus():
@@ -72,6 +76,14 @@ def _phrase_in(toks_doc, toks, slop):
     return any(
         all(any(v <= x <= v + slop for x in s) for s in shifted)
         for v in range(lo, len(toks_doc) + 1)
+    )
+
+
+def _phrase_count(toks_doc, toks):
+    """Occurrences of the exact token sequence, overlapping ones apart."""
+    n = len(toks)
+    return sum(
+        1 for p in range(len(toks_doc) - n + 1) if tuple(toks_doc[p:p + n]) == toks
     )
 
 
@@ -208,6 +220,12 @@ query = st.lists(
 )
 
 
+bag_query = st.lists(
+    st.tuples(st.just(""), st.tuples(word), st.just(0), st.just(1), st.just(False)),
+    min_size=1, max_size=4,
+)
+
+
 @pytest.fixture(scope="module")
 def engines(spark):
     docs = spark.createDataFrame(DOCS, "doc_id long, text string, lang string")
@@ -218,6 +236,17 @@ def engines(spark):
     yield docs, idx, searcher
     idx.postings.unpersist()
     docs.unpersist()
+
+
+@pytest.fixture(scope="module")
+def positional_blocks(engines):
+    """{max_block_postings: compress_index(with_positions=True)}: one
+    block per (term, seg) shard, and at most two postings per block."""
+    _docs, idx, _s = engines
+    return {
+        mbp: compress_index(idx, max_block_postings=mbp, with_positions=True)
+        for mbp in (None, 2)
+    }
 
 
 @settings(
@@ -276,6 +305,77 @@ def test_boolean_paths_equal_oracle(engines, batch, syn_keys, use_fq):
             params["fq"] = "lang:x"
         rows = solr_select(idx, docs, params, synonyms=synonyms).collect()
         _same([(r["doc_id"], r["score"]) for r in rows], _page(want))
+
+
+@settings(
+    max_examples=3, deadline=None, derandomize=True, database=None,
+    suppress_health_check=list(HealthCheck),
+)
+@given(
+    batch=st.lists(bag_query, min_size=3, max_size=3),
+    multi=st.sampled_from(MULTI_WORD),
+    syn_keys=st.sets(st.sampled_from(sorted(SYNONYM_POOL))),
+    use_fq=st.booleans(),
+)
+def test_bag_scorers_multiword_synonyms_equal_oracle(
+    engines, positional_blocks, batch, multi, syn_keys, use_fq
+):
+    """The bag scorers run a batch with a multi-word synonym expansion
+    as phrase-gated plans in the boolean seg kernel: bm25_topk (both
+    strategies) and wand_topk (driver-local and distributed thresholds,
+    over one-block and two-postings-per-block positional blocks) all
+    equal the oracle, and WAND reports every segment scored. phrase_match
+    counts each expansion's occurrences like the oracle, and so does the
+    phrase relation over both block layouts."""
+    docs, idx, _s = engines
+    synonyms = {t: SYNONYM_POOL[t] for t in sorted(syn_keys | {multi})}
+    allowed = FQ_IDS if use_fq else None
+    fq_docs = docs.where("lang = 'x'").select("doc_id") if use_fq else None
+    batch = batch + [[("", (multi,), 0, 1, False)]]  # reaches the expansion
+    queries = [
+        (qid, " ".join(_render(*c) for c in clauses))
+        for qid, clauses in enumerate(batch)
+    ]
+    want = {qid: _page(oracle(c, synonyms, allowed)) for qid, c in enumerate(batch)}
+
+    def check(rel):
+        pages = {}
+        for r in rel.collect():
+            pages.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+        for qid, _q in queries:
+            _same(pages.get(qid, []), want[qid])
+
+    for strategy in ("segmented", "exploded"):
+        check(bm25_topk(
+            idx, queries, k=K, synonyms=synonyms, allowed_docs=fq_docs,
+            strategy=strategy,
+        ))
+    for mbp, cix in positional_blocks.items():
+        for thr in (100_000, 0):
+            stats = {}
+            check(wand_topk(
+                cix, queries, k=K, synonyms=synonyms, allowed_docs=fq_docs,
+                local_threshold_postings=thr, prune_stats=stats,
+            ))
+            assert stats["segments_scored"] == stats["segments_total"] > 0, (mbp, thr)
+    phrases = sorted({tuple(x.split()) for t in synonyms for x in synonyms[t] if " " in x})
+    want_occ = {
+        (pid, d): _phrase_count(t, toks)
+        for pid, toks in enumerate(phrases) for d, t in TOKENS.items()
+        if _phrase_count(t, toks)
+    }
+    got_occ = {
+        (pid, r["doc_id"]): r["n_occurrences"]
+        for pid, toks in enumerate(phrases)
+        for r in phrase_match(idx, " ".join(toks)).collect()
+    }
+    assert got_occ == want_occ
+    for mbp, cix in positional_blocks.items():  # the same matcher over blocks
+        got_occ = {
+            (r["phrase_id"], r["doc_id"]): r["n_occurrences"]
+            for r in phrase_relation(cix, phrases).collect()
+        }
+        assert got_occ == want_occ, mbp
 
 
 def test_oracle_phrase_semantics():

@@ -50,6 +50,10 @@ def tok_match(tok: str, slot) -> bool:
 
 def brute(tokens: list[str], phrase: str, slop: int = 0) -> int:
     slots = parse_complex_phrase(phrase)
+    if slop:  # a literal repeated m times needs m positions in the doc
+        for lit in {s for s in slots if isinstance(s, str)}:
+            if tokens.count(lit) < slots.count(lit) and slots.count(lit) > 1:
+                return 0
     sets = []
     for i, slot in enumerate(slots):
         s = {p - i for p, t in enumerate(tokens) if tok_match(t, slot)}
@@ -141,20 +145,42 @@ class TestMatch:
         assert {r["phrase_id"] for r in out} == {1}
 
     def test_pure_literal_agrees_with_multi_phrase(self, corpus):
-        """No markers at all: complex path == multi_phrase_match row for
-        row (they share the fold — this pins the slot-merge preamble)."""
-        from solrtexttagger_spark.search.phrase import multi_phrase_match
+        """No markers at all: complex path == phrase_match row for row,
+        phrase by phrase (they share the phrase relation — this pins the
+        slot preamble)."""
+        from solrtexttagger_spark.search.phrase import phrase_match
 
         _, idx = corpus
+        phrases = ["alpha alps", "w0 w1"]
         a = sorted(
-            tuple(r) for r in
-            complex_phrase_match(idx, ["alpha alps", "w0 w1"]).collect()
+            tuple(r) for r in complex_phrase_match(idx, phrases).collect()
         )
         b = sorted(
-            tuple(r) for r in
-            multi_phrase_match(idx, ["alpha alps", "w0 w1"]).collect()
+            (pid, r["doc_id"], r["n_occurrences"])
+            for pid, ph in enumerate(phrases)
+            for r in phrase_match(idx, ph).collect()
         )
-        assert a == b
+        assert a == b and a
+
+    def test_literal_repeat_equals_boolean_phrase(self, spark, corpus):
+        """A literal repeated in a sloppy phrase takes the boolean
+        clause's repeats check: {!complexphrase}"w0 w0"~1 matches the
+        docs +"w0 w0"~1 matches, never a doc holding one w0."""
+        from solrtexttagger_spark.search.boolean import boolean_bm25_topk
+
+        docs, idx = corpus
+        got = {
+            r["doc_id"]
+            for r in complex_phrase_match(idx, ["w0 w0"], slops=[1]).collect()
+        }
+        want = {
+            r["doc_id"]
+            for r in boolean_bm25_topk(
+                idx, [(0, '+"w0 w0"~1')], k=len(docs), spark=spark
+            ).collect()
+        }
+        assert got == want and got
+        assert all(dict(docs)[d].split().count("w0") >= 2 for d in got)
 
     def test_overflow_guard(self, corpus):
         _, idx = corpus
@@ -162,16 +188,17 @@ class TestMatch:
             complex_phrase_match(
                 idx, ["a* w0"], max_prefix_expansions=1)
 
-    def test_one_broadcast_postings_pass(self, corpus):
-        """Scale pin: the member relation BROADCASTS into one postings
-        join — no shuffle keyed on the postings side, however many
-        members the slots expanded to."""
+    def test_one_seg_kernel_pass(self, corpus):
+        """Scale pin: every slot member's term is pushed into ONE postings
+        scan, and one pandas group stage (per segment) matches all
+        phrases — no join, however many members the slots expanded to."""
+        from solrtexttagger_spark.plans import plan_string
+
         _, idx = corpus
-        plan = (
-            complex_phrase_match(idx, PHRASES)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "BroadcastHashJoin" in plan
+        plan = plan_string(complex_phrase_match(idx, PHRASES))
+        assert len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.M)) == 1
+        assert "Join" not in plan
+        assert "IN (alpha,alps," in plan, plan
 
 
 class TestRouter:

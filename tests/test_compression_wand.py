@@ -890,7 +890,7 @@ def test_local_searcher_prepared_filter(spark, corpus_index):
 def test_wand_local_path_job_pins(spark, corpus_index):
     """The driver-local WAND path returns a local relation: a cold query
     runs only its metadata and blocks collects, a warm repeat no job."""
-    from tests.test_index_bm25 import _build_jobs
+    from tests.conftest import _build_jobs
 
     c = compress_index(corpus_index)
     c.blocks.persist().count()
@@ -914,7 +914,7 @@ def test_wand_local_path_job_pins(spark, corpus_index):
 def test_bm25_exploded_job_pin(spark, corpus_index):
     """Exploded BM25 keeps its job count on a cold and a warm df cache."""
     from solrtexttagger_spark.search.wand import reset_query_caches
-    from tests.test_index_bm25 import _build_jobs
+    from tests.conftest import _build_jobs
 
     queries = [(0, "w5 w40"), (1, "w7 w13")]
     _ = (corpus_index.doc_count, corpus_index.avgdl)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.build import build_index, with_doc_ids
 from solrtexttagger_spark.search.bm25 import analyze_query_terms, bm25_topk
+from tests.conftest import _build_jobs
 
 DOCS = [
     (0, "the fast key order sort table scan merge"),
@@ -285,37 +286,20 @@ def test_bm25_df_cache_and_reset(spark, docs_df, index, monkeypatch):
     assert again == cold
 
 
-def _build_jobs(spark, build):
-    """(relation, Spark jobs run while ``build()`` constructs it). A job
-    group sees every job, localCheckpoint ones included."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"build-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "relation build")
-    try:
-        rel = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return rel, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 # "fast" is shared by two queries of one batch: a df lookup that sees a
 # (term, seg) row once per query would inflate its df
 LOOKUP_QUERIES = [(0, "fast filter"), (1, "fast key order"), (2, "vector hash")]
-LOOKUP_PHRASES = ["fast column", "row filter", "key order"]
+LOOKUP_SYNONYMS = {"filter": ["fast column", "row filter"], "order": ["key order"]}
 ABSENT = "zzz"
 
 
 def _lookup_consumers(spark, index):
     """consumer -> build(absent) of the relation it scores with; with
-    ``absent`` one query (or an extra phrase) also carries ABSENT, which
-    must change no row."""
+    ``absent`` one query (or an extra multi-word synonym) also carries
+    ABSENT, which must change no row."""
     from solrtexttagger_spark.search.bm25 import exploded_scores, query_bags
     from solrtexttagger_spark.search.boolean import boolean_matched_scores
     from solrtexttagger_spark.search.functions import explain_scores
-    from solrtexttagger_spark.search.phrase import multi_phrase_match_scored
 
     def qs(absent):
         if not absent:
@@ -332,8 +316,9 @@ def _lookup_consumers(spark, index):
              (2, "hash vector" + (f" {ABSENT}" if a else ""))],
             spark=spark,
         ),
-        "phrase_scored": lambda a: multi_phrase_match_scored(
-            index, LOOKUP_PHRASES + ([f"fast {ABSENT}"] if a else [])
+        "synonym_phrases": lambda a: bm25_topk(
+            index, qs(a), k=5, spark=spark,
+            synonyms={**LOOKUP_SYNONYMS, **({"hash": [f"fast {ABSENT}"]} if a else {})},
         ),
         "explain": lambda a: explain_scores(index, qs(a), [0, 2, 3, 5], spark=spark),
     }

@@ -14,7 +14,7 @@ from pyspark.sql import types as T
 
 from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import _SCORE_SCHEMA
-from tests.test_index_bm25 import _build_jobs
+from tests.conftest import _build_jobs
 
 PACKAGE = Path(__file__).resolve().parent.parent / "solrtexttagger_spark"
 

@@ -238,7 +238,7 @@ def test_upsert_job_budget(spark, tmp_path):
     small upsert batch is written (Spark's bounded take reads a
     many-file batch in more than one job)."""
     from solrtexttagger_spark.index.maintenance import upsert_docs
-    from tests.test_index_bm25 import _build_jobs
+    from tests.conftest import _build_jobs
 
     idx = build_index(spark.createDataFrame(DOCS, "doc_id long, text string"), num_segments=4)
     idx.postings.persist().count()

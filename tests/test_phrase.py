@@ -47,28 +47,57 @@ def test_phrase_terms_analysis():
     assert phrase_terms("Hash  JOIN!") == ["hash", "join"]
 
 
-def test_multi_phrase_match_compressed_identity(spark, corpus):
-    """The compressed-path phrase matcher (pos_block decode + shared
-    fold) returns EXACTLY the uncompressed matcher's rows, including
-    under multi-block shard splitting; without positional blocks it
-    raises."""
-    import pytest
-
-    from solrtexttagger_spark.index.compressed import compress_index
-    from solrtexttagger_spark.search.phrase import (
-        multi_phrase_match,
-        multi_phrase_match_compressed,
+def test_use_split_drops_empty_tokens(spark):
+    """The pure-JVM split path builds the tokenizer path's postings: the
+    empty strings a doubled, leading or trailing space splits off count
+    toward neither positions nor dl, so the phrase still matches."""
+    docs = spark.createDataFrame(
+        [(0, "a  b"), (1, "a c"), (2, " b a  c ")], "doc_id long, text string"
     )
 
-    _docs, index = corpus
-    phrases = ["w0 w1", "w1 w0 w1", "w0 w0", "w2 w3"]
-    want = sorted(tuple(r) for r in multi_phrase_match(index, phrases).collect())
-    assert want, "test corpus should contain at least one phrase hit"
-    for mbp in (None, 2):
-        c = compress_index(index, max_block_postings=mbp, with_positions=True)
-        got = sorted(
-            tuple(r) for r in multi_phrase_match_compressed(c, phrases).collect()
+    def rows(idx):
+        return sorted(
+            (r["term"], p["doc_id"], p["tf"], p["dl"], tuple(p["positions"]))
+            for r in idx.postings.collect()
+            for p in r["postings"]
         )
-        assert got == want, f"mismatch at max_block_postings={mbp}"
-    with pytest.raises(ValueError):
-        multi_phrase_match_compressed(compress_index(index), phrases)
+
+    split = build_index(docs, num_segments=2, use_split=True)
+    tokenized = build_index(docs, num_segments=2)
+    assert rows(split) == rows(tokenized)
+    assert ("b", 0, 1, 2, (1,)) in rows(split)
+    for idx in (split, tokenized):
+        got = {r["doc_id"]: r["n_occurrences"] for r in phrase_match(idx, "a b").collect()}
+        assert got == {0: 1}
+
+
+def test_no_array_intersect_in_search():
+    """boolean.phrase_docs is the one phrase matcher: no module under
+    search/ intersects position arrays on the JVM."""
+    import ast
+    from pathlib import Path
+
+    search = Path(__file__).resolve().parent.parent / "solrtexttagger_spark" / "search"
+    offenders = []
+    for path in sorted(search.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (
+                (isinstance(node, ast.Attribute) and node.attr == "array_intersect")
+                or (isinstance(node, ast.Name) and node.id == "array_intersect")
+                or (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and "array_intersect(" in node.value)
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_phrase_match_job_budget(spark, corpus):
+    """Collecting phrase_match runs at most 3 Spark jobs — what the
+    broadcast-join contiguity fold it replaced ran (measured on the
+    driver's sf0.1 index): the seg exchange and the kernel's result."""
+    from tests.conftest import _build_jobs
+
+    _docs, idx = corpus
+    phrase_match(idx, "w0 w1").collect()
+    rows, jobs = _build_jobs(spark, lambda: phrase_match(idx, "w0 w1").collect())
+    assert rows and jobs <= 3, jobs

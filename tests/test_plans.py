@@ -34,10 +34,14 @@ def index(docs_df):
     return idx
 
 
-def n_exchanges(plan: str) -> int:
+def n_nodes(plan: str, name: str) -> int:
     import re
 
-    return len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
+    return len(re.findall(rf"^\(\d+\) {name}", plan, re.M))
+
+
+def n_exchanges(plan: str) -> int:
+    return n_nodes(plan, "Exchange")
 
 
 def test_tag_plan_has_no_shuffle(spark, docs_df):
@@ -77,9 +81,15 @@ def test_bm25_segmented_plan_shape(spark, index):
     assert "hashpartitioning(seg" in plan
 
 
-def test_phrase_plan_broadcasts_terms(spark, index):
+def test_phrase_plan_pushes_terms_into_scan(spark, index):
+    """phrase_match runs the seg kernel: the phrase terms filter the
+    cached postings scan into one pandas group stage, and nothing
+    joins."""
     plan = plan_str(phrase_match(index, "common w1"))
-    assert "BroadcastHashJoin" in plan
+    assert "IN (common,w1)" in plan
+    assert "InMemoryTableScan" in plan
+    assert n_nodes(plan, "FlatMapGroupsInPandas") == 1
+    assert "Join" not in plan
 
 
 def test_scan_pruning_column_projection(spark, tmp_path):
@@ -312,29 +322,28 @@ def test_facet_sections_single_aggregation(spark, docs_df, index, count_collects
         assert [b for b, _n in buckets] == list(range(lo, hi, gap))
 
 
-def test_bm25_synonym_graph_plan_action_free_and_cogrouped(
-    spark, index, count_collects
-):
-    """Round-7 (r6 verdict #5): a multi-word synonym mapping on the
-    segmented bag scorer adds NO driver action — the phrase-gated bonus
-    relation (multi_phrase_match_scored -> synonym_phrase_bonus) is
-    built lazily and meets the segment kernel through the SAME cogroup
-    as the fq ids, co-partitioned on the index's seg hash, merged
-    BEFORE per-segment truncation. The whole cold batch stays one
-    action."""
+def test_bm25_synonym_graph_plan_action_free_and_seg_kernel(spark, index):
+    """A multi-word synonym mapping on the bag scorer runs NO Spark job
+    while the relation is built, even on a cold df cache: the batch
+    becomes phrase-gated BooleanPlans in the boolean seg kernel — the
+    query and phrase terms pushed into the postings scan, one pandas
+    group stage, the global df broadcast-joined in — and the whole cold
+    batch stays one action."""
     from solrtexttagger_spark.search.wand import reset_query_caches
+    from tests.conftest import _build_jobs
 
     reset_query_caches(index)
     _ = index.avgdl
     syn = {"w1": ["common w2"]}  # multi-word expansion into the fixture corpus
-    with count_collects() as calls:
-        out = bm25_topk(index, [(0, "w1 common")], k=5, spark=spark, synonyms=syn)
-    assert calls == []  # bonus relation never collected driver-side
+    for strategy in ("segmented", "exploded"):
+        out, jobs = _build_jobs(spark, lambda: bm25_topk(
+            index, [(0, "w1 common")], k=5, spark=spark, synonyms=syn,
+            strategy=strategy,
+        ))
+        assert jobs == 0, strategy
     plan = plan_str(out)
-    # the bonus meets the scoring kernel through the cogroup variant
-    assert "FlatMapCoGroupsInPandas" in plan
-    # contiguity fold + gated constituents stay JVM/Arrow-side: the
-    # phrase terms broadcast into the postings scan like query terms
-    assert "BroadcastHashJoin" in plan
+    assert n_nodes(plan, "FlatMapGroupsInPandas") == 1
+    assert "IN (common,w1,w2)" in plan
+    assert "WindowGroupLimit" in plan
     rows = out.collect()
     assert rows  # and it actually matches (w1 docs at least)

@@ -266,11 +266,11 @@ class TestSloppyPhrases:
             assert s == pytest.approx(bag[d], rel=1e-9)
 
     def test_multi_phrase_match_slops(self, spark, corpus):
-        from solrtexttagger_spark.search.phrase import multi_phrase_match
+        from solrtexttagger_spark.search.boolean import phrase_relation
 
         _, idx = corpus
-        out = multi_phrase_match(
-            idx, ["hash join", "hash join", "hash join"], slops=[0, 1, 2]
+        out = phrase_relation(
+            idx, [("hash", "join")] * 3, slops=[0, 1, 2]
         ).collect()
         by_pid = {}
         for r in out:
@@ -285,7 +285,7 @@ class TestSloppyPhrases:
         one step from its slot fits a width-1 window? no — span 2) —
         pin the exact windows."""
         from solrtexttagger_spark.index.build import build_index
-        from solrtexttagger_spark.search.phrase import multi_phrase_match
+        from solrtexttagger_spark.search.boolean import phrase_relation
 
         docs = [
             (0, "hash x probe join end"),   # shifted: 0, 1, 1 -> span 1
@@ -297,8 +297,8 @@ class TestSloppyPhrases:
         got = {
             s: {
                 r["doc_id"]
-                for r in multi_phrase_match(
-                    idx, ["hash probe join"], slops=[s]
+                for r in phrase_relation(
+                    idx, [("hash", "probe", "join")], slops=[s]
                 ).collect()
             }
             for s in (0, 1, 2)
@@ -308,22 +308,26 @@ class TestSloppyPhrases:
         assert got[2] == {0, 1, 2}
 
     def test_slop_adds_no_shuffle(self, spark, corpus):
-        """The window-anchor expansion is a map-side HOF rewrite of the
-        shifted arrays BEFORE the one contiguity-fold shuffle — sloppy
-        phrases must keep exactly the exact-phrase plan's exchanges."""
+        """The window-anchor expansion happens inside the seg kernel
+        (phrase_docs), so a sloppy phrase keeps the exact phrase's plan:
+        the term list pushed into the postings scan and one pandas group
+        stage."""
         import re
 
         from solrtexttagger_spark.plans import plan_string
-        from solrtexttagger_spark.search.phrase import multi_phrase_match
+        from solrtexttagger_spark.search.boolean import phrase_relation
 
         _, idx = corpus
 
-        def n_ex(plan):
-            return len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
+        def nodes(plan, name):
+            return len(re.findall(rf"^\(\d+\) {name}", plan, re.M))
 
-        p0 = plan_string(multi_phrase_match(idx, ["hash join"]))
-        p2 = plan_string(multi_phrase_match(idx, ["hash join"], slops=[2]))
-        assert n_ex(p2) == n_ex(p0)
+        p0 = plan_string(phrase_relation(idx, [("hash", "join")]))
+        p2 = plan_string(phrase_relation(idx, [("hash", "join")], slops=[2]))
+        assert nodes(p2, "Exchange") == nodes(p0, "Exchange")
+        for plan in (p0, p2):
+            assert "IN (hash,join)" in plan, plan
+            assert nodes(plan, "FlatMapGroupsInPandas") == 1, plan
 
     def test_wildcard_scan_has_prefix_prefilter(self, spark, corpus):
         """The wildcard rewrite pushes BOTH the anchored regex and the
@@ -464,22 +468,22 @@ class TestSlopGuard:
     driver (same contract as MAX_PREFIX_EXPANSIONS)."""
 
     def test_distributed_raises(self, spark, corpus):
-        from solrtexttagger_spark.search.boolean import boolean_bm25_topk
-        from solrtexttagger_spark.search.phrase import (
-            MAX_SLOP,
-            multi_phrase_match,
+        from solrtexttagger_spark.search.boolean import (
+            boolean_bm25_topk,
+            phrase_relation,
         )
+        from solrtexttagger_spark.search.phrase import MAX_SLOP
 
         _, idx = corpus
         with pytest.raises(ValueError, match="slop"):
-            multi_phrase_match(idx, ["hash join"], slops=[MAX_SLOP + 1])
+            phrase_relation(idx, [("hash", "join")], slops=[MAX_SLOP + 1])
         with pytest.raises(ValueError, match="slop"):
             boolean_bm25_topk(
                 idx, [(0, '+"hash join"~1000000')], k=10, spark=spark
             )
         # the ceiling itself is legal
-        assert multi_phrase_match(
-            idx, ["hash join"], slops=[MAX_SLOP]
+        assert phrase_relation(
+            idx, [("hash", "join")], slops=[MAX_SLOP]
         ).count() > 0
 
     def test_serving_raises(self, spark, corpus):
@@ -519,12 +523,12 @@ class TestRepeatedTermPhrases:
         idx.postings.unpersist()
 
     def test_distributed(self, spark, rep_corpus):
-        from solrtexttagger_spark.search.phrase import multi_phrase_match
+        from solrtexttagger_spark.search.boolean import phrase_relation
 
         _, idx = rep_corpus
         by_pid = {}
-        out = multi_phrase_match(
-            idx, ["alpha alpha", "alpha alpha"], slops=[0, 1]
+        out = phrase_relation(
+            idx, [("alpha", "alpha")] * 2, slops=[0, 1]
         ).collect()
         for r in out:
             by_pid.setdefault(r["phrase_id"], set()).add(r["doc_id"])

@@ -243,7 +243,7 @@ def test_tag_join_job_budget(spark):
     collect serves both the first-word set and max_phrase_len, and no
     eager localCheckpoint copies a relation that is already cached. The
     uncached dictionary and a given max_phrase_len tag the same."""
-    from tests.test_index_bm25 import _build_jobs
+    from tests.conftest import _build_jobs
 
     ndf = names_df(spark, N)
     texts = spark.createDataFrame(

@@ -19,7 +19,7 @@ from solrtexttagger_spark.index.compressed import (
 from solrtexttagger_spark.index.termdict import TermDictionary
 from solrtexttagger_spark.search.bm25 import bm25_topk, warm_df_cache
 from solrtexttagger_spark.search.wand import wand_topk
-from tests.test_index_bm25 import _build_jobs
+from tests.conftest import _build_jobs
 
 DOCS = [
     (d, " ".join(f"w{(d * 7 + i * 3) % 23}" for i in range(3 + d % 9)))

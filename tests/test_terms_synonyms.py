@@ -614,13 +614,14 @@ def test_bag_multiword_graph_contiguity(spark, graph_corpus):
         strategy="exploded").collect()))
     assert seg == expl
     # the phrase doc outscores nothing unfairly: doc 1's score is the sum
-    # of its constituents' full BM25 contributions at the clause weight
-    from solrtexttagger_spark.search.bm25 import synonym_phrase_bonus
+    # of its constituents' full BM25 contributions at the clause weight —
+    # what the exact phrase clause scores, in the docs it matches
+    from solrtexttagger_spark.search.boolean import boolean_matched_scores
 
     bonus = {
-        (r["query_id"], r["doc_id"]): r["extra"]
-        for r in synonym_phrase_bonus(
-            idx, {0: {("merge", "sort"): 1}}
+        (r["query_id"], r["doc_id"]): r["score"]
+        for r in boolean_matched_scores(
+            idx, [(0, '+"merge sort"')], spark=spark
         ).collect()
     }
     assert set(bonus) == {(0, 1)} and bonus[(0, 1)] > 0
