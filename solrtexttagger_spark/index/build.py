@@ -35,7 +35,7 @@ from dataclasses import dataclass, field
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from solrtexttagger_spark.analysis.core import tokenize
 from solrtexttagger_spark.index.termdict import TermDictionary
@@ -252,6 +252,13 @@ def doc_term_rows(
     )
 
 
+def seg_of(num_segments: int) -> Column:
+    """The segment of a ``doc_id`` row: pmod(xxhash64(doc_id), S) as int.
+    The one doc-hash every seg-keyed relation uses, so a document's
+    postings, its fq id and its term vectors all meet in one segment."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(num_segments)).cast("int")
+
+
 def build_index(
     df: DataFrame,
     *,
@@ -321,9 +328,7 @@ def _build_index(
     # IS the doc-hash salt), so the seg-keyed exchange has the same skew
     # properties as the old (term, seg) one.
     postings = (
-        rows.withColumn(
-            "seg", F.pmod(F.xxhash64("doc_id"), F.lit(num_segments)).cast("int")
-        )
+        rows.withColumn("seg", seg_of(num_segments))
         .repartition("seg")
         .groupBy("term", "seg")
         .agg(

@@ -20,7 +20,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.index.build import InvertedIndex, seg_of
 
 MANIFEST = "manifest.json"
 
@@ -153,9 +153,7 @@ def merge_segments(
     rows = spark.read.parquet(os.path.join(seg_dir, "segment=*"))
     elem = F.struct("doc_id", "tf", "dl", "positions")
     return (
-        rows.withColumn(
-            "seg", F.pmod(F.xxhash64("doc_id"), F.lit(num_segments)).cast("int")
-        )
+        rows.withColumn("seg", seg_of(num_segments))
         .groupBy("term", "seg")
         .agg(
             F.sort_array(F.collect_list(elem)).alias("postings"),

@@ -18,11 +18,8 @@ Deterministic tie-break (score desc, doc_id asc) for rank-identical output.
 
 from __future__ import annotations
 
-import math
 from collections import Counter
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from solrtexttagger_spark.analysis.core import tokenize
@@ -41,6 +38,9 @@ B = 0.75
 # warm_df_cache fills the dictionary here, called by top-level entries
 # with the terms they just analyzed.
 
+# every scorer's (query_id, doc_id, score) match set, and the ranked
+# page rank_window makes of it
+_RANKED_SCHEMA = "query_id long, rank long, doc_id long, score double"
 _SCORE_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.LongType()),
@@ -230,12 +230,14 @@ def bm25_topk(
     DataFrame(query_id, term, qtf). Returns
     (query_id, rank, doc_id, score double).
 
-    strategy='segmented' (default): segment-aligned scorer — the filtered
-    postings shuffle ONCE on seg (tiny: |query terms| x segments array
-    rows), each segment scores all queries vectorized in numpy, emitting
-    only per-segment top-k(+ties); the final window sees O(k x segments)
-    rows. Docs are hash-assigned to exactly one segment, so per-segment
-    top-k is exact.
+    strategy='segmented' (default): the boolean seg kernel
+    (boolean.plan_scores) over ``BooleanPlan(bag)`` plans — one scan of
+    the query terms' postings grouped by seg, evaluate_boolean per
+    segment — under rank_window, whose row_number limit Catalyst splits
+    into a Partial WindowGroupLimit ahead of the query_id exchange, so
+    only O(k x partitions) rows reach the final window. Docs are
+    hash-assigned to exactly one segment, so each segment's scores are
+    whole.
     strategy='exploded': the pure-JVM whole-stage-codegen path — explode
     postings, one groupBy(query_id, doc_id) shuffle. Simple and entirely
     JVM-side, but the shuffle key set is near-unique (~one row per
@@ -247,15 +249,14 @@ def bm25_topk(
     CORPUS-WIDE (Solr filter queries never change scoring stats).
     Catalyst pushes whatever predicate produced ``allowed_docs`` into its
     own scan. In the segmented strategy the allowed ids are co-partitioned
-    with the scoring segments (same pmod(xxhash64, S)) and applied inside
-    the kernel between accumulation and per-segment top-k — distributed,
-    no broadcast; in the exploded strategy it is a post-aggregation
-    semi-join before the rank window.
+    with the scoring segments (index.build.seg_of) and applied to each
+    segment's scores inside the kernel — distributed, no broadcast; in
+    the exploded strategy it is a post-aggregation semi-join before the
+    rank window.
 
     ``start`` is Solr's result-page offset: rows with
     start < rank <= start + k are returned, rank staying the ABSOLUTE
-    position (Solr start/rows pagination; the candidate window widens to
-    start + k so the page is exact in every strategy).
+    position (Solr start/rows pagination, rank_window's ``start``).
 
     ``synonyms`` ({term: [expansion, ...]}) applies query-time synonym
     expansion to every query's term bag before scoring, both strategies,
@@ -266,35 +267,22 @@ def bm25_topk(
     expansion runs as phrase-gated BooleanPlans in the boolean seg
     kernel (boolean.plan_scores), whatever the strategy.
     """
-    if start:
-        out = bm25_topk(
-            index, queries, k=start + k, k1=k1, b=b, spark=spark,
-            strategy=strategy, allowed_docs=allowed_docs, synonyms=synonyms,
-        )
-        return out.where(F.col("rank") > start)
-    qbags = query_bags(queries)
-    if synonyms:
-        from solrtexttagger_spark.search.boolean import bag_plan, plan_scores
+    from solrtexttagger_spark.search.boolean import bag_plan, plan_scores
 
-        plans = {qid: bag_plan(bag, synonyms) for qid, bag in qbags.items()}
-        if any(p.gated for p in plans.values()):
-            # a multi-word expansion gates its constituents on the
-            # contiguous phrase: the batch runs in the boolean seg kernel,
-            # whatever the strategy
-            return rank_window(plan_scores(
-                index, plans, k1=k1, b=b, allowed_docs=allowed_docs, spark=spark
-            ), k)
-        qbags = {qid: p.score_bag for qid, p in plans.items()}
-    if strategy == "segmented":
-        return _bm25_topk_segmented(
-            index, qbags, k=k, k1=k1, b=b, spark=spark, allowed_docs=allowed_docs,
-        )
+    plans = {qid: bag_plan(bag, synonyms) for qid, bag in query_bags(queries).items()}
+    # a multi-word expansion gates its constituents on the contiguous
+    # phrase, so such a batch runs in the seg kernel whatever the strategy
+    if strategy == "segmented" or any(p.gated for p in plans.values()):
+        return rank_window(plan_scores(
+            index, plans, k1=k1, b=b, allowed_docs=allowed_docs, spark=spark
+        ), k, start)
+    qbags = {qid: p.score_bag for qid, p in plans.items()}
     # top-level batch scorer: one tiny collect for unseen terms puts
     # exploded_scores on global_df's hit path; never done inside
     # exploded_scores, which /select's one-job writer embeds
     warm_df_cache(index, bag_terms(qbags))
     return rank_window(
-        exploded_scores(index, qbags, k1=k1, b=b, allowed_docs=allowed_docs), k
+        exploded_scores(index, qbags, k1=k1, b=b, allowed_docs=allowed_docs), k, start
     )
 
 
@@ -386,157 +374,3 @@ def entry_scores(
     qbags = query_bags(queries)
     warm_df_cache(index, bag_terms(qbags))
     return exploded_scores(index, qbags, k1=k1, b=b, allowed_docs=allowed_docs)
-
-
-def _local_topk_with_ties(uniq: np.ndarray, scores: np.ndarray, k: int):
-    """Deterministic per-segment top-k keeping everything tied with the
-    k-th score (ties must reach the final doc_id-asc window)."""
-    if len(uniq) > k:
-        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-        keep = np.nonzero(scores >= kth)[0]
-        order = keep[np.lexsort((uniq[keep], -scores[keep]))]
-    else:
-        order = np.lexsort((uniq, -scores))
-    return uniq[order], scores[order]
-
-
-def _bm25_topk_segmented(
-    index: InvertedIndex,
-    qbags: dict[int, dict[str, int]],
-    *,
-    k: int = 10,
-    k1: float = K1,
-    b: float = B,
-    spark: SparkSession | None = None,
-    allowed_docs: DataFrame | None = None,
-) -> DataFrame:
-    """Exhaustive BM25, segment-aligned (block-max WAND minus the pruning):
-    one shuffle of the query-term-filtered postings on seg, vectorized numpy
-    scoring per segment, per-segment top-k(+ties), global window. Exact
-    because a document's postings live entirely in one segment
-    (seg = hash(doc_id) % num_segments, index/build.py).
-    qbags: {query_id: {term: qtf}} (pre-analyzed).
-
-    ``allowed_docs`` (Solr fq) stays distributed: the allowed ids are
-    CO-PARTITIONED with the scoring unit (seg = the same
-    pmod(xxhash64(doc_id), S) the index uses) and meet each segment's
-    kernel through a cogroup — no driver collect, no broadcast of a
-    potentially corpus-sized filter. Membership is applied between score
-    accumulation and the per-segment top-k, so ranks are exact within the
-    allowed set while idf/avgdl stay corpus-wide (Solr semantics)."""
-    spark = spark or index.postings.sparkSession
-    terms = bag_terms(qbags)
-    if not terms:
-        return local_frame(
-            spark, [], "query_id long, rank long, doc_id long, score double"
-        )
-    n = float(index.doc_count)
-    avgdl = float(index.avgdl) if index.avgdl else 1.0
-    # global_df: on a hit the kernel reads df from the broadcast below;
-    # on a miss every (term, seg) row carries it, broadcast-joined from
-    # the lookup's in-DAG aggregate. Either way the batch is ONE action,
-    # with no serial df-collect wave ahead of it.
-    dfs = global_df(index, terms)
-    qterm_list = {
-        qid: [(t, float(qtf)) for t, qtf in sorted(bag.items())]
-        for qid, bag in qbags.items()
-    }
-    bc = spark.sparkContext.broadcast((
-        qterm_list, dfs if isinstance(dfs, dict) else None, k, k1, b, avgdl, n,
-    ))
-
-    def _score_pdf(
-        pdf: pd.DataFrame, allowed: "np.ndarray | None"
-    ) -> pd.DataFrame:
-        qterms_, df_of, k_, k1_, b_, avgdl_, n_ = bc.value
-        if df_of is None:
-            df_of = dict(zip(pdf["term"], pdf["df"]))
-        term_arrays: dict[str, tuple] = {}
-        for term, postings in zip(pdf["term"], pdf["postings"]):
-            df_t = df_of[term]
-            m = len(postings)
-            docs = np.fromiter((p["doc_id"] for p in postings), np.int64, m)
-            tf = np.fromiter((p["tf"] for p in postings), np.float64, m)
-            dl = np.fromiter((p["dl"] for p in postings), np.float64, m)
-            idf = math.log(1.0 + (n_ - df_t + 0.5) / (df_t + 0.5))
-            term_arrays[term] = (docs, tf, dl, idf)
-        out_q, out_d, out_s = [], [], []
-        for qid in sorted(qterms_):
-            all_docs, all_contrib = [], []
-            for t, qtf in qterms_[qid]:
-                e = term_arrays.get(t)
-                if e is None:
-                    continue
-                docs, tf, dl, idf = e
-                w = qtf * idf
-                contrib = (
-                    w * tf * (k1_ + 1.0) / (tf + k1_ * (1.0 - b_ + b_ * dl / avgdl_))
-                )
-                all_docs.append(docs)
-                all_contrib.append(contrib)
-            if not all_docs:
-                continue
-            docs = np.concatenate(all_docs)
-            contrib = np.concatenate(all_contrib)
-            uniq, inv = np.unique(docs, return_inverse=True)
-            scores = np.bincount(inv, weights=contrib, minlength=len(uniq))
-            if allowed is not None:
-                # fq membership AFTER accumulation (scores are corpus-true)
-                # and BEFORE top-k (ranks exact within the allowed set)
-                idx = np.searchsorted(allowed, uniq)
-                mask = (idx < len(allowed)) & (
-                    np.take(allowed, np.minimum(idx, len(allowed) - 1)) == uniq
-                ) if len(allowed) else np.zeros(len(uniq), dtype=bool)
-                uniq, scores = uniq[mask], scores[mask]
-                if not len(uniq):
-                    continue
-            top_d, top_s = _local_topk_with_ties(uniq, scores, k_)
-            out_q.extend([qid] * len(top_d))
-            out_d.extend(top_d.tolist())
-            out_s.extend(top_s.tolist())
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(out_q, dtype="int64"),
-                "doc_id": pd.Series(out_d, dtype="int64"),
-                "score": pd.Series(out_s, dtype="float64"),
-            }
-        )
-
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_pdf(pdf, None)
-
-    def fn_fq(key, pdf: pd.DataFrame, apdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_pdf(pdf, np.sort(apdf["doc_id"].to_numpy(dtype=np.int64)))
-
-    # positions are projected AWAY before the shuffle — BM25 never reads
-    # them, and they dominate the postings payload
-    narrowed = index.postings.where(term_in(F.col("term"), terms)).select(
-        "seg",
-        "term",
-        F.transform(
-            "postings",
-            lambda p: F.struct(
-                p["doc_id"].alias("doc_id"), p["tf"].alias("tf"), p["dl"].alias("dl")
-            ),
-        ).alias("postings"),
-    )
-    if not isinstance(dfs, dict):
-        narrowed = narrowed.join(F.broadcast(dfs), "term")
-    if allowed_docs is None:
-        scored = narrowed.groupBy("seg").applyInPandas(fn, schema=_SCORE_SCHEMA)
-    else:
-        # the fq ids, co-partitioned on the index's own seg hash; no
-        # distinct: the kernel's sorted-array membership is unaffected by
-        # repeats, and the cogroup shuffles them anyway
-        seg_of = F.pmod(F.xxhash64("doc_id"), F.lit(index.num_segments)).cast(
-            "int"
-        )
-        fq = allowed_docs.select(F.col("doc_id").cast("long").alias("doc_id")).select(
-            seg_of.alias("seg"), "doc_id"
-        )
-        scored = (
-            narrowed.groupBy("seg")
-            .cogroup(fq.groupBy("seg"))
-            .applyInPandas(fn_fq, schema=_SCORE_SCHEMA)
-        )
-    return rank_window(scored, k)

@@ -88,12 +88,11 @@ hold every MUST phrase and no MUST_NOT phrase. Both engines call it:
   terms; positions only for phrase terms) are scanned once, grouped by
   ``seg`` and handed to a groupBy("seg").applyInPandas kernel with the
   plans and df in a broadcast. A document's postings all live in its
-  segment (seg = pmod(xxhash64(doc_id), S), index/build.py), so each
-  segment's call sees whole documents and emits its exact part of the
-  match set — the shape of bm25._bm25_topk_segmented, with no
+  segment (index.build.seg_of), so each segment's call sees whole
+  documents and emits its exact part of the match set, with no
   per-clause joins. boolean_matched_scores feeds it parsed queries;
-  bm25_topk / wand_topk feed it bags whose multi-word synonyms gate
-  their constituents.
+  segmented bm25_topk feeds it bags, and wand_topk the bags whose
+  multi-word synonyms gate their constituents.
 
 phrase_docs is the one phrase matcher: evaluate_boolean calls it, and
 phrase_relation runs it per segment for phrase_match and
@@ -112,7 +111,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from solrtexttagger_spark.analysis.core import tokenize
-from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.index.build import InvertedIndex, seg_of
 from solrtexttagger_spark.index.compression import (
     decode_positions_block,
     decode_postings_block,
@@ -987,6 +986,32 @@ def bag_plan(bag: dict, synonyms: dict[str, list[str]] | None) -> BooleanPlan:
     return BooleanPlan(bag, gated=phrases)
 
 
+def fq_by_seg(allowed_docs: DataFrame, num_segments: int) -> DataFrame:
+    """(seg, doc_id) of an fq relation, keyed by the index's own doc hash
+    so it cogroups with a seg kernel's input. No distinct: a repeated id
+    only repeats in the kernel's sorted membership array."""
+    doc_id = F.col("doc_id").cast("long").alias("doc_id")
+    return allowed_docs.select(doc_id).select(seg_of(num_segments).alias("seg"), "doc_id")
+
+
+def apply_by_seg(rows: DataFrame, kernel, schema, fq: DataFrame | None = None) -> DataFrame:
+    """``rows`` grouped by seg into ``kernel(seg, pdf, allowed)``, one
+    pandas call per segment. ``allowed`` is None without ``fq``
+    (fq_by_seg), else the segment's fq ids as a sorted array, met
+    through a cogroup: no driver collect, no broadcast of a
+    potentially corpus-sized filter."""
+    if fq is None:
+        return rows.groupBy("seg").applyInPandas(
+            lambda key, pdf: kernel(int(key[0]), pdf, None), schema=schema
+        )
+    return rows.groupBy("seg").cogroup(fq.groupBy("seg")).applyInPandas(
+        lambda key, pdf, apdf: kernel(
+            int(key[0]), pdf, np.sort(apdf["doc_id"].to_numpy(dtype=np.int64))
+        ),
+        schema=schema,
+    )
+
+
 def plan_scores(
     index,
     plans: dict[int, BooleanPlan],
@@ -1033,7 +1058,7 @@ def plan_scores(
         plans, dfs if isinstance(dfs, dict) else None, k1, b, avgdl, n,
     ))
 
-    def kernel(pdf: pd.DataFrame, allowed: np.ndarray | None) -> pd.DataFrame:
+    def kernel(_seg: int, pdf: pd.DataFrame, allowed: np.ndarray | None) -> pd.DataFrame:
         plans_, df_of, k1_, b_, avgdl_, n_ = bc.value
         out_q, out_d, out_s = [], [], []
         if len(pdf):
@@ -1062,26 +1087,8 @@ def plan_scores(
 
     if not isinstance(dfs, dict):
         narrowed = narrowed.join(F.broadcast(dfs), "term")
-    if allowed_docs is None:
-        return narrowed.groupBy("seg").applyInPandas(
-            lambda _key, pdf: kernel(pdf, None), schema=_SCORE_SCHEMA
-        )
-    # fq ids co-partitioned with the postings on the index's own seg hash
-    # (no distinct: a repeated id only repeats in the sorted allowed array)
-    seg_of = F.pmod(F.xxhash64("doc_id"), F.lit(index.num_segments)).cast("int")
-    fq = allowed_docs.select(F.col("doc_id").cast("long").alias("doc_id")).select(
-        seg_of.alias("seg"), "doc_id"
-    )
-    return (
-        narrowed.groupBy("seg")
-        .cogroup(fq.groupBy("seg"))
-        .applyInPandas(
-            lambda _key, pdf, apdf: kernel(
-                pdf, np.sort(apdf["doc_id"].to_numpy(dtype=np.int64))
-            ),
-            schema=_SCORE_SCHEMA,
-        )
-    )
+    fq = None if allowed_docs is None else fq_by_seg(allowed_docs, index.num_segments)
+    return apply_by_seg(narrowed, kernel, _SCORE_SCHEMA, fq)
 
 
 def boolean_matched_scores(

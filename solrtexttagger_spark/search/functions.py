@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.index.build import InvertedIndex, seg_of
 from solrtexttagger_spark.plans import array_lit, local_frame
 from solrtexttagger_spark.search.bm25 import (
     B,
@@ -120,10 +120,7 @@ def explain_scores(
     avgdl = float(index.avgdl) if index.avgdl else 1.0
     ids_df = local_frame(
         spark, [(int(i),) for i in sorted(set(doc_ids))], "doc_id long"
-    ).withColumn(
-        "seg",
-        F.pmod(F.xxhash64("doc_id"), F.lit(index.num_segments)).cast("int"),
-    )
+    ).withColumn("seg", seg_of(index.num_segments))
     pruned = index.postings.join(
         F.broadcast(ids_df.select("seg").distinct()), "seg", "left_semi"
     )

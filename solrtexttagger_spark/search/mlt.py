@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex, doc_term_rows
 from solrtexttagger_spark.plans import local_frame
-from solrtexttagger_spark.search.bm25 import B, K1, bm25_topk
+from solrtexttagger_spark.search.bm25 import _RANKED_SCHEMA, B, K1, bm25_topk
 
 
 def mlt_probe_terms(
@@ -115,9 +115,7 @@ def more_like_this(
     spark = spark or docs_df.sparkSession
     probes = [int(p) for p in probe_doc_ids]
     if not probes:
-        return local_frame(
-            spark, [], "query_id long, rank long, doc_id long, score double"
-        )
+        return local_frame(spark, [], _RANKED_SCHEMA)
     keywords = mlt_probe_terms(
         index,
         docs_df,
@@ -130,9 +128,7 @@ def more_like_this(
     ).collect()
     qdf_rows = [(int(r["doc_id"]), r["term"], 1) for r in keywords]
     if not qdf_rows:
-        return local_frame(
-            spark, [], "query_id long, rank long, doc_id long, score double"
-        )
+        return local_frame(spark, [], _RANKED_SCHEMA)
     qdf = local_frame(spark, qdf_rows, "query_id long, term string, qtf int")
     # rank one deeper, then drop self-matches and re-rank: the probe doc
     # almost always tops its own term query

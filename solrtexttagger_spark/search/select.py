@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from solrtexttagger_spark.index.build import InvertedIndex
 from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import (
+    _RANKED_SCHEMA,
     B,
     K1,
     analyze_query_terms,
@@ -381,7 +382,7 @@ def _hl_section(index, docs_df, query, page_rows, hl_window, text_col, spark):
             (0, int(r["rank"]), int(r["doc_id"]), float(r["score"]))
             for r in page_rows
         ],
-        "query_id long, rank long, doc_id long, score double",
+        _RANKED_SCHEMA,
     )
     rows = snippets(
         index, docs_df, [(0, query)], window=hl_window, text_col=text_col,

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.index.build import InvertedIndex, seg_of
 from solrtexttagger_spark.plans import array_lit, local_frame
 
 
@@ -65,10 +65,7 @@ def term_vectors(
         return local_frame(spark, [], schema)
     ids_df = local_frame(
         spark, [(int(i),) for i in sorted(set(doc_ids))], "doc_id long"
-    ).withColumn(
-        "seg",
-        F.pmod(F.xxhash64("doc_id"), F.lit(index.num_segments)).cast("int"),
-    )
+    ).withColumn("seg", seg_of(index.num_segments))
     pruned = index.postings.join(
         F.broadcast(ids_df.select("seg").distinct()), "seg", "left_semi"
     )

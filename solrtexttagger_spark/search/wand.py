@@ -13,9 +13,9 @@ bounds every document score in that segment. Pruning:
   phase 2: decode + score only segments with ub(q, seg) > θ_q; all other
           segments are provably irrelevant and never decoded
 
-Scoring inside a segment is vectorized numpy (decode blocks, bincount-sum
-contributions per doc, argpartition top-k). Results are rank-identical to
-the exhaustive DataFrame scorer (search/bm25.py) up to float-sum ordering.
+Scoring is boolean.evaluate_boolean over the kept blocks' decoded arrays,
+the one Python BM25 sum, so results are bit-identical to LocalSearcher
+and segmented bm25_topk.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from solrtexttagger_spark.index.compressed import CompressedIndex
 from solrtexttagger_spark.index.compression import (
@@ -33,9 +33,10 @@ from solrtexttagger_spark.index.compression import (
 )
 from solrtexttagger_spark.plans import local_frame, term_in
 from solrtexttagger_spark.search.bm25 import (
+    _RANKED_SCHEMA,
+    _SCORE_SCHEMA,
     K1,
     B,
-    _local_topk_with_ties,
     analyze_query_terms,
     rank_window,
 )
@@ -43,25 +44,19 @@ from solrtexttagger_spark.search.boolean import (
     BooleanPlan,
     _present,
     _ranges,
+    _term_arrays,
+    apply_by_seg,
     bag_plan,
     block_arrays,
     boolean_plan,
     evaluate_boolean,
+    fq_by_seg,
     fuzzy_member_weights,
     parse_boolean_query,
     parse_marker,
     plan_scores,
     positions_csr,
 )
-
-_SCORE_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.LongType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
-
 
 _THETA_EPS = 1e-9  # ulp slack between the bound and the score arithmetic
 
@@ -75,24 +70,40 @@ def reset_query_caches(cindex) -> None:
     cindex.termdict.clear()
 
 
+def _local_topk_with_ties(uniq: np.ndarray, scores: np.ndarray, k: int):
+    """Deterministic per-segment top-k keeping everything tied with the
+    k-th score (ties must reach the final doc_id-asc window)."""
+    if len(uniq) > k:
+        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+        keep = np.nonzero(scores >= kth)[0]
+        order = keep[np.lexsort((uniq[keep], -scores[keep]))]
+    else:
+        order = np.lexsort((uniq, -scores))
+    return uniq[order], scores[order]
+
+
 def _score_segment(
-    qterms,
-    term_blocks,
-    k,
+    bag: dict,
+    weights: dict,
+    term_blocks: dict,
+    k: int,
+    scoring: tuple,
     *,
-    theta: float = -math.inf,
-    shard_f: dict | None = None,
-    cache: dict | None = None,
-    stats: dict | None = None,
+    theta: float,
+    shard_f: dict,
+    cache: dict,
+    stats: dict,
     allowed: np.ndarray | None = None,
 ):
-    """qterms: [(term, weight=idf*qtf, k1, b, avgdl)];
-    term_blocks: {term: [block bytes | (block bytes, f_ub_block)]}.
-    Returns (doc_ids, scores) of the local top-k (+ k-th ties).
-    ``allowed`` (sorted doc-id array) is Solr fq membership, applied AFTER
-    accumulation (scores stay corpus-true) and BEFORE top-k (ranks exact
-    within the allowed set) — a doc subset only removes candidates, so
-    every block/segment upper bound stays a sound over-estimate.
+    """One query's local top-k (+ k-th ties) in one segment: (doc_ids,
+    scores). ``bag``: {term: qtf}; ``weights``: {term: idf*qtf} of its
+    indexed terms, term-sorted; ``term_blocks``: {term: [(block bytes,
+    f_ub of the block)]}; ``scoring``: (df, n, k1, b, avgdl) of
+    evaluate_boolean and its BM25 operands. ``allowed`` (sorted doc-id
+    array) is Solr fq membership, applied AFTER scoring (scores stay
+    corpus-true) and BEFORE top-k (ranks exact within the allowed set) —
+    a doc subset only removes candidates, so every block/segment upper
+    bound stays a sound over-estimate.
 
     Intra-segment block skipping (sound): a block B of term t can be skipped
     for this query when  w_t*f_ub(B) + Σ_{t'≠t} w_t'*f_ub(t', seg) < θ — no
@@ -101,51 +112,28 @@ def _score_segment(
     Docs emitted with partial scores are all provably < θ and rank below the
     final top-k. ``cache`` shares decoded blocks across the segment's
     queries; ``stats`` accumulates {'blocks_total', 'blocks_skipped'}."""
-    all_docs, all_contrib = [], []
-    for term, weight, k1, b, avgdl in qterms:
+    df, n, k1, b, avgdl = scoring
+    parts: dict[str, list] = {}
+    for term, weight in weights.items():
         blks = term_blocks.get(term)
         if not blks:
             continue
         others = 0.0
-        if shard_f is not None and theta != -math.inf:
-            for t2, w2, *_ in qterms:
+        if theta != -math.inf:
+            for t2, w2 in weights.items():
                 if t2 != term and t2 in shard_f:
                     others += w2 * shard_f[t2]
-        for i, entry in enumerate(blks):
-            f_blk = None
-            blk = entry
-            if isinstance(entry, tuple):
-                blk, f_blk = entry
-            if stats is not None:
-                stats["blocks_total"] = stats.get("blocks_total", 0) + 1
-            if (
-                f_blk is not None
-                and theta != -math.inf
-                and weight * f_blk + others < theta - _THETA_EPS
-            ):
-                if stats is not None:
-                    stats["blocks_skipped"] = stats.get("blocks_skipped", 0) + 1
+        for i, (blk, f_blk) in enumerate(blks):
+            stats["blocks_total"] += 1
+            if theta != -math.inf and weight * f_blk + others < theta - _THETA_EPS:
+                stats["blocks_skipped"] += 1
                 continue
             key = (term, i)
-            decoded = cache.get(key) if cache is not None else None
-            if decoded is None:
-                decoded = decode_postings_block(bytes(blk))
-                if cache is not None:
-                    cache[key] = decoded
-            doc_ids, tfs, dls = decoded
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            contrib = (
-                weight * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-            )
-            all_docs.append(doc_ids)
-            all_contrib.append(contrib)
-    if not all_docs:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    docs = np.concatenate(all_docs)
-    contrib = np.concatenate(all_contrib)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    scores = np.bincount(inv, weights=contrib, minlength=len(uniq))
+            if key not in cache:
+                cache[key] = decode_postings_block(bytes(blk))
+            parts.setdefault(term, []).append((*cache[key], None))
+    postings, _ = _term_arrays(parts, k1, b, avgdl)
+    uniq, scores = evaluate_boolean(BooleanPlan(bag), postings, {}, df, n)
     if allowed is not None:
         keep = _present(uniq, allowed)
         uniq, scores = uniq[keep], scores[keep]
@@ -185,7 +173,7 @@ class LocalSearcher:
 
     Collects the (term, seg, block) rows once (optionally restricted to a
     term subset for huge indexes) and answers top-k queries in pure
-    numpy — no Spark jobs per query. Rank-identical to wand_topk/bm25_topk.
+    numpy — no Spark jobs per query. Bit-identical to wand_topk/bm25_topk.
     """
 
     def __init__(
@@ -597,23 +585,13 @@ def wand_topk(
     n = float(cindex.doc_count)
     avgdl = float(cindex.avgdl) if cindex.avgdl else 1.0
     k_eff = start + k  # pruning must preserve the top start+k, not just k
-    allowed_by_seg = None
+    fq = None
     if allowed_docs is not None:
-        # repeated fq ids are harmless in the kernel's sorted membership
-        # array, so no distinct (one exchange fewer ahead of the cogroup)
-        allowed_by_seg = (
-            allowed_docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-            .withColumn(
-                "seg",
-                F.pmod(F.xxhash64("doc_id"), F.lit(cindex.num_segments)).cast(
-                    "int"
-                ),
-            )
-        )
+        fq = fq_by_seg(allowed_docs, cindex.num_segments)
 
     terms = sorted({t for bag in qbags.values() for t in bag})
     if not terms:
-        return local_frame(spark, [], "query_id long, rank long, doc_id long, score double")
+        return local_frame(spark, [], _RANKED_SCHEMA)
 
     # Phase 0 reads only the term dictionary (index/termdict.py): one
     # lookup collect for the terms it has not seen, none for a warm query.
@@ -624,49 +602,38 @@ def wand_topk(
         cindex.blocks, terms, bounds=True
     )
     df_map = {t: e.df for t, e in info.items() if e.df is not None}
-    weights = {}  # (qid, term) -> idf*qtf
-    for qid, bag in qbags.items():
-        for t, qtf in bag.items():
-            if t in df_map:
-                idf = math.log(1.0 + (n - df_map[t] + 0.5) / (df_map[t] + 0.5))
-                weights[(qid, t)] = idf * qtf
-    qterm_list = {
-        qid: [(t, weights[(qid, t)], k1, b, avgdl) for t in sorted(bag) if (qid, t) in weights]
-        for qid, bag in qbags.items()
-    }
 
     # driver-local serving path for small posting volumes: one collect,
     # numpy scoring, no executor round-trips. Bypassed under fq — the
     # filter relation lives on the cluster (see docstring).
-    total_df = sum(df_map.values())
-    if total_df <= local_threshold_postings and allowed_by_seg is None:
-        by_seg: dict[int, dict] = {}
-        for t, blks in cindex.termdict.blocks(cindex.blocks, terms).items():
-            for seg, blk in blks:
-                by_seg.setdefault(seg, {}).setdefault(t, []).append(blk)
+    if sum(df_map.values()) <= local_threshold_postings and fq is None:
+        fetched = cindex.termdict.blocks(cindex.blocks, terms)
+        postings, _ = block_arrays(
+            ((t, blk, None) for t, blks in fetched.items() for _seg, blk in blks),
+            k1, b, avgdl,
+        )
         out = []
-        for qid, qterms in qterm_list.items():
-            if not qterms:
-                continue
-            cand_docs, cand_scores = [], []
-            for term_blocks in by_seg.values():
-                docs, scores = _score_segment(qterms, term_blocks, k_eff)
-                cand_docs.extend(docs.tolist())
-                cand_scores.extend(scores.tolist())
-            order = sorted(
-                range(len(cand_docs)),
-                key=lambda i: (-cand_scores[i], cand_docs[i]),
-            )[start : start + k]
-            for rank, i in enumerate(order, start=start + 1):
-                out.append((qid, rank, cand_docs[i], float(cand_scores[i])))
+        for qid, bag in sorted(qbags.items()):
+            docs, scores = evaluate_boolean(BooleanPlan(bag), postings, {}, df_map, n)
+            page = np.lexsort((docs, -scores))[start : start + k]
+            out.extend(
+                (qid, rank, int(docs[i]), float(scores[i]))
+                for rank, i in enumerate(page, start=start + 1)
+            )
         if prune_stats is not None:
-            n_segs = sum(len(v) for v in by_seg.values())
+            n_segs = len({(t, seg) for t, blks in fetched.items() for seg, _ in blks})
             prune_stats.update(
                 {"segments_total": n_segs, "segments_scored": n_segs, "local": True}
             )
-        return local_frame(
-            spark, out, "query_id long, rank long, doc_id long, score double"
-        )
+        return local_frame(spark, out, _RANKED_SCHEMA)
+
+    weights = {  # qid -> {term: idf*qtf}, term-sorted
+        qid: {
+            t: math.log(1.0 + (n - df_map[t] + 0.5) / (df_map[t] + 0.5)) * bag[t]
+            for t in sorted(bag) if t in df_map
+        }
+        for qid, bag in qbags.items()
+    }
 
     # phase 0: metadata-only upper bounds per (query, seg): each term's
     # shard bound, the max of its blocks' bounds evaluated here per call
@@ -679,8 +646,8 @@ def wand_topk(
             shard_ub[(t, s)] = max(f_ub, shard_ub.get((t, s), f_ub))
     ub: dict[tuple[int, int], float] = {}
     for (term, seg), f_ub in shard_ub.items():
-        for qid in qbags:
-            w = weights.get((qid, term))
+        for qid, qweights in weights.items():
+            w = qweights.get(term)
             if w is not None:
                 key = (qid, seg)
                 ub[key] = ub.get(key, 0.0) + w * f_ub
@@ -710,15 +677,14 @@ def wand_topk(
         for (term, seg), f_ub in shard_ub.items():
             if seg in seg_to_q:
                 shard_f_by_seg.setdefault(seg, {})[term] = f_ub
-        bc = spark.sparkContext.broadcast(
-            (seg_to_q, qterm_list, k_eff, thetas or {}, shard_f_by_seg, k1, b, avgdl)
-        )
+        bc = spark.sparkContext.broadcast((
+            seg_to_q, qbags, weights, k_eff, thetas or {}, shard_f_by_seg,
+            (df_map, n, k1, b, avgdl),
+        ))
 
-        def _score_frames(key, pdf: pd.DataFrame, allowed) -> pd.DataFrame:
-            seg = int(key[0])
-            seg_to_q_, qterms_, k_, thetas_, shard_f_by_seg_, k1_, b_, avgdl_ = bc.value
-            qids = seg_to_q_.get(seg, [])
-            shard_f = shard_f_by_seg_.get(seg, {})
+        def kernel(seg: int, pdf: pd.DataFrame, allowed) -> pd.DataFrame:
+            seg_to_q_, bags_, weights_, k_, thetas_, shard_f_by_seg_, scoring = bc.value
+            _df, _n, k1_, b_, avgdl_ = scoring
             term_blocks: dict[str, list] = {}
             for term, blk, mtf, mdl in zip(
                 pdf["term"], pdf["block"], pdf["max_tf"], pdf["min_dl"]
@@ -727,14 +693,12 @@ def wand_topk(
                 term_blocks.setdefault(term, []).append((blk, f_blk))
             out_q, out_d, out_s = [], [], []
             cache: dict = {}  # decoded blocks shared across the batch's queries
-            stats: dict = {}
-            for qid in qids:
+            stats = {"blocks_total": 0, "blocks_skipped": 0}
+            for qid in seg_to_q_.get(seg, []):
                 docs, scores = _score_segment(
-                    qterms_[qid],
-                    term_blocks,
-                    k_,
+                    bags_[qid], weights_[qid], term_blocks, k_, scoring,
                     theta=thetas_.get(qid, -math.inf),
-                    shard_f=shard_f,
+                    shard_f=shard_f_by_seg_.get(seg, {}),
                     cache=cache,
                     stats=stats,
                     allowed=allowed,
@@ -742,8 +706,8 @@ def wand_topk(
                 out_q.extend([qid] * len(docs))
                 out_d.extend(docs.tolist())
                 out_s.extend(scores.tolist())
-            blocks_total_acc.add(stats.get("blocks_total", 0))
-            blocks_skipped_acc.add(stats.get("blocks_skipped", 0))
+            blocks_total_acc.add(stats["blocks_total"])
+            blocks_skipped_acc.add(stats["blocks_skipped"])
             return pd.DataFrame(
                 {
                     "query_id": pd.Series(out_q, dtype="int64"),
@@ -752,24 +716,10 @@ def wand_topk(
                 }
             )
 
-        def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            return _score_frames(key, pdf, None)
-
-        def fn_fq(key, pdf: pd.DataFrame, apdf: pd.DataFrame) -> pd.DataFrame:
-            return _score_frames(
-                key, pdf, np.sort(apdf["doc_id"].to_numpy(dtype=np.int64))
-            )
-
         segs_needed = sorted(seg_to_q)
-        seg_blocks = blocks.where(F.col("seg").isin(segs_needed))
-        if allowed_by_seg is None:
-            return seg_blocks.groupBy("seg").applyInPandas(fn, schema=_SCORE_SCHEMA)
-        return (
-            seg_blocks.groupBy("seg")
-            .cogroup(
-                allowed_by_seg.where(F.col("seg").isin(segs_needed)).groupBy("seg")
-            )
-            .applyInPandas(fn_fq, schema=_SCORE_SCHEMA)
+        seg_fq = None if fq is None else fq.where(F.col("seg").isin(segs_needed))
+        return apply_by_seg(
+            blocks.where(F.col("seg").isin(segs_needed)), kernel, _SCORE_SCHEMA, seg_fq
         )
 
     # adaptive single-wave: when a query's candidate bounds are nearly
@@ -816,6 +766,8 @@ def wand_topk(
     # phase 2: only segments whose upper bound can reach θ. >= (not >): a
     # segment whose bound EQUALS θ may hold a doc scoring exactly θ with a
     # smaller doc_id, which wins the (score desc, doc_id asc) tie-break.
+    # The bound and the score round differently, so equal ones compare
+    # within _THETA_EPS.
     rest = {}
     scored_segs = {qid: set(first_seg.get(qid, set())) for qid in qbags}
     for qid in flat_q:
@@ -823,7 +775,7 @@ def wand_topk(
     for (qid, seg), bound in ub.items():
         if qid in flat_q or seg in scored_segs.get(qid, set()):
             continue
-        if bound >= theta.get(qid, -math.inf):
+        if bound >= theta.get(qid, -math.inf) - _THETA_EPS:
             rest.setdefault(qid, set()).add(seg)
             scored_segs[qid].add(seg)
 
@@ -871,7 +823,7 @@ def wand_topk(
             phase2a_local = _local_scores(spark, rows2a)
             rest = {qid: segs for qid, segs in rest.items() if qid not in head}
             for qid, segs in tail.items():
-                kept = {s for s in segs if ub[(qid, s)] >= theta.get(qid, -math.inf)}
+                kept = {s for s in segs if ub[(qid, s)] >= theta.get(qid, -math.inf) - _THETA_EPS}
                 scored_segs[qid] -= segs - kept  # dropped by the tighter θ
                 if kept:
                     rest[qid] = kept
@@ -896,7 +848,7 @@ def wand_topk(
 
     parts = [p for p in (flat_df, phase1_local, phase2a_local, phase2) if p is not None]
     if not parts:
-        return local_frame(spark, [], "query_id long, rank long, doc_id long, score double")
+        return local_frame(spark, [], _RANKED_SCHEMA)
     allscores = parts[0]
     for p in parts[1:]:
         allscores = allscores.unionAll(p)

@@ -34,7 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from solrtexttagger_spark.index.build import doc_term_rows
+from solrtexttagger_spark.index.build import doc_term_rows, seg_of
 from solrtexttagger_spark.index.compressed import _fs_read_text, _fs_write_text
 
 
@@ -124,10 +124,7 @@ def _aggregate_rows(rows: DataFrame, num_segments: int) -> DataFrame:
     output shape)."""
     elem = F.struct("doc_id", "tf", "dl", "positions")
     return (
-        rows.withColumn(
-            "seg",
-            F.pmod(F.xxhash64("doc_id"), F.lit(num_segments)).cast("int"),
-        )
+        rows.withColumn("seg", seg_of(num_segments))
         .groupBy("term", "seg")
         .agg(
             F.sort_array(F.collect_list(elem)).alias("postings"),

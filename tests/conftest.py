@@ -1,6 +1,5 @@
 import os
 import sys
-from contextlib import contextmanager
 
 import pytest
 
@@ -22,35 +21,10 @@ def sf_dir():
     return SF_DIR
 
 
-@contextmanager
-def _count_collects():
-    # patch the CONCRETE class (pyspark.sql.DataFrame is an ABC in Spark 4)
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    calls = []
-    orig = DataFrame.collect
-
-    def counting(self):
-        calls.append(1)
-        return orig(self)
-
-    DataFrame.collect = counting
-    try:
-        yield calls
-    finally:
-        DataFrame.collect = orig
-
-
-@pytest.fixture
-def count_collects():
-    """``with count_collects() as calls: ...`` records one entry in
-    ``calls`` per DataFrame.collect made inside the block."""
-    return _count_collects
-
-
 def _build_jobs(spark, build):
-    """(relation, Spark jobs run while ``build()`` constructs it). A job
-    group sees every job, localCheckpoint ones included."""
+    """(what ``build()`` returns, the Spark jobs it ran): the tests' one
+    job counter. A job group sees every job, AQE stage, broadcast and
+    localCheckpoint ones included."""
     import uuid
 
     sc = spark.sparkContext

@@ -366,7 +366,9 @@ def test_wand_multi_block_shard_bounds_prune(spark):
     above it. The doc ids place the docs (seg = xxhash64(doc_id) mod 8):
     long and short docs share segs 0, 2, 3 and 5, short ones alone fill
     segs 4 and 7 (enough bound spread for the pruned phases), and the top
-    doc 999 is alone in seg 6."""
+    doc 999 is alone in seg 6. Seg 1 holds long docs only: its bound
+    equals the phase-1 threshold (a long doc's score), so it is scored
+    for a possible doc-id tie under one block per shard too."""
     long_doc = " ".join(["common"] * 20 + ["pad"] * 80)
     short_doc = " ".join(["common"] + ["pad"] * 14)
     docs = [(d, long_doc) for d in (1, 2, 3, 7, 12)]
@@ -383,7 +385,7 @@ def test_wand_multi_block_shard_bounds_prune(spark):
         assert [(r["rank"], r["doc_id"]) for r in rows] == [(1, 999)]
         scored[mbp] = stats["segments_scored"]
         c.blocks.unpersist()
-    assert scored == {None: 5, 1: 1}, scored
+    assert scored == {None: 6, 1: 1}, scored
 
 
 def test_local_searcher_rank_identical(spark, corpus_index):

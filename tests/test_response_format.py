@@ -13,6 +13,7 @@ from solrtexttagger_spark.tagging.response import (
     render_response_json,
     render_response_xml,
 )
+from tests.conftest import _build_jobs
 
 # TaggerTest.java N enum: ordinal ids, names with '_' -> ' '
 NAMES = [
@@ -188,7 +189,7 @@ def test_select_response_golden(spark):
     assert 'numFound="2"' in xml3 and "de" not in xml3
 
 
-def test_select_single_job_and_max_score(spark, count_collects):
+def test_select_single_job_and_max_score(spark):
     """Round-4 verdict #6 + round-5 advice: one action per /select request
     (numFound/maxScore ride the scoring pass — no second corpus job), and
     maxScore is the rank-1 score even when start pages past it; an empty
@@ -209,11 +210,10 @@ def test_select_single_job_and_max_score(spark, count_collects):
     # per-request) so the counter below sees only the request's own action
     render_select_xml(idx, df, "alpha", fl=["lang"], k=1, spark=spark)
 
-    with count_collects() as calls:
-        xml2 = render_select_xml(
-            idx, df, "alpha beta", fl=["lang"], k=2, start=2, spark=spark
-        )
-    assert len(calls) == 1  # page + numFound + maxScore in ONE action
+    xml2, jobs = _build_jobs(spark, lambda: render_select_xml(
+        idx, df, "alpha beta", fl=["lang"], k=2, start=2, spark=spark
+    ))
+    assert jobs == 7  # page + numFound + maxScore in ONE collect
     # maxScore = the rank-1 score (1.2814), NOT the page-2 head score
     assert 'numFound="3" start="2" maxScore="1.2814"' in xml2
     assert xml2.count("<doc>") == 1
@@ -337,7 +337,7 @@ def test_select_highlight_section_golden(spark):
     assert "<str>beta &lt;b&gt; delta</str>" in xml2
 
 
-def test_select_fully_dressed_job_budget(spark, count_collects):
+def test_select_fully_dressed_job_budget(spark):
     """Round-6 (r5 verdict #2): a page + field-facet + MULTIPLE
     facet.range + hl request runs exactly 3 actions — the page, ONE
     combined facet job covering every section, and one tiny snippet job
@@ -360,15 +360,14 @@ def test_select_fully_dressed_job_budget(spark, count_collects):
     idx.postings.persist().count()
     render_select_xml(idx, df, "alpha", fl=["lang"], k=1, spark=spark)  # warm stats
 
-    with count_collects() as calls:
-        xml = render_select_xml(
-            idx, df, "alpha beta", fl=["lang"], k=2,
-            facet_cols=["lang"],
-            facet_ranges=[("n", 0, 40, 20), ("m", 0, 4, 2)],
-            hl=True, spark=spark,
-        )
+    xml, jobs = _build_jobs(spark, lambda: render_select_xml(
+        idx, df, "alpha beta", fl=["lang"], k=2,
+        facet_cols=["lang"],
+        facet_ranges=[("n", 0, 40, 20), ("m", 0, 4, 2)],
+        hl=True, spark=spark,
+    ))
     idx.postings.unpersist()
-    assert len(calls) == 3  # page + one facet job (all sections) + hl
+    assert jobs == 14  # page + one facet collect (all sections) + hl
     # both range columns rendered, zero-filled, from the one job
     assert '<lst name="n"><lst name="counts">' in xml
     assert '<lst name="m"><lst name="counts">' in xml
@@ -465,7 +464,7 @@ def test_facet_query_counts(spark):
     assert facet_query_counts(idx, "alpha", [], spark=spark) == {}
 
 
-def test_select_facet_queries_golden(spark, count_collects):
+def test_select_facet_queries_golden(spark):
     """facet.query block in the golden writers: first inside facet_counts
     (Solr's section order), one <int name="<query>"> per sub-query with
     the query string attr-escaped; JSON mirrors {"facet_queries": {q: n}}.
@@ -489,15 +488,14 @@ def test_select_facet_queries_golden(spark, count_collects):
     idx.postings.persist().count()
     render_select_xml(idx, df, "alpha", fl=[], k=1, spark=spark)  # warm stats
 
-    with count_collects() as calls:
-        xml = render_select_xml(
-            idx, df, "alpha beta", fl=["lang"], k=2,
-            facet_cols=["lang"], facet_ranges=[("n", 0, 40, 20)],
-            facet_queries=["delta", '+alpha "beta gamma"'],
-            hl=True, spark=spark,
-        )
-    # 3-action dressed budget + exactly 1 for ALL facet.query sub-queries
-    assert len(calls) == 4
+    xml, jobs = _build_jobs(spark, lambda: render_select_xml(
+        idx, df, "alpha beta", fl=["lang"], k=2,
+        facet_cols=["lang"], facet_ranges=[("n", 0, 40, 20)],
+        facet_queries=["delta", '+alpha "beta gamma"'],
+        hl=True, spark=spark,
+    ))
+    # the dressed budget + one collect for ALL facet.query sub-queries
+    assert jobs == 22
     assert (
         '<lst name="facet_counts"><lst name="facet_queries">'
         '<int name="delta">2</int>'
@@ -511,7 +509,7 @@ def test_select_facet_queries_golden(spark, count_collects):
     assert js["facet_counts"]["facet_queries"] == {"delta": 2, "epsilon": 0}
 
 
-def test_facet_intervals(spark, count_collects):
+def test_facet_intervals(spark):
     """Solr facet.interval: arbitrary, possibly OVERLAPPING interval sets
     with [inclusive]/(exclusive) brackets, * open endpoints and {!key=}
     aliases — zero extra actions (rides the one combined facet job)."""
@@ -543,16 +541,16 @@ def test_facet_intervals(spark, count_collects):
     idx.postings.persist().count()
     render_select_xml(idx, df, "alpha", fl=[], k=1, spark=spark)  # warm
 
-    with count_collects() as calls:
-        js = json.loads(render_select_json(
-            idx, df, "alpha", fl=[], k=2,
-            facet_cols=["lang"],
-            facet_intervals=[
-                ("n", ["[0,10)", "[5,25]", "(25,*]", "{!key=none}(*,0)"]),
-            ],
-            spark=spark,
-        ))
-    assert len(calls) == 2  # page + ONE combined facet job, intervals free
+    out, jobs = _build_jobs(spark, lambda: render_select_json(
+        idx, df, "alpha", fl=[], k=2,
+        facet_cols=["lang"],
+        facet_intervals=[
+            ("n", ["[0,10)", "[5,25]", "(25,*]", "{!key=none}(*,0)"]),
+        ],
+        spark=spark,
+    ))
+    assert jobs == 12  # page + ONE combined facet collect, intervals free
+    js = json.loads(out)
     # overlapping sets: doc 1 (n=10) counts in [5,25] but not [0,10);
     # doc 0 (n=5) counts in BOTH [0,10) and [5,25]
     assert js["facet_counts"]["facet_intervals"]["n"] == {
