@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from solrtexttagger_spark.plans import array_lit
+
 # Tiny deterministic marker lexicons for the n-gram/stopword language
 # heuristic. (A real pipeline plugs in fastText/CLD3 via a pandas UDF; the
 # operator shape — narrow projection, no shuffle — is identical.)
@@ -24,7 +26,7 @@ def _words(text_col: str):
 
 
 def _ratio(words, marker_list):
-    arr = F.array(*[F.lit(m) for m in marker_list])
+    arr = array_lit(marker_list, "string")
     hits = F.size(F.filter(words, lambda w: F.array_contains(arr, w)))
     return hits.cast("double") / F.size(words).cast("double")
 
@@ -75,7 +77,7 @@ def quality_score(
     mean_len = F.aggregate(
         words, F.lit(0.0), lambda acc, w: acc + F.length(w).cast("double")
     ) / n
-    stop = F.array(*[F.lit(s) for s in STOPWORDS_SQL])
+    stop = array_lit(STOPWORDS_SQL, "string")
     stop_ratio = F.size(F.filter(words, lambda w: F.array_contains(stop, w))).cast(
         "double"
     ) / n
@@ -216,7 +218,7 @@ def ngram_contamination(
             for i in range(len(ws) - n + 1)
         }
     )
-    probe_arr = F.array(*[F.lit(g) for g in probe_grams])
+    probe_arr = array_lit(probe_grams, "string")
     words = _words(text_col)
     grams = F.array_distinct(
         F.when(

@@ -279,7 +279,7 @@ def bm25_topk(
     qbags = {qid: p.score_bag for qid, p in plans.items()}
     # top-level batch scorer: one tiny collect for unseen terms puts
     # exploded_scores on global_df's hit path; never done inside
-    # exploded_scores, which /select's one-job writer embeds
+    # exploded_scores, which other entries embed
     warm_df_cache(index, bag_terms(qbags))
     return rank_window(
         exploded_scores(index, qbags, k1=k1, b=b, allowed_docs=allowed_docs), k, start
@@ -314,12 +314,10 @@ def exploded_scores(
 ) -> DataFrame:
     """Per-(query, matched doc) total BM25 score — the pure-JVM exploded
     scoring relation BEFORE any top-k filter: one broadcast hash join of
-    the query terms + one groupBy(query_id, doc_id) shuffle. Its per-query
-    row count IS Solr's numFound (docs matching >= 1 term, under fq), so
-    /select writers derive numFound + maxScore from this relation in the
-    SAME job as the page (search/select.py) instead of a second corpus
-    pass. qbags: {query_id: {term: qtf}} (pre-analyzed); df comes from
-    global_df, so building the relation runs no action."""
+    the query terms + one groupBy(query_id, doc_id) shuffle, one row per
+    doc matching >= 1 term (under fq). qbags: {query_id: {term: qtf}}
+    (pre-analyzed); df comes from global_df, so building the relation
+    runs no action."""
     n = float(index.doc_count)
     avgdl = float(index.avgdl) if index.avgdl else 1.0
     qrows = [
@@ -356,6 +354,33 @@ def exploded_scores(
             allowed_docs.select("doc_id").distinct(), "doc_id", "left_semi"
         )
     return scores
+
+
+def bag_match_set(
+    index: InvertedIndex,
+    query: str,
+    *,
+    allowed_docs: DataFrame | None = None,
+    id_col: str = "doc_id",
+) -> DataFrame | None:
+    """The distinct (``id_col``) docs holding ANY analyzed term of
+    ``query`` (bag model) under fq, JVM-side; None when the query has no
+    terms: the facet/stats/pivot entries' domain."""
+    terms = sorted(analyze_query_terms(query))
+    if not terms:
+        return None
+    tdf = local_frame(index.postings.sparkSession, [(t,) for t in terms], "term string")
+    matched = (
+        index.postings.join(F.broadcast(tdf), "term")
+        .select(F.explode("postings.doc_id").alias(id_col))
+        .distinct()
+    )
+    if allowed_docs is not None:
+        matched = matched.join(
+            allowed_docs.select(F.col("doc_id").alias(id_col)).distinct(),
+            id_col, "left_semi",
+        )
+    return matched
 
 
 def entry_scores(

@@ -148,6 +148,9 @@ _FUZZY_RE = re.compile(r"^(\w+)~([12])?$")
 _PREFIX_RE = re.compile(r"^(\w+)\*$")
 _WILDCARD_RE = re.compile(r"^(?=.*[*?])[\w*?]+$")
 _BOOST_RE = re.compile(r"^(.+)\^(\d+(?:\.\d+)?)$")
+# Lucene syntax this parser cannot honour: the analyzer would drop it
+# (or read AND/OR/NOT as terms) and silently change the match set
+_UNSUPPORTED = ("AND", "OR", "NOT", "&&", "||", "*:*")
 
 
 def parse_boolean_query(q: str, lowercase: bool = True, field: str | None = None):
@@ -171,7 +174,10 @@ def parse_boolean_query(q: str, lowercase: bool = True, field: str | None = None
     ``"a b"~1^2``) scale every constituent's qtf — the phrase scores
     through its constituents here, so that is the whole boost surface. Leading-wildcard patterns (``*erm`` / ``?erm``) raise like
     Solr's default allowLeadingWildcard=false — without a reversed-term
-    index that rewrite is a full vocabulary scan."""
+    index that rewrite is a full vocabulary scan. The keyword operators
+    ``AND``/``OR``/``NOT`` (uppercase — lowercase ones are terms),
+    ``&&``/``||`` and a ``*:*`` clause raise too: dropping them would
+    silently change the match set."""
     must: dict[str, float] = {}
     should: dict[str, float] = {}
     must_not: set[str] = set()
@@ -236,6 +242,11 @@ def parse_boolean_query(q: str, lowercase: bool = True, field: str | None = None
         bm = _BOOST_RE.match(bare)
         if bm:
             bare, boost = bm.group(1), float(bm.group(2))
+        if bare in _UNSUPPORTED:
+            raise ValueError(
+                f"{bare!r} is not supported in q: write +a +b for a AND b, "
+                "a b for a OR b, -a for NOT a; *:* only as the whole q"
+            )
         fz = _FUZZY_RE.match(bare)
         px = _PREFIX_RE.match(bare)
         wc = None if (fz or px) else _WILDCARD_RE.match(bare)

@@ -25,7 +25,7 @@ from solrtexttagger_spark.plans import local_frame
 from solrtexttagger_spark.search.bm25 import (
     B,
     K1,
-    analyze_query_terms,
+    bag_match_set,
     entry_scores,
 )
 
@@ -46,24 +46,15 @@ def stats_field(
     ``missing`` counts matched docs whose field is NULL (Solr's missing
     stat); stddev is the sample standard deviation (Solr semantics)."""
     spark = spark or docs_df.sparkSession
-    terms = sorted(analyze_query_terms(query))
+    matched = bag_match_set(
+        index, query, allowed_docs=allowed_docs, id_col=id_col
+    )
     schema = (
         "n long, missing long, min_v double, max_v double, sum_v double,"
         " mean_v double, stddev_v double"
     )
-    if not terms:
+    if matched is None:
         return local_frame(spark, [], schema)
-    tdf = local_frame(spark, [(t,) for t in terms], "term string")
-    matched = (
-        index.postings.join(F.broadcast(tdf), "term")
-        .select(F.explode("postings.doc_id").alias(id_col))
-        .distinct()
-    )
-    if allowed_docs is not None:
-        matched = matched.join(
-            allowed_docs.select(F.col("doc_id").alias(id_col)).distinct(),
-            id_col, "left_semi",
-        )
     v = F.col(col).cast("double")
     return docs_df.join(matched, id_col).agg(
         F.count(v).cast("long").alias("n"),

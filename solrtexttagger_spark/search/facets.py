@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
 from solrtexttagger_spark.plans import local_frame
-from solrtexttagger_spark.search.bm25 import analyze_query_terms
+from solrtexttagger_spark.search.bm25 import bag_match_set
 
 
 def facet_counts(
@@ -78,20 +78,11 @@ def facet_counts(
     if sort not in ("count", "index"):
         raise ValueError(f"facet sort must be 'count' or 'index', got {sort!r}")
     spark = spark or docs_df.sparkSession
-    terms = sorted(analyze_query_terms(query))
-    if not terms or not facet_cols:
-        return local_frame(spark, [], "field string, value string, n long")
-    tdf = local_frame(spark, [(t,) for t in terms], "term string")
-    matched = (
-        index.postings.join(F.broadcast(tdf), "term")
-        .select(F.explode("postings.doc_id").alias(id_col))
-        .distinct()
+    matched = bag_match_set(
+        index, query, allowed_docs=allowed_docs, id_col=id_col
     )
-    if allowed_docs is not None:
-        matched = matched.join(
-            allowed_docs.select(F.col("doc_id").alias(id_col)).distinct(),
-            id_col, "left_semi",
-        )
+    if matched is None or not facet_cols:
+        return local_frame(spark, [], "field string, value string, n long")
     joined = docs_df.join(matched, id_col)
     # one exploded (field, value) row per facet col per matched doc: a
     # single groupBy covers every requested field
@@ -194,20 +185,11 @@ def facet_ranges(
     if gap <= 0 or end <= start:
         raise ValueError("need gap > 0 and end > start")
     spark = spark or docs_df.sparkSession
-    terms = sorted(analyze_query_terms(query))
-    if not terms:
-        return local_frame(spark, [], "range_start long, n long")
-    tdf = local_frame(spark, [(t,) for t in terms], "term string")
-    matched = (
-        index.postings.join(F.broadcast(tdf), "term")
-        .select(F.explode("postings.doc_id").alias(id_col))
-        .distinct()
+    matched = bag_match_set(
+        index, query, allowed_docs=allowed_docs, id_col=id_col
     )
-    if allowed_docs is not None:
-        matched = matched.join(
-            allowed_docs.select(F.col("doc_id").alias(id_col)).distinct(),
-            id_col, "left_semi",
-        )
+    if matched is None:
+        return local_frame(spark, [], "range_start long, n long")
     c = F.col(col)
     bucket = (F.floor((c - start) / gap) * gap + start).cast("long")
     counts = (
@@ -240,23 +222,38 @@ def facet_query_matches(
 ) -> DataFrame:
     """Solr ``facet.query`` as a relation: for each sub-query, the count
     of documents in the BASE request's match domain (main ``q``
-    bag-matched, ``fq`` applied) that ALSO satisfy the sub-query — the
-    third Solr facet type next to facet.field and facet.range. Each
-    facet.query is a full boolean-syntax query (clauses, markers,
-    phrases, slop — the whole grammar boolean_bm25_topk accepts); Solr
-    evaluates each against the request DocSet the same way.
+    bag-matched, ``fq`` applied; every ``fq`` doc when ``q`` has no
+    terms) that ALSO satisfy the sub-query — the third Solr facet type
+    next to facet.field and facet.range. Each facet.query is a full
+    boolean-syntax query (clauses, markers, phrases, slop — the whole
+    grammar boolean_bm25_topk accepts); Solr evaluates each against the
+    request DocSet the same way.
 
-    Returns (facet_query string, n long) — one row per requested
-    sub-query, ZERO-FILLED (a sub-query with no matches still appears,
-    n=0, via a literal spine left-join — Solr always echoes every
-    facet.query parameter).
+    Returns (facet_query string, n long, query_id long) — one row per
+    requested sub-query, ZERO-FILLED (a sub-query with no matches still
+    appears, n=0, via a literal spine left-join — Solr always echoes
+    every facet.query parameter)."""
+    domain = bag_match_set(index, base_query, allowed_docs=allowed_docs)
+    return _facet_query_matches(
+        index, facet_queries,
+        domain if domain is not None else allowed_docs,
+        field=field, synonyms=synonyms, spark=spark,
+    )
 
-    One postings pass: all sub-queries resolve through a single
-    boolean_matched_scores batch, the base domain rides as a semi-join
-    on the SAME plan, and the result is one count-per-query aggregate —
-    never a per-facet-query job. At scale this is the same shape as a
-    BM25 batch: cost is one postings scan regardless of how many
-    facet.query parameters the request carries."""
+
+def _facet_query_matches(
+    index: InvertedIndex,
+    facet_queries: list[str],
+    domain: DataFrame | None,
+    *,
+    field: str | None = None,
+    synonyms: dict[str, list[str]] | None = None,
+    spark: SparkSession | None = None,
+) -> DataFrame:
+    """facet_query_matches over a (doc_id) ``domain`` (None: every doc;
+    the /select writers pass their match set): ONE boolean_matched_scores
+    batch for all sub-queries, the domain a semi-join on the same plan,
+    one count aggregate — never a job per facet.query."""
     from solrtexttagger_spark.search.boolean import boolean_matched_scores
 
     spark = spark or index.postings.sparkSession
@@ -270,26 +267,8 @@ def facet_query_matches(
         synonyms=synonyms,
         spark=spark,
     ).select("query_id", "doc_id")
-
-    # base domain: docs matching ANY analyzed term of the main q (the
-    # bag-model match set select/_facet_sections uses), fq-restricted
-    terms = sorted(analyze_query_terms(base_query))
-    if terms:
-        tdf = local_frame(spark, [(t,) for t in terms], "term string")
-        base = (
-            index.postings.join(F.broadcast(tdf), "term")
-            .select(F.explode("postings.doc_id").alias("doc_id"))
-            .distinct()
-        )
-        if allowed_docs is not None:
-            base = base.join(
-                allowed_docs.select("doc_id").distinct(), "doc_id", "left_semi"
-            )
-        fq_matches = fq_matches.join(base, "doc_id", "left_semi")
-    elif allowed_docs is not None:
-        fq_matches = fq_matches.join(
-            allowed_docs.select("doc_id").distinct(), "doc_id", "left_semi"
-        )
+    if domain is not None:
+        fq_matches = fq_matches.join(domain.select("doc_id"), "doc_id", "left_semi")
     counts = fq_matches.groupBy("query_id").agg(F.count("*").alias("n"))
     return spine.join(counts, "query_id", "left").select(
         "facet_query",
@@ -308,17 +287,19 @@ def facet_query_counts(
     synonyms: dict[str, list[str]] | None = None,
     spark: SparkSession | None = None,
 ) -> dict[str, int]:
-    """facet_query_matches collected for the response writers:
-    {facet_query_string: count} in input order, 0 for no matches.
-    ONE action (the relation is one job)."""
+    """facet_query_matches collected: {facet_query_string: count} in
+    input order, 0 for no matches — one collect."""
     if not facet_queries:
         return {}
-    rows = facet_query_matches(
+    return _query_counts(facet_query_matches(
         index, base_query, facet_queries,
         allowed_docs=allowed_docs, field=field, synonyms=synonyms,
         spark=spark,
-    ).collect()
-    by_id = {int(r["query_id"]): int(r["n"]) for r in rows}
+    ), facet_queries)
+
+
+def _query_counts(matches: DataFrame, facet_queries: list[str]) -> dict[str, int]:
+    by_id = {int(r["query_id"]): int(r["n"]) for r in matches.collect()}
     return {q: by_id.get(i, 0) for i, q in enumerate(facet_queries)}
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
 from solrtexttagger_spark.plans import local_frame
-from solrtexttagger_spark.search.bm25 import B, K1, entry_scores
+from solrtexttagger_spark.search.bm25 import B, K1, bag_match_set, entry_scores
 
 
 def grouped_topk(
@@ -161,25 +161,14 @@ def facet_pivot(
     grouping bitmask (grouping(f1)*2^(k-1) + ... + grouping(fk); 0 =
     leaf row) — a SUBTOTAL's NULL is therefore distinguishable from a
     document whose pivot value is genuinely NULL (round-5 advice)."""
-    from solrtexttagger_spark.search.bm25 import analyze_query_terms
-
     spark = spark or docs_df.sparkSession
-    terms = sorted(analyze_query_terms(query))
-    if not terms or not pivot_cols:
+    matched = bag_match_set(
+        index, query, allowed_docs=allowed_docs, id_col=id_col
+    )
+    if matched is None or not pivot_cols:
         schema = ", ".join(f"{c} string" for c in pivot_cols) or "n long"
         return local_frame(
             spark, [], f"{schema}, n long, level long" if pivot_cols else schema
-        )
-    tdf = local_frame(spark, [(t,) for t in terms], "term string")
-    matched = (
-        index.postings.join(F.broadcast(tdf), "term")
-        .select(F.explode("postings.doc_id").alias(id_col))
-        .distinct()
-    )
-    if allowed_docs is not None:
-        matched = matched.join(
-            allowed_docs.select(F.col("doc_id").alias(id_col)).distinct(),
-            id_col, "left_semi",
         )
     joined = docs_df.join(matched, id_col).select(
         *[F.col(c).cast("string").alias(c) for c in pivot_cols]

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
+from solrtexttagger_spark.plans import array_lit
 from solrtexttagger_spark.search.bm25 import B, K1, analyze_query_terms, bm25_topk
 
 
@@ -53,7 +54,7 @@ def snippets(
             for qid, q in queries
             for x in (
                 F.lit(int(qid)),
-                F.array(*[F.lit(t) for t in sorted(analyze_query_terms(q))]),
+                array_lit(sorted(analyze_query_terms(q)), "string"),
             )
         ]
     )

@@ -103,8 +103,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
-from solrtexttagger_spark.plans import local_frame
-from solrtexttagger_spark.search.bm25 import analyze_query_terms
+from solrtexttagger_spark.search.bm25 import bag_match_set
 
 _STAT_RE = re.compile(r"^(sum|avg|min|max|unique|hll)\((\w+)\)$")
 # Solr percentiles stat: percentile(field, 50) / percentile(field, 25,
@@ -326,6 +325,31 @@ def json_facet(
     tree (exactly one without domain changes) + one batched boolean pass
     for all query facets, all under ONE collect — see module
     docstring."""
+    matched = bag_match_set(
+        index, query, allowed_docs=allowed_docs, id_col=id_col
+    )
+    if matched is None:
+        raise ValueError("json_facet needs a non-empty base query")
+    return _json_facet(
+        index, docs_df, matched, spec, id_col=id_col,
+        tagged_filters=tagged_filters, field=field, spark=spark,
+    )
+
+
+def _json_facet(
+    index: InvertedIndex,
+    docs_df: DataFrame,
+    matched: DataFrame,
+    spec: dict,
+    *,
+    id_col: str = "doc_id",
+    tagged_filters: dict[str, DataFrame] | None = None,
+    field: str | None = None,
+    spark: SparkSession | None = None,
+) -> dict:
+    """json_facet over a given base domain ``matched`` — an (``id_col``)
+    relation with the untagged fq already applied. The /select writers
+    pass their request's match set."""
     spark = spark or docs_df.sparkSession
     tagged_filters = tagged_filters or {}
     counter = [0]
@@ -354,22 +378,6 @@ def json_facet(
     # a tree aggregate / collect raises mid-flight
     try:
         qidx_of = {id(n): i for i, n in enumerate(query_nodes)}
-
-        # --- domain: bag match of the base query, fq-restricted ---
-        terms = sorted(analyze_query_terms(query))
-        if not terms:
-            raise ValueError("json_facet needs a non-empty base query")
-        tdf = local_frame(spark, [(t,) for t in terms], "term string")
-        matched = (
-            index.postings.join(F.broadcast(tdf), "term")
-            .select(F.explode("postings.doc_id").alias(id_col))
-            .distinct()
-        )
-        if allowed_docs is not None:
-            matched = matched.join(
-                allowed_docs.select(F.col("doc_id").alias(id_col)).distinct(),
-                id_col, "left_semi",
-            )
 
         # Per-node EFFECTIVE domain: own change merged with the ancestors'
         # (a child operates on its parent's bucket domain — Solr's model).

@@ -183,27 +183,13 @@ def _matched_relation(
     qtype, lp, rest = parse_local_params(q, refs=params)
 
     def _scored(text_q: str) -> DataFrame:
-        if index is None:
-            raise ValueError(
-                "a scored text query needs an InvertedIndex (index=None "
-                "routes only the filter-parser family)"
-            )
-        return boolean_matched_scores(
-            index, [(0, text_q)], k1=k1, b=b, allowed_docs=allowed_docs,
-            synonyms=synonyms, spark=spark,
-            warm_df=True,  # top-level request entry: the searcher-resident
-            # term dictionary pattern (one tiny collect, first request only)
+        return lucene_match_set(
+            index, docs_df, text_q, allowed_docs=allowed_docs,
+            fq_pred=fq_pred, synonyms=synonyms, k1=k1, b=b, id_col=id_col,
+            spark=spark,
         )
 
     if qtype in (None, "lucene", "edismax", "dismax"):
-        if rest.strip() == "*:*":
-            # Solr match-all: every (fq-surviving) doc at score 1.0
-            pred = fq_pred if fq_pred is not None else F.lit(True)
-            return docs_df.where(pred).select(
-                F.lit(0).alias("query_id"),
-                F.col(id_col).alias("doc_id"),
-                F.lit(1.0).alias("score"),
-            )
         # edismax/dismax accepted: the clause subset this engine parses
         # is shared; their extra params (qf/pf) are not routed yet
         return _scored(rest)
@@ -212,18 +198,17 @@ def _matched_relation(
         pred = solr_fq_column(docs_df, q, refs=params, q_op=q_op)
         if fq_pred is not None:
             pred = pred & fq_pred
-        return docs_df.where(pred).select(
-            F.lit(0).alias("query_id"),
-            F.col(id_col).alias("doc_id"),
-            F.lit(1.0).alias("score"),
-        )
+        return _match_rows(docs_df.where(pred), id_col)
 
     if qtype == "join":
         from solrtexttagger_spark.search.join_qp import join_values
 
-        inner = _scored_join_inner(
-            index, docs_df, rest, params, q_op=q_op, synonyms=synonyms,
-            k1=k1, b=b, id_col=id_col, spark=spark,
+        # the inner query routes like any q (Solr joins on filter
+        # queries as often as on scored ones), without the request's fq
+        inner = _matched_relation(
+            index, docs_df, rest, params, allowed_docs=None, fq_pred=None,
+            q_op=q_op, synonyms=synonyms, k1=k1, b=b, id_col=id_col,
+            spark=spark,
         )
         mode = lp.get("score", "none")
         # pre-window match set assembled from join_values directly
@@ -250,11 +235,7 @@ def _matched_relation(
                 "query_id", "doc_id",
                 F.col("__join_score").alias("score"),
             )
-        if allowed_docs is not None:
-            matched = matched.join(
-                allowed_docs.select("doc_id"), "doc_id", "left_semi"
-            )
-        return matched
+        return _under_fq(matched, allowed_docs)
 
     if qtype == "graph":
         from solrtexttagger_spark.search.graph_qp import graph_traverse
@@ -278,42 +259,23 @@ def _matched_relation(
             # operator had the knob, the router route didn't expose it)
             broadcast_frontier=lp.get("broadcast", "true") == "true",
         )
-        matched = reached.select(
-            F.lit(0).alias("query_id"),
-            F.col(id_col).alias("doc_id"),
-            F.lit(1.0).alias("score"),
-        )
-        if allowed_docs is not None:
-            matched = matched.join(
-                allowed_docs.select("doc_id"), "doc_id", "left_semi"
-            )
-        return matched
+        return _under_fq(_match_rows(reached, id_col), allowed_docs)
 
     if qtype == "func":
         # FunctionQParser as the MAIN query: every (fq-surviving) doc,
         # ranked by the function value (Solr's q={!func}... semantics)
         pred = fq_pred if fq_pred is not None else F.lit(True)
-        return docs_df.where(pred).select(
-            F.lit(0).alias("query_id"),
-            F.col(id_col).alias("doc_id"),
-            F.expr(solr_func_to_sql(rest)).cast("double").alias("score"),
+        return _match_rows(
+            docs_df.where(pred), id_col,
+            F.expr(solr_func_to_sql(rest)).cast("double"),
         )
 
     if qtype == "boost":
         # BoostQParser {!boost b=<func>}inner — multiplicative wrapper
         # around the inner scored query (edismax boost='s ancestor)
-        inner = _scored(rest)
-        bexpr = docs_df.select(
-            F.col(id_col).alias("doc_id"),
-            F.expr(solr_func_to_sql(lp["b"])).cast("double").alias("__b"),
-        )
-        return (
-            inner.join(bexpr, "doc_id", "left")
-            .withColumn(
-                "score",
-                F.col("score") * F.coalesce(F.col("__b"), F.lit(1.0)),
-            )
-            .drop("__b")
+        return fold_functions(
+            _scored(rest), docs_df, None, solr_func_to_sql(lp["b"]),
+            id_col=id_col,
         )
 
     if qtype == "mlt":
@@ -332,14 +294,7 @@ def _matched_relation(
             n_terms=int(lp.get("maxqt", 5)), k=k_need,
             id_col=id_col, spark=spark,
         )
-        matched = out.select(
-            F.lit(0).alias("query_id"), "doc_id", "score"
-        )
-        if allowed_docs is not None:
-            matched = matched.join(
-                allowed_docs.select("doc_id"), "doc_id", "left_semi"
-            )
-        return matched
+        return _under_fq(_match_rows(out, "doc_id", F.col("score")), allowed_docs)
 
     if qtype == "complexphrase":
         # ComplexPhraseQParser: the remainder is a quoted phrase whose
@@ -365,16 +320,7 @@ def _matched_relation(
             else (rest.strip(), 0)
         )
         hits = complex_phrase_match(index, [phrase], slops=[slop])
-        matched = hits.select(
-            F.lit(0).alias("query_id"),
-            "doc_id",
-            F.lit(1.0).alias("score"),
-        )
-        if allowed_docs is not None:
-            matched = matched.join(
-                allowed_docs.select("doc_id"), "doc_id", "left_semi"
-            )
-        return matched
+        return _under_fq(_match_rows(hits, "doc_id"), allowed_docs)
 
     if qtype in ("parent", "child"):
         raise ValueError(
@@ -386,25 +332,84 @@ def _matched_relation(
     raise ValueError(f"unroutable q parser {{!{qtype}}}")
 
 
-def _scored_join_inner(index, docs_df, rest, params, *, q_op, synonyms,
-                       k1, b, id_col, spark) -> DataFrame:
-    """The {!join} inner query: a text query when an index is present
-    and the remainder isn't a filter-parser expression, else a
-    constant-score filter match set (Solr joins on filter queries just
-    as often as on scored ones)."""
-    inner_type, _ilp, _irest = parse_local_params(rest, refs=params)
-    if inner_type in ("term", "terms", "prefix", "frange", "bool"):
-        pred = solr_fq_column(docs_df, rest, refs=params, q_op=q_op)
-        return docs_df.where(pred).select(
-            F.lit(0).alias("query_id"),
-            F.col(id_col).alias("doc_id"),
-            F.lit(1.0).alias("score"),
-        )
+def _match_rows(rel: DataFrame, id_col: str, score=None) -> DataFrame:
+    """(query_id 0, doc_id, score) of ``rel``'s docs — score 1.0 (the
+    constant-score parsers) unless a score column is given."""
+    return rel.select(
+        F.lit(0).alias("query_id"),
+        F.col(id_col).alias("doc_id"),
+        (F.lit(1.0) if score is None else score).alias("score"),
+    )
+
+
+def _under_fq(matched: DataFrame, allowed_docs: DataFrame | None) -> DataFrame:
+    """``matched`` semi-joined with the fq relation, if any."""
+    if allowed_docs is None:
+        return matched
+    return matched.join(allowed_docs.select("doc_id"), "doc_id", "left_semi")
+
+
+def lucene_match_set(
+    index: InvertedIndex | None,
+    docs_df: DataFrame,
+    q: str,
+    *,
+    allowed_docs: DataFrame | None = None,
+    fq_pred=None,
+    synonyms: dict[str, list[str]] | None = None,
+    k1: float = K1,
+    b: float = B,
+    id_col: str = "doc_id",
+    spark: SparkSession | None = None,
+) -> DataFrame:
+    """The (query_id, doc_id, score) match set of a Lucene-syntax ``q``
+    under fq (``fq_pred`` when the caller has the predicate, else the
+    ``allowed_docs`` relation), unranked: ``*:*`` is every doc at score
+    1.0, any other q boolean_matched_scores. solr_select's scored routes
+    and the /select writers dispatch q through it."""
+    if q.strip() == "*:*":
+        if fq_pred is not None:
+            return _match_rows(docs_df.where(fq_pred), id_col)
+        return _under_fq(_match_rows(docs_df, id_col), allowed_docs)
     if index is None:
-        raise ValueError("{!join} with a scored inner query needs an index")
+        raise ValueError(
+            "a scored text query needs an InvertedIndex (index=None "
+            "routes only the filter-parser family)"
+        )
     return boolean_matched_scores(
-        index, [(0, rest)], k1=k1, b=b, synonyms=synonyms, spark=spark,
-        warm_df=True,  # see _scored: top-level request entry
+        index, [(0, q)], k1=k1, b=b, allowed_docs=allowed_docs,
+        synonyms=synonyms, spark=spark,
+        warm_df=True,  # top-level request entry: the searcher-resident
+        # term dictionary pattern (one tiny collect, first request only)
+    )
+
+
+def fold_functions(
+    matched: DataFrame,
+    docs_df: DataFrame,
+    bf: str | None,
+    boost: str | None,
+    *,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """``score = (score + bf) * boost`` over a match set, ``bf``/``boost``
+    SQL expressions over the corpus columns (NULL folds as 0 / 1), via one
+    left join of the function columns."""
+    if bf is None and boost is None:
+        return matched
+    cols = [F.col(id_col).alias("doc_id")]
+    if bf is not None:
+        cols.append(F.expr(bf).cast("double").alias("__bf"))
+    if boost is not None:
+        cols.append(F.expr(boost).cast("double").alias("__boost"))
+    add = (F.coalesce(F.col("__bf"), F.lit(0.0))
+           if bf is not None else F.lit(0.0))
+    mul = (F.coalesce(F.col("__boost"), F.lit(1.0))
+           if boost is not None else F.lit(1.0))
+    return (
+        matched.join(docs_df.select(*cols), "doc_id", "left")
+        .withColumn("score", (F.col("score") + add) * mul)
+        .drop("__bf", "__boost")
     )
 
 
@@ -496,26 +501,12 @@ def _request_match_set(
 
     # bf=/boost= in the Solr function dialect, folded pre-window
     bf, boost = params.get("bf"), params.get("boost")
-    if bf is not None or boost is not None:
-        cols = [F.col(id_col).alias("doc_id")]
-        if bf is not None:
-            cols.append(
-                F.expr(solr_func_to_sql(bf)).cast("double").alias("__bf")
-            )
-        if boost is not None:
-            cols.append(
-                F.expr(solr_func_to_sql(boost)).cast("double")
-                .alias("__boost")
-            )
-        add = (F.coalesce(F.col("__bf"), F.lit(0.0))
-               if bf is not None else F.lit(0.0))
-        mul = (F.coalesce(F.col("__boost"), F.lit(1.0))
-               if boost is not None else F.lit(1.0))
-        matched = (
-            matched.join(docs_df.select(*cols), "doc_id", "left")
-            .withColumn("score", (F.col("score") + add) * mul)
-            .drop("__bf", "__boost")
-        )
+    matched = fold_functions(
+        matched, docs_df,
+        solr_func_to_sql(bf) if bf is not None else None,
+        solr_func_to_sql(boost) if boost is not None else None,
+        id_col=id_col,
+    )
 
     # fq={!collapse field=f nullPolicy=...}: per-group best-score head
     # via ONE max_by aggregate (map-side partial, skew-safe on a
@@ -752,9 +743,11 @@ def solr_query_response(
     map drives the whole component chain exactly as Solr's SearchHandler
     does:
 
-    - ``q`` (the relevance-scored text query — this path is the dressed
-      one-job /select page, numFound/maxScore included; local-params
-      routed q types return DataFrames via :func:`solr_select` instead)
+    - ``q`` in Lucene syntax, matched exactly as :func:`solr_select`
+      matches it (lucene_match_set: the boolean clause family, ``*:*``
+      every doc); every section below reads that one match set, and
+      numFound/maxScore ride the page. Other local-params q types
+      return DataFrames via :func:`solr_select` instead
     - ``fq`` -> allowed_docs (localparams compile, scan-pushed)
     - ``fl`` (stored field list; ``score`` implicit, pseudo-fields are
       the DataFrame router's feature — the writers render stored

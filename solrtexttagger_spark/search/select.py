@@ -9,20 +9,16 @@ scan to exactly the requested `fl` columns (pinned by
 test_plans.test_scan_pruning_column_projection for the tagger path; the
 same projection applies here).
 
-The golden writers (render_select_xml/json) run ONE Spark job per
-request: numFound and maxScore are window aggregates over the same
-exploded scoring relation that produces the page (bm25.exploded_scores),
-not a second corpus-scale match-count pass (round-4 verdict #6). The
-rank-1 row always rides along, so maxScore is the full result set's
-maximum even when start > 0 pages past it (round-5 advice).
-
-A fully-dressed request (page + facet fields + any number of facet.range
-columns + hl) is exactly THREE jobs (round-5 verdict #2, mirroring
-Solr's shared-DocSet component model): the page job, one combined facet
-job (_facet_sections: one match set, one corpus join, one groupBy for
-every section), and one snippet job that broadcasts the ALREADY-RANKED
-page instead of re-running bm25 (_hl_section). Pinned by
-test_response_format.test_select_fully_dressed_job_budget."""
+The golden writers (render_select_xml/json) match ``q`` ONCE per
+request, as solr_select does (request.lucene_match_set), and every
+section reads that one match set — Solr's shared-DocSet model
+(TaggerRequestHandler.java:310-351): the page carries numFound/maxScore
+as window aggregates over it (the rank-1 row always rides along, so
+maxScore holds even when start pages past it); facet.field/range/
+interval share ONE facet job (_facet_sections); facet.query and
+json.facet take it as their base domain; hl broadcasts the
+already-ranked page (_hl_section). With more than one reader it is
+persisted for the request. Job budgets: test_response_format."""
 
 from __future__ import annotations
 
@@ -30,14 +26,15 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from solrtexttagger_spark.index.build import InvertedIndex
 from solrtexttagger_spark.plans import local_frame
-from solrtexttagger_spark.search.bm25 import (
-    _RANKED_SCHEMA,
-    B,
-    K1,
-    analyze_query_terms,
-    bm25_topk,
-    exploded_scores,
+from solrtexttagger_spark.search.bm25 import _RANKED_SCHEMA, B, K1, bm25_topk
+from solrtexttagger_spark.search.facets import (
+    _facet_query_matches,
+    _query_counts,
+    parse_interval,
 )
+from solrtexttagger_spark.search.highlight import snippets
+from solrtexttagger_spark.search.json_facet import _json_facet
+from solrtexttagger_spark.search.request import _under_fq, fold_functions, lucene_match_set
 
 
 def select_topk(
@@ -88,43 +85,30 @@ def select_page(
     id_col: str = "doc_id",
     spark: SparkSession | None = None,
 ) -> DataFrame:
-    """One-request /select page in ONE job: (query_id, rank, doc_id,
-    score, num_found, max_score, *fl) for start < rank <= start + k,
-    PLUS the rank-1 row (so an empty or offset page still carries
-    numFound/maxScore). num_found = per-query count of ALL matched docs
-    (>= 1 query term, under fq) and max_score = the global maximum —
-    both window aggregates over the same partitioning the rank window
-    shuffles on, so they cost no extra exchange and no extra job.
-
-    ``bf``/``boost`` are Solr function queries (dismax bf= additive,
-    edismax boost= multiplicative — see search/functions.boosted_topk):
-    score = (bm25 + bf) * boost, folded in BEFORE the rank window so
-    numFound/maxScore/pagination all see the boosted ranking, still in
-    the same one job (the function columns ride the fl corpus join)."""
-    fl = [c for c in fl if c != id_col]
-    scores = exploded_scores(
-        index, {0: analyze_query_terms(query)}, k1=k1, b=b,
-        allowed_docs=allowed_docs,
+    """One-request /select page: (query_id, rank, doc_id, score,
+    num_found, max_score, *fl) for start < rank <= start + k, PLUS the
+    rank-1 row (so an empty or offset page still carries
+    numFound/maxScore). ``query`` is Lucene syntax, matched like
+    solr_select's q (request.lucene_match_set). num_found / max_score
+    are window aggregates over the partitioning the rank window shuffles
+    on: no extra exchange, no extra job. ``bf``/``boost`` (SQL) fold in
+    as (score + bf) * boost BEFORE the rank window
+    (request.fold_functions), so numFound/maxScore/pagination all see
+    the boosted ranking."""
+    matched = lucene_match_set(
+        index, docs_df, query, allowed_docs=allowed_docs, k1=k1, b=b,
+        id_col=id_col, spark=spark,
     )
-    if bf is not None or boost is not None:
-        fcols = [F.col(id_col).alias("doc_id")]
-        if bf is not None:
-            fcols.append(F.expr(bf).cast("double").alias("__bf"))
-        if boost is not None:
-            fcols.append(F.expr(boost).cast("double").alias("__boost"))
-        add = (
-            F.coalesce(F.col("__bf"), F.lit(0.0))
-            if bf is not None else F.lit(0.0)
-        )
-        mul = (
-            F.coalesce(F.col("__boost"), F.lit(1.0))
-            if boost is not None else F.lit(1.0)
-        )
-        scores = (
-            scores.join(docs_df.select(*fcols), "doc_id")
-            .withColumn("score", (F.col("score") + add) * mul)
-            .drop("__bf", "__boost")
-        )
+    return _page(
+        matched, docs_df, fl=fl, k=k, start=start, bf=bf, boost=boost,
+        id_col=id_col,
+    )
+
+
+def _page(matched, docs_df, *, fl, k, start, bf, boost, id_col="doc_id"):
+    """select_page over a (query_id, doc_id, score) match set."""
+    fl = [c for c in fl if c != id_col]
+    scores = fold_functions(matched, docs_df, bf, boost, id_col=id_col)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -173,32 +157,79 @@ def _xml_el(name: str, value, dtype: str) -> str:
     return f'<{tag} name="{_xml_attr(name)}">{sv}</{tag}>'
 
 
-def _select_page(index, docs_df, query, fl, k, start, allowed_docs, spark,
-                 bf=None, boost=None):
-    """-> (page rows sorted by rank, dtypes, num_found, max_score) from the
-    single-job select_page relation."""
+def _request_sections(
+    index, docs_df, query, *, fl, k, start, allowed_docs, facet_cols,
+    facet_ranges, facet_queries, facet_intervals, bf, boost, hl, hl_window,
+    text_col, spark, json_facet_spec=None, json_facet_allowed=None,
+    json_facet_tags=None,
+) -> dict:
+    """{"rows", "dtypes", "num_found", "max_score"} of the page plus the
+    requested "facets", "facet_queries", "json_facet" and "highlighting"
+    sections, all over ONE match set of ``query``. Multi-select
+    json.facet counts under the untagged fq only, so the match set is
+    then taken fq-free and each reader semi-joins its own fq."""
     spark = spark or docs_df.sparkSession
-    fl = [c for c in fl if c != "doc_id"]
-    page = select_page(
-        index, docs_df, query, fl=fl, k=k, start=start,
-        allowed_docs=allowed_docs, bf=bf, boost=boost, spark=spark,
+    multi = bool(json_facet_spec) and (
+        bool(json_facet_tags) or json_facet_allowed is not None
     )
-    all_rows = sorted(page.collect(), key=lambda r: r["rank"])
-    dtypes = dict(page.dtypes)
-    num_found = all_rows[0]["num_found"] if all_rows else 0
-    max_score = all_rows[0]["max_score"] if all_rows else 0.0
-    rows = [r for r in all_rows if r["rank"] > start]
-    return rows, dtypes, num_found, max_score
+    base = lucene_match_set(
+        index, docs_df, query,
+        allowed_docs=None if multi else allowed_docs, spark=spark,
+    )
+
+    def within(rel):
+        return _under_fq(base, rel) if multi else base
+
+    faceted = bool(facet_cols or facet_ranges or facet_queries or facet_intervals)
+    shared = faceted or bool(json_facet_spec)
+    if shared:  # more than one job reads it: compute it once
+        base = base.persist()
+    try:
+        matched = within(allowed_docs)
+        page = _page(
+            matched, docs_df, fl=fl, k=k, start=start, bf=bf, boost=boost
+        )
+        rows = sorted(page.collect(), key=lambda r: r["rank"])
+        out = {
+            "rows": [r for r in rows if r["rank"] > start],
+            "dtypes": dict(page.dtypes),
+            "num_found": rows[0]["num_found"] if rows else 0,
+            "max_score": rows[0]["max_score"] if rows else 0.0,
+        }
+        if faceted:
+            out["facets"] = _facet_sections(
+                docs_df, matched, facet_cols, facet_ranges,
+                facet_intervals=facet_intervals,
+            )
+        if facet_queries:
+            out["facet_queries"] = _query_counts(
+                _facet_query_matches(
+                    index, facet_queries, matched, spark=spark
+                ),
+                facet_queries,
+            )
+        if json_facet_spec:
+            out["json_facet"] = _json_facet(
+                index, docs_df, within(json_facet_allowed).select("doc_id"),
+                json_facet_spec, tagged_filters=json_facet_tags, spark=spark,
+            )
+    finally:
+        if shared:
+            base.unpersist()
+    if hl:
+        out["highlighting"] = _hl_section(
+            index, docs_df, query, out["rows"], hl_window, text_col, spark
+        )
+    return out
 
 
-def _facet_sections(
-    index, docs_df, query, facet_cols, facet_ranges, allowed_docs, spark,
-    facet_intervals=None,
-):
+def _facet_sections(docs_df, matched, facet_cols, facet_ranges,
+                    facet_intervals=None):
     """-> (field_counts: {col: [(value, n), ...] count-desc},
     range_counts: {key: (start, end, gap, [(range_start, n), ...])},
     interval_counts: {col: [(key, n), ...] request order, zero-filled}).
-    All fq-aware, all over the FULL match set (Solr facet semantics).
+    All over ``matched`` — the request's FULL match set (a doc_id
+    relation, fq applied), Solr facet semantics.
 
     ``facet_intervals`` entries are (col, [interval set strings]) —
     Solr's facet.interval: arbitrary, possibly OVERLAPPING intervals
@@ -221,14 +252,10 @@ def _facet_sections(
     count-desc sort is None-safe (NULL sorts after equal-count strings)
     and the writers render the bucket with an empty name.
 
-    ONE Spark job for every facet section (round-5 verdict #2 — Solr's
-    components share one DocSet per request,
-    TaggerRequestHandler.java:310-351 builds the bitset once): the match
-    set is computed once, the corpus joins once, and field facets + ALL
-    facet.range columns aggregate in a single groupBy over an exploded
-    (section, field, value) relation. Range buckets zero-fill driver-side
-    against the literal bucket spine (the spine is request constants — no
-    join needed)."""
+    ONE Spark job for every facet section: the corpus joins the match
+    set once, and every section aggregates in a single groupBy over an
+    exploded (section, field, value) relation. Range buckets zero-fill
+    driver-side against the literal bucket spine (request constants)."""
     facet_cols = list(facet_cols or [])
     franges = []
     seen_keys: set[str] = set()
@@ -244,8 +271,6 @@ def _facet_sections(
             )
         seen_keys.add(key)
         franges.append((col, lo, hi, gap, key))
-    from solrtexttagger_spark.search.facets import parse_interval
-
     fintervals = []
     for col, sets in facet_intervals or []:
         if col in (c for c, _ in fintervals):
@@ -266,25 +291,7 @@ def _facet_sections(
     intervals: dict[str, list] = {}
     if not facet_cols and not franges and not fintervals:
         return fields, ranges, intervals
-    spark = spark or docs_df.sparkSession
-    terms = sorted(analyze_query_terms(query))
-    if not terms:  # no match set: empty facet lists, un-zero-filled ranges
-        return (
-            {c: [] for c in facet_cols},
-            {key: (lo, hi, gap, []) for _col, lo, hi, gap, key in franges},
-            {col: [(k, 0) for k, *_ in sets] for col, sets in fintervals},
-        )
-    tdf = local_frame(spark, [(t,) for t in terms], "term string")
-    matched = (
-        index.postings.join(F.broadcast(tdf), "term")
-        .select(F.explode("postings.doc_id").alias("doc_id"))
-        .distinct()
-    )
-    if allowed_docs is not None:
-        matched = matched.join(
-            allowed_docs.select("doc_id").distinct(), "doc_id", "left_semi"
-        )
-    joined = docs_df.join(matched, "doc_id")
+    joined = docs_df.join(matched.select("doc_id"), "doc_id")
     structs = [
         F.struct(
             F.lit("f").alias("sec"),
@@ -371,11 +378,8 @@ def _hl_section(index, docs_df, query, page_rows, hl_window, text_col, spark):
     collected page rows become a tiny literal topk relation that
     search/highlight.snippets broadcasts against the corpus — one narrow
     job over k docs, fq/pagination-correct because the page itself was."""
-    from solrtexttagger_spark.search.highlight import snippets
-
     if not page_rows:
         return []
-    spark = spark or docs_df.sparkSession
     ranked = local_frame(
         spark,
         [
@@ -412,7 +416,9 @@ def render_select_xml(
     spark: SparkSession | None = None,
 ) -> str:
     """Solr /select XML writer (omitHeader=on, indent=off shape, like the
-    tagger's golden writer at tagging/response.py): one result block with
+    tagger's golden writer at tagging/response.py). ``query`` is Lucene
+    syntax matched as solr_select's q (``*:*`` matches every doc), once
+    for every section. One result block with
     numFound = the TOTAL match cardinality, start = the page offset,
     maxScore = the rank-1 score (even when start pages past it), and one
     <doc> per hit carrying <float name="score"> plus the fl fields with
@@ -427,9 +433,9 @@ def render_select_xml(
     ``facet_queries`` (list of boolean-syntax sub-queries) appends
     Solr's facet.query block first inside facet_counts (Solr's order):
     <lst name="facet_queries"> with one <int name="<query>"> count of
-    base-domain documents satisfying each sub-query — all sub-queries
-    in ONE boolean_matched_scores pass (facets.facet_query_counts;
-    +1 action when requested, same as Solr evaluating extra DocSets).
+    matched documents satisfying each sub-query — all sub-queries in
+    ONE boolean_matched_scores pass (+1 action when requested, same as
+    Solr evaluating extra DocSets).
 
     ``facet_intervals`` (list of (col, [set strings])) appends Solr's
     facet_intervals block — arbitrary possibly-overlapping intervals
@@ -439,10 +445,15 @@ def render_select_xml(
     ``hl=True`` appends Solr's highlighting block — one best-window
     snippet per returned doc (search/highlight.snippets; plain text, no
     <em> wrapping). One request's page renders driver-side by contract."""
-    rows, dtypes, num_found, max_score_v = _select_page(
-        index, docs_df, query, fl, k, start, allowed_docs, spark,
-        bf=bf, boost=boost,
+    sec = _request_sections(
+        index, docs_df, query, fl=fl, k=k, start=start,
+        allowed_docs=allowed_docs, facet_cols=facet_cols,
+        facet_ranges=facet_ranges, facet_queries=facet_queries,
+        facet_intervals=facet_intervals, bf=bf, boost=boost, hl=hl,
+        hl_window=hl_window, text_col=text_col, spark=spark,
     )
+    rows, dtypes = sec["rows"], sec["dtypes"]
+    num_found, max_score_v = sec["num_found"], sec["max_score"]
     out = ['<?xml version="1.0" encoding="UTF-8"?>\n<response>\n']
     max_score = f"{max_score_v:.4f}" if num_found else "0.0"
     out.append(
@@ -457,20 +468,12 @@ def render_select_xml(
             out.append(_xml_el(f_, r[f_], dtypes.get(f_, "string")))
         out.append("</doc>")
     out.append("</result>\n")
-    if facet_cols or facet_ranges or facet_queries or facet_intervals:
-        fields, ranges, ivals = _facet_sections(
-            index, docs_df, query, facet_cols, facet_ranges, allowed_docs,
-            spark, facet_intervals=facet_intervals,
-        )
+    if "facets" in sec:
+        fields, ranges, ivals = sec["facets"]
         out.append('<lst name="facet_counts">')
-        if facet_queries:
-            from solrtexttagger_spark.search.facets import facet_query_counts
-
+        if "facet_queries" in sec:
             out.append('<lst name="facet_queries">')
-            for fq_q, n in facet_query_counts(
-                index, query, facet_queries, allowed_docs=allowed_docs,
-                spark=spark,
-            ).items():
+            for fq_q, n in sec["facet_queries"].items():
                 out.append(_xml_el(fq_q, n, "int"))
             out.append("</lst>")
         out.append('<lst name="facet_fields">')
@@ -502,9 +505,7 @@ def render_select_xml(
         out.append("</lst>\n")
     if hl:
         out.append('<lst name="highlighting">')
-        for doc_id, snip in _hl_section(
-            index, docs_df, query, rows, hl_window, text_col, spark
-        ):
+        for doc_id, snip in sec["highlighting"]:
             esc = (
                 str(snip).replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
             )
@@ -540,7 +541,8 @@ def render_select_json(
     text_col: str = "text",
     spark: SparkSession | None = None,
 ) -> str:
-    """Solr /select JSON writer shape: {"response": {"numFound", "start",
+    """Solr /select JSON writer — ``query`` and the sections as in
+    render_select_xml — shape: {"response": {"numFound", "start",
     "maxScore", "docs": [{"id", "score", ...fl}]}} plus, with
     ``facet_cols``/``facet_ranges``, Solr's default flat-array facet
     block: {"facet_counts": {"facet_fields": {col: [v1, n1, v2, n2, ...]},
@@ -550,34 +552,42 @@ def render_select_json(
     ``json_facet_spec`` the modern JSON Facet API response under the
     top-level "facets" key exactly as Solr renders json.facet
     (search/json_facet.json_facet — one grouping-sets action for the
-    whole tree, +1 if the spec has query facets), and with ``hl=True``
+    whole tree, +1 if the spec has query facets; ``json_facet_allowed``
+    and ``json_facet_tags`` are the multi-select split of the fq into
+    its untagged arms and its {tag: arm relation}s — the json.facet
+    domain is then q under the untagged arms, and a node's excludeTags
+    drops a tagged arm), and with ``hl=True``
     Solr's highlighting map
     {"highlighting": {"<id>": {text_col: [snippet]}}}."""
     import json
 
-    rows, _dtypes, num_found, max_score_v = _select_page(
-        index, docs_df, query, fl, k, start, allowed_docs, spark,
-        bf=bf, boost=boost,
+    sec = _request_sections(
+        index, docs_df, query, fl=fl, k=k, start=start,
+        allowed_docs=allowed_docs, facet_cols=facet_cols,
+        facet_ranges=facet_ranges, facet_queries=facet_queries,
+        facet_intervals=facet_intervals, bf=bf, boost=boost, hl=hl,
+        hl_window=hl_window, text_col=text_col, spark=spark,
+        json_facet_spec=json_facet_spec,
+        json_facet_allowed=json_facet_allowed,
+        json_facet_tags=json_facet_tags,
     )
+    num_found = sec["num_found"]
     fl = [c for c in fl if c != "doc_id"]
     docs = [
         {"id": r["doc_id"], "score": round(r["score"], 4),
          **{f_: r[f_] for f_ in fl}}
-        for r in rows
+        for r in sec["rows"]
     ]
     payload = {
         "response": {
             "numFound": num_found,
             "start": start,
-            "maxScore": round(max_score_v, 4) if num_found else 0.0,
+            "maxScore": round(sec["max_score"], 4) if num_found else 0.0,
             "docs": docs,
         }
     }
-    if facet_cols or facet_ranges or facet_queries or facet_intervals:
-        fields, ranges, ivals = _facet_sections(
-            index, docs_df, query, facet_cols, facet_ranges, allowed_docs,
-            spark, facet_intervals=facet_intervals,
-        )
+    if "facets" in sec:
+        fields, ranges, ivals = sec["facets"]
         payload["facet_counts"] = {
             "facet_fields": {
                 col: [x for v, n in vals for x in (v, n)]
@@ -595,36 +605,13 @@ def render_select_json(
             payload["facet_counts"]["facet_intervals"] = {
                 col: dict(sets) for col, sets in ivals.items()
             }
-        if facet_queries:
-            from solrtexttagger_spark.search.facets import facet_query_counts
-
-            payload["facet_counts"]["facet_queries"] = facet_query_counts(
-                index, query, facet_queries, allowed_docs=allowed_docs,
-                spark=spark,
-            )
-    if json_facet_spec:
-        from solrtexttagger_spark.search.json_facet import json_facet
-
-        # multi-select faceting (fq={!tag=..}): the json.facet base
-        # domain splits into the always-on untagged fq
-        # (json_facet_allowed) + per-tag removable relations
-        # (json_facet_tags) so domain:{excludeTags} nodes recount
-        # correctly; without tags the page's allowed_docs is the domain
-        jf_allowed = (
-            json_facet_allowed if (json_facet_tags or
-                                   json_facet_allowed is not None)
-            else allowed_docs
-        )
-        payload["facets"] = json_facet(
-            index, docs_df, query, json_facet_spec,
-            allowed_docs=jf_allowed, tagged_filters=json_facet_tags,
-            spark=spark,
-        )
+        if "facet_queries" in sec:
+            payload["facet_counts"]["facet_queries"] = sec["facet_queries"]
+    if "json_facet" in sec:
+        payload["facets"] = sec["json_facet"]
     if hl:
         payload["highlighting"] = {
             str(doc_id): {text_col: [snip]}
-            for doc_id, snip in _hl_section(
-                index, docs_df, query, rows, hl_window, text_col, spark
-            )
+            for doc_id, snip in sec["highlighting"]
         }
     return json.dumps(payload, separators=(",", ":"))

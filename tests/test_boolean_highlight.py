@@ -44,6 +44,41 @@ def test_parse_boolean_query():
         parse_boolean_query("+a -a")
 
 
+@pytest.fixture(scope="module")
+def handler(index):
+    from solrtexttagger_spark.index.compressed import compress_index
+    from solrtexttagger_spark.search.request import LocalRequestHandler
+    from solrtexttagger_spark.search.wand import LocalSearcher
+
+    return LocalRequestHandler(LocalSearcher(compress_index(index)))
+
+
+@pytest.mark.parametrize("q", [
+    "NOT alpha", "alpha AND beta", "alpha OR beta", "alpha && beta",
+    "alpha || beta", "alpha *:*", "*:*",
+])
+def test_unsupported_query_syntax_raises(index, docs_df, handler, q):
+    """Lucene syntax the parser cannot honour raises instead of silently
+    changing the match set: the keyword operators (uppercase; lowercase
+    and/or/not stay terms), &&/|| and a *:* clause. Every entry shares
+    the parse: the kernel, the router (which routes a whole-q *:* as
+    match-all) and the warm LocalRequestHandler."""
+    from solrtexttagger_spark.search.boolean import boolean_matched_scores
+    from solrtexttagger_spark.search.request import solr_select
+
+    with pytest.raises(ValueError):
+        parse_boolean_query(q)
+    with pytest.raises(ValueError):
+        boolean_matched_scores(index, [(0, q)])
+    if q != "*:*":
+        with pytest.raises(ValueError):
+            solr_select(index, docs_df, {"q": q})
+    with pytest.raises(ValueError):
+        handler.select({"q": q})
+    _m, should, _n, _mp, _np = parse_boolean_query("alpha and beta or not")
+    assert set(should) == {"alpha", "and", "beta", "or", "not"}
+
+
 def test_parse_fielded_clauses():
     """`q=name:Boston` — the reference's trivial /select case
     (EmbeddedSolrNoSerializeTest.java:112-115): the single-field prefix is

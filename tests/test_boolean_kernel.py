@@ -10,6 +10,7 @@ from the query string, so the engine's parser, expansion and evaluator
 are all under test. Every engine entry must equal it: doc ids exact,
 scores to 1e-9."""
 
+import json
 import math
 import random
 
@@ -25,7 +26,7 @@ from solrtexttagger_spark.search.boolean import (
 )
 from solrtexttagger_spark.search.bm25 import bm25_topk
 from solrtexttagger_spark.search.phrase import phrase_match
-from solrtexttagger_spark.search.request import solr_select
+from solrtexttagger_spark.search.request import solr_query_response, solr_select
 from solrtexttagger_spark.search.wand import LocalSearcher, wand_topk
 from tests.conftest import _build_jobs
 
@@ -298,13 +299,21 @@ def test_boolean_paths_equal_oracle(engines, batch, syn_keys, use_fq):
         for d, s in want.items():
             assert got[d] == pytest.approx(s, abs=1e-9), (q, d)
         _same(pages.get(qid, []), _page(want))
-    # the request router, for two queries of the batch
+    # the request router, for two queries of the batch, and (the writers
+    # take no synonyms) the /select response writer over the same q
     for _qid, q, want in good[:2]:
         params = {"q": q, "rows": K}
         if use_fq:
             params["fq"] = "lang:x"
         rows = solr_select(idx, docs, params, synonyms=synonyms).collect()
         _same([(r["doc_id"], r["score"]) for r in rows], _page(want))
+        if synonyms:
+            continue
+        resp = json.loads(solr_query_response(idx, docs, {**params, "fl": "lang"}))
+        assert resp["response"]["numFound"] == len(want), q
+        assert [(d["id"], d["score"]) for d in resp["response"]["docs"]] == [
+            (d, round(s, 4)) for d, s in _page(want)
+        ], q
 
 
 @settings(

@@ -199,17 +199,34 @@ def test_array_lit_equals_list_literal(spark):
 def test_no_lit_over_python_lists():
     """A driver-held list becomes an array literal through
     ``plans.array_lit`` (a constant number of py4j calls), never through
-    ``F.lit(list)`` (one JVM literal per element)."""
+    ``F.lit(list)`` or ``F.array(*[F.lit(x) for x in ...])`` (one JVM
+    literal per element)."""
     listy = (ast.List, ast.ListComp, ast.Tuple, ast.Set, ast.SetComp)
+
+    def _lit_call(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "lit"
+        )
+
     offenders = []
     for path in sorted(PACKAGE.rglob("*.py")):
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
-            if not (
+            if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "lit"
-                and node.args
+                and node.func.attr == "array"
+                and any(
+                    isinstance(a, ast.Starred)
+                    and isinstance(a.value, (ast.ListComp, ast.GeneratorExp))
+                    and _lit_call(a.value.elt)
+                    for a in node.args
+                )
             ):
+                offenders.append(f"{path.relative_to(PACKAGE.parent)}:{node.lineno}")
+                continue
+            if not (_lit_call(node) and node.args):
                 continue
             arg = node.args[0]
             if isinstance(arg, listy) or (

@@ -323,16 +323,18 @@ def test_facet_sections_single_aggregation(spark, docs_df, index):
     field facets and EVERY facet.range column in one aggregation over
     one match set — a single groupBy(sec, field, value), no per-range
     re-scan."""
+    from solrtexttagger_spark.search.request import lucene_match_set
     from solrtexttagger_spark.search.select import _facet_sections
 
     docs = docs_df.withColumn("n", (docs_df.doc_id * 7) % 40)
+    matched = lucene_match_set(index, docs, "common w1")
     (fields, ranges, _iv), jobs = _build_jobs(spark, lambda: _facet_sections(
-        index, docs, "common w1", ["lang"] if "lang" in docs.columns else [],
+        docs, matched, ["lang"] if "lang" in docs.columns else [],
         # same column twice: independent buckets, distinct output
         # keys (Solr's {!key=} local param)
-        [("n", 0, 40, 20), ("n", 0, 40, 10, "n_fine")], None, spark,
+        [("n", 0, 40, 20), ("n", 0, 40, 10, "n_fine")],
     ))
-    assert jobs == 5  # one collect for every facet section
+    assert jobs == 3  # one collect for every facet section
     assert set(ranges) == {"n", "n_fine"}  # both same-col requests appear
     for _col, (lo, hi, gap, buckets) in ranges.items():
         assert [b for b, _n in buckets] == list(range(lo, hi, gap))

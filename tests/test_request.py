@@ -222,6 +222,26 @@ class TestFilterPaths:
             w[0] for w in want]
         assert got and all(r["score"] == 1.0 for r in got)
 
+    def test_match_all_response(self, docs, oracle):
+        """The /select writers match q=*:* exactly like the router:
+        every fq doc at score 1.0, numFound and facets over all of
+        them."""
+        import json
+
+        from solrtexttagger_spark.search.request import solr_query_response
+
+        want = [w[0] for w in oracle.sql(
+            "SELECT doc_id FROM documents WHERE lang='es' ORDER BY doc_id"
+        ).fetchall()]
+        got = json.loads(solr_query_response(None, docs, {
+            "q": "*:*", "fq": "lang:es", "rows": "100000", "fl": "lang",
+            "facet": "true", "facet.field": "lang",
+        }))
+        assert got["response"]["numFound"] == len(want)
+        assert [d["id"] for d in got["response"]["docs"]] == want
+        assert want and all(d["score"] == 1.0 for d in got["response"]["docs"])
+        assert got["facet_counts"]["facet_fields"]["lang"] == ["es", len(want)]
+
     def test_match_all_inside_bool_fq(self, docs, oracle):
         from solrtexttagger_spark.search.localparams import apply_solr_fq
 

@@ -213,7 +213,8 @@ def test_select_single_job_and_max_score(spark):
     xml2, jobs = _build_jobs(spark, lambda: render_select_xml(
         idx, df, "alpha beta", fl=["lang"], k=2, start=2, spark=spark
     ))
-    assert jobs == 7  # page + numFound + maxScore in ONE collect
+    # one match-set pass; page + numFound + maxScore in ONE collect
+    assert jobs == 4
     # maxScore = the rank-1 score (1.2814), NOT the page-2 head score
     assert 'numFound="3" start="2" maxScore="1.2814"' in xml2
     assert xml2.count("<doc>") == 1
@@ -341,8 +342,9 @@ def test_select_fully_dressed_job_budget(spark):
     """Round-6 (r5 verdict #2): a page + field-facet + MULTIPLE
     facet.range + hl request runs exactly 3 actions — the page, ONE
     combined facet job covering every section, and one tiny snippet job
-    that reuses the already-ranked page (no bm25 re-run) — matching
-    Solr's one-DocSet-per-request component model. Output stays
+    that reuses the already-ranked page (no scorer re-run) — over ONE
+    persisted match set, matching Solr's one-DocSet-per-request
+    component model. Output stays
     byte-identical to the per-section jobs (golden tests above)."""
     from solrtexttagger_spark.index.build import build_index
     from solrtexttagger_spark.search.select import render_select_xml
@@ -367,7 +369,9 @@ def test_select_fully_dressed_job_budget(spark):
         hl=True, spark=spark,
     ))
     idx.postings.unpersist()
-    assert jobs == 14  # page + one facet collect (all sections) + hl
+    # one persisted match set read by the page and ONE facet collect
+    # (all sections), + the hl snippet job
+    assert jobs == 10
     # both range columns rendered, zero-filled, from the one job
     assert '<lst name="n"><lst name="counts">' in xml
     assert '<lst name="m"><lst name="counts">' in xml
@@ -385,6 +389,7 @@ def test_facet_null_bucket_and_same_column_ranges(spark):
     import pytest
 
     from solrtexttagger_spark.index.build import build_index
+    from solrtexttagger_spark.search.request import lucene_match_set
     from solrtexttagger_spark.search.select import (
         _facet_sections,
         render_select_json,
@@ -400,9 +405,9 @@ def test_facet_null_bucket_and_same_column_ranges(spark):
     idx = build_index(df.select("doc_id", "text"), num_segments=2)
     # every lang bucket (None, en, de) has count 1 -> the sort ties
     # None against strings; en/de sort before the NULL bucket
+    matched = lucene_match_set(idx, df, "alpha")
     fields, ranges, _iv = _facet_sections(
-        idx, df, "alpha", ["lang"],
-        [("n", 0, 40, 20), ("n", 0, 30, 10, "n_fine")], None, spark,
+        df, matched, ["lang"], [("n", 0, 40, 20), ("n", 0, 30, 10, "n_fine")],
     )
     assert fields["lang"] == [("de", 1), ("en", 1), (None, 1)]
     assert set(ranges) == {"n", "n_fine"}
@@ -422,10 +427,7 @@ def test_facet_null_bucket_and_same_column_ranges(spark):
     assert js["facet_counts"]["facet_fields"]["lang"] == ["de", 1, "en", 1, None, 1]
     assert set(js["facet_counts"]["facet_ranges"]) == {"n", "n_fine"}
     with pytest.raises(ValueError, match="duplicate facet.range"):
-        _facet_sections(
-            idx, df, "alpha", [], [("n", 0, 40, 20), ("n", 0, 30, 10)],
-            None, spark,
-        )
+        _facet_sections(df, matched, [], [("n", 0, 40, 20), ("n", 0, 30, 10)])
 
 
 def test_facet_query_counts(spark):
@@ -495,7 +497,7 @@ def test_select_facet_queries_golden(spark):
         hl=True, spark=spark,
     ))
     # the dressed budget + one collect for ALL facet.query sub-queries
-    assert jobs == 22
+    assert jobs == 16
     assert (
         '<lst name="facet_counts"><lst name="facet_queries">'
         '<int name="delta">2</int>'
@@ -549,7 +551,7 @@ def test_facet_intervals(spark):
         ],
         spark=spark,
     ))
-    assert jobs == 12  # page + ONE combined facet collect, intervals free
+    assert jobs == 7  # page + ONE combined facet collect, intervals free
     js = json.loads(out)
     # overlapping sets: doc 1 (n=10) counts in [5,25] but not [0,10);
     # doc 0 (n=5) counts in BOTH [0,10) and [5,25]
